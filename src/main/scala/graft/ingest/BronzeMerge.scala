@@ -55,18 +55,19 @@ object BronzeMerge {
     * [[deleteMatchingKeys]]). */
   val IdCol = "source_item_id"
 
-  /** Committed identity keys across `batches`, normalized to a fixed
-    * 4-column shape: legacy id-less batches surface a null
-    * `source_item_id` (parquet matches by name; `mergeSchema` unions
-    * the footers so an id-carrying batch next to a legacy one still
-    * reads both ids and nulls). */
+  /** The fixed shape of every `_keys/` batch, as our own writer lays
+    * it down: [[KeyCols]] plus [[IdCol]] when the ingest carried ids. */
+  private val KeySchema = StructType.fromDDL(
+    s"file_name STRING, length BIGINT, modified TIMESTAMP_LTZ, $IdCol STRING")
+
+  /** Committed identity keys across `batches` in the fixed 4-column
+    * [[KeySchema]]: parquet matches columns by name, so legacy id-less
+    * batches surface a null `source_item_id` next to id-carrying ones
+    * — with no footer-merge job to infer a schema we already know. */
   private def committedKeys(spark: SparkSession, table: String,
-      batches: Seq[String]): DataFrame = {
-    val raw = spark.read.option("mergeSchema", "true")
+      batches: Seq[String]): DataFrame =
+    spark.read.schema(KeySchema)
       .parquet(batches.map(b => s"$table/_keys/$b"): _*)
-    if (raw.columns.contains(IdCol)) raw
-    else raw.withColumn(IdCol, lit(null).cast("string"))
-  }
 
   private def fs(spark: SparkSession, table: String): FileSystem =
     new Path(table).getFileSystem(spark.sessionState.newHadoopConf())
@@ -181,52 +182,60 @@ object BronzeMerge {
   }
 
   /** Copy-on-write row-level DELETE — the lakehouse compliance
-    * primitive (Delta `DELETE FROM`). Batches with no matching rows
-    * keep their name (and bytes) in the new manifest; only batches
-    * that actually contain matches are rewritten without them. Old
-    * versions still time-travel to the pre-delete data until
-    * [[vacuum]] reclaims them — run vacuum to make the erasure
-    * physical. Identity KEYS are retained on purpose: a deleted
-    * file's key still blocks re-ingest, so at-least-once upstream
-    * redelivery cannot resurrect deleted rows. Returns (new version,
-    * rows deleted); no-op (current version, 0) when nothing matches. */
+    * primitive (Delta `DELETE FROM`). One counting pass over every
+    * batch (a schema-merging scan, so a column some batches lack
+    * reads null there) finds the batches holding matches; only those
+    * are rewritten without them, the rest keep their name (and bytes)
+    * in the new manifest. Old versions still time-travel to the
+    * pre-delete data until [[vacuum]] reclaims them — run vacuum to
+    * make the erasure physical. Identity KEYS are retained on
+    * purpose: a deleted file's key still blocks re-ingest, so
+    * at-least-once upstream redelivery cannot resurrect deleted rows.
+    * Returns (new version, rows deleted); no-op (current version, 0)
+    * when nothing matches. */
   def deleteWhere(spark: SparkSession, table: String,
-      pred: org.apache.spark.sql.Column): (Int, Long) =
-    copyOnWrite(spark, table) { df =>
-      // a predicate may reference columns a PRE-EVOLUTION batch never
-      // wrote (e.g. `source_item_id` on a batch committed before the
-      // table carried ids): those read as null — no row of that batch
-      // can match, same as parquet's own schema-evolution read
-      val missing = org.apache.spark.sql.GraftSqlBridge.expression(pred)
-        .references.map(_.name).toSeq
-        .distinct.filterNot(c => df.columns.contains(c))
-      val dfN = missing.foldLeft(df)((d, c) =>
-        d.withColumn(c, lit(null).cast("string")))
-      // SQL DELETE semantics: only a TRUE predicate deletes — a null
-      // predicate row must SURVIVE the rewrite, not vanish from both
-      // the match count and the survivor set
-      (dfN.filter(pred), dfN.filter(not(coalesce(pred, lit(false))))
+      pred: org.apache.spark.sql.Column): (Int, Long) = {
+    // a predicate may reference columns a PRE-EVOLUTION batch never
+    // wrote (e.g. `source_item_id` on a batch committed before the
+    // table carried ids): those read as null — no row of that batch
+    // can match, same as parquet's own schema-evolution read
+    def withRefs(df: DataFrame): DataFrame =
+      org.apache.spark.sql.GraftSqlBridge.referencedColumns(pred)
+        .filterNot(c => df.columns.contains(c))
+        .foldLeft(df)((d, c) => d.withColumn(c, lit(null).cast("string")))
+    // SQL DELETE semantics: only a TRUE predicate deletes — a null
+    // predicate row must SURVIVE the rewrite, not vanish from both
+    // the match count and the survivor set
+    copyOnWrite(spark, table)(
+      matches = dirs => withRefs(withFile(
+          spark.read.option("mergeSchema", "true").parquet(dirs: _*)))
+        .filter(coalesce(pred, lit(false))),
+      survivors = df => withRefs(df)
+        .filter(not(coalesce(pred, lit(false))))
         .select(df.columns.map(col): _*))
-    }
+  }
 
   /** Join-based row-level DELETE — [[deleteWhere]] for MASS
     * tombstones: rows whose `joinCols` tuple appears in `keys` are
     * removed. The dead keys stay a DataFrame end-to-end (anti-join,
     * never a literal `isin` list), so a deleted source FOLDER
-    * carrying millions of tombstones costs one broadcast/shuffle
-    * join per touched batch instead of a million-term expression
-    * tree. Null-keyed rows and batches lacking a join column never
-    * match (they predate the keyed schema). Returns (new version,
-    * rows deleted) like [[deleteWhere]]. */
+    * carrying millions of tombstones costs one semi-join counting
+    * pass over the table's join columns plus one anti-join per
+    * touched batch instead of a million-term expression tree. The
+    * counting pass reads only `joinCols`, typed as in `keys`: a batch
+    * lacking a join column reads it as null, and null-keyed rows
+    * never match, so such a batch (it predates the keyed schema) is
+    * never rewritten. Returns (new version, rows deleted) like
+    * [[deleteWhere]]. */
   def deleteMatchingKeys(spark: SparkSession, table: String,
       keys: DataFrame, joinCols: Seq[String]): (Int, Long) = {
-    val dead = keys.select(joinCols.map(col): _*).distinct().persist()
-    try copyOnWrite(spark, table) { df =>
-      if (!joinCols.forall(df.columns.contains))
-        (df.limit(0), df)
-      else (df.join(dead, joinCols, "left_semi"),
-        df.join(dead, joinCols, "left_anti"))
-    } finally { dead.unpersist(); () }
+    // semi and anti joins ignore duplicate keys: no distinct needed
+    val dead = keys.select(joinCols.map(col): _*)
+    copyOnWrite(spark, table)(
+      matches = dirs =>
+        withFile(spark.read.schema(dead.schema).parquet(dirs: _*))
+          .join(dead, joinCols, "left_semi"),
+      survivors = df => df.join(dead, joinCols, "left_anti"))
   }
 
   /** True iff any committed batch's identity keys carry [[IdCol]] —
@@ -303,37 +312,49 @@ object BronzeMerge {
     } finally { map.unpersist(); () }
   }
 
-  /** Copy-on-write core shared by the delete entry points: `split`
-    * maps a committed batch to (matching rows, surviving rows);
-    * batches with no matches keep their name and bytes. */
+  /** Column naming the parquet file a scanned row came from — what
+    * the copy-on-write counting pass groups on. */
+  private val FileCol = "_cow_file"
+
+  private def withFile(scan: DataFrame): DataFrame =
+    scan.withColumn(FileCol, col("_metadata.file_path"))
+
+  /** Copy-on-write core shared by the delete entry points. ONE
+    * counting pass finds the touched batches: `matches` maps every
+    * committed batch directory to its matching rows, carrying
+    * [[FileCol]] ([[withFile]]). Only touched batches are read in full
+    * and rewritten through `survivors`; the rest keep their name and
+    * bytes. The rewritten batch's `_keys` are copied verbatim — the
+    * deleted identities must keep blocking re-ingest. */
   private def copyOnWrite(spark: SparkSession, table: String)(
-      split: DataFrame => (DataFrame, DataFrame)): (Int, Long) = {
+      matches: Seq[String] => DataFrame,
+      survivors: DataFrame => DataFrame): (Int, Long) = {
     val f = fs(spark, table)
     val (ver, batches) = currentCommit(spark, table)
     require(batches.nonEmpty, "empty bronze table")
-    var deleted = 0L
+    val perBatch = matches(batches.map(b => s"$table/$b"))
+      .groupBy(col(FileCol)).count().collect()
+      .map(r => new Path(new java.net.URI(r.getString(0))).getParent.getName
+        -> r.getLong(1))
+      .groupMapReduce(_._1)(_._2)(_ + _)
+    if (perBatch.isEmpty) return (ver, 0L)
+    val conf = spark.sessionState.newHadoopConf()
     val newBatches = batches.zipWithIndex.map { case (b, i) =>
-      val df = spark.read.parquet(s"$table/$b")
-      val (matches, survivors) = split(df)
-      val n = matches.count()
-      if (n == 0) b
+      if (!perBatch.contains(b)) b
       else {
-        deleted += n
         val rewritten = freshBatchName(f, table, f"batch-${ver + 1}%08d-cow$i")
-        survivors.write
+        survivors(spark.read.parquet(s"$table/$b")).write
           .mode(SaveMode.ErrorIfExists).parquet(s"$table/$rewritten")
-        // keys carry over verbatim: deletion must not reopen ingest
-        spark.read.parquet(s"$table/_keys/$b").write
-          .mode(SaveMode.Overwrite).parquet(s"$table/_keys/$rewritten")
+        val keys = new Path(s"$table/_keys/$rewritten")
+        f.delete(keys, true) // a leftover dir would nest the copy
+        org.apache.hadoop.fs.FileUtil.copy(f, new Path(s"$table/_keys/$b"),
+          f, keys, false, conf)
         rewritten
       }
     }
-    if (deleted == 0) (ver, 0L)
-    else {
-      commit(f, table, ver + 1, newBatches)
-      DeltaLog.sync(spark, table)
-      (ver + 1, deleted)
-    }
+    commit(f, table, ver + 1, newBatches)
+    DeltaLog.sync(spark, table)
+    (ver + 1, perBatch.values.sum)
   }
 
   /** Append-only change feed: the rows added between two committed
@@ -496,12 +517,19 @@ object BronzeMerge {
     // vacuum reclaims it
     val batchName = freshBatchName(f, table, f"batch-${ver + 1}%08d")
     val dataPath = s"$table/$batchName"
-    fresh.write.mode(SaveMode.ErrorIfExists).parquet(dataPath)
-    // row count from parquet footers — metadata-only, no content reread
-    val appended = spark.read.parquet(dataPath).count()
+    // the appended-row count rides the write itself as an observed
+    // metric — no second job re-reads the batch to count it
+    val rows = new org.apache.spark.sql.Observation()
+    fresh.observe(rows, count(lit(1)).as("n"))
+      .write.mode(SaveMode.ErrorIfExists).parquet(dataPath)
+    val appended = scala.concurrent.Await.result(rows.future,
+      scala.concurrent.duration.Duration(5, "min")).getLong(0)
     if (appended == 0) { f.delete(new Path(dataPath), true); return 0L }
     val keyCols = if (hasId) IdCol +: KeyCols else KeyCols
-    spark.read.parquet(dataPath).select(keyCols.map(col): _*)
+    // keys come from the LANDED bytes (re-evaluating `fresh` would
+    // refetch the source); its schema is `fresh`'s, so no inference
+    spark.read.schema(fresh.schema).parquet(dataPath)
+      .select(keyCols.map(col): _*)
       .write.mode(SaveMode.Overwrite).parquet(s"$table/_keys/$batchName")
     onBeforeCommit()
     commit(f, table, ver + 1, batches :+ batchName)

@@ -324,20 +324,8 @@ object HttpListing {
       var done = false
       while (!done) {
         val end = off + chunkBytes - 1
-        val resp = {
-          var attempt = 0
-          var r = transport.getRange(url, off, end)
-          while (policy.retryable(r.status) &&
-              attempt < policy.maxRetries) {
-            val retryAfter = r.headers.collectFirst {
-              case (k, v) if k.equalsIgnoreCase("Retry-After") => v
-            }.flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-            sleeper(policy.delayMs(attempt, retryAfter))
-            attempt += 1
-            r = transport.getRange(url, off, end)
-          }
-          r
-        }
+        val resp = withRetry(policy, sleeper)(
+          transport.getRange(url, off, end))
         resp.status match {
           case 206 =>
             val slice = resp.bytes
@@ -472,15 +460,15 @@ object HttpListing {
         .getOrElse(math.min(baseDelayMs << math.min(attempt, 20), maxDelayMs))
   }
 
-  /** GET with the retry policy applied, returning the FINAL response
-    * (2xx, the first non-retryable status, or the last retryable one
-    * after `maxRetries`) — for probes whose non-2xx answers are
-    * semantic (an existence check's 404 means "absent", not
-    * "failure"). Status interpretation stays with the caller. */
-  def getResilient(transport: Transport, policy: RetryPolicy,
-      sleeper: Long => Unit)(url: String): HttpResponse = {
+  /** The one retry loop: re-issue `call` while its status is
+    * retryable and retries remain, sleeping `policy.delayMs` between
+    * attempts (honoring `Retry-After`). Returns the FINAL response —
+    * 2xx, the first non-retryable status, or the last retryable one
+    * after `maxRetries`; status interpretation stays with the caller. */
+  def withRetry(policy: RetryPolicy, sleeper: Long => Unit)(
+      call: => HttpResponse): HttpResponse = {
     var attempt = 0
-    var resp = transport.get(url)
+    var resp = call
     while (policy.retryable(resp.status) && attempt < policy.maxRetries) {
       // case-insensitive: header case is the server's choice on the
       // wire (the JDK's own test server sends "Retry-after")
@@ -489,10 +477,17 @@ object HttpListing {
       }.flatMap(v => scala.util.Try(v.trim.toLong).toOption)
       sleeper(policy.delayMs(attempt, retryAfter))
       attempt += 1
-      resp = transport.get(url)
+      resp = call
     }
     resp
   }
+
+  /** GET with the retry policy applied, returning the FINAL response —
+    * for probes whose non-2xx answers are semantic (an existence
+    * check's 404 means "absent", not "failure"). */
+  def getResilient(transport: Transport, policy: RetryPolicy,
+      sleeper: Long => Unit)(url: String): HttpResponse =
+    withRetry(policy, sleeper)(transport.get(url))
 
   /** GET with the retry policy applied. Returns the first success
     * (2xx); throws on non-retryable status (fail fast, C5) or after

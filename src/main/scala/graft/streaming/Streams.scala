@@ -829,47 +829,48 @@ object Streams {
     // whose batches predate the id column every tombstone is a safe
     // no-op — deleteWhere reads the missing column as null.)
     val deadIds = result.items.filter(_.deleted).map(_.id).distinct
-    bronzeTable.foreach { table =>
-      // only a committed table can hold rows to remove; an empty or
-      // not-yet-created bronze makes every tombstone a no-op
-      if (deadIds.nonEmpty &&
-          graft.ingest.BronzeMerge.currentCommit(spark, table)._2.nonEmpty) {
-        if (!graft.ingest.BronzeMerge.carriesIds(spark, table))
-          // LEGACY TABLE (every batch predates source_item_id): an
-          // id-keyed delete is a structural no-op, so source
-          // deletions would silently stop propagating and bronze
-          // would diverge forever. Warn LOUDLY and skip the
-          // guaranteed-no-op table scan; the operator runs
-          // BronzeMerge.backfillIds (mapping from the staged
-          // catalog) once, after which deletes flow again.
-          log.warn(s"tombstone window (${deadIds.size} ids) against " +
-            s"id-less bronze table $table: every batch predates " +
-            "source_item_id, so id-keyed deletes CANNOT match — " +
-            "bronze will diverge from the source until " +
-            "BronzeMerge.backfillIds migrates the table")
-        else {
-          val idCol = col(graft.ingest.BronzeMerge.IdCol)
-          if (deadIds.size <= MassTombstoneThreshold)
-            // ONE flat hashed In — never a per-id Or chain whose
-            // analysis depth is the tombstone count
-            graft.ingest.BronzeMerge.deleteWhere(spark, table,
-              idCol.isin(deadIds: _*))
-          else
-            // a deleted source folder can carry millions of
-            // tombstones: keep them a DataFrame and anti-join — no
-            // O(tombstones)-literal expression tree. (The ids are
-            // already driver-resident — the listing provider returns
-            // the window as a Seq — so toDF adds no new driver copy.)
-            graft.ingest.BronzeMerge.deleteMatchingKeys(spark, table,
-              deadIds.toDF(graft.ingest.BronzeMerge.IdCol),
-              Seq(graft.ingest.BronzeMerge.IdCol))
-          ()
-        }
-      }
-    }
+    bronzeTable.foreach(table =>
+      deleteTombstones(spark, table, deadIds.size) {
+        if (deadIds.size <= MassTombstoneThreshold)
+          // ONE flat hashed In — never a per-id Or chain whose
+          // analysis depth is the tombstone count
+          graft.ingest.BronzeMerge.deleteWhere(spark, table,
+            col(graft.ingest.BronzeMerge.IdCol).isin(deadIds: _*))
+        else
+          // a deleted source folder can carry millions of
+          // tombstones: keep them a DataFrame and anti-join — no
+          // O(tombstones)-literal expression tree. (The ids are
+          // already driver-resident — the listing provider returns
+          // the window as a Seq — so toDF adds no new driver copy.)
+          graft.ingest.BronzeMerge.deleteMatchingKeys(spark, table,
+            deadIds.toDF(graft.ingest.BronzeMerge.IdCol),
+            Seq(graft.ingest.BronzeMerge.IdCol))
+      })
     checkpoint.save(result.deltaLink)
     result.items
   }
+
+  /** Run one window's id-keyed tombstone `delete` against `table`.
+    * Only a committed table can hold rows to remove; an empty or
+    * not-yet-created bronze makes every tombstone a no-op. A delete
+    * that matched nothing against a LEGACY table (every batch
+    * predates source_item_id) is a structural no-op, so source
+    * deletions would silently stop propagating and bronze would
+    * diverge forever: that case warns LOUDLY, naming the one-shot
+    * migration (BronzeMerge.backfillIds, mapping from the staged
+    * catalog) after which deletes flow again. The id check runs only
+    * after a zero-match delete — a delete that matched proves the
+    * table carries ids. */
+  private def deleteTombstones(spark: SparkSession, table: String,
+      nDead: Long)(delete: => (Int, Long)): Unit =
+    if (nDead > 0 &&
+        graft.ingest.BronzeMerge.currentCommit(spark, table)._2.nonEmpty &&
+        delete._2 == 0 && !graft.ingest.BronzeMerge.carriesIds(spark, table))
+      log.warn(s"tombstone window ($nDead ids) against id-less " +
+        s"bronze table $table: every batch predates " +
+        "source_item_id, so id-keyed deletes CANNOT match — " +
+        "bronze will diverge from the source until " +
+        "BronzeMerge.backfillIds migrates the table")
 
   /** Tombstone-window size above which [[discoverIncrement]] switches
     * from a literal-In delete predicate to the DataFrame anti-join
@@ -1125,28 +1126,33 @@ object Streams {
     DrainResult(appended, failed)
   }
 
-  /** The parked-failure relation at `dir` (empty when absent). */
+  /** The parked-failure relation at `dir` (empty when absent), read
+    * with the schema our own writer gives it — no inference job. */
   private[graft] def readQuarantine(spark: SparkSession,
       dir: String): Seq[QuarantinedItem] = {
     import spark.implicits._
     val p = new org.apache.hadoop.fs.Path(dir)
     val fsq = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fsq.exists(p)) Seq.empty
-    else spark.read.parquet(dir).as[QuarantinedItem].collect().toSeq
+    else spark.read
+      .schema(org.apache.spark.sql.Encoders.product[QuarantinedItem].schema)
+      .parquet(dir).as[QuarantinedItem].collect().toSeq
   }
 
   /** Overwrite the quarantine relation with the CURRENT failure set —
     * state, not a log: every window retries everything quarantined,
     * so post-window failures are the complete parked set and the
     * overwrite is idempotent under window replay (the write happens
-    * before the checkpoint, so a crash replays and rewrites it). An
-    * empty set deletes the directory. */
+    * before the checkpoint, so a crash replays and rewrites it). A
+    * set equal to `prior` (what the window read) is already on disk
+    * and is not rewritten; an empty set deletes the directory. */
   private[graft] def writeQuarantine(spark: SparkSession, dir: String,
-      items: Seq[QuarantinedItem]): Unit = {
+      items: Seq[QuarantinedItem], prior: Seq[QuarantinedItem]): Unit = {
     import spark.implicits._
     val p = new org.apache.hadoop.fs.Path(dir)
     val fsq = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (items.isEmpty) { fsq.delete(p, true); () }
+    if (items.toSet == prior.toSet) ()
+    else if (items.isEmpty) { fsq.delete(p, true); () }
     else spark.createDataset(items).toDF()
       .coalesce(1).write.mode("overwrite").parquet(dir)
   }
@@ -1216,7 +1222,8 @@ object Streams {
             // tombstoned (dead upstream — fetching it would 404
             // forever) nor re-listed (the window's own fresher entry
             // supersedes the parked one)
-            val retry = readQuarantine(spark, qdir).filterNot(q =>
+            val prior = readQuarantine(spark, qdir)
+            val retry = prior.filterNot(q =>
               deadIds.contains(q.source_item_id) ||
                 liveIds.contains(q.source_item_id))
             val metaAll = live ++ retry.map(q => (q.source_item_id,
@@ -1235,7 +1242,8 @@ object Streams {
                 failed.take(5).map(q =>
                   s"${q.source_item_id}=${q.error}").mkString("; "))
             writeQuarantine(spark, qdir,
-              failed.filterNot(q => deadIds.contains(q.source_item_id)))
+              failed.filterNot(q => deadIds.contains(q.source_item_id)),
+              prior)
         }
         filesZone.foreach { zone =>
           if (deadIds.nonEmpty) {
@@ -1246,6 +1254,25 @@ object Streams {
           }
         }
       })
+
+  /** Schema of the paged window's live slice, `<staging>_window/live`
+    * — exactly what each page's write lays down. */
+  private val LiveSliceSchema =
+    org.apache.spark.sql.types.StructType.fromDDL(
+      "source_item_id STRING, file_name STRING, modified TIMESTAMP_LTZ, " +
+        "size BIGINT")
+
+  /** Schema of the paged window's dead-ids slice, `<staging>_window/dead`. */
+  private val DeadSliceSchema =
+    org.apache.spark.sql.types.StructType.fromDDL(
+      s"${graft.ingest.BronzeMerge.IdCol} STRING")
+
+  /** One paged window as its drain sees it: the live `(source_item_id,
+    * file_name, modified, size)` slice and the dead-ids slice, each
+    * with the row count paging took — the drain never runs a job to
+    * learn whether a slice is empty. */
+  final case class WindowSlices(live: DataFrame, nLive: Long,
+      dead: DataFrame, nDead: Long)
 
   /** [[discoverIncrement]] at O(page) driver memory — the variant for
     * windows that should never exist as one driver collection (a
@@ -1262,24 +1289,27 @@ object Streams {
     * no literal predicate, no driver list. The window dirs are reset
     * at window start, so a crash-replayed window (checkpoint not yet
     * advanced) rebuilds them identically; per-page appends mean
-    * O(pages) small files per window, read exactly once each by the
-    * drain/delete and gone at the next window. The staged catalog
-    * itself is WINDOW-IDEMPOTENT like [[discoverIncrement]]'s: pages
-    * append into `stagingDir/window=<tag>` (tag = digest of the
-    * window's from-token), which is reset with the window dirs, so a
-    * replayed window rebuilds its own partition instead of
-    * double-appending the catalog. `drain` ALWAYS runs (a
+    * O(pages) small files per window, gone at the next window. Each
+    * slice is opened once, with the schema its page writes gave it
+    * ([[LiveSliceSchema]], [[DeadSliceSchema]]) — never inferred — and
+    * the one dead relation serves both the drain and the delete. The
+    * staged catalog itself is WINDOW-IDEMPOTENT like
+    * [[discoverIncrement]]'s: pages append into
+    * `stagingDir/window=<tag>` (tag = digest of the window's
+    * from-token), which is reset with the window dirs, so a replayed
+    * window rebuilds its own partition instead of double-appending
+    * the catalog. `drain` ALWAYS runs (a
     * quarantine-retrying drain has work even in an empty window) and
-    * receives BOTH window relations: the live `(source_item_id,
-    * file_name, modified, size)` slice and the dead-ids relation —
-    * empty typed relations when the window carried none. Returns
-    * (live rows staged, tombstones observed). */
+    * receives the [[WindowSlices]]: both window relations — empty
+    * typed relations when the window carried none — with the row
+    * counts paging already took. Returns (live rows staged,
+    * tombstones observed). */
   def discoverIncrementPaged(spark: SparkSession,
       provider: graft.pipeline.DeltaListingProvider,
       checkpoint: graft.pipeline.DeltaCheckpoint,
       stagingDir: String,
       bronzeTable: Option[String] = None,
-      drain: (DataFrame, DataFrame) => Unit = (_, _) => ()): (Long, Long) = {
+      drain: WindowSlices => Unit = _ => ()): (Long, Long) = {
     import spark.implicits._
     val fromToken = checkpoint.load()
     val stagingWindowDir = s"${stagingDir.stripSuffix("/")}/window=" +
@@ -1312,33 +1342,18 @@ object Streams {
       nLive += live.size
       nDead += dead.size
     }
-    val liveRel =
-      if (nLive > 0) spark.read.parquet(liveDir)
-      else spark.createDataset(
-          Seq.empty[(String, String, java.sql.Timestamp, Option[Long])])
-        .toDF("source_item_id", "file_name", "modified", "size")
-    val deadRel =
-      if (nDead > 0) spark.read.parquet(deadDir)
-      else spark.createDataset(Seq.empty[String])
-        .toDF(graft.ingest.BronzeMerge.IdCol)
-    drain(liveRel, deadRel)
-    bronzeTable.foreach { table =>
-      if (nDead > 0 &&
-          graft.ingest.BronzeMerge.currentCommit(spark, table)._2.nonEmpty) {
-        if (!graft.ingest.BronzeMerge.carriesIds(spark, table))
-          log.warn(s"tombstone window ($nDead ids) against id-less " +
-            s"bronze table $table: every batch predates " +
-            "source_item_id, so id-keyed deletes CANNOT match — " +
-            "bronze will diverge from the source until " +
-            "BronzeMerge.backfillIds migrates the table")
-        else {
-          graft.ingest.BronzeMerge.deleteMatchingKeys(spark, table,
-            spark.read.parquet(deadDir),
-            Seq(graft.ingest.BronzeMerge.IdCol))
-          ()
-        }
-      }
-    }
+    def slice(n: Long, dir: String,
+        schema: org.apache.spark.sql.types.StructType): DataFrame =
+      if (n > 0) spark.read.schema(schema).parquet(dir)
+      else spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    val deadRel = slice(nDead, deadDir, DeadSliceSchema)
+    drain(WindowSlices(slice(nLive, liveDir, LiveSliceSchema), nLive,
+      deadRel, nDead))
+    bronzeTable.foreach(table =>
+      deleteTombstones(spark, table, nDead)(
+        graft.ingest.BronzeMerge.deleteMatchingKeys(spark, table,
+          deadRel, Seq(graft.ingest.BronzeMerge.IdCol))))
     checkpoint.save(link)
     (nLive, nDead)
   }
@@ -1348,11 +1363,14 @@ object Streams {
     * composition for sources whose change windows can be arbitrarily
     * large. Same `quarantineDir`/`filesZone`/`largeBlobBytes`
     * semantics as [[syncToBronze]]; here the parked set is reconciled
-    * against the window's DEAD RELATION by anti-join (the tombstone
-    * side can be O(window) — only the quarantine itself, O(failures),
-    * is ever driver-resident) and zone-file cleanup runs executor-
-    * side over the dead relation. Returns (live rows staged,
-    * tombstones observed). */
+    * against the window's relations by a scan filtered on the parked
+    * ids (the tombstone side can be O(window) — only the quarantine
+    * itself, O(failures), is ever driver-resident) and zone-file
+    * cleanup runs executor-side over the dead relation. Work the
+    * window's slice counts prove empty is skipped: no drain without
+    * live or retryable items, no reconciliation scan of an empty
+    * slice, no quarantine rewrite of an unchanged parked set.
+    * Returns (live rows staged, tombstones observed). */
   def syncToBronzePaged(spark: SparkSession,
       provider: graft.pipeline.DeltaListingProvider,
       checkpoint: graft.pipeline.DeltaCheckpoint,
@@ -1369,46 +1387,56 @@ object Streams {
       largeBlobBytes: Long = Long.MaxValue)
       : (Long, Long) =
     discoverIncrementPaged(spark, provider, checkpoint, stagingDir,
-      Some(table), drain = (liveRel, deadRel) => {
+      Some(table), drain = w => {
         import spark.implicits._
+        val IdCol = graft.ingest.BronzeMerge.IdCol
         quarantineDir match {
           case None =>
-            if (!liveRel.isEmpty) {
-              drainItems(spark, transport, driveBaseUrl, liveRel, table,
+            if (w.nLive > 0) {
+              drainItems(spark, transport, driveBaseUrl, w.live, table,
                 policy, chunkBytes, modified, filesZone, largeBlobBytes)
               ()
             }
           case Some(qdir) =>
-            val prior = readQuarantine(spark, qdir)
-            if (prior.nonEmpty || !liveRel.isEmpty) {
-              // parked set minus tombstoned minus re-listed, by
-              // anti-join — the dead side stays a relation
-              val retryDf = spark.createDataset(prior).toDF()
-                .join(deadRel, Seq("source_item_id"), "left_anti")
-                .join(liveRel.select("source_item_id"),
-                  Seq("source_item_id"), "left_anti")
-                .select(col("source_item_id"), col("file_name"),
-                  col("modified"), col("size"))
-              val metaAll = liveRel.select(col("source_item_id"),
-                  col("file_name"), col("modified"), col("size"))
-                .unionByName(retryDf)
-              val r = drainItemsIsolated(spark, transport, driveBaseUrl,
-                metaAll, table, policy, chunkBytes, modified, filesZone,
-                largeBlobBytes)
-              if (r.failed.nonEmpty)
-                log.warn(s"drain quarantined ${r.failed.size} item(s) " +
-                  "(window committed; retried next window)")
-              val kept = spark.createDataset(r.failed).toDF()
-                .join(deadRel, Seq("source_item_id"), "left_anti")
-                .as[QuarantinedItem].collect().toSeq
-              writeQuarantine(spark, qdir, kept)
+            // which of `items` (O(failures), driver-side) the window's
+            // non-empty slices list: one filtered scan per call, the
+            // window sides staying relations
+            def listedIn(slices: Seq[(Long, DataFrame)],
+                items: Seq[QuarantinedItem]): Set[String] = {
+              val rels = slices.collect { case (n, rel) if n > 0 =>
+                rel.select(col(IdCol)) }
+              if (rels.isEmpty || items.isEmpty) Set.empty
+              else rels.reduce(_ unionByName _)
+                .filter(col(IdCol).isin(items.map(_.source_item_id): _*))
+                .as[String].collect().toSet
             }
+            val prior = readQuarantine(spark, qdir)
+            // retry everything parked that this window neither
+            // tombstoned nor re-listed (its fresher entry supersedes)
+            val gone = listedIn(Seq(w.nDead -> w.dead, w.nLive -> w.live),
+              prior)
+            val retry = prior.filterNot(q => gone(q.source_item_id))
+            val failed =
+              if (retry.isEmpty && w.nLive == 0) Seq.empty[QuarantinedItem]
+              else {
+                val retryDf = spark.createDataset(retry).drop("error")
+                drainItemsIsolated(spark, transport, driveBaseUrl,
+                  if (w.nLive == 0) retryDf else w.live.unionByName(retryDf),
+                  table, policy, chunkBytes, modified, filesZone,
+                  largeBlobBytes).failed
+              }
+            if (failed.nonEmpty)
+              log.warn(s"drain quarantined ${failed.size} item(s) " +
+                "(window committed; retried next window)")
+            val dead = listedIn(Seq(w.nDead -> w.dead), failed)
+            writeQuarantine(spark, qdir,
+              failed.filterNot(q => dead(q.source_item_id)), prior)
         }
-        filesZone.foreach { zone =>
+        if (w.nDead > 0) filesZone.foreach { zone =>
           val confBc = spark.sparkContext.broadcast(
             new org.apache.spark.util.SerializableConfiguration(
               spark.sessionState.newHadoopConf()))
-          deadRel.select(col(graft.ingest.BronzeMerge.IdCol)).as[String]
+          w.dead.select(col(IdCol)).as[String]
             .foreachPartition { (ids: Iterator[String]) =>
               val zp = new org.apache.hadoop.fs.Path(zone)
               val fsz = zp.getFileSystem(confBc.value.value)

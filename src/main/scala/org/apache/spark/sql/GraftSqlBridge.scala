@@ -10,4 +10,13 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object GraftSqlBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** Top-level column names `c` references, read off the Column's own
+    * node tree: `expression(c)` is an opaque wrapper in Spark 4 whose
+    * `references` are empty. */
+  def referencedColumns(c: Column): Seq[String] =
+    c.node.collect {
+      case a: org.apache.spark.sql.internal.UnresolvedAttribute =>
+        a.nameParts.head
+    }.distinct
 }

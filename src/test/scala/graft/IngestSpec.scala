@@ -218,6 +218,137 @@ class IngestSpec extends SparkSpec {
     assert(vSame == 3 && zero == 0)
   }
 
+  test("pinned key schema: a legacy id-less keys batch still blocks " +
+      "id-less redelivery and admits a byte-identical re-create under a " +
+      "fresh id") {
+    import graft.ingest.BronzeMerge
+    import spark.implicits._
+    val table = Files.createTempDirectory("graft-keys")
+      .resolve("bronze").toString
+    val ts0 = new java.sql.Timestamp(1700000000000L)
+    def legacy(name: String, len: Long) =
+      Seq((name, len, ts0, Array.fill(len.toInt)(1.toByte)))
+        .toDF("file_name", "length", "modified", "content")
+    def withId(id: String, name: String, len: Long) =
+      Seq((id, name, len, ts0, Array.fill(len.toInt)(1.toByte)))
+        .toDF(BronzeMerge.IdCol, "file_name", "length", "modified",
+          "content")
+    assert(BronzeMerge.mergeIngestDf(spark, legacy("b.txt", 5L), table) == 1)
+    // the legacy key batch really lacks the id column on disk
+    assert(!spark.read.parquet(s"$table/_keys/batch-00000001").columns
+      .contains(BronzeMerge.IdCol))
+    // id-less redelivery of the legacy file is blocked, and so is an
+    // id-carrying one: a null committed id predates the id contract
+    assert(BronzeMerge.mergeIngestDf(spark, legacy("b.txt", 5L), table) == 0)
+    assert(BronzeMerge.mergeIngestDf(spark,
+      withId("i2", "b.txt", 5L), table) == 0)
+
+    // an id-carrying batch next to the legacy one: both key shapes
+    // read through the one pinned schema
+    assert(BronzeMerge.mergeIngestDf(spark,
+      withId("i1", "a.txt", 3L), table) == 1)
+    assert(BronzeMerge.mergeIngestDf(spark, legacy("b.txt", 5L), table) == 0)
+    assert(BronzeMerge.mergeIngestDf(spark, legacy("a.txt", 3L), table) == 0)
+    assert(BronzeMerge.mergeIngestDf(spark,
+      withId("i1", "a.txt", 3L), table) == 0)
+    // the same bytes under a FRESH id are a new identity and land
+    assert(BronzeMerge.mergeIngestDf(spark,
+      withId("i9", "a.txt", 3L), table) == 1)
+    assert(BronzeMerge.snapshot(spark, table, mergeSchema = true)
+      .select(BronzeMerge.IdCol).collect().map(_.getString(0)).toSeq
+      .sortBy(Option(_)) == Seq(null, "i1", "i9"))
+  }
+
+  test("deleteMatchingKeys over three batches rewrites only the one " +
+      "holding matches, never an id-less batch, and counts exactly") {
+    import graft.ingest.BronzeMerge
+    import spark.implicits._
+    val table = Files.createTempDirectory("graft-cow")
+      .resolve("bronze").toString
+    val ts0 = new java.sql.Timestamp(1700000000000L)
+    def rows(ids: (String, String)*) = ids.map { case (id, n) =>
+      (id, n, n.length.toLong, ts0, n.getBytes("UTF-8")) }
+      .toDF(BronzeMerge.IdCol, "file_name", "length", "modified", "content")
+    // batch 1 predates ids: it lacks the join column entirely
+    BronzeMerge.mergeIngestDf(spark, rows("x" -> "legacy.txt")
+      .drop(BronzeMerge.IdCol), table)
+    BronzeMerge.mergeIngestDf(spark, rows("i1" -> "a.txt", "i2" -> "bb.txt"),
+      table)
+    BronzeMerge.mergeIngestDf(spark,
+      rows("i3" -> "c.txt", "i4" -> "dd.txt", "i5" -> "eee.txt"), table)
+    val (v0, before) = BronzeMerge.currentCommit(spark, table)
+    def bytesOf(dir: String): Map[String, Seq[Byte]] = {
+      import scala.jdk.CollectionConverters._
+      val root = Paths.get(dir)
+      Files.walk(root).iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => root.relativize(p).toString ->
+          Files.readAllBytes(p).toSeq).toMap
+    }
+    val snap = before.map(b => b -> bytesOf(s"$table/$b")).toMap
+    val keys3 = bytesOf(s"$table/_keys/${before(2)}")
+
+    // dead keys: two ids in batch 3, an id nobody holds, and a null —
+    // which must not match the id-less batch's null reads
+    val dead = Seq("i4", "i5", "ghost", null).toDF(BronzeMerge.IdCol)
+    val (v1, n) = BronzeMerge.deleteMatchingKeys(spark, table, dead,
+      Seq(BronzeMerge.IdCol))
+    assert((v1, n) == (v0 + 1, 2L))
+    val (_, after) = BronzeMerge.currentCommit(spark, table)
+    assert(after.take(2) == before.take(2),
+      s"untouched batches were renamed: $before -> $after")
+    before.take(2).foreach(b => assert(bytesOf(s"$table/$b") == snap(b),
+      s"untouched batch $b changed on disk"))
+    assert(after(2) != before(2) && after(2).contains("cow"))
+    // the rewritten batch's keys are the original's, byte for byte
+    assert(bytesOf(s"$table/_keys/${after(2)}") == keys3)
+    assert(BronzeMerge.snapshot(spark, table, mergeSchema = true)
+      .select("file_name").collect().map(_.getString(0)).sorted.toSeq ==
+      Seq("a.txt", "bb.txt", "c.txt", "legacy.txt"))
+    // the deleted identities still block redelivery
+    assert(BronzeMerge.mergeIngestDf(spark, rows("i4" -> "dd.txt"),
+      table) == 0)
+    // nothing left to match: no new version, zero deleted
+    assert(BronzeMerge.deleteMatchingKeys(spark, table, dead,
+      Seq(BronzeMerge.IdCol)) == (v1, 0L))
+    // the predicate form over the same mixed table: the id-less batch
+    // reads a null id, so it neither fails the scan nor gets rewritten
+    assert(BronzeMerge.deleteWhere(spark, table,
+      org.apache.spark.sql.functions.col(BronzeMerge.IdCol) === "i1") ==
+      ((v1 + 1, 1L)))
+    assert(BronzeMerge.currentCommit(spark, table)._2.head == before.head)
+  }
+
+  test("mergeIngestDf of an empty source returns 0, leaves no batch " +
+      "directory and commits no version") {
+    import graft.ingest.BronzeMerge
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-empty")
+    val table = root.resolve("bronze").toString
+    val ts0 = new java.sql.Timestamp(1700000000000L)
+    val empty = Seq.empty[(String, Long, java.sql.Timestamp, Array[Byte])]
+      .toDF("file_name", "length", "modified", "content")
+    def batchDirs(): Seq[String] =
+      if (!Files.exists(Paths.get(table))) Nil
+      else {
+        import scala.jdk.CollectionConverters._
+        Files.list(Paths.get(table)).iterator().asScala
+          .map(_.getFileName.toString).filter(_.startsWith("batch-")).toSeq
+      }
+    // empty table, empty source
+    assert(BronzeMerge.mergeIngestDf(spark, empty, table) == 0L)
+    assert(batchDirs().isEmpty)
+    assert(BronzeMerge.currentCommit(spark, table) == ((0, Nil)))
+    // committed table: an empty source and a fully-deduped one alike
+    val one = Seq(("a.txt", 1L, ts0, Array[Byte](1)))
+      .toDF("file_name", "length", "modified", "content")
+    assert(BronzeMerge.mergeIngestDf(spark, one, table) == 1L)
+    val committed = BronzeMerge.currentCommit(spark, table)
+    assert(BronzeMerge.mergeIngestDf(spark, empty, table) == 0L)
+    assert(BronzeMerge.mergeIngestDf(spark, one, table) == 0L)
+    assert(BronzeMerge.currentCommit(spark, table) == committed)
+    assert(batchDirs() == Seq("batch-00000001"))
+  }
+
   test("change feed returns exactly the appended rows; rewrites fail loudly") {
     import graft.ingest.BronzeMerge
     import org.apache.spark.sql.functions._

@@ -1870,6 +1870,159 @@ class StreamsSpec extends SparkSpec {
     assert(Streams.readQuarantine(spark, qdir).isEmpty)
   }
 
+  /** Spark jobs `body` runs, counted by a listener between two marker
+    * jobs: listener events arrive asynchronously but in order, so once
+    * the closing marker is seen every job of `body` has been too. */
+  private def jobsIn(body: => Unit): Int = {
+    val key = "graft.test.marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        seen.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty(key))).getOrElse(""))
+        ()
+      }
+    }
+    val sc = spark.sparkContext
+    def marker(tag: String): Unit = {
+      sc.setLocalProperty(key, tag)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(key, null)
+      ()
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("start")
+      body
+      marker("end")
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.contains("end") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains("end"), "listener never saw the closing marker")
+      import scala.jdk.CollectionConverters._
+      seen.asScala.toSeq.dropWhile(_ != "start").drop(1)
+        .takeWhile(_ != "end").size
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** A paged drive for the quarantine and job-budget specs: windows 1-3
+    * create one batch each (i1 + the poison i2, then i3, then i4),
+    * window 4 is idle, window 5 tombstones i1, i4 and the parked i2. */
+  private def poisonDrive(drive: String) = {
+    val base = s"https://graph.example.test/drives/$drive"
+    def item(id: String, name: String, size: Long) =
+      s"""{"id":"$id","name":"$name","size":$size,""" +
+        """"file":{"mimeType":"text/plain"},""" +
+        s""""parentReference":{"path":"/drives/$drive/root:/in"}}"""
+    def tomb(id: String) =
+      s"""{"id":"$id","name":"$id.txt","deleted":{"state":"deleted"}}"""
+    def page(items: Seq[String], next: Int) =
+      s"""{"value":[${items.mkString(",")}],""" +
+        s""""@odata.deltaLink":"$base/root/delta?token=T$next"}"""
+    val script = Map(
+      s"$base/root/delta" ->
+        page(Seq(item("i1", "a.txt", 3), item("i2", "b.txt", 5)), 1),
+      s"$base/root/delta?token=T1" -> page(Seq(item("i3", "c.txt", 4)), 2),
+      s"$base/root/delta?token=T2" -> page(Seq(item("i4", "d.txt", 2)), 3),
+      s"$base/root/delta?token=T3" -> page(Nil, 4),
+      s"$base/root/delta?token=T4" ->
+        page(Seq(tomb("i1"), tomb("i4"), tomb("i2")), 5))
+    val content = Map(
+      s"$base/items/i1/content" -> "aaa",
+      s"$base/items/i3/content" -> "cccc",
+      s"$base/items/i4/content" -> "dd")
+    val transport = new PoisonScriptTransport(script, content,
+      Set(s"$base/items/i2/content"))
+    val work = Files.createTempDirectory(s"graft-$drive").toString
+    val ck = new graft.pipeline.DeltaCheckpoint(s"$work/delta-ckpt")
+    val prov = new graft.pipeline.DeltaListingProvider(base, transport,
+      sleeper = _ => ())
+    val table = s"$work/bronze"
+    val qdir = s"$work/quarantine"
+    val window = () => Streams.syncToBronzePaged(spark, prov, ck,
+      s"$work/staging", transport, base, table,
+      policy = graft.pipeline.HttpListing.RetryPolicy(maxRetries = 1,
+        baseDelayMs = 0), quarantineDir = Some(qdir))
+    (window, table, qdir)
+  }
+
+  test("quarantine state: an idle window whose parked set is unchanged " +
+      "leaves the quarantine files untouched; a tombstone still clears " +
+      "the parked id") {
+    import graft.ingest.BronzeMerge
+    val (window, table, qdir) = poisonDrive("dq1")
+    def qfiles(): Map[String, Long] = {
+      import scala.jdk.CollectionConverters._
+      Files.list(java.nio.file.Paths.get(qdir)).iterator().asScala
+        .map(p => p.getFileName.toString ->
+          Files.getLastModifiedTime(p).toMillis).toMap
+    }
+    (1 to 3).foreach(_ => window())
+    assert(Streams.readQuarantine(spark, qdir).map(_.source_item_id) ==
+      Seq("i2"))
+    val parked = qfiles()
+    Thread.sleep(20) // a rewrite would now carry a later mtime
+    assert(window() == ((0L, 0L)))
+    assert(qfiles() == parked, "an unchanged parked set was rewritten")
+    assert(Streams.readQuarantine(spark, qdir).map(_.source_item_id) ==
+      Seq("i2"))
+    // the tombstone window drops the parked id and the bronze rows
+    assert(window() == ((0L, 3L)))
+    assert(Streams.readQuarantine(spark, qdir).isEmpty)
+    assert(!Files.exists(java.nio.file.Paths.get(qdir)))
+    assert(BronzeMerge.snapshot(spark, table).select("source_item_id")
+      .collect().map(_.getString(0)).toSeq == Seq("i3"))
+  }
+
+  test("job budget: an idle window with one parked item and a tombstone " +
+      "window over three batches stay within their Spark job counts") {
+    // each ceiling is its window path's job count: an inference or
+    // count job slipped back into either path fails here instead of
+    // silently costing every scheduled tick
+    import graft.ingest.BronzeMerge
+    val (window, table, qdir) = poisonDrive("dq2")
+    (1 to 3).foreach(_ => window())
+    assert(BronzeMerge.currentCommit(spark, table)._2.size == 3)
+    val idle = jobsIn(window())
+    val tomb = jobsIn(window())
+    assert(BronzeMerge.snapshot(spark, table).select("source_item_id")
+      .collect().map(_.getString(0)).toSeq == Seq("i3"))
+    assert(Streams.readQuarantine(spark, qdir).isEmpty)
+    info(s"idle window: $idle jobs, tombstone window: $tomb jobs")
+    assert(idle <= 4, s"idle window ran $idle jobs")
+    assert(tomb <= 13, s"tombstone window ran $tomb jobs")
+  }
+
+  test("an isolated drain whose every fetch fails lands nothing: 0 rows, " +
+      "no batch directory, no new manifest version") {
+    import graft.ingest.BronzeMerge
+    import spark.implicits._
+    val base = "https://graph.example.test/drives/dq3"
+    val transport = new PoisonScriptTransport(Map.empty, Map.empty,
+      Set(s"$base/items/i1/content", s"$base/items/i2/content"))
+    val table = Files.createTempDirectory("graft-dq3")
+      .resolve("bronze").toString
+    val ts0 = new java.sql.Timestamp(0L)
+    val meta = Seq(("i1", "a.txt", ts0, 3L), ("i2", "b.txt", ts0, 5L))
+      .toDF("source_item_id", "file_name", "modified", "size")
+    val policy = graft.pipeline.HttpListing.RetryPolicy(maxRetries = 1,
+      baseDelayMs = 0)
+    // an id-carrying commit already in place, then the all-fail drain
+    assert(BronzeMerge.mergeIngestDf(spark,
+      Seq(("i0", "z.txt", 1L, ts0, Array[Byte](1)))
+        .toDF("source_item_id", "file_name", "length", "modified",
+          "content"), table) == 1L)
+    val committed = BronzeMerge.currentCommit(spark, table)
+    val r = Streams.drainItemsIsolated(spark, transport, base, meta, table,
+      policy)
+    assert(r.appended == 0L)
+    assert(r.failed.map(_.source_item_id) == Seq("i1", "i2"))
+    assert(BronzeMerge.currentCommit(spark, table) == committed)
+    val dirs = new java.io.File(table).list().filter(_.startsWith("batch-"))
+    assert(dirs.toSeq == Seq("batch-00000001"))
+  }
+
   test("delta change stamps ride into bronze: lastModifiedDateTime lands " +
       "as `modified`, a same-length in-place update lands as a NEW " +
       "generation and wins the merge-on-read view, and a replayed drain " +
@@ -2361,6 +2514,17 @@ private class OutageScriptTransport(script: Map[String, String],
   override def get(url: String): HttpResponse =
     if (url == outageUrl && FetchOutage.broken)
       HttpResponse(500, "storage backend unavailable")
+    else super.get(url)
+}
+
+/** [[PagedScriptTransport]] whose `poison` URLs always answer a
+  * terminal 500 — items that can only ever be quarantined. */
+private class PoisonScriptTransport(script: Map[String, String],
+    content: Map[String, String], poison: Set[String])
+    extends PagedScriptTransport(script, content) {
+  import graft.pipeline.HttpListing.HttpResponse
+  override def get(url: String): HttpResponse =
+    if (poison.contains(url)) HttpResponse(500, "corrupt blob")
     else super.get(url)
 }
 

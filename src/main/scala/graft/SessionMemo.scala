@@ -74,5 +74,9 @@ private[graft] final class VersionedSessionMemo[K, V] {
       if (cur != null && cur._1 == version) cur
       else (version, compute))._2
 
+  /** Set the entry for `key` at `version`, replacing any other. */
+  def put(s: SparkSession, key: K, version: Long, value: V): Unit =
+    memoFor(s).put(key, (version, value))
+
   def entryCount(s: SparkSession): Int = memoFor(s).size
 }

@@ -62,7 +62,7 @@ object Similarity {
   private def cosineSql(a: String, b: String) =
     s"${dotSql(a, b)} / (${l2Sql(a)} * ${l2Sql(b)})"
 
-  /** The DuckDB replay of [[embDupMapping]] + [[lshCandidatePairs]]
+  /** The DuckDB replay of [[Collapse.embDupMapping]] + [[lshCandidatePairs]]
     * — a WITH-clause body (caller prepends `WITH `) ending in
     * `scored(va, vb, cos)`: dup-collapse mapping, the portable
     * sign-LSH signatures over representatives ([[radPlanes]]'s
@@ -829,36 +829,10 @@ object Similarity {
     dedupLabelMemo.getOrCompute(s, d) {
       val out = java.nio.file.Files
         .createTempDirectory("graft-sdlabels-").toString
-      semanticDedupLabels(s, Tables.embeddings(s, d))
+      semanticDedupLabels(s, d)
         .write.mode("overwrite").parquet(out)
       out
     }
-
-  /** Component labels (vec_id, component) of the LSH semantic-dedup
-    * graph, EXACT-COLLAPSE FIRST: bit-identical vectors are grouped
-    * to one representative (a linear shuffle), LSH + cosine verify +
-    * connected components run on representatives only, and members
-    * expand back in at the end. Identical answer to running on the
-    * raw corpus — exact duplicates sit at cosine 1.0 ≥ any sane
-    * threshold, so a duplicate group is always one cluster glued to
-    * its representative, and a member pair's cosine equals its rep
-    * pair's (the floats are bit-identical) — but the COST no longer
-    * explodes under duplication. Measured (SCALE.md sf1 rehearsal):
-    * 10 exact copies of every vector turned each LSH bucket join
-    * quadratic (~100× work for 10× rows); collapsing first restores
-    * the sf0.1-shaped candidate load. This mirrors production
-    * SemDeDup practice: exact dedup (t07's hash-groupBy) always runs
-    * before pair-based near-dedup. */
-  /** (vec_id, embedding, rep) with rep = the min vec_id among
-    * bit-identical vectors — the exact-collapse pre-stage shared by
-    * the semantic-dedup labels and the s04 scale path. One linear
-    * shuffle on the vector bytes. */
-  private def embDupMapping(s: SparkSession,
-      corpus: DataFrame): DataFrame =
-    Scoped.persist(corpus
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("rep",
-        min(col("vec_id")).over(Window.partitionBy(col("embedding")))))
 
   /** Near-dup pairs at scale with exact-duplicate collapse: LSH +
     * cosine verify on distinct vectors only, member pairs expanded
@@ -869,33 +843,39 @@ object Similarity {
     * computes the same dot/(‖·‖‖·‖) expression — so the expansion is
     * hash-exact wherever the candidate generator's recall allows.
     * SCALE.md sf1 rehearsal: this removes the quadratic bucket load
-    * duplication induces (s04 was 44× for 10× rows). */
+    * duplication induces (s04 was 44× for 10× rows). A duplicate-free
+    * table skips the collapse: [[neardupEdges]] over the table itself
+    * is the same relation ([[Collapse.vectorPairs]]). */
   private[graft] def neardupPairsCollapsed(s: SparkSession, d: String,
       thresh: Double, corpus: Option[DataFrame] = None,
-      allPairs: Boolean = false): DataFrame = {
-    val mapping = embDupMapping(s,
-      corpus.getOrElse(Tables.embeddings(s, d)))
-    val reps = mapping.filter(col("vec_id") === col("rep"))
-      .select(col("vec_id"), col("embedding"))
-    val repEdges = neardupEdges(s, d, allPairs = allPairs, thresh,
-      corpus = Some(reps))
-    val members = mapping.select(col("rep"), col("vec_id"))
-    val cross = repEdges
-      .join(members.toDF("va", "ma"), "va")
-      .join(members.toDF("vb", "mb"), "vb")
-      .select(least(col("ma"), col("mb")).as("va"),
-        greatest(col("ma"), col("mb")).as("vb"), col("cos"))
-    val selfCos = reps.select(col("vec_id").as("rep"),
+      allPairs: Boolean = false): DataFrame =
+    Collapse.vectorPairs(s, d, corpus)(
+        neardupEdges(s, d, allPairs, thresh)) { mapping =>
+      val reps = mapping.filter(col("vec_id") === col("rep"))
+        .select(col("vec_id"), col("embedding"))
+      val repEdges = neardupEdges(s, d, allPairs = allPairs, thresh,
+        corpus = Some(reps))
+      val members = mapping.select(col("rep"), col("vec_id"))
+      val cross = repEdges
+        .join(members.toDF("va", "ma"), "va")
+        .join(members.toDF("vb", "mb"), "vb")
+        .select(least(col("ma"), col("mb")).as("va"),
+          greatest(col("ma"), col("mb")).as("vb"), col("cos"))
+      val intra = members.toDF("rep", "ma")
+        .join(members.toDF("rep", "mb"), "rep")
+        .filter(col("ma") < col("mb"))
+        .join(selfCos(reps), "rep")
+        .filter(col("cos") >= thresh)
+        .select(col("ma").as("va"), col("mb").as("vb"), col("cos"))
+      cross.unionByName(intra)
+    }
+
+  /** (rep, cos) — each representative's COMPUTED self-cosine, the
+    * cosine an intra-group member pair carries. */
+  private def selfCos(reps: DataFrame): DataFrame =
+    reps.select(col("vec_id").as("rep"),
       (dot(col("embedding"), col("embedding")) /
         (l2(col("embedding")) * l2(col("embedding")))).as("cos"))
-    val intra = members.toDF("rep", "ma")
-      .join(members.toDF("rep", "mb"), "rep")
-      .filter(col("ma") < col("mb"))
-      .join(selfCos, "rep")
-      .filter(col("cos") >= thresh)
-      .select(col("ma").as("va"), col("mb").as("vb"), col("cos"))
-    cross.unionByName(intra)
-  }
 
   /** Global top-k most-similar pairs (s05's operator) with the same
     * exact-duplicate collapse: LSH candidates + cosine over DISTINCT
@@ -913,58 +893,75 @@ object Similarity {
     * rep pairs at identical double cosine carry the same >k-way-tie
     * caveat as the uncollapsed form's limit-then-distinct (scaladoc at
     * the s05 registration); duplicate-group ties are exact by
-    * construction and handled by the proof above. */
+    * construction and handled by the proof above. A duplicate-free
+    * table runs the same top-k straight over the table. */
   private[graft] def annTopPairsCollapsed(s: SparkSession, d: String,
       k: Int, corpus: Option[DataFrame] = None): DataFrame = {
-    val mapping = embDupMapping(s,
-      corpus.getOrElse(Tables.embeddings(s, d)))
-    val reps = mapping.filter(col("vec_id") === col("rep"))
-      .select(col("vec_id"), col("embedding"))
-    val members = mapping.select(col("rep"), col("vec_id"))
-      .withColumn("mrank", row_number().over(
-        Window.partitionBy(col("rep")).orderBy(col("vec_id"))))
-      .filter(col("mrank") <= k + 1).drop("mrank")
-    val withVec = reps.select(col("vec_id"), col("embedding"),
-      l2(col("embedding")).as("nrm"))
-    // UNDEDUPED rep candidates: score first, dedup at the top (the
-    // round-4 lesson — see the s05 registration comment). A rep pair
+    // UNDEDUPED candidates over `vecs`: score first, dedup at the top
+    // (the round-4 lesson — see the s05 registration comment). A pair
     // appears ≤ LshTables times, so the top LshTables·k rows contain
-    // every distinct top-k rep pair; distinct then runs on ≤ 12k rows.
-    val repTop = lshCandidatePairs(s, d, dedup = false,
-        corpus = Some(reps))
-      .join(withVec.toDF("va", "ea", "na"), "va")
-      .join(withVec.toDF("vb", "eb", "nb"), "vb")
-      .select(col("va"), col("vb"),
-        (dot(col("ea"), col("eb")) / (col("na") * col("nb"))).as("cos"))
-      .orderBy(desc("cos"), col("va"), col("vb"))
-      .limit(LshTables * k)
-      .distinct()
-    val cross = repTop
-      .join(members.toDF("va", "ma"), "va")
-      .join(members.toDF("vb", "mb"), "vb")
-      .select(least(col("ma"), col("mb")).as("va"),
-        greatest(col("ma"), col("mb")).as("vb"), col("cos"))
-    val selfCos = reps.select(col("vec_id").as("rep"),
-      (dot(col("embedding"), col("embedding")) /
-        (l2(col("embedding")) * l2(col("embedding")))).as("cos"))
-    val intra = members.toDF("rep", "ma")
-      .join(members.toDF("rep", "mb"), "rep")
-      .filter(col("ma") < col("mb"))
-      .join(selfCos, "rep")
-      .select(col("ma").as("va"), col("mb").as("vb"), col("cos"))
-    cross.unionByName(intra)
-      .orderBy(desc("cos"), col("va"), col("vb"))
+    // every distinct top-k pair; distinct then runs on ≤ 12k rows.
+    def topPairs(vecs: Option[DataFrame]): DataFrame = {
+      val withVec = vecs.getOrElse(Tables.embeddings(s, d))
+        .select(col("vec_id"), col("embedding"),
+          l2(col("embedding")).as("nrm"))
+      lshCandidatePairs(s, d, dedup = false, corpus = vecs)
+        .join(withVec.toDF("va", "ea", "na"), "va")
+        .join(withVec.toDF("vb", "eb", "nb"), "vb")
+        .select(col("va"), col("vb"),
+          (dot(col("ea"), col("eb")) / (col("na") * col("nb"))).as("cos"))
+        .orderBy(desc("cos"), col("va"), col("vb"))
+        .limit(LshTables * k)
+        .distinct()
+    }
+    Collapse.vectorPairs(s, d, corpus)(topPairs(None)) { mapping =>
+      val reps = mapping.filter(col("vec_id") === col("rep"))
+        .select(col("vec_id"), col("embedding"))
+      val members = mapping.select(col("rep"), col("vec_id"))
+        .withColumn("mrank", row_number().over(
+          Window.partitionBy(col("rep")).orderBy(col("vec_id"))))
+        .filter(col("mrank") <= k + 1).drop("mrank")
+      val cross = topPairs(Some(reps))
+        .join(members.toDF("va", "ma"), "va")
+        .join(members.toDF("vb", "mb"), "vb")
+        .select(least(col("ma"), col("mb")).as("va"),
+          greatest(col("ma"), col("mb")).as("vb"), col("cos"))
+      val intra = members.toDF("rep", "ma")
+        .join(members.toDF("rep", "mb"), "rep")
+        .filter(col("ma") < col("mb"))
+        .join(selfCos(reps), "rep")
+        .select(col("ma").as("va"), col("mb").as("vb"), col("cos"))
+      cross.unionByName(intra)
+    }.orderBy(desc("cos"), col("va"), col("vb"))
       .limit(k)
   }
 
-  private[graft] def semanticDedupLabels(s: SparkSession,
-      corpus: DataFrame, allPairs: Boolean = false): DataFrame = {
-    // one shuffle on the vector bytes: every duplicate group learns
-    // its min-id representative
-    val mapping = embDupMapping(s, corpus)
+  /** Component labels (vec_id, component) of the LSH semantic-dedup
+    * graph over `corpus` (default: `d`'s embeddings), EXACT-COLLAPSE
+    * FIRST: bit-identical vectors are grouped to one representative
+    * (a linear shuffle), LSH + cosine verify + connected components
+    * run on representatives only, and members expand back in at the
+    * end. Identical answer to running on the raw corpus — exact
+    * duplicates sit at cosine 1.0 ≥ any sane threshold, so a
+    * duplicate group is always one cluster glued to its
+    * representative, and a member pair's cosine equals its rep
+    * pair's (the floats are bit-identical) — but the COST no longer
+    * explodes under duplication. Measured (SCALE.md sf1 rehearsal):
+    * 10 exact copies of every vector turned each LSH bucket join
+    * quadratic (~100× work for 10× rows); collapsing first restores
+    * the sf0.1-shaped candidate load. This mirrors production
+    * SemDeDup practice: exact dedup (t07's hash-groupBy) always runs
+    * before pair-based near-dedup. A duplicate-free table gets the
+    * identity mapping ([[Collapse.embDupMapping]]). */
+  private[graft] def semanticDedupLabels(s: SparkSession, d: String,
+      corpus: Option[DataFrame] = None,
+      allPairs: Boolean = false): DataFrame = {
+    // with duplicates, one shuffle on the vector bytes: every
+    // duplicate group learns its min-id representative
+    val mapping = Collapse.embDupMapping(s, d, corpus)
     val reps = mapping.filter(col("vec_id") === col("rep"))
       .select(col("vec_id"), col("embedding"))
-    val repEdges = neardupEdges(s, d = null, allPairs = allPairs,
+    val repEdges = neardupEdges(s, d, allPairs = allPairs,
         thresh = 0.4, corpus = Some(reps))
       .select(col("va").as("da"), col("vb").as("db"))
     val repLabels = Text.connectedComponents(repEdges)
@@ -1001,7 +998,7 @@ object Similarity {
     // corpus paid 100× the pair work before this).
     val labels =
       if (allPairs)
-        semanticDedupLabels(s, Tables.embeddings(s, d), allPairs = true)
+        semanticDedupLabels(s, d, allPairs = true)
       else s.read.parquet(semanticDedupLabelsPath(s, d))
     Tables.embeddings(s, d).select(col("vec_id"))
       .join(labels, Seq("vec_id"), "left")
@@ -1302,7 +1299,8 @@ object Similarity {
     // ---- embedding-cosine near-dup pairs, SCALE twin: the standing
     //      registration of the LSH route (shared [[lshCandidatePairs]]
     //      generator → exact-duplicate collapse → cosine verify on
-    //      candidates only → member expansion), so the 100 TB plan is
+    //      candidates only → member expansion; a duplicate-free table
+    //      skips the collapse and expansion), so the 100 TB plan is
     //      bench-timed and plan-pinned at every SF alongside its
     //      exact anchor — the same twin pattern as t08/t09 and
     //      s12/s15. Every emitted edge is TRUE (candidates are

@@ -24,6 +24,7 @@ import org.apache.spark.sql.functions._
   *    hash-match doubles as an LSH recall test.
   */
 object Text {
+  import Collapse.textDupMapping
 
   private val toks = split(col("text"), " ")
 
@@ -264,31 +265,6 @@ object Text {
   }
   private[graft] def exactAnchor(s: SparkSession, d: String): Boolean =
     corpusRows(s, d) <= ExactAnchorRows
-
-  /** (doc_id, text, rep) with rep = the min doc_id among bit-identical
-    * texts — the exact-collapse pre-stage of the pair operators
-    * (SCALE.md sf1 rehearsal: duplicated texts made shingle/band
-    * buckets quadratic — 112× cost for 10× rows at t08). One linear
-    * shuffle on the text bytes. */
-  private def textDupMapping(s: SparkSession, d: String): DataFrame =
-    Scoped.persist(Tables.documents(s, d)
-      .select(col("doc_id"), col("text"))
-      .withColumn("rep",
-        min(col("doc_id")).over(Window.partitionBy(col("text"))))
-      // group size rides the SAME window pass (zero extra shuffle):
-      // weighted-count collapses (t28) need each rep's multiplicity
-      .withColumn("m",
-        count(lit(1)).over(Window.partitionBy(col("text")))))
-
-  /** textDupMapping plus each doc's (source, lang) — the collapse
-    * consumers that roll up per corpus slice (t68) read the slice
-    * keys off the SAME cached window pass instead of re-joining
-    * documents on doc_id. */
-  private def textDupMappingSl(s: SparkSession, d: String): DataFrame =
-    Scoped.persist(Tables.documents(s, d)
-      .select(col("doc_id"), col("text"), col("source"), col("lang"))
-      .withColumn("rep",
-        min(col("doc_id")).over(Window.partitionBy(col("text")))))
 
   /** Expand representative-level (ra, rb, jaccard) pairs back to
     * member pairs: cross-group members inherit the rep pair's J
@@ -615,10 +591,8 @@ object Text {
     * whose own label is itself), so hops, not jumps, are the
     * binding resource. One jump stays: it is what keeps worst-case
     * convergence O(log diameter) on adversarial id layouts (long
-    * monotone chains) for one cheap label-side self-join.
-    * Builder-side override for forensics; the driver never sets it. */
-  private val CcJumps: Int =
-    sys.env.get("SPARK_GRAFT_CC_JUMPS").map(_.toInt).getOrElse(1)
+    * monotone chains) for one cheap label-side self-join. */
+  private val CcJumps = 1
 
   /** Edge-hop rounds per CC generation. The min label travels one
     * edge per hop; chaining [[CcHops]] hops inside one generation
@@ -629,10 +603,9 @@ object Text {
     * the total join work identical. At 100 TB the trade is explicit:
     * k hops per generation join the edge relation k times between
     * checkpoints, but the generation count — and the number of
-    * label-table materializations — drops by the same k.
-    * Builder-side override for forensics; the driver never sets it. */
-  private val CcHops: Int =
-    sys.env.get("SPARK_GRAFT_CC_HOPS").map(_.toInt).getOrElse(3)
+    * label-table materializations — drops by the same k. The r16
+    * sweep over 1–4 hops (OPTIMIZATION_r16.md) fixed 3. */
+  private val CcHops = 3
 
   /** Min-label propagation to fixpoint over an undirected edge list
     * `(da, db)` — the connected-components engine shared by t12
@@ -751,8 +724,6 @@ object Text {
     // a silently-unconverged result would under-merge components —
     // refuse loudly instead (cap 30 covers diameter ~2^30 with the
     // jumps; nothing real gets here)
-    if (sys.env.contains("SPARK_GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] converged in $iters generations")
     require(converged, s"connectedComponents did not converge in $iters")
     // the FINAL generation's blocks back the returned labels: they
     // must survive the caller's reads but not the query — release
@@ -1132,28 +1103,24 @@ object Text {
     * rank; docs overlapping no profile are dropped like the oracle's
     * inner join. Shared by t05 (raw confusion) and t47 (metrics). */
   private def langConfusion(s: SparkSession, d: String): DataFrame = {
-    val tgs = graft.functions.TextExprs.charNGrams(col("text"), 3)
-    val best = graft.functions.TextExprs.profileArgmax(col("tgs"),
+    val best = graft.functions.TextExprs.profileArgmax(
+      graft.functions.TextExprs.charNGrams(col("text"), 3),
       langProfiles(s, d).map(p => p.lang -> p.ptgs))
-    // r16 EXACT COLLAPSE (§8): the argmax is a pure function of the
-    // text, so the trigram extraction + profile probe run once per
-    // DISTINCT text; each member contributes its OWN true lang to the
-    // confusion cell under its rep's prediction (identical text ⇒
-    // identical pred_lang and identical score-0 drop), so the counts
-    // are unchanged. The true-lang key rides the cached mapping pass.
-    val mapping = textDupMappingSl(s, d)
-    // persist barrier: without it Catalyst substitutes the aliased
-    // struct into the score filter and the argmax runs TWICE per rep
-    // (pushed Filter + Project — the guide §4.4 duplication)
-    val repBest = Scoped.persist(
-      mapping.filter(col("doc_id") === col("rep"))
-        .select(col("rep"), tgs.as("tgs"))
-        .select(col("rep"), best.as("best")))
-    val repPred = repBest.filter(col("best.score") > 0)
-      .select(col("rep"), col("best.pl").as("pred_lang"))
-    mapping.select(col("lang"), col("rep"))
-      .join(repPred, "rep")
-      .groupBy(col("lang"), col("pred_lang"))
+    // EXACT COLLAPSE ([[Collapse.perText]]): the argmax is a pure
+    // function of the text, so on a corpus with duplicates the
+    // trigram extraction + profile probe run once per DISTINCT text
+    // and each member contributes its OWN true lang to the confusion
+    // cell under its rep's prediction (identical text ⇒ identical
+    // pred_lang and identical score-0 drop); a duplicate-free corpus
+    // classifies straight on the scan. Counts are the same either
+    // way. Persist barrier on both paths: without it Catalyst
+    // substitutes the aliased struct into the score filter and the
+    // argmax runs TWICE per row (pushed Filter + Project — the guide
+    // §4.4 duplication).
+    Collapse.perText(s, d, Seq("lang"), Seq(best.as("best")),
+        barrier = true)
+      .filter(col("best.score") > 0)
+      .groupBy(col("lang"), col("best.pl").as("pred_lang"))
       .agg(count(lit(1)).as("n"))
   }
 
@@ -1734,8 +1701,7 @@ object Text {
         val sig = (0 until 63).map { i =>
           when(col(s"b$i") > 0, lit(1L << i)).otherwise(0L)
         }.reduce(_.bitwiseOR(_))
-        mapping.select(col("doc_id"), col("rep"))
-          .join(votes, "rep")
+        Collapse.toMembers(s, d, mapping, votes)
           .select(col("doc_id"), sig.as("simhash")).orderBy("doc_id")
       },
       Some {
@@ -2047,8 +2013,7 @@ object Text {
           .withColumn("score", col("tf").cast("double") / col("df"))
           .withColumn("rk", row_number().over(w))
           .filter(col("rk") <= 3)
-        mapping.select(col("doc_id"), col("rep"))
-          .join(repTop, "rep")
+        Collapse.toMembers(s, d, mapping, repTop)
           .select(col("doc_id"), col("rk"), col("term"), col("tf"),
             col("df"), round(col("score"), 6).as("score"))
           .orderBy("doc_id", "rk")
@@ -2147,8 +2112,7 @@ object Text {
               count(lit(1))).as("avg_p"),
             (sum(when(col("n12") <= 2, 1L).otherwise(0L)).cast("double") /
               count(lit(1))).as("rare_ratio"))
-        mapping.select(col("doc_id"), col("rep"))
-          .join(repScore, "rep")
+        Collapse.toMembers(s, d, mapping, repScore)
           .select(col("doc_id"), col("n_bigrams"), col("avg_p"),
             col("rare_ratio"))
           .orderBy("doc_id")
@@ -2315,8 +2279,7 @@ object Text {
           .groupBy(col("rep"))
           .agg(count(lit(1)).as("n_chunks"),
             sum(when(col("c") >= 2, 1L).otherwise(0L)).as("n_dup_chunks"))
-        mapping.select(col("doc_id"), col("rep"))
-          .join(repStats, "rep")
+        Collapse.toMembers(s, d, mapping, repStats)
           .select(col("doc_id"), col("n_chunks"), col("n_dup_chunks"))
           .withColumn("dup_ratio",
             col("n_dup_chunks").cast("double") / col("n_chunks").cast("double"))
@@ -2587,8 +2550,10 @@ object Text {
         // verbatim (same widx sequence ⇒ same runs). n_windows comes
         // off the member's own text in the mapping. At the sf1
         // 10×-duplication regime the window explode and both shuffles
-        // shrink by the duplication factor; output is the identical
-        // relation (oracle unchanged).
+        // shrink by the duplication factor; a duplicate-free corpus
+        // gets the identity mapping ([[Collapse.textDupMapping]]:
+        // rep = doc_id, m = 1, no text window). Output is the
+        // identical relation either way (oracle unchanged).
         val mapping = textDupMapping(s, d)
         // fused NgramHashes kernel (ordered, non-distinct): same
         // hashes as posexploding the window strings and hashing after
@@ -3307,26 +3272,21 @@ object Text {
         // + 12 chained replace passes, 13 full-length allocations per
         // row) lives on in ExprEquivSpec, which pins bitwise equality
         // including the consumed-trailing-space repeated-run edge.
-        // r16 EXACT COLLAPSE (§8): the merge walk is the whole query
-        // cost and is a pure function of the text, so it runs once
-        // per DISTINCT text and members read their rep's row (same
-        // text ⇒ bitwise-same n_tokens/n_chars/division) — at the sf1
-        // 10×-duplication regime the kernel work drops by the
-        // duplication factor for one text-keyed window + one
-        // long-keyed join.
-        val mapping = textDupMapping(s, d)
+        // EXACT COLLAPSE ([[Collapse.perText]]): the merge walk is the
+        // whole query cost and is a pure function of the text, so on
+        // a corpus with duplicates it runs once per DISTINCT text and
+        // members read their rep's row (same text ⇒ bitwise-same
+        // n_tokens/n_chars/division) — at the sf1 10×-duplication
+        // regime the kernel work drops by the duplication factor for
+        // one text-keyed window + one long-keyed join. A
+        // duplicate-free corpus runs the walk straight on the scan.
         val nTokens = graft.functions.TextExprs.bpeTokenCount(
           col("text"), learnedMergePairs(s, d))
         val nChars = length(translate(col("text"), " ", ""))
-        val repStats = mapping.filter(col("doc_id") === col("rep"))
-          .select(col("rep"),
+        Collapse.perText(s, d, Seq("doc_id"), Seq(
             nTokens.as("n_tokens"),
             nChars.as("n_chars"),
-            (nChars.cast("double") / nTokens).as("chars_per_token"))
-        mapping.select(col("doc_id"), col("rep"))
-          .join(repStats, "rep")
-          .select(col("doc_id"), col("n_tokens"), col("n_chars"),
-            col("chars_per_token"))
+            (nChars.cast("double") / nTokens).as("chars_per_token")))
           .orderBy("doc_id")
       },
       Some(bpeTokenizeSql(BpeRounds))),
@@ -5403,23 +5363,21 @@ object Text {
     QuerySpec(
       "t68_bpe_fertility",
       (s, d) => {
-        // r16 EXACT COLLAPSE (§8, the t40 move): the merge walk runs
-        // once per DISTINCT text; each doc contributes its rep's
+        // EXACT COLLAPSE ([[Collapse.perText]], the t40 move): on a
+        // corpus with duplicates the merge walk runs once per
+        // DISTINCT text and each doc contributes its rep's
         // bitwise-identical integer stats to its OWN (source, lang)
-        // slice — the slice keys ride the same cached window pass
-        // ([[textDupMappingSl]]), so no documents re-join. Integer
-        // sums are permutation-safe; the rollup is unchanged.
-        val mapping = textDupMappingSl(s, d)
+        // slice (the slice keys ride the mapping pass, so no
+        // documents re-join); a duplicate-free corpus walks straight
+        // on the scan. Integer sums are permutation-safe; the rollup
+        // is unchanged.
         val nTok = graft.functions.TextExprs.bpeTokenCount(
           col("text"), learnedMergePairs(s, d))
         val nWords = size(filter(toks, w => length(w) > 0))
         val nChars = length(translate(col("text"), " ", ""))
-        val repStats = mapping.filter(col("doc_id") === col("rep"))
-          .select(col("rep"),
+        Collapse.perText(s, d, Seq("source", "lang"), Seq(
             nTok.cast("long").as("nt"), nWords.cast("long").as("nw"),
-            nChars.cast("long").as("nc"))
-        mapping.select(col("source"), col("lang"), col("rep"))
-          .join(repStats, "rep")
+            nChars.cast("long").as("nc")))
           .groupBy(col("source"), col("lang"))
           .agg(count(lit(1)).as("n_docs"), sum(col("nw")).as("n_words"),
             sum(col("nt")).as("n_tokens"), sum(col("nc")).as("n_chars"))

@@ -639,7 +639,7 @@ class OpsSpec extends SparkSpec {
     val corpus = (0 to 3).map(k => base.select(
         (col("vec_id") + lit(k * 100000L)).as("vec_id"),
         col("embedding"))).reduce(_ union _)
-    val collapsed = Similarity.semanticDedupLabels(spark, corpus)
+    val collapsed = Similarity.semanticDedupLabels(spark, null, Some(corpus))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // uncollapsed twin: LSH edges over the raw duplicated corpus
     val rawEdges = Similarity.neardupEdges(spark, null,

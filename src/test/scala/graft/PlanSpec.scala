@@ -4,10 +4,31 @@ package graft
   * of SCALE.md: pushdown reaches the scans, dimensions broadcast,
   * aggregation is partial+final, top-k never globally sorts. */
 class PlanSpec extends SparkSpec {
+  import graft.ops.Collapse
+  import org.apache.spark.sql.functions.{col, lit}
 
-  private def plan(name: String): String =
-    SparkEntry.queries(name)(spark, sf0001)
+  private def plan(name: String, dir: String = sf0001): String =
+    SparkEntry.queries(name)(spark, dir)
       .queryExecution.executedPlan.toString
+
+  /** sf0.001's documents and embeddings twice over (the second copy
+    * at shifted ids): the duplicated corpus the collapsed branch is
+    * pinned on. sf0.001 itself has no duplicate texts or vectors, so
+    * it pins the other branch. */
+  private lazy val dupCorpus: String = {
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-plan-dups").toString
+    Seq("documents" -> "doc_id", "embeddings" -> "vec_id").foreach {
+      case (t, id) =>
+        val rows = Tables.table(spark, sf0001, t)
+        rows.unionByName(rows.withColumn(id, col(id) + lit(100000L)))
+          .write.mode("overwrite").parquet(s"$dir/$t.parquet")
+    }
+    dir
+  }
+
+  /** A join keyed on the dup mapping's `rep` column. */
+  private val repJoin = "Join \\[rep#".r
 
   test("q01: filter pushed to parquet, schema pruned, partial agg") {
     val p = plan("q01_pricing_summary")
@@ -60,7 +81,21 @@ class PlanSpec extends SparkSpec {
     // caches the shared confusion relation); a cache hit would swap
     // the scan for an InMemoryTableScan and break the shape counts
     Scoped.release()
-    val p = plan("t05_language_id")
+    // duplicate-free corpus: the argmax runs straight on the scan —
+    // no dup-mapping window, no re-attach join — still behind the
+    // persist barrier that keeps it out of a pushed Filter
+    assert(!Collapse.textHasDups(spark, sf0001))
+    val q = plan("t05_language_id")
+    Scoped.release()
+    assert(q.contains("profile_argmax"), q.take(800))
+    assert(!q.contains("Window"), q.take(800))
+    assert(repJoin.findFirstIn(q).isEmpty, q.take(800))
+    assert(!"Condition[^\\n]*profile_argmax".r.findFirstIn(q).isDefined,
+      "argmax re-evaluated inside a pushed filter")
+    // duplicated corpus: the collapsed plan
+    assert(Collapse.textHasDups(spark, dupCorpus))
+    val p = plan("t05_language_id", dupCorpus)
+    Scoped.release()
     assert(p.contains("profile_argmax"), p.take(800))
     assert(!p.contains("array_intersect"),
       "per-profile intersection fold crept back")
@@ -71,6 +106,7 @@ class PlanSpec extends SparkSpec {
     assert(!"Condition[^\\n]*profile_argmax".r.findFirstIn(p).isDefined,
       "argmax re-evaluated inside a pushed filter")
     assert(p.contains("Window"), p.take(800))
+    assert(repJoin.findFirstIn(p).isDefined, p.take(800))
   }
 
   test("t37: char counting is row-local — no per-character shuffle") {
@@ -216,7 +252,18 @@ class PlanSpec extends SparkSpec {
   }
 
   test("s05: fused hyperplane signatures, one corpus scan") {
-    val p = plan("s05_ann_lsh")
+    // duplicate-free vectors: the top-k runs straight over the table,
+    // no member expansion
+    assert(!Collapse.embHasDups(spark, sf0001))
+    val q = plan("s05_ann_lsh")
+    assert(q.contains("hyperplane_sigs"))
+    assert(!q.contains("Union"), q.take(800))
+    assert(q.contains("TakeOrderedAndProject"))
+    assert(!q.contains("CartesianProduct"))
+    // duplicated vectors: the collapsed plan
+    assert(Collapse.embHasDups(spark, dupCorpus))
+    val p = plan("s05_ann_lsh", dupCorpus)
+    Scoped.release()
     assert(p.contains("hyperplane_sigs"))
     // exactly ONE Union — the duplicate-member expansion of the
     // round-6 exact-collapse; the old 12-scan per-table union shape
@@ -396,7 +443,17 @@ class PlanSpec extends SparkSpec {
   }
 
   test("t40: the merge walk runs once per DISTINCT text (r16 collapse)") {
-    val p = plan("t40_bpe_tokenize")
+    // duplicate-free corpus: one walk per doc straight on the scan —
+    // no dup-mapping window, no re-attach join
+    assert(!Collapse.textHasDups(spark, sf0001))
+    val q = plan("t40_bpe_tokenize")
+    assert("bpe_token_count".r.findAllIn(q).size <= 2, q.take(800))
+    assert(!q.contains("Window"), q.take(800))
+    assert(repJoin.findFirstIn(q).isEmpty, q.take(800))
+    // duplicated corpus: the collapsed plan
+    assert(Collapse.textHasDups(spark, dupCorpus))
+    val p = plan("t40_bpe_tokenize", dupCorpus)
+    Scoped.release()
     // the learned merges ride the fused codegen kernel (one token
     // walk per merge, no chained full-string replace allocations)
     assert(p.contains("bpe_token_count"), p.take(800))
@@ -412,6 +469,7 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("Window"), p.take(800))
     assert(p.contains("BroadcastHashJoin") ||
       p.contains("SortMergeJoin"), p.take(800))
+    assert(repJoin.findFirstIn(p).isDefined, p.take(800))
   }
 
   test("t45: vocab is a top-V heap merge that broadcasts; no sort-merge") {

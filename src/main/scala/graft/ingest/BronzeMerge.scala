@@ -258,7 +258,7 @@ object BronzeMerge {
     * `file_name`, `length`). Round 14 made tombstone deletes
     * exclusively id-keyed (and deleted the name+size fallback), so an
     * UPGRADED pipeline pointed at a pre-upgrade table silently stops
-    * propagating source deletions — the sync paths warn loudly
+    * propagating source deletions — the sync path warns loudly
     * exactly then, and this one-shot rewrite is the fix the warning
     * names. Batches already carrying the column keep their bytes
     * untouched; id-less batches are rewritten once with the joined id

@@ -56,17 +56,12 @@ object DeltaListing {
       size: java.lang.Long,
       modified: java.sql.Timestamp,
       deleted: Boolean)
-
-  /** A drained delta round: every changed item since the previous
-    * checkpoint plus the NEXT checkpoint. The deltaLink is opaque —
-    * persist and replay it verbatim, never parse it. */
-  final case class DeltaResult(items: Seq[DeltaItem], deltaLink: String)
 }
 
-/** Stateless delta-query walker. `sync(None)` = initial full
-  * enumeration; `sync(Some(deltaLink))` = only changes since. The
-  * caller owns checkpoint persistence ([[DeltaCheckpoint]] for the
-  * file-based default).
+/** Stateless delta-query walker. `syncPages(None)` = initial full
+  * enumeration; `syncPages(Some(deltaLink))` = only changes since.
+  * The caller owns checkpoint persistence ([[DeltaCheckpoint]] for
+  * the file-based default).
   */
 final class DeltaListingProvider(
     baseUrl: String,
@@ -78,21 +73,15 @@ final class DeltaListingProvider(
 
   private def initialUrl: String = s"$baseUrl/root/delta"
 
-  def sync(checkpoint: Option[String]): DeltaResult = {
-    val out = Seq.newBuilder[DeltaItem]
-    val link = syncPages(checkpoint)(page => { out ++= page; () })
-    DeltaResult(out.result(), link)
-  }
-
   /** Page-STREAMING sync: `onPage` receives each page's items as it
     * arrives and nothing accumulates here — driver memory is O(page)
     * however large the change window (a deleted million-item folder
-    * tombstones every descendant in ONE window; [[sync]] would
-    * materialize them all, and is kept as the convenience collector
-    * over this). Returns the final deltaLink. Pages are delivered in
-    * protocol order; a thrown `onPage` aborts the walk mid-window
-    * with no deltaLink advanced — the caller's next run replays the
-    * window from its checkpoint (the C4 at-least-once contract). */
+    * tombstones every descendant in ONE window). Returns the final
+    * deltaLink, which is opaque: persist and replay it verbatim,
+    * never parse it. Pages are delivered in protocol order; a thrown
+    * `onPage` aborts the walk mid-window with no deltaLink advanced —
+    * the caller's next run replays the window from its checkpoint
+    * (the C4 at-least-once contract). */
   def syncPages(checkpoint: Option[String])(
       onPage: Seq[DeltaItem] => Unit): String = {
     val get = HttpListing.getWithRetry(transport, policy, sleeper) _

@@ -442,9 +442,9 @@ object HttpListing {
   }
 
   /** Retry 429/5xx with capped exponential backoff; honor
-    * `Retry-After` (seconds) when the server sends one. `sleeper` is
-    * injected so tests assert the exact delay sequence without
-    * sleeping. */
+    * `Retry-After` (seconds) when the server sends one, capped at
+    * `maxDelayMs`. `sleeper` is injected so tests assert the exact
+    * delay sequence without sleeping. */
   final case class RetryPolicy(
       maxRetries: Int = 5,
       baseDelayMs: Long = 500,
@@ -453,10 +453,14 @@ object HttpListing {
     def retryable(status: Int): Boolean = status == 429 || status >= 500
 
     /** Backoff before retry attempt `n` (0-based), absent Retry-After:
-      * base·2ⁿ capped at maxDelayMs. Deterministic — jitter belongs in
-      * the transport if ever needed, not in the testable policy. */
+      * base·2ⁿ capped at maxDelayMs. A negative Retry-After is ignored
+      * (the backoff applies) and one past the cap saturates at it
+      * without overflowing `s * 1000`, so the delay is never negative.
+      * Deterministic — jitter belongs in the transport if ever needed,
+      * not in the testable policy. */
     def delayMs(attempt: Int, retryAfter: Option[Long]): Long =
-      retryAfter.map(s => math.min(s * 1000, maxDelayMs))
+      retryAfter.filter(_ >= 0)
+        .map(s => if (s > maxDelayMs / 1000) maxDelayMs else s * 1000)
         .getOrElse(math.min(baseDelayMs << math.min(attempt, 20), maxDelayMs))
   }
 

@@ -685,11 +685,11 @@ object Streams {
     *
     * NOTE a plain file directory carries no source item id, so rows
     * landed here are id-LESS (legacy identity): fine for ingest and
-    * re-run idempotence, but [[discoverIncrement]]'s id-keyed
+    * re-run idempotence, but [[discoverIncrementPaged]]'s id-keyed
     * tombstone deletes cannot address them — a catalog-driven drain
     * that must observe source deletions should land blobs WITH the
     * staged `id` as `source_item_id` (see the tombstone doc on
-    * [[discoverIncrement]]). */
+    * [[discoverIncrementPaged]]). */
   def streamMergeIngest(spark: SparkSession, srcDir: String,
       table: String, checkpoint: String,
       onBeforeCommit: () => Unit = () => (),
@@ -723,137 +723,11 @@ object Streams {
     q.awaitTermination()
   }
 
-  /** One scheduled INCREMENTAL-DISCOVERY round (Graph delta query →
-    * staged catalog write): load the previous deltaLink, fetch only
-    * the items changed since it, land the live file rows in
-    * `stagingDir` as parquet, and persist the new deltaLink.
-    * Discovery cost is O(changes) — the fix for the reference's
-    * full-catalog re-list every run
-    * (`sharepoint_to_bronze_delta.py:72-77`).
-    *
-    * Ordering is data-then-checkpoint: a crash between the two
-    * re-fetches one change window on restart (at-least-once), which
-    * the downstream bronze MERGE dedupes — the same C4 contract as
-    * every other re-run in the pipeline. The staged catalog itself is
-    * WINDOW-IDEMPOTENT, not merely append-only: each window's rows
-    * land under `stagingDir/window=<tag>` where the tag derives from
-    * the window's own identity (the deltaLink the window synced FROM
-    * — a replayed window is by definition the same token), written
-    * with overwrite. A crash-replayed window therefore rewrites its
-    * own partition instead of double-appending the catalog — exactly
-    * one row per (id, window) however many times the window replays —
-    * and a multi-year catalog compacts per-partition (rewrite old
-    * `window=` dirs, never the live one; SCALE.md). Readers see one
-    * logical dataset: `spark.read.parquet(stagingDir)` partition-
-    * discovers the window column. The staged rows feed any
-    * `Trigger.AvailableNow` consumer ([[streamMergeIngest]]-style):
-    * each scheduled run drains discovery AND the stream in one shot,
-    * so catalog freshness costs one delta round-trip plus the bytes
-    * that actually changed. Returns the landed items (deleted and
-    * folder tombstones excluded from staging but returned for audit).
-    *
-    * TOMBSTONE PROPAGATION: when `bronzeTable` is given, `deleted`
-    * facets are composed end-to-end into the bronze DELETE path,
-    * keyed on the SOURCE ITEM ID — the same identity the reference's
-    * own delete is scoped to (`sharepoint_to_bronze_delta.py:105-109`
-    * DELETEs a specific drive item by id). The blob-fetch drain must
-    * therefore carry the staged catalog's `id` into bronze as
-    * [[graft.ingest.BronzeMerge.IdCol]] (`source_item_id`); a Graph
-    * tombstone carries only id+name, and the id is the ONLY key that
-    * distinguishes a deleted file from a deleted folder with the same
-    * name, from a never-ingested item, and from a live same-name
-    * same-size file in another folder — each of those is a structural
-    * no-op here (no bronze row carries the dead id), with no
-    * staged-catalog resolution or claim bookkeeping needed. Small
-    * windows delete via one flat hashed In on the id
-    * ([[graft.ingest.BronzeMerge.deleteWhere]]); a window past
-    * [[MassTombstoneThreshold]] (a deleted source FOLDER can carry
-    * millions of tombstones) keeps the dead ids a DataFrame and
-    * deletes by anti-join ([[graft.ingest.BronzeMerge
-    * .deleteMatchingKeys]]) — never a million-literal expression.
-    * Without this path an incremental sync that observes a
-    * source-side deletion would leave bronze diverged forever
-    * (the reference's only delete semantics is its
-    * archive-then-delete flow, `sharepoint_to_bronze_delta.py:229-230`
-    * — source deletions must reach the lakehouse). Ordering is
-    * delete-then-checkpoint: a crash in between replays the tombstone
-    * window on restart and the delete re-runs idempotently
-    * (at-least-once, no-op when nothing matches). The id-qualified
-    * identity key is retained by `deleteWhere`, so a redelivered blob
-    * of the DELETED item cannot resurrect its rows — while a
-    * byte-identical re-create under a fresh id is a new identity and
-    * lands (C3/C4). A tombstone arriving before the table's first
-    * commit (or against a legacy id-less bronze, whose batches
-    * predate `source_item_id`) is a safe no-op.
-    *
-    * `drain` is the blob-landing hook, invoked with the WINDOW's
-    * items after staging and BEFORE the tombstone delete and the
-    * checkpoint save ([[drainWindow]] is the production
-    * implementation; [[syncToBronze]] wires it). The ordering makes
-    * the whole window at-least-once as a unit: a crash anywhere
-    * before the checkpoint replays stage + drain + delete, each of
-    * which is idempotent (append-dedup / merge / keyed no-op) — a
-    * drain placed AFTER the checkpoint would instead strand a
-    * staged-but-never-landed window on the crash path. Drain runs
-    * before delete so a same-window delete+re-create lands the new
-    * generation before the old one's id-scoped delete fires (order
-    * is immaterial for correctness under id keys, but this way the
-    * merge-on-read view never observes an empty name mid-window).
-    */
-  def discoverIncrement(spark: SparkSession,
-      provider: graft.pipeline.DeltaListingProvider,
-      checkpoint: graft.pipeline.DeltaCheckpoint,
-      stagingDir: String,
-      bronzeTable: Option[String] = None,
-      drain: Seq[graft.pipeline.DeltaListing.DeltaItem] => Unit = _ => ())
-      : Seq[graft.pipeline.DeltaListing.DeltaItem] = {
-    import spark.implicits._
-    val fromToken = checkpoint.load()
-    val result = provider.sync(fromToken)
-    val live = result.items.filter(it => !it.deleted && it.mime != null)
-    if (live.nonEmpty)
-      live.toDF().write.mode("overwrite")
-        .parquet(s"${stagingDir.stripSuffix("/")}/window=" +
-          stagingWindowTag(fromToken))
-    drain(result.items)
-    // Tombstones delete BY SOURCE ITEM ID — the identity the Graph
-    // tombstone actually carries and the identity the reference's own
-    // DELETE is scoped to. Bronze rows carry `source_item_id`
-    // (BronzeMerge.IdCol, landed by the id-carrying drain), so the
-    // delete is a direct key match: a deleted FOLDER named like an
-    // ingested file, a never-ingested item, and a live same-name
-    // same-size file in another folder all miss by construction —
-    // no staged-catalog claims join, no tombstone-history sidecar,
-    // no name+size attribution heuristic. (Those existed only to
-    // compensate for id-less bronze rows; against a LEGACY table
-    // whose batches predate the id column every tombstone is a safe
-    // no-op — deleteWhere reads the missing column as null.)
-    val deadIds = result.items.filter(_.deleted).map(_.id).distinct
-    bronzeTable.foreach(table =>
-      deleteTombstones(spark, table, deadIds.size) {
-        if (deadIds.size <= MassTombstoneThreshold)
-          // ONE flat hashed In — never a per-id Or chain whose
-          // analysis depth is the tombstone count
-          graft.ingest.BronzeMerge.deleteWhere(spark, table,
-            col(graft.ingest.BronzeMerge.IdCol).isin(deadIds: _*))
-        else
-          // a deleted source folder can carry millions of
-          // tombstones: keep them a DataFrame and anti-join — no
-          // O(tombstones)-literal expression tree. (The ids are
-          // already driver-resident — the listing provider returns
-          // the window as a Seq — so toDF adds no new driver copy.)
-          graft.ingest.BronzeMerge.deleteMatchingKeys(spark, table,
-            deadIds.toDF(graft.ingest.BronzeMerge.IdCol),
-            Seq(graft.ingest.BronzeMerge.IdCol))
-      })
-    checkpoint.save(result.deltaLink)
-    result.items
-  }
-
-  /** Run one window's id-keyed tombstone `delete` against `table`.
-    * Only a committed table can hold rows to remove; an empty or
-    * not-yet-created bronze makes every tombstone a no-op. A delete
-    * that matched nothing against a LEGACY table (every batch
+  /** Delete the rows of one window's `nDead` tombstoned ids (`dead`,
+    * one [[graft.ingest.BronzeMerge.IdCol]] column) from `table` by
+    * anti-join. Only a committed table can hold rows to remove; an
+    * empty or not-yet-created bronze makes every tombstone a no-op. A
+    * delete that matched nothing against a LEGACY table (every batch
     * predates source_item_id) is a structural no-op, so source
     * deletions would silently stop propagating and bronze would
     * diverge forever: that case warns LOUDLY, naming the one-shot
@@ -862,20 +736,17 @@ object Streams {
     * after a zero-match delete — a delete that matched proves the
     * table carries ids. */
   private def deleteTombstones(spark: SparkSession, table: String,
-      nDead: Long)(delete: => (Int, Long)): Unit =
+      dead: DataFrame, nDead: Long): Unit =
     if (nDead > 0 &&
         graft.ingest.BronzeMerge.currentCommit(spark, table)._2.nonEmpty &&
-        delete._2 == 0 && !graft.ingest.BronzeMerge.carriesIds(spark, table))
+        graft.ingest.BronzeMerge.deleteMatchingKeys(spark, table, dead,
+          Seq(graft.ingest.BronzeMerge.IdCol))._2 == 0 &&
+        !graft.ingest.BronzeMerge.carriesIds(spark, table))
       log.warn(s"tombstone window ($nDead ids) against id-less " +
         s"bronze table $table: every batch predates " +
         "source_item_id, so id-keyed deletes CANNOT match — " +
         "bronze will diverge from the source until " +
         "BronzeMerge.backfillIds migrates the table")
-
-  /** Tombstone-window size above which [[discoverIncrement]] switches
-    * from a literal-In delete predicate to the DataFrame anti-join
-    * ([[graft.ingest.BronzeMerge.deleteMatchingKeys]]). */
-  val MassTombstoneThreshold = 1000
 
   private val log =
     org.slf4j.LoggerFactory.getLogger("graft.streaming.Streams")
@@ -910,8 +781,11 @@ object Streams {
   final case class DrainResult(appended: Long, failed: Seq[QuarantinedItem])
 
   /** Land one discovery window's live blobs into bronze BY ITEM ID —
-    * the production drain the id-keyed tombstone contract assumes
-    * (the specs' driver-side stand-ins model it). Each live file item
+    * the drain the id-keyed tombstone contract assumes. `meta` is any
+    * `(source_item_id, file_name[, modified][, size])` DataFrame,
+    * typically the window-slice relation [[discoverIncrementPaged]]
+    * writes, which never exists as a driver collection (missing
+    * columns default to the fallback stamp / unknown size). Each item
     * fetches `<driveBaseUrl>/items/<id>/content` — the reference's
     * own download identity (`sharepoint_to_bronze_delta.py:163-176`
     * downloads by drive item) — EXECUTOR-SIDE through the chunked
@@ -921,59 +795,20 @@ object Streams {
     * `filesZone` for blobs that must never be rows), then lands
     * `(source_item_id, file_name, length, modified, content)`
     * through the idempotent merge. Bandwidth is O(window), never
-    * O(catalog): callers hand the CHANGED items, so an unchanged
-    * 100 TB corpus costs one delta round-trip plus only the bytes
-    * that moved. Re-drains of a replayed window re-fetch but re-land
-    * nothing (the id-qualified keys dedupe — at-least-once fetch,
-    * exactly-once rows, C4). `length` is the FETCHED byte count
-    * (authoritative over the listing's size facet); `modified` is
-    * each item's REAL change stamp ([[graft.pipeline.DeltaListing
-    * .DeltaItem]].modified — replays key identically because the
-    * stamp comes from the listing, not a clock), with the fixed-epoch
-    * parameter as the fallback for stamp-less payloads. Returns
-    * appended rows. */
-  def drainWindow(spark: SparkSession,
-      transport: graft.pipeline.HttpListing.Transport,
-      driveBaseUrl: String,
-      items: Seq[graft.pipeline.DeltaListing.DeltaItem],
-      table: String,
-      policy: graft.pipeline.HttpListing.RetryPolicy =
-        graft.pipeline.HttpListing.RetryPolicy(),
-      chunkBytes: Int = 8 << 20,
-      modified: java.sql.Timestamp = new java.sql.Timestamp(0L),
-      filesZone: Option[String] = None,
-      largeBlobBytes: Long = Long.MaxValue): Long = {
-    import spark.implicits._
-    val meta = windowMeta(items, modified)
-    if (meta.isEmpty) return 0L
-    drainItems(spark, transport, driveBaseUrl,
-      spark.createDataset(meta)
-        .toDF("source_item_id", "file_name", "modified", "size"),
-      table, policy, chunkBytes, modified, filesZone, largeBlobBytes)
-  }
-
-  /** A window Seq's live items as drain-meta tuples
-    * (id, name, stamp-or-fallback, listed size). */
-  private def windowMeta(items: Seq[graft.pipeline.DeltaListing.DeltaItem],
-      fallback: java.sql.Timestamp)
-      : Seq[(String, String, java.sql.Timestamp, Option[Long])] =
-    items.filter(it => !it.deleted && it.mime != null)
-      .map(it => (it.id, it.name,
-        Option(it.modified).getOrElse(fallback),
-        Option(it.size).map(_.toLong))).distinct
-
-  /** [[drainWindow]]'s relation-driven core: `meta` is any
-    * `(source_item_id, file_name[, modified][, size])` DataFrame — a
-    * window Seq lifted by the wrapper, or the window-slice relation
-    * the PAGED discovery writes ([[discoverIncrementPaged]]), which
-    * never existed as a driver collection at all (missing columns
-    * default to the fallback stamp / unknown size). Fetch is
-    * executor-side per partition; duplicates are collapsed so every
-    * id fetches once, keeping the LATEST stamp (an item updated twice
-    * in one window has one current content, keyed off the newest
-    * generation). A fetch failure aborts the window (fail-loud →
-    * checkpoint never advances → replay-to-success); for per-item
-    * isolation use [[drainItemsIsolated]]. */
+    * O(catalog). Duplicates are collapsed so every id fetches once,
+    * keeping the LATEST stamp (an item updated twice in one window
+    * has one current content, keyed off the newest generation).
+    * Re-drains of a replayed window re-fetch but re-land nothing (the
+    * id-qualified keys dedupe — at-least-once fetch, exactly-once
+    * rows, C4). `length` is the FETCHED byte count (authoritative
+    * over the listing's size facet); `modified` is each item's REAL
+    * change stamp ([[graft.pipeline.DeltaListing.DeltaItem]].modified
+    * — replays key identically because the stamp comes from the
+    * listing, not a clock), with the fixed-epoch parameter as the
+    * fallback for stamp-less payloads. A fetch failure aborts the
+    * window (fail-loud → checkpoint never advances →
+    * replay-to-success); for per-item isolation use
+    * [[drainItemsIsolated]]. Returns appended rows. */
   def drainItems(spark: SparkSession,
       transport: graft.pipeline.HttpListing.Transport,
       driveBaseUrl: String,
@@ -1027,7 +862,7 @@ object Streams {
     * via `mssparkutils.fs.cp`) rather than a table row. The zone
     * write is overwrite-idempotent (a replayed window rewrites the
     * same bytes at the same path); the id-keyed tombstone path also
-    * removes the zone file ([[syncToBronze]]/[[syncToBronzePaged]]).
+    * removes the zone file ([[syncToBronzePaged]]).
     * The single fetch pass feeds the merge AND the failure capture —
     * content bytes are never fetched twice and never pinned. */
   private def drainCore(spark: SparkSession,
@@ -1157,104 +992,6 @@ object Streams {
       .coalesce(1).write.mode("overwrite").parquet(dir)
   }
 
-  /** The reference's whole sync loop in one call
-    * (`sharepoint_to_bronze_delta.py:237-277`, incremental form):
-    * delta-discover the changed window, stage the catalog, land the
-    * changed blobs by id ([[drainWindow]]), propagate tombstones as
-    * id-keyed bronze deletes, then checkpoint — each leg idempotent,
-    * so the scheduled re-run IS the crash recovery. Returns the
-    * window's items.
-    *
-    * FAILURE MODES, chosen per `quarantineDir`:
-    *  - `None` (default): fail-loud. Any item's terminal fetch error
-    *    aborts the window before the checkpoint advances; the next
-    *    scheduled run replays it (the fault-injection spec pins
-    *    this). Right for transient outages — wrong for a POISON item
-    *    (routine 404 from a delete between list and fetch, a
-    *    forever-5xx blob), which freezes the deltaLink for good.
-    *  - `Some(dir)`: the reference's own C2 skip-and-continue
-    *    (`sharepoint_to_bronze_delta.py:213-219`). Failed items are
-    *    captured per item ([[drainItemsIsolated]]), parked in the
-    *    quarantine relation at `dir`, and the WINDOW COMMITS; every
-    *    later window retries the whole parked set (shrinking it on
-    *    success, or when the item is tombstoned upstream) alongside
-    *    its own items. The quarantine write precedes the checkpoint,
-    *    so crash-replays rewrite it idempotently.
-    *
-    * `filesZone`: enables the large-blob router — items whose listed
-    * size reaches `largeBlobBytes` stream to `<filesZone>/<id>`
-    * instead of a content column ([[drainCore]] scaladoc), and a
-    * TOMBSTONED id's zone file is deleted here alongside its bronze
-    * rows (before the checkpoint, so a crash replays the cleanup). */
-  def syncToBronze(spark: SparkSession,
-      provider: graft.pipeline.DeltaListingProvider,
-      checkpoint: graft.pipeline.DeltaCheckpoint,
-      stagingDir: String,
-      transport: graft.pipeline.HttpListing.Transport,
-      driveBaseUrl: String,
-      table: String,
-      policy: graft.pipeline.HttpListing.RetryPolicy =
-        graft.pipeline.HttpListing.RetryPolicy(),
-      chunkBytes: Int = 8 << 20,
-      modified: java.sql.Timestamp = new java.sql.Timestamp(0L),
-      quarantineDir: Option[String] = None,
-      filesZone: Option[String] = None,
-      largeBlobBytes: Long = Long.MaxValue)
-      : Seq[graft.pipeline.DeltaListing.DeltaItem] =
-    discoverIncrement(spark, provider, checkpoint, stagingDir,
-      Some(table), drain = items => {
-        import spark.implicits._
-        val live = windowMeta(items, modified)
-        val deadIds = items.filter(_.deleted).map(_.id).toSet
-        quarantineDir match {
-          case None =>
-            if (live.nonEmpty) {
-              drainItems(spark, transport, driveBaseUrl,
-                spark.createDataset(live)
-                  .toDF("source_item_id", "file_name", "modified", "size"),
-                table, policy, chunkBytes, modified, filesZone,
-                largeBlobBytes)
-              ()
-            }
-          case Some(qdir) =>
-            val liveIds = live.map(_._1).toSet
-            // retry everything parked that this window neither
-            // tombstoned (dead upstream — fetching it would 404
-            // forever) nor re-listed (the window's own fresher entry
-            // supersedes the parked one)
-            val prior = readQuarantine(spark, qdir)
-            val retry = prior.filterNot(q =>
-              deadIds.contains(q.source_item_id) ||
-                liveIds.contains(q.source_item_id))
-            val metaAll = live ++ retry.map(q => (q.source_item_id,
-              q.file_name, Option(q.modified).getOrElse(modified),
-              Option(q.size).map(_.toLong)))
-            val failed =
-              if (metaAll.isEmpty) Seq.empty[QuarantinedItem]
-              else drainItemsIsolated(spark, transport, driveBaseUrl,
-                spark.createDataset(metaAll)
-                  .toDF("source_item_id", "file_name", "modified", "size"),
-                table, policy, chunkBytes, modified, filesZone,
-                largeBlobBytes).failed
-            if (failed.nonEmpty)
-              log.warn(s"drain quarantined ${failed.size} item(s) " +
-                s"(window committed; retried next window): " +
-                failed.take(5).map(q =>
-                  s"${q.source_item_id}=${q.error}").mkString("; "))
-            writeQuarantine(spark, qdir,
-              failed.filterNot(q => deadIds.contains(q.source_item_id)),
-              prior)
-        }
-        filesZone.foreach { zone =>
-          if (deadIds.nonEmpty) {
-            val zp = new org.apache.hadoop.fs.Path(zone)
-            val fsz = zp.getFileSystem(spark.sessionState.newHadoopConf())
-            deadIds.foreach(id =>
-              fsz.delete(new org.apache.hadoop.fs.Path(zp, id), false))
-          }
-        }
-      })
-
   /** Schema of the paged window's live slice, `<staging>_window/live`
     * — exactly what each page's write lays down. */
   private val LiveSliceSchema =
@@ -1274,36 +1011,65 @@ object Streams {
   final case class WindowSlices(live: DataFrame, nLive: Long,
       dead: DataFrame, nDead: Long)
 
-  /** [[discoverIncrement]] at O(page) driver memory — the variant for
-    * windows that should never exist as one driver collection (a
-    * deleted million-item folder tombstones every descendant in ONE
-    * delta window; [[sync]]'s Seq was the last driver-side
-    * O(window) bound SCALE.md r14 names). Pages stream straight from
-    * the provider ([[graft.pipeline.DeltaListingProvider.syncPages]]):
-    * each page's live rows append to the staging catalog AND to a
-    * window-scoped `<staging>_window/live` slice, each page's
-    * tombstoned ids append to `<staging>_window/dead` — so the drain
-    * consumes a RELATION of this window's items and the delete is
-    * ALWAYS the anti-join form over the dead relation
-    * ([[graft.ingest.BronzeMerge.deleteMatchingKeys]]); no threshold,
-    * no literal predicate, no driver list. The window dirs are reset
-    * at window start, so a crash-replayed window (checkpoint not yet
-    * advanced) rebuilds them identically; per-page appends mean
-    * O(pages) small files per window, gone at the next window. Each
-    * slice is opened once, with the schema its page writes gave it
-    * ([[LiveSliceSchema]], [[DeadSliceSchema]]) — never inferred — and
-    * the one dead relation serves both the drain and the delete. The
-    * staged catalog itself is WINDOW-IDEMPOTENT like
-    * [[discoverIncrement]]'s: pages append into
-    * `stagingDir/window=<tag>` (tag = digest of the window's
-    * from-token), which is reset with the window dirs, so a replayed
-    * window rebuilds its own partition instead of double-appending
-    * the catalog. `drain` ALWAYS runs (a
-    * quarantine-retrying drain has work even in an empty window) and
-    * receives the [[WindowSlices]]: both window relations — empty
-    * typed relations when the window carried none — with the row
-    * counts paging already took. Returns (live rows staged,
-    * tombstones observed). */
+  /** One scheduled INCREMENTAL-DISCOVERY round (Graph delta query →
+    * staged catalog): load the previous deltaLink, fetch only the
+    * items changed since it, stage them, run `drain`, propagate the
+    * window's tombstones into `bronzeTable`, and persist the new
+    * deltaLink. Discovery cost is O(changes) — the fix for the
+    * reference's full-catalog re-list every run
+    * (`sharepoint_to_bronze_delta.py:72-77`).
+    *
+    * Driver memory is O(page): a deleted million-item folder
+    * tombstones every descendant in ONE delta window, so pages stream
+    * from [[graft.pipeline.DeltaListingProvider.syncPages]] and each
+    * page's live rows append to the staging catalog AND to a
+    * window-scoped `<staging>_window/live` slice, its tombstoned ids
+    * to `<staging>_window/dead`. The drain consumes a RELATION of the
+    * window and the delete is the anti-join over the dead relation
+    * ([[graft.ingest.BronzeMerge.deleteMatchingKeys]]) — no literal
+    * predicate, no driver list. Each slice is opened once, with the
+    * schema its page writes gave it ([[LiveSliceSchema]],
+    * [[DeadSliceSchema]]), and the one dead relation serves both the
+    * drain and the delete.
+    *
+    * Ordering is data-then-checkpoint: stage, drain and delete all
+    * precede the deltaLink save, so a crash anywhere before it replays
+    * the whole window (at-least-once) and each leg is idempotent
+    * (window-scoped rewrite / merge / keyed no-op) — the C4 contract
+    * of every re-run in the pipeline. A drain AFTER the checkpoint
+    * would strand a staged-but-never-landed window on the crash path.
+    * The staged catalog is WINDOW-IDEMPOTENT: pages append into
+    * `stagingDir/window=<tag>`, the tag a digest of the deltaLink the
+    * window synced FROM (a replay is by definition the same token),
+    * and that partition is reset with the window dirs at window
+    * start, so a replay rebuilds its own partition instead of
+    * double-appending — one row per (id, window).
+    * `spark.read.parquet(stagingDir)` partition-discovers the window
+    * column.
+    *
+    * TOMBSTONES are keyed on the SOURCE ITEM ID, the identity the
+    * reference's own delete is scoped to
+    * (`sharepoint_to_bronze_delta.py:105-109`). A Graph tombstone
+    * carries only id+name, and only the id distinguishes a deleted
+    * file from a deleted same-name folder, a never-ingested item, or
+    * a live same-name same-size file in another folder — each of
+    * those is a structural no-op (no bronze row carries the dead id).
+    * The drain must therefore land the staged `id` as
+    * [[graft.ingest.BronzeMerge.IdCol]] ([[drainItems]] does). The
+    * delete retains the id-qualified identity key, so a redelivered
+    * blob of the DELETED item cannot resurrect its rows, while a
+    * byte-identical re-create under a fresh id lands (C3/C4). A
+    * tombstone before the table's first commit, or against a legacy
+    * id-less bronze ([[deleteTombstones]] warns), is a no-op.
+    *
+    * `drain` ALWAYS runs (a quarantine-retrying drain has work even
+    * in an empty window), after staging and BEFORE the delete, so a
+    * same-window delete + re-create lands the new generation before
+    * the old id's delete fires and the merge-on-read view never sees
+    * an empty name mid-window. It receives the [[WindowSlices]]: both
+    * window relations — empty typed relations when the window carried
+    * none — with the row counts paging already took. Returns (live
+    * rows staged, tombstones observed). */
   def discoverIncrementPaged(spark: SparkSession,
       provider: graft.pipeline.DeltaListingProvider,
       checkpoint: graft.pipeline.DeltaCheckpoint,
@@ -1350,27 +1116,49 @@ object Streams {
     val deadRel = slice(nDead, deadDir, DeadSliceSchema)
     drain(WindowSlices(slice(nLive, liveDir, LiveSliceSchema), nLive,
       deadRel, nDead))
-    bronzeTable.foreach(table =>
-      deleteTombstones(spark, table, nDead)(
-        graft.ingest.BronzeMerge.deleteMatchingKeys(spark, table,
-          deadRel, Seq(graft.ingest.BronzeMerge.IdCol))))
+    bronzeTable.foreach(deleteTombstones(spark, _, deadRel, nDead))
     checkpoint.save(link)
     (nLive, nDead)
   }
 
-  /** [[syncToBronze]] at O(page) driver memory: paged discovery with
-    * the relation-driven drain ([[drainItems]]) wired in — the
-    * composition for sources whose change windows can be arbitrarily
-    * large. Same `quarantineDir`/`filesZone`/`largeBlobBytes`
-    * semantics as [[syncToBronze]]; here the parked set is reconciled
-    * against the window's relations by a scan filtered on the parked
-    * ids (the tombstone side can be O(window) — only the quarantine
-    * itself, O(failures), is ever driver-resident) and zone-file
-    * cleanup runs executor-side over the dead relation. Work the
-    * window's slice counts prove empty is skipped: no drain without
-    * live or retryable items, no reconciliation scan of an empty
-    * slice, no quarantine rewrite of an unchanged parked set.
-    * Returns (live rows staged, tombstones observed). */
+  /** The reference's whole sync loop in one call
+    * (`sharepoint_to_bronze_delta.py:237-277`, incremental form):
+    * [[discoverIncrementPaged]] with the relation-driven drain wired
+    * in — delta-discover the changed window, stage the catalog, land
+    * the changed blobs by id ([[drainItems]]), propagate tombstones as
+    * id-keyed bronze deletes, then checkpoint. Each leg is idempotent,
+    * so the scheduled re-run IS the crash recovery.
+    *
+    * FAILURE MODES, chosen per `quarantineDir`:
+    *  - `None` (default): fail-loud. Any item's terminal fetch error
+    *    aborts the window before the checkpoint advances; the next
+    *    scheduled run replays it (the fault-injection spec pins
+    *    this). Right for transient outages — wrong for a POISON item
+    *    (routine 404 from a delete between list and fetch, a
+    *    forever-5xx blob), which freezes the deltaLink for good.
+    *  - `Some(dir)`: the reference's own C2 skip-and-continue
+    *    (`sharepoint_to_bronze_delta.py:213-219`). Failed items are
+    *    captured per item ([[drainItemsIsolated]]), parked in the
+    *    quarantine relation at `dir`, and the WINDOW COMMITS; every
+    *    later window retries the whole parked set (shrinking it on
+    *    success, or when the item is tombstoned upstream) alongside
+    *    its own items. The parked set is reconciled against the
+    *    window's relations by a scan filtered on the parked ids (the
+    *    tombstone side can be O(window) — only the quarantine itself,
+    *    O(failures), is ever driver-resident). The quarantine write
+    *    precedes the checkpoint, so crash-replays rewrite it
+    *    idempotently.
+    *
+    * `filesZone`: enables the large-blob router — items whose listed
+    * size reaches `largeBlobBytes` stream to `<filesZone>/<id>`
+    * instead of a content column ([[drainCore]] scaladoc), and a
+    * TOMBSTONED id's zone file is deleted alongside its bronze rows,
+    * executor-side over the dead relation and before the checkpoint,
+    * so a crash replays the cleanup. Work the window's slice counts
+    * prove empty is skipped: no drain without live or retryable
+    * items, no reconciliation scan of an empty slice, no quarantine
+    * rewrite of an unchanged parked set. Returns (live rows staged,
+    * tombstones observed). */
   def syncToBronzePaged(spark: SparkSession,
       provider: graft.pipeline.DeltaListingProvider,
       checkpoint: graft.pipeline.DeltaCheckpoint,

@@ -75,6 +75,24 @@ class HttpListingSpec extends AnyFunSuite {
     assert(t.calls.size == 2)
   }
 
+  test("a negative Retry-After falls back to the backoff; a huge one saturates at the cap") {
+    fresh()
+    val t = new FakeTransport(url("F") -> Seq(
+      HttpResponse(429, "", Map("Retry-After" -> "-1")),
+      HttpResponse(429, "", Map("Retry-After" -> "9223372036854775807")),
+      HttpResponse(429, "", Map("Retry-After" -> "7")),
+      page(Seq(("x.txt", true, 1L)), None)))
+    val out = new HttpListingProvider(base, t, RetryPolicy(), sleeper).list("F")
+    assert(out.map(_.name) == Seq("x.txt"))
+    // -1 → base·2⁰, Long.MaxValue seconds → maxDelayMs, 7 s → 7000 ms;
+    // a negative sleep would throw from Thread.sleep in production
+    assert(sleeps.toSeq == Seq(500L, 30000L, 7000L))
+    val p = RetryPolicy()
+    assert(p.delayMs(3, Some(-1L)) == 4000L)
+    assert(p.delayMs(0, Some(Long.MaxValue / 1000 + 1)) == 30000L)
+    assert(p.delayMs(0, Some(30L)) == 30000L && p.delayMs(0, Some(31L)) == 30000L)
+  }
+
   test("5xx backs off exponentially with a cap") {
     fresh()
     val policy = RetryPolicy(maxRetries = 5, baseDelayMs = 500,

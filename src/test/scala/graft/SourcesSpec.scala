@@ -286,33 +286,39 @@ class SourcesSpec extends SparkSpec {
       }
     }
     val prov = new DeltaListingProvider(base, transport, sleeper = _ => ())
+    // one window's pages collected in protocol order, plus its deltaLink
+    def sync(from: Option[String]) = {
+      val items = Seq.newBuilder[graft.pipeline.DeltaListing.DeltaItem]
+      val link = prov.syncPages(from)(items ++= _)
+      (items.result(), link)
+    }
 
     // initial sync: full catalog over two pages, folder surfaces with
     // null mime, deltaLink captured from the FINAL page
-    val full = prov.sync(None)
-    assert(full.deltaLink == delta1)
-    assert(full.items.map(_.name) == Seq("a.txt", "docs", "b.txt"))
-    assert(full.items.filter(_.mime != null).map(_.name) ==
+    val (full, fullLink) = sync(None)
+    assert(fullLink == delta1)
+    assert(full.map(_.name) == Seq("a.txt", "docs", "b.txt"))
+    assert(full.filter(_.mime != null).map(_.name) ==
       Seq("a.txt", "b.txt"))
-    assert(full.items.forall(!_.deleted))
-    assert(full.items.head.path == "/drives/d1/root:/in")
+    assert(full.forall(!_.deleted))
+    assert(full.head.path == "/drives/d1/root:/in")
 
     // incremental sync: ONLY the changed item + the tombstone come
     // back, and the full-catalog URL is never hit again
-    val incr = prov.sync(Some(full.deltaLink))
+    val (incr, incrLink) = sync(Some(fullLink))
     assert(calls.count(_ == s"$base/root/delta") == 1,
       "incremental sync must not re-list the catalog")
-    assert(incr.items.map(i => (i.name, i.deleted)) ==
+    assert(incr.map(i => (i.name, i.deleted)) ==
       Seq(("b.txt", false), ("a.txt", true)))
-    assert(incr.items.head.size == 9L)
-    assert(incr.deltaLink == delta2)
+    assert(incr.head.size == 9L)
+    assert(incrLink == delta2)
 
     // checkpoint round-trip: absent → None; save → load returns it
     val dir = java.nio.file.Files
       .createTempDirectory("graft-deltackpt").toString
     val ck = new DeltaCheckpoint(dir)
     assert(ck.load().isEmpty)
-    ck.save(incr.deltaLink)
+    ck.save(incrLink)
     assert(ck.load().contains(delta2))
   }
 
@@ -325,7 +331,7 @@ class SourcesSpec extends SparkSpec {
         HttpResponse(200, """{"value":[]}""")
     }
     val prov = new DeltaListingProvider(base, transport, sleeper = _ => ())
-    val e = intercept[RuntimeException](prov.sync(None))
+    val e = intercept[RuntimeException](prov.syncPages(None)(_ => ()))
     assert(e.getMessage.contains("deltaLink"))
   }
 }

@@ -1188,6 +1188,13 @@ class StreamsSpec extends SparkSpec {
     assert(rows == Map("a.txt" -> None, "b.txt" -> Some("https://src/b")))
   }
 
+  /** A paged window's slice, sorted: the `live` file names or the
+    * `dead` ids that `<staging>_window/<side>` holds. */
+  private def windowSlice(staging: String, side: String): Seq[String] =
+    spark.read.parquet(s"${staging}_window/$side")
+      .select(if (side == "live") "file_name" else "source_item_id")
+      .collect().map(_.getString(0)).sorted.toSeq
+
   test("incremental discovery: round 2 stages only the delta; AvailableNow drains only the new rows") {
     import graft.pipeline.{DeltaCheckpoint, DeltaListingProvider}
     import graft.pipeline.HttpListing.{HttpResponse, Transport}
@@ -1246,16 +1253,18 @@ class StreamsSpec extends SparkSpec {
     }
 
     // round 1: initial sync stages the full catalog, drain lands it
-    val r1 = Streams.discoverIncrement(spark, prov, ck, staging)
-    assert(r1.map(_.name).sorted == Seq("a.txt", "b.txt"))
+    val r1 = Streams.discoverIncrementPaged(spark, prov, ck, staging)
+    assert(r1 == ((2L, 0L)))
+    assert(windowSlice(staging, "live") == Seq("a.txt", "b.txt"))
     drain()
     assert(spark.read.parquet(sink).count() == 2)
 
     // round 2: the provider is asked ONLY for the delta (checkpointed
     // deltaLink), the staging append carries only c.txt, and the
     // drain's streaming checkpoint reads only the new file
-    val r2 = Streams.discoverIncrement(spark, prov, ck, staging)
-    assert(r2.map(_.name) == Seq("c.txt"))
+    val r2 = Streams.discoverIncrementPaged(spark, prov, ck, staging)
+    assert(r2 == ((1L, 0L)))
+    assert(windowSlice(staging, "live") == Seq("c.txt"))
     assert(calls.count(_ == s"$base/root/delta") == 1,
       "round 2 must ride the deltaLink, not the initial URL")
     drain()
@@ -1324,14 +1333,15 @@ class StreamsSpec extends SparkSpec {
       .select("file_name").collect().map(_.getString(0)).sorted.toSeq
 
     // round 1: initial sync lands N = 2 files in bronze
-    Streams.discoverIncrement(spark, prov, ck, staging, Some(table))
+    Streams.discoverIncrementPaged(spark, prov, ck, staging, Some(table))
     ingestStaged()
     assert(liveNames() == Seq("a.txt", "b.txt"))
 
     // round 2: the incremental sync sees ONE deletion — bronze must
     // end at N − 1 live rows with nothing new staged
-    val r2 = Streams.discoverIncrement(spark, prov, ck, staging, Some(table))
-    assert(r2.map(_.name) == Seq("b.txt") && r2.forall(_.deleted))
+    val r2 = Streams.discoverIncrementPaged(spark, prov, ck, staging,
+      Some(table))
+    assert(r2 == ((0L, 1L)) && windowSlice(staging, "dead") == Seq("i2"))
     assert(liveNames() == Seq("a.txt"))
 
     // the _delta_log mirror replays to the post-delete state and the
@@ -1370,8 +1380,10 @@ class StreamsSpec extends SparkSpec {
     // tombstone — deletes are keyed on the bronze rows' OWN
     // source_item_id, so neither dead id matches a row and a.txt
     // survives
-    val r3 = Streams.discoverIncrement(spark, prov, ck, staging, Some(table))
-    assert(r3.forall(_.deleted) && r3.map(_.name).sorted == Seq("a.txt", "z.txt"))
+    val r3 = Streams.discoverIncrementPaged(spark, prov, ck, staging,
+      Some(table))
+    assert(r3 == ((0L, 2L)) &&
+      windowSlice(staging, "dead") == Seq("folder9", "i99"))
     assert(liveNames() == Seq("a.txt"),
       "a folder tombstone must not delete a same-named ingested file")
     val (verFinal, _) = BronzeMerge.currentCommit(spark, table)
@@ -1467,7 +1479,7 @@ class StreamsSpec extends SparkSpec {
     // round 1: three files land as three rows — the same-name
     // same-size pair stays TWO rows because the merge key carries
     // the source item id
-    Streams.discoverIncrement(spark, prov, ck, staging, Some(table))
+    Streams.discoverIncrementPaged(spark, prov, ck, staging, Some(table))
     ingestStaged(1)
     assert(rows() == Seq(("i1", "f.txt", 9L), ("i5", "shared.txt", 7L),
       ("i6", "shared.txt", 7L)))
@@ -1476,8 +1488,9 @@ class StreamsSpec extends SparkSpec {
     // window's deletes have fired — i1's rows AND i5's rows are gone,
     // and i6's same-name same-size rows in the other folder are
     // untouched (the case the name+size heuristic had to skip)
-    val r2 = Streams.discoverIncrement(spark, prov, ck, staging, Some(table))
-    assert(r2.count(_.deleted) == 2 && r2.count(!_.deleted) == 1)
+    val r2 = Streams.discoverIncrementPaged(spark, prov, ck, staging,
+      Some(table))
+    assert(r2 == ((1L, 2L)))
     assert(rows() == Seq(("i6", "shared.txt", 7L)),
       "exactly the dead ids' rows die; the other folder's twin survives")
 
@@ -1497,14 +1510,14 @@ class StreamsSpec extends SparkSpec {
     // re-creates the same (name, size) in the same window — i2's row
     // dies on its id, and i3's identical bytes land as a NEW identity
     // (the retained key blocks only the DEAD item's redelivery)
-    Streams.discoverIncrement(spark, prov, ck, staging, Some(table))
+    Streams.discoverIncrementPaged(spark, prov, ck, staging, Some(table))
     ingestStaged(1)
     assert(rows() == Seq(("i3", "f.txt", 12L), ("i6", "shared.txt", 7L)),
       "a byte-identical re-create lands under its fresh id")
 
     // final window: i3 dies — a direct key match, no history
     // bookkeeping needed for generations of same-identity churn
-    Streams.discoverIncrement(spark, prov, ck, staging, Some(table))
+    Streams.discoverIncrementPaged(spark, prov, ck, staging, Some(table))
     assert(rows() == Seq(("i6", "shared.txt", 7L)))
   }
 
@@ -1512,13 +1525,13 @@ class StreamsSpec extends SparkSpec {
       "deletes via the keys-DataFrame anti-join, never a literal " +
       "predicate, and exactly the ingested dead ids' rows die") {
     // the scale shape VERDICT r13 flagged: a deleted source FOLDER can
-    // tombstone every item under it in ONE delta window. Past
-    // MassTombstoneThreshold the dead ids must stay a DataFrame and
-    // the delete must be an anti-join — a 100k-term isin would build a
-    // 100k-literal expression tree (and r12's per-identity Or chain
-    // before it overflowed the analyzer). Bounded driver memory here
-    // means: the ids arrive as the listing's Seq (provider contract)
-    // and are never expanded into an expression or per-id plan nodes.
+    // tombstone every item under it in ONE delta window. The dead ids
+    // must stay a DataFrame and the delete must be an anti-join — a
+    // 100k-term isin would build a 100k-literal expression tree (and
+    // r12's per-identity Or chain before it overflowed the analyzer).
+    // Bounded driver memory here means: the ids arrive page by page,
+    // land as the window's dead relation, and are never expanded into
+    // an expression or per-id plan nodes.
     import graft.ingest.BronzeMerge
     import graft.pipeline.{DeltaCheckpoint, DeltaListingProvider}
     import graft.pipeline.HttpListing.{HttpResponse, Transport}
@@ -1557,7 +1570,7 @@ class StreamsSpec extends SparkSpec {
     val table = s"$work/bronze"
     val ts0 = new java.sql.Timestamp(1700000000000L)
 
-    Streams.discoverIncrement(spark, prov, ck, staging, Some(table))
+    Streams.discoverIncrementPaged(spark, prov, ck, staging, Some(table))
     val staged = spark.read.parquet(staging)
       .select(col("id"), col("name"), col("size")).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), ts0,
@@ -1566,11 +1579,9 @@ class StreamsSpec extends SparkSpec {
         "modified", "content")
     assert(BronzeMerge.mergeIngestDf(spark, staged, table) == nIngested)
 
-    val dead = Streams.discoverIncrement(spark, prov, ck, staging,
+    val dead = Streams.discoverIncrementPaged(spark, prov, ck, staging,
       Some(table))
-    assert(dead.size == nTombs && dead.forall(_.deleted))
-    assert(dead.size > Streams.MassTombstoneThreshold,
-      "the window must exercise the anti-join path")
+    assert(dead == ((0L, nTombs.toLong)))
     val survivors = BronzeMerge.snapshot(spark, table)
       .select("source_item_id").collect().map(_.getString(0)).toSet
     assert(survivors.size == nIngested - nDeadIngested)
@@ -1581,7 +1592,7 @@ class StreamsSpec extends SparkSpec {
       "no survivor was collaterally deleted")
   }
 
-  test("syncToBronze: the full incremental loop — changed blobs land by " +
+  test("syncToBronzePaged: the full incremental loop — changed blobs land by " +
       "id executor-side, an update re-lands, the tombstone deletes, and " +
       "a replayed drain is a no-op") {
     // the reference's whole sync (`sharepoint_to_bronze_delta.py:
@@ -1627,9 +1638,9 @@ class StreamsSpec extends SparkSpec {
         new String(r.getAs[Array[Byte]](3), "UTF-8"))).sorted.toSeq
 
     // window 1: both files land with their ids, content = real bytes
-    val w1 = Streams.syncToBronze(spark, prov, ck, staging, transport,
+    val w1 = Streams.syncToBronzePaged(spark, prov, ck, staging, transport,
       base, table)
-    assert(w1.size == 2 && w1.forall(!_.deleted))
+    assert(w1 == ((2L, 0L)))
     assert(rows() == Seq(("i1", "a.txt", 3L, "aaa"),
       ("i2", "b.txt", 5L, "bbbbb")))
 
@@ -1637,9 +1648,9 @@ class StreamsSpec extends SparkSpec {
     // CURRENT bytes (new generation lands beside the old — both are
     // history under the merge key) and i2's tombstone deletes its rows
     SyncGen.n = 2
-    val w2 = Streams.syncToBronze(spark, prov, ck, staging, transport,
+    val w2 = Streams.syncToBronzePaged(spark, prov, ck, staging, transport,
       base, table)
-    assert(w2.count(_.deleted) == 1 && w2.count(!_.deleted) == 1)
+    assert(w2 == ((1L, 1L)))
     assert(rows() == Seq(("i1", "a.txt", 3L, "aaa"),
       ("i1", "a.txt", 6L, "aaaaaa")))
     // merge-on-read resolves a.txt to the updated generation
@@ -1651,7 +1662,8 @@ class StreamsSpec extends SparkSpec {
     // crash replay of window 2's drain (restart between drain and
     // checkpoint): re-fetches, re-lands NOTHING — at-least-once fetch,
     // exactly-once rows
-    assert(Streams.drainWindow(spark, transport, base, w2, table) == 0L)
+    assert(Streams.drainItems(spark, transport, base,
+      spark.read.parquet(s"${staging}_window/live"), table) == 0L)
     assert(rows().size == 2)
   }
 
@@ -1767,7 +1779,7 @@ class StreamsSpec extends SparkSpec {
     // attempt 1: the drain dies on i2's fetch; the sync call fails
     // loudly and the checkpoint records NOTHING
     intercept[Exception] {
-      Streams.syncToBronze(spark, new DeltaListingProvider(base,
+      Streams.syncToBronzePaged(spark, new DeltaListingProvider(base,
         transport, sleeper = _ => ()), new DeltaCheckpoint(ckDir),
         staging, transport, base, table,
         policy = graft.pipeline.HttpListing.RetryPolicy(maxRetries = 1,
@@ -1777,13 +1789,13 @@ class StreamsSpec extends SparkSpec {
       "a failed window must not advance the deltaLink")
 
     // the outage ends; the scheduled re-run replays the SAME window
-    // (sync(None) — the checkpoint never moved) and converges on the
+    // (from no deltaLink — the checkpoint never moved) and converges on the
     // uninterrupted result, with i1's possibly-landed rows deduped by
     // the id-qualified merge keys
     FetchOutage.broken = false
-    val w = Streams.syncToBronze(spark, prov, new DeltaCheckpoint(ckDir),
-      staging, transport, base, table)
-    assert(w.size == 2)
+    val w = Streams.syncToBronzePaged(spark, prov,
+      new DeltaCheckpoint(ckDir), staging, transport, base, table)
+    assert(w == ((2L, 0L)))
     assert(new DeltaCheckpoint(ckDir).load().contains(delta1))
     val rows = BronzeMerge.snapshot(spark, table)
       .select("source_item_id", "file_name").collect()
@@ -1841,7 +1853,7 @@ class StreamsSpec extends SparkSpec {
     // window 1: i2's GET serves terminal 500s — i1 lands, i2 is
     // PARKED, and the window still commits
     FetchOutage.broken = true
-    Streams.syncToBronze(spark, prov, ck, staging, transport, base,
+    Streams.syncToBronzePaged(spark, prov, ck, staging, transport, base,
       table, policy = policy, quarantineDir = Some(qdir))
     assert(ck.load().contains(delta1),
       "the window must commit despite the poison item")
@@ -1853,7 +1865,7 @@ class StreamsSpec extends SparkSpec {
 
     // window 2, outage STILL on: i3 lands, i2 was retried and stays
     // parked, the deltaLink keeps advancing — no livelock
-    Streams.syncToBronze(spark, prov, ck, staging, transport, base,
+    Streams.syncToBronzePaged(spark, prov, ck, staging, transport, base,
       table, policy = policy, quarantineDir = Some(qdir))
     assert(ck.load().contains(delta2))
     assert(ids() == Seq("i1", "i3"))
@@ -1863,7 +1875,7 @@ class StreamsSpec extends SparkSpec {
     // window 3 is EMPTY upstream, but the retry loop still drains the
     // parked set: the outage has ended, i2 lands, quarantine empties
     FetchOutage.broken = false
-    Streams.syncToBronze(spark, prov, ck, staging, transport, base,
+    Streams.syncToBronzePaged(spark, prov, ck, staging, transport, base,
       table, policy = policy, quarantineDir = Some(qdir))
     assert(ck.load().contains(delta3))
     assert(ids() == Seq("i1", "i2", "i3"))
@@ -2027,7 +2039,7 @@ class StreamsSpec extends SparkSpec {
       "as `modified`, a same-length in-place update lands as a NEW " +
       "generation and wins the merge-on-read view, and a replayed drain " +
       "re-lands nothing") {
-    // the r14 gap: drainWindow keyed every row with modified=epoch(0),
+    // the r14 gap: the drain keyed every row with modified=epoch(0),
     // so an update whose byte LENGTH is unchanged was invisible to the
     // (id, name, length, modified) merge key — silently dropped — and
     // snapshotLatest could not prefer the newer generation. The stamp
@@ -2062,7 +2074,8 @@ class StreamsSpec extends SparkSpec {
       java.sql.Timestamp.from(java.time.Instant.parse(s))
 
     // window 1: the REAL stamp lands, not an epoch placeholder
-    Streams.syncToBronze(spark, prov, ck, staging, transport, base, table)
+    Streams.syncToBronzePaged(spark, prov, ck, staging, transport, base,
+      table)
     val r1 = BronzeMerge.snapshot(spark, table)
       .select("modified", "content").collect()
     assert(r1.map(_.getTimestamp(0)).toSeq == Seq(stampOf(t1)))
@@ -2072,8 +2085,8 @@ class StreamsSpec extends SparkSpec {
     // bytes) changed. The new generation must land beside the old and
     // win the merge-on-read view.
     StampGen.n = 2
-    val w2 = Streams.syncToBronze(spark, prov, ck, staging, transport,
-      base, table)
+    Streams.syncToBronzePaged(spark, prov, ck, staging, transport, base,
+      table)
     assert(BronzeMerge.snapshot(spark, table).count() == 2,
       "a same-length update must land as a new generation, not vanish")
     val latest = BronzeMerge.snapshotLatest(spark, table)
@@ -2084,7 +2097,8 @@ class StreamsSpec extends SparkSpec {
     // crash-replay of window 2's drain: the stamp comes from the
     // listing, so the replayed row keys IDENTICALLY and re-lands
     // nothing
-    assert(Streams.drainWindow(spark, transport, base, w2, table) == 0L)
+    assert(Streams.drainItems(spark, transport, base,
+      spark.read.parquet(s"${staging}_window/live"), table) == 0L)
     assert(BronzeMerge.snapshot(spark, table).count() == 2)
   }
 
@@ -2117,7 +2131,7 @@ class StreamsSpec extends SparkSpec {
     // post-staging, pre-checkpoint point): rows are staged, the
     // checkpoint never advances
     intercept[RuntimeException] {
-      Streams.discoverIncrement(spark, prov, ck, staging,
+      Streams.discoverIncrementPaged(spark, prov, ck, staging,
         drain = _ => throw new RuntimeException("crash before checkpoint"))
     }
     assert(ck.load().isEmpty)
@@ -2126,7 +2140,7 @@ class StreamsSpec extends SparkSpec {
 
     // the replay OVERWRITES the same window partition — the r14
     // staging catalog would hold 4 rows here (append-only double-land)
-    Streams.discoverIncrement(spark, prov, ck, staging)
+    Streams.discoverIncrementPaged(spark, prov, ck, staging)
     val afterReplay = spark.read.parquet(staging)
     assert(afterReplay.count() == 2,
       "a replayed window must rewrite its own partition, not append")
@@ -2135,7 +2149,7 @@ class StreamsSpec extends SparkSpec {
 
     // window 2 lands in its OWN partition; per-(id, window) uniqueness
     // holds across the catalog
-    Streams.discoverIncrement(spark, prov, ck, staging)
+    Streams.discoverIncrementPaged(spark, prov, ck, staging)
     val cat = spark.read.parquet(staging)
     assert(cat.count() == 3)
     assert(cat.select(countDistinct(col("window"))).head().getLong(0) == 2)
@@ -2184,7 +2198,7 @@ class StreamsSpec extends SparkSpec {
     val zone = s"$work/files"
     RangeStats.reset()
 
-    Streams.syncToBronze(spark, prov, ck, staging, transport, base,
+    Streams.syncToBronzePaged(spark, prov, ck, staging, transport, base,
       table, chunkBytes = chunk, filesZone = Some(zone),
       largeBlobBytes = 10000)
     val rows = BronzeMerge.snapshot(spark, table)
@@ -2216,7 +2230,7 @@ class StreamsSpec extends SparkSpec {
 
     // window 2: i2's tombstone deletes the bronze rows AND the zone
     // file (gated delete semantics extended to the Files zone)
-    Streams.syncToBronze(spark, prov, ck, staging, transport, base,
+    Streams.syncToBronzePaged(spark, prov, ck, staging, transport, base,
       table, chunkBytes = chunk, filesZone = Some(zone),
       largeBlobBytes = 10000)
     assert(BronzeMerge.snapshot(spark, table)
@@ -2255,7 +2269,7 @@ class StreamsSpec extends SparkSpec {
     assert(!BronzeMerge.carriesIds(spark, table))
 
     // tombstone window vs the legacy table: loud no-op, nothing dies
-    Streams.discoverIncrement(spark,
+    Streams.discoverIncrementPaged(spark,
       new DeltaListingProvider(base, transport, sleeper = _ => ()),
       new DeltaCheckpoint(s"$work/ck1"), s"$work/staging", Some(table))
     assert(BronzeMerge.snapshot(spark, table).count() == 2)
@@ -2273,7 +2287,7 @@ class StreamsSpec extends SparkSpec {
         .toDF("file_name", "length", "modified", "content"), table) == 0L)
 
     // the SAME tombstone window from a fresh checkpoint now deletes
-    Streams.discoverIncrement(spark,
+    Streams.discoverIncrementPaged(spark,
       new DeltaListingProvider(base, transport, sleeper = _ => ()),
       new DeltaCheckpoint(s"$work/ck2"), s"$work/staging", Some(table))
     val left = BronzeMerge.snapshot(spark, table)

@@ -5,21 +5,34 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** The exact-duplicate collapse: operators whose per-row work is a
-  * pure function of a text (or a vector) run it once per DISTINCT
-  * value on a min-id representative, and members take their rep's
-  * result — the weighted-representative idea of *Approximation
-  * Algorithms for Large Scale Data Analysis* (PODS 2021), exact with
-  * integer weights.
+/** The exact-duplicate collapse. An operator whose per-row work is a
+  * pure function of a row's text (or vector) runs it once per DISTINCT
+  * value, on a representative — the min id among the rows that share
+  * the value — and every member takes its rep's result: identical
+  * input gives bit-identical arithmetic, so no row can tell the
+  * difference. Corpus-wide statistics stay exact through integer
+  * weights summed over each group: Σ over rows of f(value) is Σ over
+  * reps of f(value)·w, with w = the group size `m` or any per-row flag
+  * summed over the group. Pair operators compare reps only, then
+  * expand each rep pair to its members' pairs, which carry the rep
+  * pair's payload; two members of one group form an intra-group pair
+  * whose payload is the value compared with itself. This is the
+  * weighted-representative idea of *Approximation Algorithms for
+  * Large Scale Data Analysis* (PODS 2021), exact with integer weights.
+  * Every collapsed operator goes through one [[Mapping]]; the call
+  * sites state only why their kernel is a pure function of the value
+  * and which weight they sum.
   *
   * The collapse itself costs a value-keyed window shuffle, a persist
-  * and a re-attach join. On a corpus with no duplicates every weight
+  * and re-attach joins. On a corpus with no duplicates every weight
   * is 1 and all of that is overhead, so each corpus is probed ONCE per
   * session for duplicates ([[textHasDups]], [[embHasDups]]) and a
-  * duplicate-free corpus gets the identity mapping (`rep` = id,
-  * `m` = 1: no window, no persist) and kernels straight on the scan.
-  * Output is identical either way; duplicated corpora keep the
-  * collapsed plans. The choice is made here, never at a call site.
+  * duplicate-free corpus gets the identity mapping: the scan with
+  * `rep` = id, on which no [[Mapping]] method adds a window, a member
+  * join, a union or a spill — `reps` and `perText` read the scan,
+  * `toMembers` and `expandPairs` return the rep relation renamed, and
+  * `attach` is only its own left join. Output is identical either
+  * way. The choice is made here, never at a call site.
   */
 object Collapse {
   private val probeMemo =
@@ -49,15 +62,19 @@ object Collapse {
 
   /** Does `d`'s `embeddings` hold two equal vectors? Grouped on the
     * vector itself, so -0.0/0.0 and NaN compare exactly as the
-    * window in [[embDupMapping]] compares them. */
+    * window in [[vectors]] compares them. */
   private[graft] def embHasDups(s: SparkSession, d: String): Boolean =
     probe(s, d, "embeddings", col("embedding"))
 
   /** Spec hook: record both of `d`'s corpora, at their current files,
     * as holding duplicates or not, so later calls take that path —
-    * how the specs run both paths on one corpus. Either path is exact
-    * on any corpus (the identity mapping is the trivial collapse);
-    * only the cost differs. A rewrite of the files re-probes. */
+    * how the specs run both paths on one corpus. Where the mapping
+    * only shares work, either path is exact on any corpus (the
+    * identity mapping is the trivial collapse) and only the cost
+    * differs; an operator whose output is defined over distinct
+    * values (t24's and t62's dedup gate, s35's distinct-vector sweep)
+    * needs the collapsed path wherever duplicates exist. A rewrite of
+    * the files re-probes. */
   private[graft] def assumeDups(s: SparkSession, d: String,
       hasDups: Boolean): Unit =
     Seq("documents", "embeddings").foreach { t =>
@@ -65,95 +82,141 @@ object Collapse {
         Tables.dirFingerprint(s, s"$d/$t.parquet"), hasDups)
     }
 
-  /** (doc_id, text, rep, m) with rep = the min doc_id among
-    * bit-identical texts and m = the group size (weighted-count
-    * collapses read each rep's multiplicity). A corpus with
-    * duplicates pays one text-keyed window pass, persisted for the
-    * query; a duplicate-free one reads `rep = doc_id`, `m = 1` off the
-    * scan. */
-  private[ops] def textDupMapping(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-    if (!textHasDups(s, d))
-      docs.select(col("doc_id"), col("text"), col("doc_id").as("rep"),
-        lit(1L).as("m"))
-    else
-      Scoped.persist(docs
-        .withColumn("rep",
-          min(col("doc_id")).over(Window.partitionBy(col("text"))))
-        // group size rides the SAME window pass (zero extra shuffle)
-        .withColumn("m",
-          count(lit(1)).over(Window.partitionBy(col("text")))))
-  }
+  /** One corpus's min-id representative mapping. `rows` holds every
+    * row's id, value, caller-kept columns, `rep` and weights. Collapsed:
+    * one value-keyed window pass, persisted for the query. Identity
+    * (the probe found no duplicates): the scan, `rep` = id, each
+    * weight its own row's value. */
+  final class Mapping private[Collapse] (val rows: DataFrame, id: String,
+      pair: (String, String), private[Collapse] val collapsed: Boolean) {
 
-  /** [[textDupMapping]] with each doc's (source, lang) slice keys in
-    * place of `m`: consumers that roll up per corpus slice read the
-    * keys off the same pass instead of re-joining documents. */
-  private def textDupMappingSl(s: SparkSession, d: String): DataFrame = {
-    val docs = Tables.documents(s, d)
-      .select(col("doc_id"), col("text"), col("source"), col("lang"))
-    if (!textHasDups(s, d)) docs.withColumn("rep", col("doc_id"))
-    else
-      Scoped.persist(docs.withColumn("rep",
-        min(col("doc_id")).over(Window.partitionBy(col("text")))))
-  }
+    /** One row per distinct value, its representative's. The rep
+      * filter stays on the identity path: it only drops null ids. */
+    def reps: DataFrame = rows.filter(col(id) === col("rep"))
 
-  /** Per-text kernel columns `stats` (pure functions of the document's
-    * text) for every document, beside its own `keep` columns. With
-    * duplicates: the kernel runs once per distinct text on the rep
-    * rows and members re-attach by rep. Duplicate-free: the kernel
-    * runs straight on the scan, no mapping and no join. `barrier`
-    * persists the rows the kernel is evaluated on, so a later filter
-    * on a kernel output cannot be substituted back into a pushed
-    * `Filter` and evaluate the kernel twice. */
-  private[ops] def perText(s: SparkSession, d: String, keep: Seq[String],
-      stats: Seq[Column], barrier: Boolean = false): DataFrame = {
-    def pin(df: DataFrame) = if (barrier) Scoped.persist(df) else df
-    if (!textHasDups(s, d))
-      pin(Tables.documents(s, d).select(keep.map(col) ++ stats: _*))
-    else {
-      // the slice mapping only when a kept column needs its keys
-      val mapping =
-        if (keep.forall(Set("doc_id", "text"))) textDupMapping(s, d)
-        else textDupMappingSl(s, d)
-      val repStats = pin(mapping.filter(col("doc_id") === col("rep"))
-        .select(col("rep") +: stats: _*))
-      mapping.select((keep :+ "rep").map(col): _*)
-        .join(repStats, "rep").drop("rep")
+    /** A `rep`-keyed relation read per member, keyed by the id (inner:
+      * a member whose rep has no row has none). */
+    def toMembers(byRep: DataFrame): DataFrame =
+      if (!collapsed) byRep.withColumnRenamed("rep", id)
+      else rows.select(col(id), col("rep")).join(byRep, "rep")
+
+    /** Every member with its `own` columns (evaluated on [[rows]]) and
+      * its rep's `byRep` row, left-joined: where the rep has no row,
+      * each `byRep` column reads 0. */
+    def attach(byRep: DataFrame, own: Column*): DataFrame = {
+      val zero = byRep.schema.fields.collect {
+        case f if f.name != "rep" => f.name -> f.dataType
+      }.toMap
+      val joined = rows.select(col(id) +: col("rep") +: own: _*)
+        .join(byRep, Seq("rep"), "left")
+      joined.select(joined.columns.toSeq.filter(_ != "rep").map(c =>
+        zero.get(c).fold(col(c))(t =>
+          coalesce(col(c), lit(0).cast(t)).as(c))): _*)
+    }
+
+    /** The per-value kernel columns `stats` for every row, beside its
+      * `keep` columns of [[rows]]. Collapsed: the kernel runs on the
+      * rep rows and members re-attach by rep. Identity: straight on
+      * the scan. `barrier` persists the rows the kernel is evaluated
+      * on, so a later filter on a kernel output cannot be substituted
+      * back into a pushed `Filter` and evaluate the kernel twice. */
+    def perText(keep: Seq[String], stats: Seq[Column],
+        barrier: Boolean = false): DataFrame = {
+      def pin(df: DataFrame) = if (barrier) Scoped.persist(df) else df
+      if (!collapsed) pin(rows.select(keep.map(col) ++ stats: _*))
+      else {
+        val repStats = pin(reps.select(col("rep") +: stats: _*))
+        rows.select((keep :+ "rep").map(col): _*)
+          .join(repStats, "rep").drop("rep")
+      }
+    }
+
+    /** Member pairs, named (da, db) for texts and (va, vb) for
+      * vectors, of the rep pairs `repPairs` (ra, rb, payload…). The
+      * cross leg pairs every member of ra's group with every member of
+      * rb's and carries the rep pair's payload; the intra leg pairs
+      * every two members of one group, for each `intra` row (rep,
+      * payload…). Symmetric: rep pairs come with ra < rb, member pairs
+      * leave with a < b, and each `swap` column pair is exchanged where
+      * the members cross over. `directed`: every ordered member pair.
+      * At most `maxMembers` members of a group (its smallest ids) take
+      * part. Identity: the rep pairs are the member pairs. */
+    def expandPairs(repPairs: DataFrame, intra: DataFrame,
+        directed: Boolean = false, swap: Seq[(String, String)] = Nil,
+        maxMembers: Int = Int.MaxValue): DataFrame = {
+      val (a, b) = pair
+      if (!collapsed)
+        repPairs.withColumnRenamed("ra", a).withColumnRenamed("rb", b)
+      else {
+        val all = rows.select(col("rep"), col(id))
+        val members =
+          if (maxMembers == Int.MaxValue) all
+          else all.withColumn("mrank", row_number().over(
+              Window.partitionBy(col("rep")).orderBy(col(id))))
+            .filter(col("mrank") <= maxMembers).drop("mrank")
+        val payload = repPairs.columns.toSeq.filterNot(Set("ra", "rb"))
+        val (ma, mb) = (col("ma"), col("mb"))
+        val swapped = (swap ++ swap.map(_.swap)).toMap
+        val cross = repPairs
+          .join(members.toDF("ra", "ma"), "ra")
+          .join(members.toDF("rb", "mb"), "rb")
+          .select(Seq(
+            (if (directed) ma else least(ma, mb)).as(a),
+            (if (directed) mb else greatest(ma, mb)).as(b)) ++
+            payload.map(c => swapped.get(c).fold(col(c))(o =>
+              when(ma < mb, col(c)).otherwise(col(o)).as(c))): _*)
+        val inGroup = members.toDF("rep", "ma")
+          .join(intra, "rep")
+          .join(members.toDF("rep", "mb"), "rep")
+          .filter(if (directed) ma =!= mb else ma < mb)
+          .select(Seq(ma.as(a), mb.as(b)) ++ payload.map(col): _*)
+        cross.unionByName(inGroup)
+      }
     }
   }
 
-  /** A relation keyed by `rep` attached to every member document,
-    * keyed by `doc_id` (`mapping` is the [[textDupMapping]] that
-    * produced the reps). With duplicates, members join their rep's
-    * rows. Duplicate-free, every doc is its own rep, so the rows are
-    * already keyed by doc and need no join. */
-  private[ops] def toMembers(s: SparkSession, d: String, mapping: DataFrame,
-      byRep: DataFrame): DataFrame =
-    if (!textHasDups(s, d)) byRep.withColumnRenamed("rep", "doc_id")
-    else mapping.select(col("doc_id"), col("rep")).join(byRep, "rep")
-
-  /** (vec_id, embedding, rep) with rep = the min vec_id among equal
-    * vectors. `corpus` defaults to `d`'s embeddings table; only that
-    * table is probed, so an explicit corpus always pays the window
-    * pass (persisted for the query), and a duplicate-free table reads
-    * `rep = vec_id` off the scan. */
-  private[graft] def embDupMapping(s: SparkSession, d: String,
-      corpus: Option[DataFrame]): DataFrame = {
-    val vecs = corpus.getOrElse(Tables.embeddings(s, d))
-      .select(col("vec_id"), col("embedding"))
-    if (corpus.isEmpty && !embHasDups(s, d))
-      vecs.withColumn("rep", col("vec_id"))
-    else
-      Scoped.persist(vecs.withColumn("rep",
-        min(col("vec_id")).over(Window.partitionBy(col("embedding")))))
+  /** The mapping of `table` on `value`: `rep` = the min `id` among the
+    * rows with an equal `value`, and each named weight summed over the
+    * group. */
+  private def build(table: DataFrame, id: String, value: String,
+      keep: Seq[String], weights: Seq[(String, Column)],
+      pair: (String, String), collapsed: Boolean): Mapping = {
+    val kept = (Seq(id, value) ++ keep).distinct.map(col)
+    val group = Window.partitionBy(col(value))
+    val (rep, ws) =
+      if (collapsed) (min(col(id)).over(group),
+        weights.map { case (n, w) => sum(w).over(group).as(n) })
+      else (col(id), weights.map { case (n, w) => w.as(n) })
+    val rows = table.select(kept ++ (rep.as("rep") +: ws): _*)
+    new Mapping(if (collapsed) Scoped.persist(rows) else rows, id, pair,
+      collapsed)
   }
+
+  /** `d`'s documents as (doc_id, text, `keep`…, rep, weights…); the
+    * weights must be long-valued. The default weight `m` is the group
+    * size. */
+  private[graft] def texts(s: SparkSession, d: String,
+      keep: Seq[String] = Nil,
+      weights: Seq[(String, Column)] = Seq("m" -> lit(1L))): Mapping =
+    build(Tables.documents(s, d), "doc_id", "text", keep, weights,
+      ("da", "db"), textHasDups(s, d))
+
+  /** (vec_id, embedding, rep) over `corpus`, by default `d`'s
+    * embeddings table. Only that table is probed, so an explicit
+    * corpus always takes the collapsed path. */
+  private[graft] def vectors(s: SparkSession, d: String,
+      corpus: Option[DataFrame] = None): Mapping =
+    build(corpus.getOrElse(Tables.embeddings(s, d)), "vec_id",
+      "embedding", Nil, Nil, ("va", "vb"),
+      corpus.nonEmpty || embHasDups(s, d))
 
   /** A vector pair operator's `uncollapsed` pipeline when `corpus` is
     * `d`'s own embeddings table and it holds no duplicate vectors;
-    * otherwise `collapsed` over the [[embDupMapping]]. */
+    * otherwise `collapsed` over the [[vectors]] mapping. */
   private[ops] def vectorPairs(s: SparkSession, d: String,
       corpus: Option[DataFrame])(uncollapsed: => DataFrame)(
-      collapsed: DataFrame => DataFrame): DataFrame =
-    if (corpus.isEmpty && !embHasDups(s, d)) uncollapsed
-    else collapsed(embDupMapping(s, d, corpus))
+      collapsed: Mapping => DataFrame): DataFrame = {
+    val m = vectors(s, d, corpus)
+    if (m.collapsed) collapsed(m) else uncollapsed
+  }
 }

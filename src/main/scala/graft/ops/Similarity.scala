@@ -62,7 +62,7 @@ object Similarity {
   private def cosineSql(a: String, b: String) =
     s"${dotSql(a, b)} / (${l2Sql(a)} * ${l2Sql(b)})"
 
-  /** The DuckDB replay of [[Collapse.embDupMapping]] + [[lshCandidatePairs]]
+  /** The DuckDB replay of [[Collapse.vectors]] + [[lshCandidatePairs]]
     * — a WITH-clause body (caller prepends `WITH `) ending in
     * `scored(va, vb, cos)`: dup-collapse mapping, the portable
     * sign-LSH signatures over representatives ([[radPlanes]]'s
@@ -851,23 +851,11 @@ object Similarity {
       allPairs: Boolean = false): DataFrame =
     Collapse.vectorPairs(s, d, corpus)(
         neardupEdges(s, d, allPairs, thresh)) { mapping =>
-      val reps = mapping.filter(col("vec_id") === col("rep"))
-        .select(col("vec_id"), col("embedding"))
-      val repEdges = neardupEdges(s, d, allPairs = allPairs, thresh,
-        corpus = Some(reps))
-      val members = mapping.select(col("rep"), col("vec_id"))
-      val cross = repEdges
-        .join(members.toDF("va", "ma"), "va")
-        .join(members.toDF("vb", "mb"), "vb")
-        .select(least(col("ma"), col("mb")).as("va"),
-          greatest(col("ma"), col("mb")).as("vb"), col("cos"))
-      val intra = members.toDF("rep", "ma")
-        .join(members.toDF("rep", "mb"), "rep")
-        .filter(col("ma") < col("mb"))
-        .join(selfCos(reps), "rep")
-        .filter(col("cos") >= thresh)
-        .select(col("ma").as("va"), col("mb").as("vb"), col("cos"))
-      cross.unionByName(intra)
+      val reps = mapping.reps.select(col("vec_id"), col("embedding"))
+      mapping.expandPairs(
+        neardupEdges(s, d, allPairs = allPairs, thresh, corpus = Some(reps))
+          .toDF("ra", "rb", "cos"),
+        selfCos(reps).filter(col("cos") >= thresh))
     }
 
   /** (rep, cos) — each representative's COMPUTED self-cosine, the
@@ -915,58 +903,34 @@ object Similarity {
         .distinct()
     }
     Collapse.vectorPairs(s, d, corpus)(topPairs(None)) { mapping =>
-      val reps = mapping.filter(col("vec_id") === col("rep"))
-        .select(col("vec_id"), col("embedding"))
-      val members = mapping.select(col("rep"), col("vec_id"))
-        .withColumn("mrank", row_number().over(
-          Window.partitionBy(col("rep")).orderBy(col("vec_id"))))
-        .filter(col("mrank") <= k + 1).drop("mrank")
-      val cross = topPairs(Some(reps))
-        .join(members.toDF("va", "ma"), "va")
-        .join(members.toDF("vb", "mb"), "vb")
-        .select(least(col("ma"), col("mb")).as("va"),
-          greatest(col("ma"), col("mb")).as("vb"), col("cos"))
-      val intra = members.toDF("rep", "ma")
-        .join(members.toDF("rep", "mb"), "rep")
-        .filter(col("ma") < col("mb"))
-        .join(selfCos(reps), "rep")
-        .select(col("ma").as("va"), col("mb").as("vb"), col("cos"))
-      cross.unionByName(intra)
+      val reps = mapping.reps.select(col("vec_id"), col("embedding"))
+      mapping.expandPairs(topPairs(Some(reps)).toDF("ra", "rb", "cos"),
+        selfCos(reps), maxMembers = k + 1)
     }.orderBy(desc("cos"), col("va"), col("vb"))
       .limit(k)
   }
 
   /** Component labels (vec_id, component) of the LSH semantic-dedup
-    * graph over `corpus` (default: `d`'s embeddings), EXACT-COLLAPSE
-    * FIRST: bit-identical vectors are grouped to one representative
-    * (a linear shuffle), LSH + cosine verify + connected components
-    * run on representatives only, and members expand back in at the
-    * end. Identical answer to running on the raw corpus — exact
-    * duplicates sit at cosine 1.0 ≥ any sane threshold, so a
-    * duplicate group is always one cluster glued to its
-    * representative, and a member pair's cosine equals its rep
-    * pair's (the floats are bit-identical) — but the COST no longer
-    * explodes under duplication. Measured (SCALE.md sf1 rehearsal):
-    * 10 exact copies of every vector turned each LSH bucket join
-    * quadratic (~100× work for 10× rows); collapsing first restores
-    * the sf0.1-shaped candidate load. This mirrors production
-    * SemDeDup practice: exact dedup (t07's hash-groupBy) always runs
-    * before pair-based near-dedup. A duplicate-free table gets the
-    * identity mapping ([[Collapse.embDupMapping]]). */
+    * graph over `corpus` (default: `d`'s embeddings), collapsed per
+    * vector ([[Collapse.vectors]]): LSH + cosine verify + connected
+    * components run on representatives only. Exact duplicates sit at
+    * cosine 1.0 ≥ any sane threshold, so a duplicate group is always
+    * one cluster glued to its representative. Measured (SCALE.md sf1
+    * rehearsal): 10 exact copies of every vector turned each LSH
+    * bucket join quadratic (~100× work for 10× rows). This mirrors
+    * production SemDeDup practice: exact dedup always runs before
+    * pair-based near-dedup. */
   private[graft] def semanticDedupLabels(s: SparkSession, d: String,
       corpus: Option[DataFrame] = None,
       allPairs: Boolean = false): DataFrame = {
-    // with duplicates, one shuffle on the vector bytes: every
-    // duplicate group learns its min-id representative
-    val mapping = Collapse.embDupMapping(s, d, corpus)
-    val reps = mapping.filter(col("vec_id") === col("rep"))
-      .select(col("vec_id"), col("embedding"))
+    val mapping = Collapse.vectors(s, d, corpus)
+    val reps = mapping.reps.select(col("vec_id"), col("embedding"))
     val repEdges = neardupEdges(s, d, allPairs = allPairs,
         thresh = 0.4, corpus = Some(reps))
       .select(col("va").as("da"), col("vb").as("db"))
     val repLabels = Text.connectedComponents(repEdges)
       .toDF("rep", "comp")
-    val lab0 = mapping.select(col("vec_id"), col("rep"))
+    val lab0 = mapping.rows.select(col("vec_id"), col("rep"))
       .join(repLabels, Seq("rep"), "left")
       .withColumn("comp0", coalesce(col("comp"), col("rep")))
     // restore the uncollapsed min-label contract: the component id is
@@ -987,15 +951,9 @@ object Similarity {
     * one operator with different pair sources. */
   private[graft] def semanticDedup(s: SparkSession, d: String,
       allPairs: Boolean): DataFrame = {
-    // Both modes run EXACT-COLLAPSE FIRST (see [[semanticDedupLabels]]):
-    // the exact anchor keeps its all-pairs edge semantics, but the
-    // quadratic leg evaluates over DISTINCT vectors only — duplicates
-    // glue to their representative (cosine ≈ 1 ≥ any sane threshold)
-    // and cross-group cosines are bit-identical to the rep pair's, so
-    // the component sets and min-member labels are unchanged while the
-    // pair count stops scaling with duplication (guide §8: decide on a
-    // lightweight proxy, expand members last; r16 sf1: 10× duplicated
-    // corpus paid 100× the pair work before this).
+    // Both modes run collapsed per vector (see
+    // [[semanticDedupLabels]]): the exact anchor keeps its all-pairs
+    // edge semantics over DISTINCT vectors only.
     val labels =
       if (allPairs)
         semanticDedupLabels(s, d, allPairs = true)
@@ -3258,10 +3216,7 @@ FROM (SELECT * FROM sel1 UNION ALL SELECT * FROM sel2 UNION ALL SELECT * FROM se
         import s.implicits._
         val T = 12; val MaxBits = 10
         val planes = radPlanes(T * MaxBits)
-        val reps = Tables.embeddings(s, d)
-          .withColumn("rep", min(col("vec_id"))
-            .over(Window.partitionBy(col("embedding"))))
-          .filter(col("vec_id") === col("rep"))
+        val reps = Collapse.vectors(s, d).reps
           .select(col("vec_id"), col("embedding"))
         val sigs = Scoped.persist(reps.select(col("vec_id"),
             posexplode(graft.functions.VectorExprs.hyperplaneSigs(

@@ -24,8 +24,6 @@ import org.apache.spark.sql.functions._
   *    hash-match doubles as an LSH recall test.
   */
 object Text {
-  import Collapse.textDupMapping
-
   private val toks = split(col("text"), " ")
 
   /** The shared retrieval query set (t36 BM25, s18 hybrid RRF): three
@@ -169,21 +167,13 @@ object Text {
     * prefix filter (see the t57 registration for the theorem). Runs
     * on rep-collapsed distinct texts; member expansion restores the
     * doc-level relation, identical texts containing each other both
-    * ways. */
+    * ways (ni = na). */
   private def containmentPairs(s: SparkSession, d: String,
       num: Int, den: Int): DataFrame = {
     val (mapping, sizes, repPairs) = containmentRepCore(s, d, num, den)
-    val members = mapping.select(col("rep"), col("doc_id"))
-    val cross = repPairs
-      .join(members.toDF("ra", "da"), "ra")
-      .join(members.toDF("rb", "db"), "rb")
-      .select(col("da"), col("db"), col("na"), col("ni"))
-    val intra = members.toDF("rep", "da")
-      .join(sizes.select(col("doc_id").as("rep"), col("na")), "rep")
-      .join(members.toDF("rep", "db"), "rep")
-      .filter(col("da") =!= col("db"))
-      .select(col("da"), col("db"), col("na"), col("na").as("ni"))
-    cross.unionByName(intra)
+    mapping.expandPairs(repPairs,
+        sizes.select(col("doc_id").as("rep"), col("na"), col("na").as("ni")),
+        directed = true)
       .select(col("da"), col("db"), col("na").cast("long").as("n_a"),
         col("ni").cast("long").as("n_inter"),
         (col("ni").cast("double") / col("na")).as("containment"))
@@ -198,14 +188,13 @@ object Text {
     * overlay onto the EXPANDED relation and cost 3.4× the exact
     * operator at sf10). */
   private def containmentRepCore(s: SparkSession, d: String,
-      num: Int, den: Int): (DataFrame, DataFrame, DataFrame) = {
-    val mapping = textDupMapping(s, d)
+      num: Int, den: Int): (Collapse.Mapping, DataFrame, DataFrame) = {
+    val mapping = Collapse.texts(s, d)
     // shingle ARRAYS persist once: the exploded rows feed df counts,
     // prefixes, and candidate generation; the arrays verify candidate
     // pairs via one array_intersect row per pair (the lshRepPairs
     // shape) instead of re-exploding both sides' postings per pair
-    val docsSh = Scoped.persist(mapping
-      .filter(col("doc_id") === col("rep"))
+    val docsSh = Scoped.persist(mapping.reps
       .select(col("doc_id"), shingles.as("sh"))
       .filter(size(col("sh")) > 0))
     val sh = Scoped.persist(
@@ -266,39 +255,19 @@ object Text {
   private[graft] def exactAnchor(s: SparkSession, d: String): Boolean =
     corpusRows(s, d) <= ExactAnchorRows
 
-  /** Expand representative-level (ra, rb, jaccard) pairs back to
-    * member pairs: cross-group members inherit the rep pair's J
-    * bit-for-bit (identical shingle sets → identical arithmetic), and
-    * intra-group pairs sit at exactly 1.0 — but only for texts that
-    * shingle at all (`shingled` = reps with ≥1 shingle; the
-    * uncollapsed join emits nothing for shingle-less duplicates, and
-    * so must we). The expansion output is the SAME relation the
-    * uncollapsed join produces at every SF, so the oracle hash-match
-    * keeps binding. */
-  private def expandDupPairs(mapping: DataFrame, repPairs: DataFrame,
-      shingled: DataFrame, thr: Double): DataFrame = {
-    val members = mapping.select(col("rep"), col("doc_id"))
-    val cross = repPairs
-      .join(members.toDF("ra", "ma"), "ra")
-      .join(members.toDF("rb", "mb"), "rb")
-      .select(least(col("ma"), col("mb")).as("da"),
-        greatest(col("ma"), col("mb")).as("db"), col("jaccard"))
-    val intra = members.toDF("rep", "ma")
-      .join(shingled, "rep")
-      .join(members.toDF("rep", "mb"), "rep")
-      .filter(col("ma") < col("mb"))
-      .select(col("ma").as("da"), col("mb").as("db"),
-        lit(1.0).as("jaccard"))
-      .filter(lit(1.0) >= thr)
-    cross.unionByName(intra)
-  }
+  /** The intra-group leg of a Jaccard pair expansion: two copies of
+    * a text sit at exactly J = 1.0, but only for texts that shingle at
+    * all (`shingled` = reps with ≥1 shingle; the uncollapsed join
+    * emits nothing for shingle-less duplicates). */
+  private def selfJaccard(shingled: DataFrame, thr: Double): DataFrame =
+    shingled.withColumn("jaccard", lit(1.0)).filter(lit(1.0) >= thr)
 
   /** Exact near-dup pairs via shingle self-join over DISTINCT texts
-    * only ([[textDupMapping]] collapse + [[expandDupPairs]] expansion
-    * — same answer, no duplication blow-up). */
+    * only, members expanded back ([[Collapse.Mapping.expandPairs]]):
+    * a member pair's J is its rep pair's. */
   private def exactJaccardPairs(s: SparkSession, d: String, thr: Double): DataFrame = {
-    val mapping = textDupMapping(s, d)
-    val sh = Scoped.persist(mapping.filter(col("doc_id") === col("rep"))
+    val mapping = Collapse.texts(s, d)
+    val sh = Scoped.persist(mapping.reps
       .select(col("doc_id"), explode(shingles).as("s")))
     val sizes = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
     val inter = sh.toDF("ra", "s")
@@ -312,8 +281,8 @@ object Text {
         (col("ni").cast("double") / (col("na") + col("nb") - col("ni")))
           .as("jaccard"))
       .filter(col("jaccard") >= thr)
-    expandDupPairs(mapping, repPairs,
-      sizes.select(col("doc_id").as("rep")), thr)
+    mapping.expandPairs(repPairs,
+      selfJaccard(sizes.select(col("doc_id").as("rep")), thr))
   }
 
   // MinHash parameters: 72 permutations in 18 bands x 4 rows.
@@ -767,17 +736,13 @@ object Text {
       val (mapping, docsSh, repPairs) = lshRepPairs(s, d, thr)
       val repLabels = connectedComponents(
         repPairs.select(col("ra").as("da"), col("rb").as("db")))
-      val sizes = mapping.groupBy(col("rep"))
-        .agg(count(lit(1)).as("gs"))
-      val eligible = sizes
+      val eligible = mapping.reps.select(col("rep"), col("m"))
         .join(docsSh.select(col("doc_id").as("rep")), "rep")
         .join(repLabels.toDF("rep", "crossLbl"), Seq("rep"), "left")
-        .filter(col("gs") >= 2 || col("crossLbl").isNotNull)
+        .filter(col("m") >= 2 || col("crossLbl").isNotNull)
         .select(col("rep"),
           coalesce(col("crossLbl"), col("rep")).as("lbl"))
-      mapping.select(col("doc_id"), col("rep"))
-        .join(eligible, "rep")
-        .select(col("doc_id"), col("lbl"))
+      mapping.toMembers(eligible).select(col("doc_id"), col("lbl"))
       // the SpillMemo materializes this EAGERLY at compute (parquet
       // spill): the memo outlives the computing query while the CC
       // labels it reads are query-scoped (released by the harness) —
@@ -792,8 +757,8 @@ object Text {
   private[graft] def lshJaccardPairs(s: SparkSession, d: String,
       thr: Double, bucketCap: Int = BandBucketCap): DataFrame = {
     val (mapping, docsSh, scored) = lshRepPairs(s, d, thr, bucketCap)
-    expandDupPairs(mapping, scored,
-      docsSh.select(col("doc_id").as("rep")), thr)
+    mapping.expandPairs(scored,
+      selfJaccard(docsSh.select(col("doc_id").as("rep")), thr))
   }
 
   private val pairsMemo = new graft.SpillMemo[(String, Double)]
@@ -820,8 +785,7 @@ object Text {
     * the pinned plan can never drift from the plan the memo
     * executes. */
   private def buildRepBandKeys(s: SparkSession, d: String): DataFrame = {
-    val mapping = textDupMapping(s, d)
-    val docsSh = mapping.filter(col("doc_id") === col("rep"))
+    val docsSh = Collapse.texts(s, d).reps
       .select(col("doc_id"), shingles.as("sh"))
       .filter(size(col("sh")) > 0)
     lshBandKeysFromSh(docsSh)
@@ -831,23 +795,12 @@ object Text {
     * spec hook: the memo VALUE is a spill-file scan, so PlanSpec pins
     * the fused kernels (shingle_hashes → minhash_sig) on the plan
     * that BUILDS the relation — [[buildRepBandKeys]], the same
-    * builder the memo checkpoints. Registers a scope-tracked persist
-    * (textDupMapping); the caller releases. */
+    * builder the memo checkpoints. On a corpus with duplicates it
+    * registers the mapping's scope-tracked persist; the caller
+    * releases. */
   private[graft] def repBandKeysPlanForSpec(s: SparkSession,
       d: String): String =
     buildRepBandKeys(s, d).queryExecution.executedPlan.toString
-
-  /** Session-memoized slim duplicate mapping `(doc_id, rep)` — the
-    * text column dropped, so the cached footprint is two longs per
-    * doc (the full [[textDupMapping]] stays query-scoped: caching
-    * corpus TEXT for a session would be cache-the-data, not
-    * cache-the-model). Same spill-backed lifetime as
-    * [[repBandKeys]]. */
-  private val dupMapSlimMemo = new graft.SpillMemo[String]
-  private[graft] def dupMapSlim(s: SparkSession, d: String): DataFrame =
-    dupMapSlimMemo.getOrCompute(s, d) {
-      textDupMapping(s, d).select(col("doc_id"), col("rep"))
-    }
 
   /** Session-memoized t60 calibration signatures at the REP level —
     * the PORTABLE 72-perm family over the shingle-string polyHash
@@ -862,12 +815,12 @@ object Text {
     * exploded DISTINCT shingle strings agrees. Cached at rep (not
     * doc) granularity so the memo holds O(distinct texts × 72)
     * longs, never O(corpus); t60 keeps even its AGREEMENT compute at
-    * rep granularity and expands through [[dupMapSlim]]. Same
+    * rep granularity and expands through the dup mapping. Same
     * spill-backed lifetime as [[repBandKeys]]. */
   private val calibSigMemo = new graft.SpillMemo[String]
   private[graft] def calibRepSigs(s: SparkSession, d: String): DataFrame =
     calibSigMemo.getOrCompute(s, d) {
-      textDupMapping(s, d).filter(col("doc_id") === col("rep"))
+      Collapse.texts(s, d).reps
         .select(col("rep"),
           graft.functions.TextExprs.minHashSig(
             graft.functions.TextExprs.ngramPolyHashes(col("text"), 3),
@@ -997,13 +950,12 @@ object Text {
     * expansion. */
   private def lshRepPairs(s: SparkSession, d: String, thr: Double,
       bucketCap: Int = BandBucketCap)
-      : (DataFrame, DataFrame, DataFrame) = {
+      : (Collapse.Mapping, DataFrame, DataFrame) = {
     // exact-collapse first, like t08: identical texts share every
     // band key, so duplicates make the bucket join quadratic; the
     // band join runs on distinct texts and members expand back in
-    val mapping = textDupMapping(s, d)
-    val docsSh = Scoped.persist(mapping
-      .filter(col("doc_id") === col("rep"))
+    val mapping = Collapse.texts(s, d)
+    val docsSh = Scoped.persist(mapping.reps
       .select(col("doc_id"), shingles.as("sh"))
       .filter(size(col("sh")) > 0)
     ) // read by the sig pipeline + both verify branches
@@ -1106,19 +1058,15 @@ object Text {
     val best = graft.functions.TextExprs.profileArgmax(
       graft.functions.TextExprs.charNGrams(col("text"), 3),
       langProfiles(s, d).map(p => p.lang -> p.ptgs))
-    // EXACT COLLAPSE ([[Collapse.perText]]): the argmax is a pure
-    // function of the text, so on a corpus with duplicates the
-    // trigram extraction + profile probe run once per DISTINCT text
-    // and each member contributes its OWN true lang to the confusion
+    // collapsed per text: the argmax is a pure function of the text,
+    // so each member contributes its OWN true lang to the confusion
     // cell under its rep's prediction (identical text ⇒ identical
-    // pred_lang and identical score-0 drop); a duplicate-free corpus
-    // classifies straight on the scan. Counts are the same either
-    // way. Persist barrier on both paths: without it Catalyst
-    // substitutes the aliased struct into the score filter and the
-    // argmax runs TWICE per row (pushed Filter + Project — the guide
-    // §4.4 duplication).
-    Collapse.perText(s, d, Seq("lang"), Seq(best.as("best")),
-        barrier = true)
+    // pred_lang and identical score-0 drop). Persist barrier on both
+    // paths: without it Catalyst substitutes the aliased struct into
+    // the score filter and the argmax runs TWICE per row (pushed
+    // Filter + Project — the guide §4.4 duplication).
+    Collapse.texts(s, d, Seq("lang"))
+      .perText(Seq("lang"), Seq(best.as("best")), barrier = true)
       .filter(col("best.score") > 0)
       .groupBy(col("lang"), col("best.pl").as("pred_lang"))
       .agg(count(lit(1)).as("n"))
@@ -1686,12 +1634,10 @@ object Text {
               lit(HashP)) % 2 === 1, col("c"))
             .otherwise(-col("c"))).as(s"b$i")
         }
-        // r16 EXACT COLLAPSE (§8): the signature is a pure function of
-        // the text, so the token explode + 63-sum aggregation run once
-        // per DISTINCT text and members read their rep's signature —
-        // same votes, same sign tests, bit-identical BIGINT.
-        val mapping = textDupMapping(s, d)
-        val votes = mapping.filter(col("doc_id") === col("rep"))
+        // collapsed per text: the signature is a pure function of the
+        // text (same votes, same sign tests, bit-identical BIGINT)
+        val mapping = Collapse.texts(s, d)
+        val votes = mapping.reps
           .select(col("rep"),
             explode(graft.functions.TextExprs.tokenCounts(toks)))
           .toDF("rep", "t", "c")
@@ -1701,7 +1647,7 @@ object Text {
         val sig = (0 until 63).map { i =>
           when(col(s"b$i") > 0, lit(1L << i)).otherwise(0L)
         }.reduce(_.bitwiseOR(_))
-        Collapse.toMembers(s, d, mapping, votes)
+        mapping.toMembers(votes)
           .select(col("doc_id"), sig.as("simhash")).orderBy("doc_id")
       },
       Some {
@@ -1995,14 +1941,11 @@ object Text {
         // tf is row-local (token_counts kernel): the (doc, term)
         // occurrence shuffle disappears; df then counts rows of the
         // already-per-doc-distinct relation exactly as before.
-        // r16 EXACT COLLAPSE (§8, the t28 weighting): identical texts
-        // hold identical (term, tf) rows, so the explode, the df
-        // aggregation and the per-doc top-3 window run at REP
-        // granularity — df is the weighted rep count Σ m, the ranking
-        // is a pure function of (text, df table), and members inherit
-        // their rep's top-3 rows verbatim.
-        val mapping = textDupMapping(s, d)
-        val tf = mapping.filter(col("doc_id") === col("rep"))
+        // collapsed per text: the (term, tf) rows are a pure function
+        // of the text and df sums the group size m; the top-3 ranking
+        // is a pure function of (text, df table)
+        val mapping = Collapse.texts(s, d)
+        val tf = mapping.reps
           .select(col("rep"), col("m"),
             explode(graft.functions.TextExprs.tokenCounts(toks)))
           .toDF("rep", "m", "term", "tf")
@@ -2013,7 +1956,7 @@ object Text {
           .withColumn("score", col("tf").cast("double") / col("df"))
           .withColumn("rk", row_number().over(w))
           .filter(col("rk") <= 3)
-        Collapse.toMembers(s, d, mapping, repTop)
+        mapping.toMembers(repTop)
           .select(col("doc_id"), col("rk"), col("term"), col("tf"),
             col("df"), round(col("score"), 6).as("score"))
           .orderBy("doc_id", "rk")
@@ -2062,14 +2005,11 @@ object Text {
       "t19_bigram_lm",
       (s, d) => {
         val n = size(toks)
-        // r16 EXACT COLLAPSE (§8, the t28 weighting): identical texts
-        // contribute identical bigram sequences, so the explode runs
-        // once per DISTINCT text; the model counts are the weighted
-        // rep-instance sums (Σ occ·m ≡ the per-copy counts — same
-        // integers, same smoothed divisions), and each member reads
-        // its rep's (n_bigrams, avg_p, rare_ratio) row bit-for-bit.
-        val mapping = textDupMapping(s, d)
-        val biRows = mapping.filter(col("doc_id") === col("rep"))
+        // collapsed per text: the bigram sequence is a pure function of
+        // the text and the model counts sum the group size m (same
+        // integers, same smoothed divisions)
+        val mapping = Collapse.texts(s, d)
+        val biRows = mapping.reps
           .select(col("rep"), col("m"),
             explode(when(n >= 2,
               zip_with(slice(toks, lit(1), n - 1), slice(toks, lit(2), n - 1),
@@ -2112,7 +2052,7 @@ object Text {
               count(lit(1))).as("avg_p"),
             (sum(when(col("n12") <= 2, 1L).otherwise(0L)).cast("double") /
               count(lit(1))).as("rare_ratio"))
-        Collapse.toMembers(s, d, mapping, repScore)
+        mapping.toMembers(repScore)
           .select(col("doc_id"), col("n_bigrams"), col("avg_p"),
             col("rare_ratio"))
           .orderBy("doc_id")
@@ -2258,14 +2198,11 @@ object Text {
         // its body per element, and `split` can't be hoisted out of it
         // by the optimizer (the t43/NgramHashes lesson, presplit form)
         val nChunks = ceil(size(col("tk")) / 16.0).cast("int")
-        // r16 EXACT COLLAPSE (§8, the t28 weighting): identical texts
-        // yield identical chunk sequences, so chunks explode at REP
-        // granularity; a chunk value's corpus count is the weighted
-        // rep-position count Σ m (each rep position occurs in m member
-        // docs), the c ≥ 2 cut is identical for every member, and
-        // members inherit (n_chunks, n_dup_chunks, dup_ratio) verbatim.
-        val mapping = textDupMapping(s, d)
-        val chunks = mapping.filter(col("doc_id") === col("rep"))
+        // collapsed per text: the chunk sequence is a pure function of
+        // the text and a chunk's corpus count sums the group size m,
+        // so the c ≥ 2 cut is the same for every member
+        val mapping = Collapse.texts(s, d)
+        val chunks = mapping.reps
           .select(col("rep"), col("m"), toks.as("tk"))
           .select(col("rep"), col("m"),
             posexplode(when(nChunks > 0,
@@ -2279,7 +2216,7 @@ object Text {
           .groupBy(col("rep"))
           .agg(count(lit(1)).as("n_chunks"),
             sum(when(col("c") >= 2, 1L).otherwise(0L)).as("n_dup_chunks"))
-        Collapse.toMembers(s, d, mapping, repStats)
+        mapping.toMembers(repStats)
           .select(col("doc_id"), col("n_chunks"), col("n_dup_chunks"))
           .withColumn("dup_ratio",
             col("n_dup_chunks").cast("double") / col("n_chunks").cast("double"))
@@ -2328,10 +2265,12 @@ object Text {
           .select(col("doc_id"), col("source"), col("text"),
             size(toks).as("n_tokens"), quality.as("q"))
         val passed = scored.filter(col("q") >= 0.5)
-        val kept = passed
-          .withColumn("keep_id",
-            min(col("doc_id")).over(Window.partitionBy(col("text"))))
-          .filter(col("doc_id") === col("keep_id"))
+        // the quality score is a pure function of the text, so a
+        // text's copies pass or fail together: the min-id copy among
+        // the passed ones is the dup mapping's rep
+        val kept = Collapse.texts(s, d, Seq("source")).reps
+          .select(col("source"), size(toks).as("n_tokens"), quality.as("q"))
+          .filter(col("q") >= 0.5)
         val total = scored.groupBy(col("source"))
           .agg(count(lit(1)).as("n_docs"))
         val pass = passed.groupBy(col("source"))
@@ -2539,27 +2478,17 @@ object Text {
       "t28_span_dedup",
       (s, d) => {
         val nWin = (size(toks) - 7).cast("int")
-        // r16 EXACT COLLAPSE (§8, the t65 discipline): identical
-        // texts yield identical window sequences, so the explode, the
-        // corpus count, and the islands all run at REP granularity —
-        // the corpus-wide count of a window value is the rep-level
-        // occurrence count WEIGHTED by each rep's group size m
-        // (Σ_rep occ·m ≡ the uncollapsed per-copy count), the c ≥ 2
-        // cut therefore selects exactly the same positions for every
-        // member, and members inherit their rep's island stats
-        // verbatim (same widx sequence ⇒ same runs). n_windows comes
-        // off the member's own text in the mapping. At the sf1
-        // 10×-duplication regime the window explode and both shuffles
-        // shrink by the duplication factor; a duplicate-free corpus
-        // gets the identity mapping ([[Collapse.textDupMapping]]:
-        // rep = doc_id, m = 1, no text window). Output is the
-        // identical relation either way (oracle unchanged).
-        val mapping = textDupMapping(s, d)
+        // collapsed per text: the window sequence is a pure function of
+        // the text and a window value's corpus count sums the group
+        // size m, so the c ≥ 2 cut selects the same positions for
+        // every member (same widx sequence ⇒ same runs); n_windows
+        // comes off the member's own text
+        val mapping = Collapse.texts(s, d)
         // fused NgramHashes kernel (ordered, non-distinct): same
         // hashes as posexploding the window strings and hashing after
         // — but one codegen'd pass instead of an interpreted HOF that
         // re-splits the text per window (ExprEquivSpec)
-        val wins = mapping.filter(col("doc_id") === col("rep"))
+        val wins = mapping.reps
           .select(col("rep"), col("m"),
             posexplode(graft.functions.TextExprs
               .ngramHashes(toks, 8, distinct = false)))
@@ -2576,13 +2505,10 @@ object Text {
           .groupBy(col("rep"), col("grp")).agg(count(lit(1)).as("run"))
           .groupBy(col("rep"))
           .agg(sum(col("run")).as("n_dup_l"), max(col("run")).as("max_run_l"))
-        mapping
-          .select(col("doc_id"), col("rep"),
-            greatest(nWin, lit(0)).as("n_windows"))
-          .join(runs, Seq("rep"), "left")
+        mapping.attach(runs, greatest(nWin, lit(0)).as("n_windows"))
           .select(col("doc_id"), col("n_windows"),
-            coalesce(col("n_dup_l"), lit(0L)).as("n_dup_windows"),
-            coalesce(col("max_run_l"), lit(0L)).cast("int").as("max_run"))
+            col("n_dup_l").as("n_dup_windows"),
+            col("max_run_l").cast("int").as("max_run"))
           .orderBy("doc_id")
       },
       Some("""WITH wins AS (
@@ -3154,7 +3080,8 @@ object Text {
         // copy-quadratic cross-split pair relation. An intra-rep
         // cross-split pair (the same text leaked verbatim) surfaces
         // as the (r, r) band self-match with jaccard exactly 1.
-        val m = dupMapSlim(s, d)
+        val mapping = Collapse.texts(s, d)
+        val m = mapping.rows
           .select(col("doc_id"), col("rep"),
             when(h < "c", "train").when(h < "e", "validation")
               .otherwise("test").as("split"))
@@ -3167,8 +3094,7 @@ object Text {
             .select(col("rep").as("rb")).distinct(), "rb")
         val repCands = testB.join(trainB, Seq("band", "bh"))
           .select("ra", "rb").distinct()
-        val repSh = Scoped.persist(textDupMapping(s, d)
-          .filter(col("doc_id") === col("rep"))
+        val repSh = Scoped.persist(mapping.reps
           .select(col("rep"), shingles.as("sh"))
           .filter(size(col("sh")) > 0))
         val repPairs = repCands
@@ -3272,18 +3198,13 @@ object Text {
         // + 12 chained replace passes, 13 full-length allocations per
         // row) lives on in ExprEquivSpec, which pins bitwise equality
         // including the consumed-trailing-space repeated-run edge.
-        // EXACT COLLAPSE ([[Collapse.perText]]): the merge walk is the
-        // whole query cost and is a pure function of the text, so on
-        // a corpus with duplicates it runs once per DISTINCT text and
-        // members read their rep's row (same text ⇒ bitwise-same
-        // n_tokens/n_chars/division) — at the sf1 10×-duplication
-        // regime the kernel work drops by the duplication factor for
-        // one text-keyed window + one long-keyed join. A
-        // duplicate-free corpus runs the walk straight on the scan.
+        // collapsed per text: the merge walk is the whole query cost
+        // and a pure function of the text (same text ⇒ bitwise-same
+        // n_tokens/n_chars/division)
         val nTokens = graft.functions.TextExprs.bpeTokenCount(
           col("text"), learnedMergePairs(s, d))
         val nChars = length(translate(col("text"), " ", ""))
-        Collapse.perText(s, d, Seq("doc_id"), Seq(
+        Collapse.texts(s, d).perText(Seq("doc_id"), Seq(
             nTokens.as("n_tokens"),
             nChars.as("n_chars"),
             (nChars.cast("double") / nTokens).as("chars_per_token")))
@@ -3423,14 +3344,11 @@ object Text {
         // array_distinct(transform(.. xxhash64(array_join(slice)))) —
         // the HOF form re-runs split(text) per window in the
         // interpreted evaluator (ExprEquivSpec pins the equivalence)
-        // r16 EXACT COLLAPSE (§8, the t28 weighting): identical texts
-        // hold identical distinct-window sets, so the explode and the
-        // per-doc rollup run at REP granularity; a window's document
-        // frequency is the weighted rep count Σ_rep m (each rep stands
-        // for m member docs), the df ≥ 3 cut is therefore the same for
-        // every member, and members inherit (n_distinct, n_boiler).
-        val mapping = textDupMapping(s, d)
-        val wins = mapping.filter(col("doc_id") === col("rep"))
+        // collapsed per text: the distinct-window set is a pure function
+        // of the text and a window's document frequency sums the group
+        // size m, so the df ≥ 3 cut is the same for every member
+        val mapping = Collapse.texts(s, d)
+        val wins = mapping.reps
           .select(col("rep"), col("m"),
             explode(graft.functions.TextExprs
               .ngramHashes(toks, 5, distinct = true)).as("wh"))
@@ -3439,15 +3357,10 @@ object Text {
         val scored = wins
           .withColumn("df", df)
           .groupBy(col("rep"))
-          .agg(count(lit(1)).as("n_distinct_l"),
-            sum(when(col("df") >= 3, 1L).otherwise(0L)).as("n_boiler_l"))
-        mapping
-          .select(col("doc_id"), col("rep"),
-            greatest(nWin, lit(0)).as("n_windows"))
-          .join(scored, Seq("rep"), "left")
-          .select(col("doc_id"), col("n_windows"),
-            coalesce(col("n_distinct_l"), lit(0L)).as("n_distinct_windows"),
-            coalesce(col("n_boiler_l"), lit(0L)).as("n_boiler_windows"))
+          .agg(count(lit(1)).as("n_distinct_windows"),
+            sum(when(col("df") >= 3, 1L).otherwise(0L))
+              .as("n_boiler_windows"))
+        mapping.attach(scored, greatest(nWin, lit(0)).as("n_windows"))
           .withColumn("boiler_ratio",
             when(col("n_distinct_windows") > 0,
               col("n_boiler_windows").cast("double") /
@@ -3768,7 +3681,7 @@ object Text {
         // relation; the 25M-row expansion joins ship 8-byte rep ids
         // and a 4-byte count (broadcast at these sizes). Values are
         // bit-identical to the per-doc join this replaced.
-        val m = dupMapSlim(s, d)
+        val m = Collapse.texts(s, d).rows.select(col("doc_id"), col("rep"))
         val repSigs = calibRepSigs(s, d)
         val agree = aggregate(
           zip_with(col("sa"), col("sb"),
@@ -3903,19 +3816,17 @@ object Text {
     //      counts; this is the row-level trail auditors and data
     //      cards need). Gates reuse the engine's own spellings: the
     //      min-doc-id dup rule, the fused quality kernel at t24's 0.5
-    //      cut, a 30-token floor. One text-keyed window + a map-only
-    //      scan. ----
+    //      cut, a 30-token floor. The dup gate is the dup mapping's rep:
+    //      one text-keyed window on a corpus with duplicates, a map-only
+    //      scan without. ----
     QuerySpec(
       "t62_disposition_audit",
       (s, d) => {
-        val w = Window.partitionBy(col("text"))
-        val docs = Tables.documents(s, d)
-          .select(col("doc_id"), col("text"),
+        Collapse.texts(s, d).rows
+          .select(col("doc_id"), col("rep"),
             round(qualityExpr, 6).as("q"), size(toks).as("n_tokens"))
-          .withColumn("keep_id", min(col("doc_id")).over(w))
-        docs
           .withColumn("dropped_by",
-            when(col("doc_id") =!= col("keep_id"), "dup")
+            when(col("doc_id") =!= col("rep"), "dup")
               .when(col("q") < 0.5, "quality")
               .when(col("n_tokens") < 30, "short"))
           .select(col("doc_id"), col("dropped_by").isNull.as("kept"),
@@ -4315,7 +4226,7 @@ object Text {
     //      threshold and t07's exact identity both miss). Scale shape:
     //      windows dedup ROW-LOCALLY (the fused NgramHashes kernel)
     //      and are built over DISTINCT texts only (the pair family's
-    //      [[textDupMapping]] collapse): a window's global owner is
+    //      [[Collapse]]): a window's global owner is
     //      the min doc containing it = the min REPRESENTATIVE (reps
     //      are per-text min members, and a non-rep member can never
     //      own a window its own rep also carries), so ownership
@@ -4332,8 +4243,8 @@ object Text {
       "t50_ngram_novelty",
       (s, d) => {
         val nWin = (size(toks) - 4).cast("int")
-        val mapping = textDupMapping(s, d)
-        val wins = mapping.filter(col("doc_id") === col("rep"))
+        val mapping = Collapse.texts(s, d)
+        val wins = mapping.reps
           .select(col("rep"),
             explode(graft.functions.TextExprs
               .ngramHashes(split(col("text"), " "), 5, distinct = true))
@@ -4343,20 +4254,17 @@ object Text {
         val scored = wins
           .withColumn("own", own)
           .groupBy(col("rep"))
-          .agg(count(lit(1)).as("n_distinct_l"),
+          .agg(count(lit(1)).as("n_distinct_windows"),
             sum(when(col("own") === col("rep"), 1L).otherwise(0L))
               .as("n_novel_l"))
-        mapping
-          .select(col("doc_id"), col("rep"),
-            greatest(nWin, lit(0)).as("n_windows"))
-          .join(scored, Seq("rep"), "left")
-          .select(col("doc_id"), col("n_windows"),
-            coalesce(col("n_distinct_l"), lit(0L)).as("n_distinct_windows"),
+        mapping.attach(scored, greatest(nWin, lit(0)).as("n_windows"),
+            (col("doc_id") === col("rep")).as("is_rep"))
+          .select(col("doc_id"), col("n_windows"), col("n_distinct_windows"),
             // only the representative can own a window: every window
             // of a non-rep member also lives in its rep's (identical)
             // text, and rep < member in arrival order
-            coalesce(when(col("doc_id") === col("rep"), col("n_novel_l"))
-              .otherwise(lit(0L)), lit(0L)).as("n_novel_windows"))
+            when(col("is_rep"), col("n_novel_l")).otherwise(lit(0L))
+              .as("n_novel_windows"))
           .withColumn("novelty_ratio",
             when(col("n_distinct_windows") > 0,
               col("n_novel_windows").cast("double") /
@@ -4457,22 +4365,12 @@ object Text {
       "t52_domain_affinity",
       (s, d) => {
         val B = 256
-        // r16 EXACT COLLAPSE (§8, the t28/t53 weighting): the hashed
-        // token explode runs once per DISTINCT text; the bucket stats
-        // are weighted rep-instance sums (cr: Σ occ·m over all
-        // members, ct: Σ occ·mr over src0 members — both counts ride
-        // the SAME dup-mapping window pass), and each doc reads its
-        // rep's (n_tokens, n_target_leaning) row bit-for-bit.
-        val mapping = Scoped.persist(Tables.documents(s, d)
-          .select(col("doc_id"), col("text"), col("source"))
-          .withColumn("rep",
-            min(col("doc_id")).over(Window.partitionBy(col("text"))))
-          .withColumn("m",
-            count(lit(1)).over(Window.partitionBy(col("text"))))
-          .withColumn("mr",
-            sum(when(col("source") === "src0", 1L).otherwise(0L))
-              .over(Window.partitionBy(col("text")))))
-        val tok = mapping.filter(col("doc_id") === col("rep"))
+        // collapsed per text: the hashed tokens are a pure function of
+        // the text; the raw bucket count cr sums the group size m and
+        // the target count ct sums mr, the group's src0 member count
+        val mapping = Collapse.texts(s, d, weights = Seq("m" -> lit(1L),
+          "mr" -> when(col("source") === "src0", 1L).otherwise(0L)))
+        val tok = mapping.reps
           .select(col("rep"), col("m"), col("mr"), explode(toks).as("t"))
           // bucket by the fused portable polyHash (t29's discipline) —
           // the earlier md5-prefix bucket digested every token twice
@@ -4499,8 +4397,7 @@ object Text {
           .groupBy(col("rep"))
           .agg(count(lit(1)).as("n_tokens"),
             sum(when(lean, 1L).otherwise(0L)).as("n_target_leaning"))
-        mapping.select(col("doc_id"), col("rep"))
-          .join(repAff, "rep")
+        mapping.toMembers(repAff)
           .select(col("doc_id"), col("n_tokens"), col("n_target_leaning"))
           .withColumn("affinity",
             col("n_target_leaning").cast("double") /
@@ -4571,21 +4468,13 @@ object Text {
       "t53_perplexity_buckets",
       (s, d) => {
         val n = size(toks)
-        // r16 EXACT COLLAPSE (§8, the t28 weighting): the bigram
-        // explode runs once per DISTINCT text. The reference slice is
-        // member-defined (source = 'src0'), so each rep carries mr =
-        // its src0-member count on the SAME dup-mapping window pass
-        // (zero extra shuffle); the reference model counts are the
-        // weighted sums Σ occ·mr ≡ the per-copy reference counts, and
-        // each doc reads its rep's (n_bigrams, score) bit-for-bit.
-        val mapping = Scoped.persist(Tables.documents(s, d)
-          .select(col("doc_id"), col("text"), col("source"), col("lang"))
-          .withColumn("rep",
-            min(col("doc_id")).over(Window.partitionBy(col("text"))))
-          .withColumn("mr",
-            sum(when(col("source") === "src0", 1L).otherwise(0L))
-              .over(Window.partitionBy(col("text")))))
-        val biRows = mapping.filter(col("doc_id") === col("rep"))
+        // collapsed per text: the bigram sequence is a pure function
+        // of the text; the reference slice is member-defined (source =
+        // 'src0'), so the reference model counts sum mr, the group's
+        // src0 member count
+        val mapping = Collapse.texts(s, d, Seq("lang"),
+          Seq("mr" -> when(col("source") === "src0", 1L).otherwise(0L)))
+        val biRows = mapping.reps
           .select(col("rep"), col("mr"),
             explode(when(n >= 2,
               zip_with(slice(toks, lit(1), n - 1), slice(toks, lit(2), n - 1),
@@ -4641,12 +4530,7 @@ object Text {
           .agg(count(lit(1)).as("n_bigrams"),
             (tks.ticksToDouble(sum(col("t"))) / count(lit(1)))
               .as("score"))
-        val scored = Scoped.persist(
-          mapping.select(col("doc_id"), col("lang"), col("rep"))
-            .join(perRep, Seq("rep"), "left")
-            .select(col("doc_id"), col("lang"),
-              coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-              coalesce(col("score"), lit(0.0)).as("score")))
+        val scored = Scoped.persist(mapping.attach(perRep, col("lang")))
         val wr = Window.partitionBy(col("lang"))
           .orderBy(col("score"), col("doc_id"))
         val ranked = scored
@@ -4732,46 +4616,37 @@ object Text {
     //      corpus — so it broadcasts and the whole decontamination
     //      pass is map-side: one training-corpus scan, a broadcast
     //      hash probe per window, one doc_id rollup. No corpus-sized
-    //      shuffle at any scale. r16 EXACT COLLAPSE (§8): a doc's
+    //      shuffle at any scale. Collapsed per text: a doc's
     //      distinct-window set is a pure function of its text, so the
-    //      13-gram explode, the benchmark probe and the rollup all run
-    //      once per DISTINCT text; the benchmark window set over eval
-    //      docs equals the window set over reps owning ≥1 eval member
-    //      (same texts → same windows), and every training member
-    //      reads its rep's (n_distinct, n_hit) row bit-for-bit. ----
+    //      benchmark window set over eval docs equals the window set
+    //      over reps owning ≥1 eval member. ----
     QuerySpec(
       "t54_decontamination",
       (s, d) => {
         val isEval =
           substring(md5(col("doc_id").cast("string")), 1, 1) >= "e"
-        val mapping = textDupMapping(s, d)
+        val mapping = Collapse.texts(s, d)
         val repWins = Scoped.persist(
-          mapping.filter(col("doc_id") === col("rep"))
+          mapping.reps
             .select(col("rep"),
               explode(graft.functions.TextExprs
                 .ngramHashes(toks, 13, distinct = true)).as("wh")))
         // distinct windows of the eval slice = distinct windows of the
         // reps that own >=1 eval member (identical texts, identical
         // window sets) — bounded by the benchmark, broadcast as before
-        val evalReps = mapping.filter(isEval)
+        val evalReps = mapping.rows.filter(isEval)
           .select(col("rep")).distinct()
         val benchSet = repWins.join(evalReps, "rep")
           .select(col("wh")).distinct().withColumn("hit", lit(1))
         val repStats = repWins
           .join(broadcast(benchSet), Seq("wh"), "left")
           .groupBy(col("rep"))
-          .agg(count(lit(1)).as("n_distinct_l"),
+          .agg(count(lit(1)).as("n_distinct_windows"),
             sum(when(col("hit").isNotNull, 1L).otherwise(0L))
-              .as("n_hit_l"))
-        mapping
+              .as("n_hit_windows"))
+        mapping.attach(repStats,
+            greatest((size(toks) - 12).cast("int"), lit(0)).as("n_windows"))
           .filter(!isEval)
-          .select(col("doc_id"), col("rep"),
-            greatest((size(toks) - 12).cast("int"), lit(0))
-              .as("n_windows"))
-          .join(repStats, Seq("rep"), "left")
-          .select(col("doc_id"), col("n_windows"),
-            coalesce(col("n_distinct_l"), lit(0L)).as("n_distinct_windows"),
-            coalesce(col("n_hit_l"), lit(0L)).as("n_hit_windows"))
           .withColumn("contaminated", col("n_hit_windows") > 0)
           .orderBy("doc_id")
       },
@@ -5056,22 +4931,16 @@ object Text {
     //      edit-distant). ----
     QuerySpec(
       "t65_editdist_pairs",
-      // Exact-collapse FIRST, like every pair operator in this file
-      // (the first full-sf1 bench caught the uncollapsed form at
-      // 357 s — 300× the sf0.1 cost — because bit-identical copies
-      // share every 8-gram, so the candidate join and the Levenshtein
-      // verify both went quadratic in the duplication factor): the
-      // 8-gram candidate join and the banded verify run over DISTINCT
-      // texts only, then members expand back — identical texts have
-      // identical lengths and Levenshtein distances, so cross-group
-      // member pairs inherit the rep pair's row bit-for-bit and
-      // intra-group pairs sit at exactly dist 0 / sim 1.0, gated on
-      // the rep having ≥1 8-gram (a <8-token text is candidate to
-      // nothing, itself included — same relation as the uncollapsed
-      // join at every SF, which the unchanged oracle keeps pinning).
+      // Collapsed per text (the first full-sf1 bench caught the
+      // uncollapsed form at 357 s — 300× the sf0.1 cost — because
+      // bit-identical copies share every 8-gram): identical texts have
+      // identical lengths and Levenshtein distances, so intra-group
+      // pairs sit at exactly dist 0 / sim 1.0, gated on the rep having
+      // ≥1 8-gram (a <8-token text is candidate to nothing, itself
+      // included).
       (s, d) => {
-        val mapping = textDupMapping(s, d)
-        val reps = mapping.filter(col("doc_id") === col("rep"))
+        val mapping = Collapse.texts(s, d)
+        val reps = mapping.reps
         val sh8 = reps.select(col("doc_id"),
           explode(graft.functions.TextExprs
             .shingleHashes(col("text"), 8)).as("g"))
@@ -5096,29 +4965,14 @@ object Text {
             .withColumn("dist",
               levenshtein(col("ta"), col("tb"), 64).cast("long"))
             .filter(col("dist") >= 0)
-            .select(col("ra"), col("rb"), col("la"), col("lb"),
-              col("dist")))
-        val members = mapping.select(col("rep"), col("doc_id"))
-        val cross = repPairs
-          .join(members.toDF("ra", "ma"), "ra")
-          .join(members.toDF("rb", "mb"), "rb")
-          .select(least(col("ma"), col("mb")).as("da"),
-            greatest(col("ma"), col("mb")).as("db"),
-            when(col("ma") < col("mb"), col("la")).otherwise(col("lb"))
-              .as("len_a"),
-            when(col("ma") < col("mb"), col("lb")).otherwise(col("la"))
-              .as("len_b"),
-            col("dist"))
-        val intra = members.toDF("rep", "ma")
-          .join(members.toDF("rep", "mb"), "rep")
-          .filter(col("ma") < col("mb"))
-          .join(sh8.select(col("doc_id").as("rep")).distinct(), "rep")
+            .select(col("ra"), col("rb"), col("la").as("len_a"),
+              col("lb").as("len_b"), col("dist")))
+        val intra = sh8.select(col("doc_id").as("rep")).distinct()
           .join(reps.select(col("doc_id").as("rep"),
             length(col("text")).cast("long").as("l")), "rep")
-          .select(col("ma").as("da"), col("mb").as("db"),
-            col("l").as("len_a"), col("l").as("len_b"),
+          .select(col("rep"), col("l").as("len_a"), col("l").as("len_b"),
             lit(0L).as("dist"))
-        cross.unionByName(intra)
+        mapping.expandPairs(repPairs, intra, swap = Seq("len_a" -> "len_b"))
           .select(col("da"), col("db"), col("len_a"), col("len_b"),
             col("dist"),
             round(lit(1.0) - col("dist").cast("double") /
@@ -5363,19 +5217,15 @@ object Text {
     QuerySpec(
       "t68_bpe_fertility",
       (s, d) => {
-        // EXACT COLLAPSE ([[Collapse.perText]], the t40 move): on a
-        // corpus with duplicates the merge walk runs once per
-        // DISTINCT text and each doc contributes its rep's
-        // bitwise-identical integer stats to its OWN (source, lang)
-        // slice (the slice keys ride the mapping pass, so no
-        // documents re-join); a duplicate-free corpus walks straight
-        // on the scan. Integer sums are permutation-safe; the rollup
-        // is unchanged.
+        // collapsed per text, the t40 move: each doc contributes its
+        // rep's bitwise-identical integer stats to its OWN (source,
+        // lang) slice (the slice keys ride the mapping pass).
         val nTok = graft.functions.TextExprs.bpeTokenCount(
           col("text"), learnedMergePairs(s, d))
         val nWords = size(filter(toks, w => length(w) > 0))
         val nChars = length(translate(col("text"), " ", ""))
-        Collapse.perText(s, d, Seq("source", "lang"), Seq(
+        Collapse.texts(s, d, Seq("source", "lang"))
+          .perText(Seq("source", "lang"), Seq(
             nTok.cast("long").as("nt"), nWords.cast("long").as("nw"),
             nChars.cast("long").as("nc")))
           .groupBy(col("source"), col("lang"))
@@ -5457,7 +5307,7 @@ object Text {
         val kBot = 32
         val (mapping, sizes, repPairs) = containmentRepCore(s, d, 4, 5)
         val repTh = Scoped.persist(
-          textDupMapping(s, d).filter(col("doc_id") === col("rep"))
+          mapping.reps
             .select(col("rep"),
               array_sort(array_distinct(graft.functions.TextExprs
                 .ngramPolyHashes(col("text"), 3))).as("ths"))
@@ -5473,23 +5323,14 @@ object Text {
             graft.functions.TextExprs
               .sortedIntersectCount(col("sg"), col("thb")).as("hit"),
             size(col("sg")).as("k_eff"))
-        val members = mapping.select(col("rep"), col("doc_id"))
-        val cross = repEst
-          .join(members.toDF("ra", "da"), "ra")
-          .join(members.toDF("rb", "db"), "rb")
-          .select(col("da"), col("db"), col("na"), col("ni"),
-            col("hit"), col("k_eff"))
         // intra-rep pairs: identical text, sig(A) ⊆ TH(A) — the
         // sample hits in full and est is exactly 1.0
-        val intra = members.toDF("rep", "da")
-          .join(sizes.select(col("doc_id").as("rep"), col("na")), "rep")
+        val intra = sizes.select(col("doc_id").as("rep"), col("na"))
           .join(sig.select(col("rep"), size(col("sg")).as("k_eff")),
             "rep")
-          .join(members.toDF("rep", "db"), "rep")
-          .filter(col("da") =!= col("db"))
-          .select(col("da"), col("db"), col("na"),
-            col("na").as("ni"), col("k_eff").as("hit"), col("k_eff"))
-        cross.unionByName(intra)
+          .select(col("rep"), col("na"), col("na").as("ni"),
+            col("k_eff").as("hit"), col("k_eff"))
+        mapping.expandPairs(repEst, intra, directed = true)
           .select(col("da"), col("db"),
             col("na").cast("long").as("n_a"),
             (col("ni").cast("double") / col("na")).as("containment"),

@@ -234,7 +234,19 @@ class PlanSpec extends SparkSpec {
 
   test("t69: sketch decoration stays at rep level — the sorted-array " +
       "intersect never rides the member-expansion joins") {
-    val p = plan("t69_bottomk_containment")
+    // duplicate-free corpus: the rep pairs are the doc pairs — no
+    // member expansion, so no Union and no join on rep
+    assert(!Collapse.textHasDups(spark, sf0001))
+    val q = plan("t69_bottomk_containment")
+    Scoped.release()
+    assert(q.contains("sorted_intersect_count"))
+    assert(!q.contains("CartesianProduct"))
+    assert(!q.contains("Union"), q.take(800))
+    assert(repJoin.findFirstIn(q).isEmpty, q.take(800))
+    // duplicated corpus: the collapsed plan
+    assert(Collapse.textHasDups(spark, dupCorpus))
+    val p = plan("t69_bottomk_containment", dupCorpus)
+    Scoped.release()
     // the estimator's kernel evaluates once per REP pair…
     assert(p.contains("sorted_intersect_count"))
     // …and the doc-level expansion ships only scalars: every join
@@ -680,6 +692,23 @@ class PlanSpec extends SparkSpec {
       p.take(2000))
   }
 
+  test("t52: the dup mapping's text window only on a corpus with duplicates") {
+    // duplicate-free corpus: the token explode runs on the scan and
+    // each doc reads its own votes — no window, no join on rep
+    assert(!Collapse.textHasDups(spark, sf0001))
+    val q = plan("t52_domain_affinity")
+    Scoped.release()
+    assert(!q.contains("Window"), q.take(800))
+    assert(repJoin.findFirstIn(q).isEmpty, q.take(800))
+    // duplicated corpus: the min-per-text window carries m and mr on
+    // one pass, and members re-attach by rep
+    assert(Collapse.textHasDups(spark, dupCorpus))
+    val p = plan("t52_domain_affinity", dupCorpus)
+    Scoped.release()
+    assert(p.contains("Window"), p.take(800))
+    assert(repJoin.findFirstIn(p).isDefined, p.take(800))
+  }
+
   test("t53: threshold table broadcasts; no all-pairs anywhere") {
     val p = plan("t53_perplexity_buckets")
     // the ≤|langs|-row tertile thresholds and the 1-row vocab scalar
@@ -837,6 +866,21 @@ class PlanSpec extends SparkSpec {
     // (tbl, 4-bit key) — an equi-join, visible as join keys k#
     assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin")
       || p.contains("BroadcastHashJoin"), p.take(800))
+  }
+
+  test("s35: distinct-vector reps come from a window only when vectors repeat") {
+    // duplicate-free vectors: the sweep reads the table itself
+    assert(!Collapse.embHasDups(spark, sf0001))
+    val q = plan("s35_lsh_sweep")
+    Scoped.release()
+    assert(!q.contains("Window"), q.take(800))
+    assert(q.contains("hyperplane_sigs"), q.take(800))
+    // duplicated vectors: one min-per-vector window picks the reps
+    assert(Collapse.embHasDups(spark, dupCorpus))
+    val p = plan("s35_lsh_sweep", dupCorpus)
+    Scoped.release()
+    assert(p.contains("Window"), p.take(800))
+    assert(p.contains("hyperplane_sigs"), p.take(800))
   }
 
   test("m23: the pHash is map-only decode — no exchange before the " +

@@ -154,11 +154,13 @@ object BronzeMerge {
     val (ver, batches) = currentCommit(spark, table)
     require(batches.nonEmpty, "nothing to compact")
     val batchName = freshBatchName(f, table, f"batch-${ver + 1}%08d")
-    // mergeSchema on both reads: a table that gained `source_item_id`
-    // mid-life mixes key/data shapes, and a single-footer inference
-    // would silently drop the id column from the compacted batch
-    val snap = spark.read.option("mergeSchema", "true")
-      .parquet(batches.map(b => s"$table/$b"): _*)
+    // every batch's footers merged: a table that gained
+    // `source_item_id` mid-life mixes key/data shapes, and a
+    // single-footer inference would silently drop the id column from
+    // the compacted batch
+    val dirs = batches.map(b => s"$table/$b")
+    val snap = spark.read.schema(LocalParquet.schema(spark, dirs))
+      .parquet(dirs: _*)
     val clustered = clusterBy match {
       case Nil => snap.coalesce(nFiles)
       case Seq(c) => snap.repartitionByRange(nFiles, col(c))
@@ -207,8 +209,8 @@ object BronzeMerge {
     // predicate row must SURVIVE the rewrite, not vanish from both
     // the match count and the survivor set
     copyOnWrite(spark, table)(
-      matches = dirs => withRefs(withFile(
-          spark.read.option("mergeSchema", "true").parquet(dirs: _*)))
+      matches = dirs => withRefs(withFile(spark.read
+          .schema(LocalParquet.schema(spark, dirs)).parquet(dirs: _*)))
         .filter(coalesce(pred, lit(false))),
       survivors = df => withRefs(df)
         .filter(not(coalesce(pred, lit(false))))
@@ -241,14 +243,12 @@ object BronzeMerge {
   /** True iff any committed batch's identity keys carry [[IdCol]] —
     * i.e. id-keyed row deletes CAN match something. False on a legacy
     * table whose every batch predates source ids (see
-    * [[backfillIds]]). Footer-only check: reads key-file schemas,
-    * never data bytes. */
+    * [[backfillIds]]). Footer-only check: reads key-file schemas on
+    * the driver, never data bytes, no Spark job. */
   def carriesIds(spark: SparkSession, table: String): Boolean = {
     val (_, batches) = currentCommit(spark, table)
-    batches.nonEmpty &&
-      spark.read.option("mergeSchema", "true")
-        .parquet(batches.map(b => s"$table/_keys/$b"): _*)
-        .columns.contains(IdCol)
+    batches.nonEmpty && LocalParquet.schema(spark,
+      batches.map(b => s"$table/_keys/$b")).fieldNames.contains(IdCol)
   }
 
   /** MIGRATION: backfill [[IdCol]] onto a LEGACY bronze table whose
@@ -343,7 +343,9 @@ object BronzeMerge {
       if (!perBatch.contains(b)) b
       else {
         val rewritten = freshBatchName(f, table, f"batch-${ver + 1}%08d-cow$i")
-        survivors(spark.read.parquet(s"$table/$b")).write
+        val dir = s"$table/$b"
+        survivors(spark.read.schema(LocalParquet.schema(spark, Seq(dir)))
+            .parquet(dir)).write
           .mode(SaveMode.ErrorIfExists).parquet(s"$table/$rewritten")
         val keys = new Path(s"$table/_keys/$rewritten")
         f.delete(keys, true) // a leftover dir would nest the copy

@@ -537,23 +537,23 @@ object DeltaLog {
           val added = addedBatches.flatMap(b => batchFiles(f, table, b))
           // schema: evolution here is ADDITIVE (bronze batches only
           // ever introduce columns), so per-commit cost is the
-          // footers of the ADDED batches merged onto the logged
-          // schema — never a rescan of every live batch (O(changed
-          // files), the streaming hot path's bound). The full
-          // mergeSchema scan happens exactly once: the first commit
+          // footers of the ADDED batches, read on the driver
+          // (LocalParquet.schema, no Spark job), merged onto the
+          // logged schema — never a rescan of every live batch
+          // (O(changed files), the streaming hot path's bound). Every
+          // batch's footers are read exactly once: the first commit
           // that establishes metaData.
           val newSchema = (schema, addedBatches) match {
             case (s0, Nil) => s0
             case (None, _) if batches.nonEmpty =>
-              Some(spark.read.option("mergeSchema", "true")
-                .parquet(batches.map(b => s"$table/$b"): _*).schema)
+              Some(LocalParquet.schema(spark, batches.map(b => s"$table/$b")))
             case (Some(prev), adds) =>
-              val addSch = spark.read.option("mergeSchema", "true")
-                .parquet(adds.map(b => s"$table/$b"): _*).schema
+              val addSch =
+                LocalParquet.schema(spark, adds.map(b => s"$table/$b"))
               // the additive assumption must FAIL LOUDLY when broken:
               // silently keeping the stale type would log a schema
               // that conflicts with the new files' footers, so an
-              // external reader and the manifest-path mergeSchema
+              // external reader and the manifest-path schema-merging
               // read would disagree
               val conflicts = addSch.fields.flatMap { fd =>
                 prev.fields.find(_.name == fd.name)

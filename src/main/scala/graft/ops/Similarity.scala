@@ -930,17 +930,12 @@ object Similarity {
       .select(col("va").as("da"), col("vb").as("db"))
     val repLabels = Text.connectedComponents(repEdges)
       .toDF("rep", "comp")
-    val lab0 = mapping.rows.select(col("vec_id"), col("rep"))
+    // the component id is the min MEMBER id, as uncollapsed: a rep is
+    // its group's min id and the CC labels are min-id labels, so the
+    // min rep of a component is already its min member
+    mapping.rows.select(col("vec_id"), col("rep"))
       .join(repLabels, Seq("rep"), "left")
-      .withColumn("comp0", coalesce(col("comp"), col("rep")))
-    // restore the uncollapsed min-label contract: the component id is
-    // the min MEMBER id, which may be smaller than the min rep id
-    // only when the component's smallest vertex is a duplicate — the
-    // rep is its group's min, so rep ids and member minima coincide;
-    // the aggregate keeps the invariant explicit and cheap
-    val minMember = lab0.groupBy(col("comp0"))
-      .agg(min(col("vec_id")).as("component"))
-    lab0.join(minMember, "comp0").select(col("vec_id"), col("component"))
+      .select(col("vec_id"), coalesce(col("comp"), col("rep")).as("component"))
   }
 
   /** Semantic dedup (SemDeDup, Abbas et al. 2023), pair source

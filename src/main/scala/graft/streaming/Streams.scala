@@ -945,7 +945,7 @@ object Streams {
       .toDF("source_item_id", "file_name", "length", "modified",
         "content", "content_path")
     // keep the exact legacy 5-column shape unless the zone is in play
-    // (schema evolution on a mixed table is opt-in via mergeSchema)
+    // (reading a mixed table merges schemas only when asked to)
     val landed =
       if (filesZone.isDefined) fetched else fetched.drop("content_path")
     val appended = graft.ingest.BronzeMerge.mergeIngestDf(spark, landed,
@@ -961,55 +961,87 @@ object Streams {
     DrainResult(appended, failed)
   }
 
+  /** The file the parked set lives in, one fixed name under the
+    * quarantine dir so each replacement is a single rename. */
+  private val ParkedFile = "parked.parquet"
+
   /** The parked-failure relation at `dir` (empty when absent), read
-    * with the schema our own writer gives it — no inference job. */
+    * with the schema our own writer gives it — no inference job. Only
+    * [[ParkedFile]] is read where it exists: part files beside it are
+    * an older Spark write's set, already replaced. */
   private[graft] def readQuarantine(spark: SparkSession,
       dir: String): Seq[QuarantinedItem] = {
     import spark.implicits._
     val p = new org.apache.hadoop.fs.Path(dir)
     val fsq = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val parked = new org.apache.hadoop.fs.Path(p, ParkedFile)
     if (!fsq.exists(p)) Seq.empty
     else spark.read
       .schema(org.apache.spark.sql.Encoders.product[QuarantinedItem].schema)
-      .parquet(dir).as[QuarantinedItem].collect().toSeq
+      .parquet(if (fsq.exists(parked)) parked.toString else dir)
+      .as[QuarantinedItem].collect().toSeq
   }
 
-  /** Overwrite the quarantine relation with the CURRENT failure set —
+  /** Replace the quarantine relation with the CURRENT failure set —
     * state, not a log: every window retries everything quarantined,
     * so post-window failures are the complete parked set and the
-    * overwrite is idempotent under window replay (the write happens
-    * before the checkpoint, so a crash replays and rewrites it). A
-    * set equal to `prior` (what the window read) is already on disk
-    * and is not rewritten; an empty set deletes the directory. */
+    * replacement is idempotent under window replay (it happens before
+    * the checkpoint, so a crash replays and rewrites it). The driver
+    * writes the set as [[ParkedFile]] and renames it over the old one
+    * ([[graft.ingest.LocalParquet.write]]), so a reader sees the old
+    * set or the new one, never none: a failed write keeps the old set,
+    * whose windows have already checkpointed and would never list
+    * those items again. An older Spark write's part files are swept
+    * only after the swap. A set equal to `prior` (what the window
+    * read) is already on disk and is not rewritten; an empty set
+    * removes the directory, renamed aside first so that a crash
+    * midway cannot leave part of a multi-part set. */
   private[graft] def writeQuarantine(spark: SparkSession, dir: String,
       items: Seq[QuarantinedItem], prior: Seq[QuarantinedItem]): Unit = {
     import spark.implicits._
     val p = new org.apache.hadoop.fs.Path(dir)
     val fsq = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (items.toSet == prior.toSet) ()
-    else if (items.isEmpty) { fsq.delete(p, true); () }
-    else spark.createDataset(items).toDF()
-      .coalesce(1).write.mode("overwrite").parquet(dir)
+    else if (items.isEmpty) {
+      val aside = new org.apache.hadoop.fs.Path(p.getParent,
+        s".${p.getName}-${java.util.UUID.randomUUID()}.gone")
+      if (fsq.rename(p, aside)) fsq.delete(aside, true)
+      ()
+    } else {
+      graft.ingest.LocalParquet.write(spark, dir, items, ParkedFile)
+      fsq.listStatus(p).map(_.getPath)
+        .filterNot(f => f.getName == ParkedFile || f.getName.startsWith("."))
+        .foreach(fsq.delete(_, true))
+    }
   }
 
-  /** Schema of the paged window's live slice, `<staging>_window/live`
-    * — exactly what each page's write lays down. */
-  private val LiveSliceSchema =
-    org.apache.spark.sql.types.StructType.fromDDL(
-      "source_item_id STRING, file_name STRING, modified TIMESTAMP_LTZ, " +
-        "size BIGINT")
+  /** One row of the paged window's live slice, `<staging>_window/live`. */
+  private[graft] final case class LiveRow(source_item_id: String,
+      file_name: String, modified: java.sql.Timestamp, size: Option[Long])
 
-  /** Schema of the paged window's dead-ids slice, `<staging>_window/dead`. */
+  /** One row of the paged window's dead-ids slice,
+    * `<staging>_window/dead`: a tombstoned
+    * [[graft.ingest.BronzeMerge.IdCol]]. */
+  private[graft] final case class DeadRow(source_item_id: String)
+
+  /** The slices' schemas — exactly what each page's write lays down. */
+  private val LiveSliceSchema =
+    org.apache.spark.sql.Encoders.product[LiveRow].schema
   private val DeadSliceSchema =
-    org.apache.spark.sql.types.StructType.fromDDL(
-      s"${graft.ingest.BronzeMerge.IdCol} STRING")
+    org.apache.spark.sql.Encoders.product[DeadRow].schema
 
   /** One paged window as its drain sees it: the live `(source_item_id,
     * file_name, modified, size)` slice and the dead-ids slice, each
     * with the row count paging took — the drain never runs a job to
-    * learn whether a slice is empty. */
+    * learn whether a slice is empty — and which of the `parked` ids
+    * the window listed, live or dead. */
   final case class WindowSlices(live: DataFrame, nLive: Long,
-      dead: DataFrame, nDead: Long)
+      dead: DataFrame, nDead: Long, parkedListed: Set[String])
+
+  /** Does a listed item belong in the live slice? Tombstones go to the
+    * dead slice; folders (null mime) go nowhere. */
+  private def isLive(it: graft.pipeline.DeltaListing.DeltaItem): Boolean =
+    !it.deleted && it.mime != null
 
   /** One scheduled INCREMENTAL-DISCOVERY round (Graph delta query →
     * staged catalog): load the previous deltaLink, fetch only the
@@ -1021,16 +1053,20 @@ object Streams {
     *
     * Driver memory is O(page): a deleted million-item folder
     * tombstones every descendant in ONE delta window, so pages stream
-    * from [[graft.pipeline.DeltaListingProvider.syncPages]] and each
-    * page's live rows append to the staging catalog AND to a
+    * from [[graft.pipeline.DeltaListingProvider.syncPages]] and the
+    * driver writes each page it holds as parquet, with no Spark job
+    * ([[graft.ingest.LocalParquet.write]]): one file per page per
+    * slice, its live rows to the staging catalog AND to a
     * window-scoped `<staging>_window/live` slice, its tombstoned ids
     * to `<staging>_window/dead`. The drain consumes a RELATION of the
     * window and the delete is the anti-join over the dead relation
     * ([[graft.ingest.BronzeMerge.deleteMatchingKeys]]) — no literal
     * predicate, no driver list. Each slice is opened once, with the
-    * schema its page writes gave it ([[LiveSliceSchema]],
-    * [[DeadSliceSchema]]), and the one dead relation serves both the
-    * drain and the delete.
+    * schema its page writes gave it ([[LiveRow]], [[DeadRow]]), and
+    * the one dead relation serves both the drain and the delete.
+    * Paging also notes which of the `parked` ids (O(failures)) the
+    * window lists, live or dead, so reconciling a quarantine scans
+    * nothing.
     *
     * Ordering is data-then-checkpoint: stage, drain and delete all
     * precede the deltaLink save, so a crash anywhere before it replays
@@ -1038,7 +1074,7 @@ object Streams {
     * (window-scoped rewrite / merge / keyed no-op) — the C4 contract
     * of every re-run in the pipeline. A drain AFTER the checkpoint
     * would strand a staged-but-never-landed window on the crash path.
-    * The staged catalog is WINDOW-IDEMPOTENT: pages append into
+    * The staged catalog is WINDOW-IDEMPOTENT: pages land in
     * `stagingDir/window=<tag>`, the tag a digest of the deltaLink the
     * window synced FROM (a replay is by definition the same token),
     * and that partition is reset with the window dirs at window
@@ -1075,8 +1111,10 @@ object Streams {
       checkpoint: graft.pipeline.DeltaCheckpoint,
       stagingDir: String,
       bronzeTable: Option[String] = None,
-      drain: WindowSlices => Unit = _ => ()): (Long, Long) = {
+      drain: WindowSlices => Unit = _ => (),
+      parked: Set[String] = Set.empty): (Long, Long) = {
     import spark.implicits._
+    import graft.ingest.LocalParquet
     val fromToken = checkpoint.load()
     val stagingWindowDir = s"${stagingDir.stripSuffix("/")}/window=" +
       stagingWindowTag(fromToken)
@@ -1092,19 +1130,19 @@ object Streams {
     fsW.delete(new org.apache.hadoop.fs.Path(stagingWindowDir), true)
     var nLive = 0L
     var nDead = 0L
+    val listed = Set.newBuilder[String]
     val link = provider.syncPages(fromToken) { page =>
-      val live = page.filter(it => !it.deleted && it.mime != null)
+      val live = page.filter(isLive)
       if (live.nonEmpty) {
-        live.toDF().write.mode("append").parquet(stagingWindowDir)
-        live.map(it => (it.id, it.name, it.modified,
-            Option(it.size).map(_.toLong)))
-          .toDF("source_item_id", "file_name", "modified", "size")
-          .write.mode("append").parquet(liveDir)
+        LocalParquet.write(spark, stagingWindowDir, live)
+        LocalParquet.write(spark, liveDir, live.map(it => LiveRow(it.id,
+          it.name, it.modified, Option(it.size).map(_.toLong))))
       }
-      val dead = page.filter(_.deleted).map(_.id)
-      if (dead.nonEmpty)
-        dead.toDF(graft.ingest.BronzeMerge.IdCol)
-          .write.mode("append").parquet(deadDir)
+      val dead = page.filter(_.deleted).map(it => DeadRow(it.id))
+      if (dead.nonEmpty) LocalParquet.write(spark, deadDir, dead)
+      if (parked.nonEmpty)
+        listed ++= page.collect { case it if parked(it.id) &&
+          (it.deleted || isLive(it)) => it.id }
       nLive += live.size
       nDead += dead.size
     }
@@ -1115,7 +1153,7 @@ object Streams {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     val deadRel = slice(nDead, deadDir, DeadSliceSchema)
     drain(WindowSlices(slice(nLive, liveDir, LiveSliceSchema), nLive,
-      deadRel, nDead))
+      deadRel, nDead, listed.result()))
     bronzeTable.foreach(deleteTombstones(spark, _, deadRel, nDead))
     checkpoint.save(link)
     (nLive, nDead)
@@ -1142,12 +1180,14 @@ object Streams {
     *    quarantine relation at `dir`, and the WINDOW COMMITS; every
     *    later window retries the whole parked set (shrinking it on
     *    success, or when the item is tombstoned upstream) alongside
-    *    its own items. The parked set is reconciled against the
-    *    window's relations by a scan filtered on the parked ids (the
-    *    tombstone side can be O(window) — only the quarantine itself,
-    *    O(failures), is ever driver-resident). The quarantine write
-    *    precedes the checkpoint, so crash-replays rewrite it
-    *    idempotently.
+    *    its own items. The parked set is read before paging, and
+    *    paging notes which parked ids the window lists
+    *    ([[WindowSlices]]`.parkedListed`), so only the quarantine
+    *    itself, O(failures), is ever driver-resident and reconciling
+    *    it against the window costs no scan; only this window's own
+    *    failures are checked against its dead slice. The quarantine is
+    *    replaced atomically ([[writeQuarantine]]) and before the
+    *    checkpoint, so crash-replays rewrite it idempotently.
     *
     * `filesZone`: enables the large-blob router — items whose listed
     * size reaches `largeBlobBytes` stream to `<filesZone>/<id>`
@@ -1173,9 +1213,11 @@ object Streams {
       quarantineDir: Option[String] = None,
       filesZone: Option[String] = None,
       largeBlobBytes: Long = Long.MaxValue)
-      : (Long, Long) =
+      : (Long, Long) = {
+    val prior = quarantineDir.fold(Seq.empty[QuarantinedItem])(
+      readQuarantine(spark, _))
     discoverIncrementPaged(spark, provider, checkpoint, stagingDir,
-      Some(table), drain = w => {
+      Some(table), parked = prior.map(_.source_item_id).toSet, drain = w => {
         import spark.implicits._
         val IdCol = graft.ingest.BronzeMerge.IdCol
         quarantineDir match {
@@ -1186,24 +1228,9 @@ object Streams {
               ()
             }
           case Some(qdir) =>
-            // which of `items` (O(failures), driver-side) the window's
-            // non-empty slices list: one filtered scan per call, the
-            // window sides staying relations
-            def listedIn(slices: Seq[(Long, DataFrame)],
-                items: Seq[QuarantinedItem]): Set[String] = {
-              val rels = slices.collect { case (n, rel) if n > 0 =>
-                rel.select(col(IdCol)) }
-              if (rels.isEmpty || items.isEmpty) Set.empty
-              else rels.reduce(_ unionByName _)
-                .filter(col(IdCol).isin(items.map(_.source_item_id): _*))
-                .as[String].collect().toSet
-            }
-            val prior = readQuarantine(spark, qdir)
             // retry everything parked that this window neither
             // tombstoned nor re-listed (its fresher entry supersedes)
-            val gone = listedIn(Seq(w.nDead -> w.dead, w.nLive -> w.live),
-              prior)
-            val retry = prior.filterNot(q => gone(q.source_item_id))
+            val retry = prior.filterNot(q => w.parkedListed(q.source_item_id))
             val failed =
               if (retry.isEmpty && w.nLive == 0) Seq.empty[QuarantinedItem]
               else {
@@ -1216,7 +1243,14 @@ object Streams {
             if (failed.nonEmpty)
               log.warn(s"drain quarantined ${failed.size} item(s) " +
                 "(window committed; retried next window)")
-            val dead = listedIn(Seq(w.nDead -> w.dead), failed)
+            // which of this window's failures (O(failures)) its dead
+            // slice also lists: one filtered scan, the slice staying a
+            // relation
+            val dead =
+              if (w.nDead == 0 || failed.isEmpty) Set.empty[String]
+              else w.dead.select(col(IdCol))
+                .filter(col(IdCol).isin(failed.map(_.source_item_id): _*))
+                .as[String].collect().toSet
             writeQuarantine(spark, qdir,
               failed.filterNot(q => dead(q.source_item_id)), prior)
         }
@@ -1233,6 +1267,7 @@ object Streams {
             }
         }
       })
+  }
 
   /** Streaming ANN index maintenance — the always-on twin of
     * [[graft.ops.Similarity.appendToCodedCorpus]]: each micro-batch

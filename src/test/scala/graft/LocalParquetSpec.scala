@@ -1,0 +1,152 @@
+package graft
+
+import graft.ingest.{BronzeMerge, DeltaLog, LocalParquet}
+import graft.pipeline.DeltaListing.DeltaItem
+import graft.streaming.Streams.{DeadRow, LiveRow, QuarantinedItem}
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Encoder, Encoders}
+import java.nio.file.Files
+import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
+
+/** The driver-side parquet path against Spark's own: a file
+  * [[LocalParquet.write]] lays down carries the same parquet schema,
+  * Spark row metadata and rows as a Spark write of the same Seq, and
+  * [[LocalParquet.schema]] equals Spark's schema-merging inference. */
+class LocalParquetSpec extends SparkSpec {
+
+  private def tmp(tag: String): String =
+    Files.createTempDirectory(s"graft-lp-$tag").toString
+
+  /** The single visible part under `dir` and its footer. */
+  private def footer(dir: String) = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(dir)
+    val parts = p.getFileSystem(conf).listStatus(p).filter { st =>
+      val n = st.getPath.getName
+      !n.startsWith(".") && !n.startsWith("_")
+    }
+    assert(parts.length == 1, parts.map(_.getPath.getName).mkString(","))
+    ParquetFileReader.readFooter(HadoopInputFile.fromStatus(parts.head, conf),
+      org.apache.parquet.format.converter.ParquetMetadataConverter
+        .SKIP_ROW_GROUPS).getFileMetaData
+  }
+
+  private def roundTrip[T: Encoder](rows: Seq[T]): Unit = {
+    val ours = tmp("ours")
+    val theirs = tmp("spark")
+    val file = LocalParquet.write(spark, ours, rows)
+    assert(file.getName.matches("part-00000-[0-9a-f-]{36}-c000\\..+\\.parquet"),
+      file.getName)
+    spark.createDataset(rows).coalesce(1).write.mode("overwrite")
+      .parquet(theirs)
+    val (a, b) = (footer(ours), footer(theirs))
+    assert(a.getSchema == b.getSchema)
+    assert(a.getKeyValueMetaData == b.getKeyValueMetaData)
+    val (ra, rb) = (spark.read.parquet(ours), spark.read.parquet(theirs))
+    assert(ra.schema == rb.schema)
+    assert(ra.schema.forall(_.nullable))
+    assert(ra.collect().map(_.toString).sorted.toSeq ==
+      rb.collect().map(_.toString).sorted.toSeq)
+    assert(ra.count() == rows.size)
+  }
+
+  private val ts = Timestamp.valueOf("2024-03-01 12:34:56.789")
+
+  test("write: DeltaItem pages (null size and stamp, non-null deleted) " +
+      "match a Spark write") {
+    roundTrip(Seq(
+      DeltaItem("i1", "/drives/d/root:/in", "a.txt", "text/plain",
+        java.lang.Long.valueOf(3L), ts, deleted = false),
+      DeltaItem("i2", null, "b.txt", null, null, null, deleted = true)))(
+      Encoders.product[DeltaItem])
+  }
+
+  test("write: quarantined items and both window slices match a Spark " +
+      "write") {
+    roundTrip(Seq(
+      QuarantinedItem("q1", "a.txt", ts, java.lang.Long.valueOf(5L),
+        "HttpError: 500"),
+      QuarantinedItem("q2", "b.txt", null, null, null)))(
+      Encoders.product[QuarantinedItem])
+    roundTrip(Seq(LiveRow("l1", "a.txt", ts, Some(7L)),
+      LiveRow("l2", "b.txt", null, None)))(Encoders.product[LiveRow])
+    roundTrip(Seq(DeadRow("d1"), DeadRow(null)))(Encoders.product[DeadRow])
+  }
+
+  test("write: a fixed name is replaced whole, no temp file is left") {
+    val dir = tmp("fixed")
+    implicit val enc: Encoder[DeadRow] = Encoders.product[DeadRow]
+    LocalParquet.write(spark, dir, Seq(DeadRow("a"), DeadRow("b")), "set.parquet")
+    LocalParquet.write(spark, dir, Seq(DeadRow("c")), "set.parquet")
+    assert(spark.read.parquet(dir).collect().map(_.getString(0)).toSeq ==
+      Seq("c"))
+    assert(Files.list(java.nio.file.Paths.get(dir)).iterator().asScala
+      .map(_.getFileName.toString).toSeq.sorted ==
+      Seq(".set.parquet.crc", "set.parquet"))
+  }
+
+  test("schema: equals Spark's inference on one batch and on an additive " +
+      "id-less + id-carrying mix, in either order") {
+    import spark.implicits._
+    val root = tmp("schema")
+    val legacy = s"$root/batch-1"
+    val withIds = s"$root/batch-2"
+    Seq(("a.txt", 3L, ts, Array[Byte](1, 2, 3)))
+      .toDF("file_name", "length", "modified", "content")
+      .write.parquet(legacy)
+    Seq(("i9", "b.txt", 2L, ts, Array[Byte](4, 5)))
+      .toDF(BronzeMerge.IdCol, "file_name", "length", "modified", "content")
+      .repartition(2).write.parquet(withIds)
+    def inferred(dirs: String*) =
+      spark.read.option("mergeSchema", "true").parquet(dirs: _*).schema
+    for (dirs <- Seq(Seq(legacy), Seq(withIds), Seq(legacy, withIds),
+        Seq(withIds, legacy)))
+      assert(LocalParquet.schema(spark, dirs) == inferred(dirs: _*),
+        dirs.mkString(","))
+  }
+
+  test("schema: a file without Spark's row metadata converts its parquet " +
+      "schema") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = tmp("plain")
+    val msg = MessageTypeParser.parseMessageType(
+      "message m { required int64 n; optional binary s (UTF8); }")
+    val w = ExampleParquetWriter.builder(new Path(s"$dir/plain.parquet"))
+      .withType(msg).build()
+    try w.write(new SimpleGroupFactory(msg).newGroup().append("n", 1L)
+      .append("s", "x"))
+    finally w.close()
+    assert(LocalParquet.schema(spark, Seq(dir)) ==
+      spark.read.parquet(dir).schema)
+  }
+
+  test("the delta log's metaData schemaString is the one Spark's " +
+      "inference gives, byte for byte") {
+    import spark.implicits._
+    val table = s"${tmp("log")}/bronze"
+    BronzeMerge.mergeIngestDf(spark, Seq(("a.txt", 3L, ts, Array[Byte](1, 2)))
+      .toDF("file_name", "length", "modified", "content"), table)
+    BronzeMerge.mergeIngestDf(spark, Seq(("i9", "b.txt", 2L, ts, Array[Byte](4)))
+      .toDF(BronzeMerge.IdCol, "file_name", "length", "modified", "content"),
+      table)
+    val batches = BronzeMerge.currentCommit(spark, table)._2
+    assert(batches.size == 2)
+    def logged(v: Long): Option[String] = {
+      val f = new java.io.File(f"$table/_delta_log/$v%020d.json")
+      scala.io.Source.fromFile(f, "UTF-8").getLines()
+        .map(new com.fasterxml.jackson.databind.ObjectMapper().readTree(_))
+        .find(_.has("metaData"))
+        .map(_.get("metaData").get("schemaString").asText())
+    }
+    def inferred(bs: Seq[String]) = spark.read.option("mergeSchema", "true")
+      .parquet(bs.map(b => s"$table/$b"): _*).schema.json
+    assert(logged(0L).contains(inferred(batches.take(1))))
+    assert(logged(1L).contains(inferred(batches)))
+    assert(DeltaLog.read(spark, table).count() == 2)
+  }
+}

@@ -484,6 +484,19 @@ class PlanSpec extends SparkSpec {
     assert(repJoin.findFirstIn(p).isDefined, p.take(800))
   }
 
+  test("s12/s15 labels: members take the component label through one " +
+      "left join, no min-member aggregate after the labels") {
+    // the CC labels are min-id labels over reps, and a rep is its
+    // group's min id: the label already IS the component's min member
+    for (dir <- Seq(sf0001, dupCorpus)) {
+      val p = graft.ops.Similarity.semanticDedupLabels(spark, dir,
+        allPairs = true).queryExecution.executedPlan.toString
+      Scoped.release()
+      assert("SortMergeJoin.*LeftOuter".r.findAllIn(p).size == 1, p.take(1600))
+      assert(!p.contains("HashAggregate"), p.take(1600))
+    }
+  }
+
   test("t45: vocab is a top-V heap merge that broadcasts; no sort-merge") {
     val p = plan("t45_vocab_coverage")
     assert(p.contains("TakeOrderedAndProject"), p.take(800))

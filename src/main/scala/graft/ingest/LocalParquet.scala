@@ -6,22 +6,29 @@ import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.encoderFor
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Parquet on the driver, for data the driver already holds: a page
   * of listed items, the parked-failure set, the schema in a batch's
-  * footers. A Spark write or a schema-inference scan of such data
-  * costs a job (0.1–0.35 s each) that does no data work; these two
-  * calls cost file I/O only.
+  * footers. A Spark write, scan or schema-inference pass over such
+  * data costs a job (0.1–0.35 s each) that does no data work; these
+  * three calls cost file I/O only.
   *
   *  - [[write]] lays down exactly the file a one-partition Spark write
   *    would: the same `ParquetFileFormat.prepareWrite` settings
   *    (timestamp type, legacy format, field ids, compression codec),
   *    the same `ParquetWriteSupport` fed by the encoder's serializer,
   *    so footer schema, row metadata and rows are a Spark write's.
+  *  - [[read]] is its twin: Spark's own parquet reader over one file,
+  *    rows decoded by the encoder's deserializer, so timestamps and
+  *    nulls come back as `spark.read...as[T]` returns them.
   *  - [[schema]] is what `spark.read.option("mergeSchema", "true")`
   *    infers, read from the footers on the driver.
   */
@@ -29,11 +36,15 @@ object LocalParquet {
 
   /** Write `rows` as ONE parquet file `dir/name` (default: a fresh
     * `part-00000-<uuid>-c000.<codec>.parquet`, beside any parts
-    * already there). The bytes go to a hidden `.`-prefixed temp name
-    * first and are renamed into place, overwriting: a reader sees no
-    * file or the whole file, never a partial one, and a fixed `name`
-    * is replaced without a gap. Returns the file's path. */
-  def write[T: Encoder](spark: SparkSession, dir: String, rows: Seq[T],
+    * already there). Rows are consumed one at a time, so a caller
+    * that produces them lazily holds one row at once (plus the
+    * writer's buffered row group); no rows still write a valid file
+    * that carries only the schema. The bytes go to a hidden
+    * `.`-prefixed temp name first and are renamed into place,
+    * overwriting: a reader sees no file or the whole file, never a
+    * partial one, and a fixed `name` is replaced without a gap.
+    * Returns the file's path. */
+  def write[T: Encoder](spark: SparkSession, dir: String, rows: Iterator[T],
       name: String = ""): Path = {
     val enc = encoderFor[T]
     val schema = enc.schema
@@ -61,6 +72,29 @@ object LocalParquet {
         throw e
     }
     file
+  }
+
+  /** The rows of the ONE parquet file `file`, read on the driver by
+    * the reader a Spark scan runs in its tasks
+    * (`ParquetFileFormat.buildReaderWithPartitionValues`, row mode,
+    * the session's rebase and timestamp settings) over the encoder's
+    * schema, made nullable as a file scan makes it, and decoded by the
+    * encoder's resolved deserializer. */
+  def read[T: Encoder](spark: SparkSession, file: String): Seq[T] = {
+    val enc = encoderFor[T]
+    val schema = nullable(enc.schema).asInstanceOf[StructType]
+    val conf = spark.sessionState.newHadoopConf()
+    val path = new Path(file)
+    val st = path.getFileSystem(conf).getFileStatus(path)
+    val reader = new ParquetFileFormat().buildReaderWithPartitionValues(
+      spark, schema, new StructType(), schema, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), conf)
+    val fromRow = enc.resolveAndBind(DataTypeUtils.toAttributes(schema))
+      .createDeserializer()
+    // exhausting the iterator closes the file
+    reader(PartitionedFile(InternalRow.empty, SparkPath.fromPath(st.getPath),
+      0L, st.getLen, Array.empty[String], st.getModificationTime, st.getLen))
+      .map(fromRow).toVector
   }
 
   /** The Spark schema of the parquet parts directly under `dirs`, read

@@ -820,22 +820,25 @@ object Streams {
       modified: java.sql.Timestamp = new java.sql.Timestamp(0L),
       filesZone: Option[String] = None,
       largeBlobBytes: Long = Long.MaxValue): Long =
-    drainCore(spark, transport, driveBaseUrl, meta, table, policy,
-      chunkBytes, modified, filesZone, largeBlobBytes,
-      isolate = false).appended
+    drainCore(spark, ItemFetch(transport, driveBaseUrl, policy, chunkBytes,
+      filesZone.orNull, largeBlobBytes, isolate = false), meta, table,
+      modified).appended
 
   /** [[drainItems]] with the reference's PER-FILE error isolation
-    * (C2): each item's fetch error is captured INSIDE the fetch
-    * partition instead of failing the task, the good items land, and
-    * the failures come back as [[QuarantinedItem]]s for the caller to
-    * park and retry — one permanently dead item (the routine 404 from
-    * a delete between list and fetch, a forever-5xx corrupt blob) can
-    * no longer freeze the deltaLink and wedge all future ingestion.
-    * Failure capture rides a collection accumulator: O(failures)
-    * driver memory (poison items are the exception path by design —
-    * a systemic outage is better served by the fail-loud
-    * [[drainItems]], whose replay-to-success the fault-injection spec
-    * pins), deduped by id because task retries can double-report. */
+    * (C2): each item's fetch error is captured by the per-item step
+    * ([[ItemFetch]]) INSIDE the fetch partition instead of failing the
+    * task, the good items land, and the failures come back as
+    * [[QuarantinedItem]]s for the caller to park and retry — one
+    * permanently dead item (the routine 404 from a delete between list
+    * and fetch, a forever-5xx corrupt blob) can no longer freeze the
+    * deltaLink and wedge all future ingestion. The same step retries
+    * a parked set on the driver ([[syncToBronzePaged]]), so both
+    * capture a failure identically. Failure capture rides a
+    * collection accumulator: O(failures) driver memory (poison items
+    * are the exception path by design — a systemic outage is better
+    * served by the fail-loud [[drainItems]], whose replay-to-success
+    * the fault-injection spec pins), deduped by id because task
+    * retries can double-report. */
   def drainItemsIsolated(spark: SparkSession,
       transport: graft.pipeline.HttpListing.Transport,
       driveBaseUrl: String,
@@ -847,35 +850,90 @@ object Streams {
       modified: java.sql.Timestamp = new java.sql.Timestamp(0L),
       filesZone: Option[String] = None,
       largeBlobBytes: Long = Long.MaxValue): DrainResult =
-    drainCore(spark, transport, driveBaseUrl, meta, table, policy,
-      chunkBytes, modified, filesZone, largeBlobBytes, isolate = true)
+    drainCore(spark, ItemFetch(transport, driveBaseUrl, policy, chunkBytes,
+      filesZone.orNull, largeBlobBytes, isolate = true), meta, table,
+      modified)
 
-  /** Shared fetch-and-merge core. SIZE-THRESHOLD ROUTER (`filesZone`):
-    * items whose LISTED size reaches `largeBlobBytes` stream chunk by
-    * chunk straight to `<filesZone>/<id>` through the Hadoop
+  /** One fetched drain item as bronze lands it: the FETCHED byte count
+    * as `length`, and the bytes in `content` or, for a blob routed to
+    * the Files zone, its path in `content_path`. */
+  private[graft] final case class FetchedRow(source_item_id: String,
+      file_name: String, length: Long, modified: java.sql.Timestamp,
+      content: Array[Byte], content_path: String)
+
+  private val RetriedSchema =
+    org.apache.spark.sql.Encoders.product[FetchedRow].schema
+
+  /** The drain's per-item step, the one fetch-and-capture both fetch
+    * sites run: executor partitions over a window's live items
+    * ([[drainCore]]) and the driver over the parked set
+    * ([[syncToBronzePaged]]). SIZE-THRESHOLD ROUTER (`zone`, null when
+    * off): an item whose LISTED size reaches `largeBlobBytes` streams
+    * chunk by chunk straight to `<zone>/<id>` through the Hadoop
     * FileSystem — O(chunkBytes) peak heap, never a `ByteArrayOutput
     * Stream` and never a content column (whose `Array[Byte]` ceiling
-    * is 2 GiB) — and bronze lands a PATH-REFERENCE row (`content` null,
+    * is 2 GiB) — and lands a PATH-REFERENCE row (`content` null,
     * `content_path` set, `length` = streamed byte count). This is the
     * reference's own big-file semantics: K1 streams files into the
     * lakehouse Files area (`sharepoint_to_bronze_delta.py:173-176`
     * via `mssparkutils.fs.cp`) rather than a table row. The zone
     * write is overwrite-idempotent (a replayed window rewrites the
     * same bytes at the same path); the id-keyed tombstone path also
-    * removes the zone file ([[syncToBronzePaged]]).
-    * The single fetch pass feeds the merge AND the failure capture —
-    * content bytes are never fetched twice and never pinned. */
-  private def drainCore(spark: SparkSession,
+    * removes the zone file ([[syncToBronzePaged]]). With `isolate` a
+    * fetch error comes back as the item's [[QuarantinedItem]];
+    * without it the error propagates. `conf` is only evaluated for a
+    * zone write. */
+  private final case class ItemFetch(
       transport: graft.pipeline.HttpListing.Transport,
       driveBaseUrl: String,
-      meta: DataFrame,
-      table: String,
       policy: graft.pipeline.HttpListing.RetryPolicy,
       chunkBytes: Int,
-      modified: java.sql.Timestamp,
-      filesZone: Option[String],
+      zone: String,
       largeBlobBytes: Long,
-      isolate: Boolean): DrainResult = {
+      isolate: Boolean) {
+    def apply(conf: => org.apache.hadoop.conf.Configuration, id: String,
+        name: String, mod: java.sql.Timestamp,
+        size: Option[Long]): Either[QuarantinedItem, FetchedRow] = {
+      import graft.pipeline.HttpListing.ChunkedTransfer
+      val url = s"$driveBaseUrl/items/$id/content"
+      try {
+        if (zone != null && size.exists(_ >= largeBlobBytes)) {
+          val dest = new org.apache.hadoop.fs.Path(zone, id)
+          val out = dest.getFileSystem(conf).create(dest, true)
+          val n =
+            try ChunkedTransfer.fetchTo(transport, policy,
+              (ms: Long) => Thread.sleep(ms))(url, out, chunkBytes)
+            finally out.close()
+          Right(FetchedRow(id, name, n, mod, null, dest.toString))
+        } else {
+          val buf = new java.io.ByteArrayOutputStream()
+          ChunkedTransfer.fetchTo(transport, policy,
+            (ms: Long) => Thread.sleep(ms))(url, buf, chunkBytes)
+          val bytes = buf.toByteArray
+          Right(FetchedRow(id, name, bytes.length.toLong, mod, bytes, null))
+        }
+      } catch {
+        case scala.util.control.NonFatal(e) if isolate =>
+          Left(QuarantinedItem(id, name, mod,
+            size.map(java.lang.Long.valueOf).orNull,
+            (e.getClass.getSimpleName + ": " +
+              String.valueOf(e.getMessage)).take(512)))
+      }
+    }
+  }
+
+  /** Shared fetch-and-merge core: every distinct item of `meta` goes
+    * through `fetch` in the executor partitions, and the fetched rows —
+    * with `recovered`, rows the caller already fetched, when given —
+    * land in ONE [[graft.ingest.BronzeMerge.mergeIngestDf]]. The
+    * single fetch pass feeds the merge AND the failure capture —
+    * content bytes are never fetched twice and never pinned. */
+  private def drainCore(spark: SparkSession,
+      fetch: ItemFetch,
+      meta: DataFrame,
+      table: String,
+      modified: java.sql.Timestamp,
+      recovered: Option[DataFrame] = None): DrainResult = {
     import spark.implicits._
     val withMod =
       if (meta.columns.contains("modified")) meta
@@ -897,9 +955,8 @@ object Streams {
         col("m.modified").as("modified"), col("m.size").as("size"))
     val failAcc = spark.sparkContext
       .collectionAccumulator[QuarantinedItem]("graft.drain.quarantine")
-    val zone = filesZone.orNull
     val confBc =
-      if (filesZone.isDefined)
+      if (fetch.zone != null)
         spark.sparkContext.broadcast(
           new org.apache.spark.util.SerializableConfiguration(
             spark.sessionState.newHadoopConf()))
@@ -908,50 +965,18 @@ object Streams {
       .as[(String, String, java.sql.Timestamp, Option[Long])]
       .mapPartitions { rows =>
         rows.flatMap { case (id, name, mod, size) =>
-          val url = s"$driveBaseUrl/items/$id/content"
-          try {
-            if (zone != null && size.exists(_ >= largeBlobBytes)) {
-              // large blob: stream to the Files zone, land a
-              // path-reference row — O(chunkBytes) peak heap
-              val dest = new org.apache.hadoop.fs.Path(zone, id)
-              val fsz = dest.getFileSystem(confBc.value.value)
-              val out = fsz.create(dest, true)
-              val n =
-                try graft.pipeline.HttpListing.ChunkedTransfer.fetchTo(
-                  transport, policy, (ms: Long) => Thread.sleep(ms))(
-                  url, out, chunkBytes)
-                finally out.close()
-              Some((id, name, n, mod, null: Array[Byte],
-                dest.toString))
-            } else {
-              val buf = new java.io.ByteArrayOutputStream()
-              graft.pipeline.HttpListing.ChunkedTransfer.fetchTo(
-                transport, policy, (ms: Long) => Thread.sleep(ms))(
-                url, buf, chunkBytes)
-              val bytes = buf.toByteArray
-              Some((id, name, bytes.length.toLong, mod, bytes,
-                null: String))
-            }
-          } catch {
-            case scala.util.control.NonFatal(e) if isolate =>
-              failAcc.add(QuarantinedItem(id, name, mod,
-                size.map(java.lang.Long.valueOf).orNull,
-                (e.getClass.getSimpleName + ": " +
-                  String.valueOf(e.getMessage)).take(512)))
-              None
+          fetch(confBc.value.value, id, name, mod, size) match {
+            case Right(row) => Some(row)
+            case Left(q) => failAcc.add(q); None
           }
         }
       }
-      .toDF("source_item_id", "file_name", "length", "modified",
-        "content", "content_path")
-    // keep the exact legacy 5-column shape unless the zone is in play
-    // (reading a mixed table merges schemas only when asked to)
-    val landed =
-      if (filesZone.isDefined) fetched else fetched.drop("content_path")
-    val appended = graft.ingest.BronzeMerge.mergeIngestDf(spark, landed,
-      table)
+      .toDF()
+    val all = recovered.fold(fetched)(fetched.unionByName(_))
+    val appended = graft.ingest.BronzeMerge.mergeIngestDf(spark,
+      landedShape(all, fetch), table)
     val failed =
-      if (!isolate) Seq.empty[QuarantinedItem]
+      if (!fetch.isolate) Seq.empty[QuarantinedItem]
       else {
         import scala.jdk.CollectionConverters._
         failAcc.value.asScala.toSeq
@@ -961,25 +986,36 @@ object Streams {
     DrainResult(appended, failed)
   }
 
+  /** `rows` in the shape bronze lands: the exact legacy 5-column shape
+    * unless the Files zone is in play (reading a mixed table merges
+    * schemas only when asked to). */
+  private def landedShape(rows: DataFrame, fetch: ItemFetch): DataFrame =
+    if (fetch.zone != null) rows else rows.drop("content_path")
+
   /** The file the parked set lives in, one fixed name under the
     * quarantine dir so each replacement is a single rename. */
   private val ParkedFile = "parked.parquet"
 
-  /** The parked-failure relation at `dir` (empty when absent), read
-    * with the schema our own writer gives it — no inference job. Only
-    * [[ParkedFile]] is read where it exists: part files beside it are
-    * an older Spark write's set, already replaced. */
+  /** The parked-failure relation at `dir` (empty when absent), read on
+    * the driver by [[graft.ingest.LocalParquet.read]] — no Spark job.
+    * Only [[ParkedFile]] is read where it exists: part files beside it
+    * are an older Spark write's set, already replaced. Where it does
+    * not, that older write's part files are read one by one. */
   private[graft] def readQuarantine(spark: SparkSession,
       dir: String): Seq[QuarantinedItem] = {
     import spark.implicits._
     val p = new org.apache.hadoop.fs.Path(dir)
     val fsq = p.getFileSystem(spark.sessionState.newHadoopConf())
     val parked = new org.apache.hadoop.fs.Path(p, ParkedFile)
-    if (!fsq.exists(p)) Seq.empty
-    else spark.read
-      .schema(org.apache.spark.sql.Encoders.product[QuarantinedItem].schema)
-      .parquet(if (fsq.exists(parked)) parked.toString else dir)
-      .as[QuarantinedItem].collect().toSeq
+    val files =
+      if (!fsq.exists(p)) Seq.empty
+      else if (fsq.exists(parked)) Seq(parked)
+      else fsq.listStatus(p).toSeq.filter { st =>
+        val n = st.getPath.getName
+        st.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }.map(_.getPath).sortBy(_.toString)
+    files.flatMap(f => graft.ingest.LocalParquet.read[QuarantinedItem](
+      spark, f.toString))
   }
 
   /** Replace the quarantine relation with the CURRENT failure set —
@@ -1008,7 +1044,7 @@ object Streams {
       if (fsq.rename(p, aside)) fsq.delete(aside, true)
       ()
     } else {
-      graft.ingest.LocalParquet.write(spark, dir, items, ParkedFile)
+      graft.ingest.LocalParquet.write(spark, dir, items.iterator, ParkedFile)
       fsq.listStatus(p).map(_.getPath)
         .filterNot(f => f.getName == ParkedFile || f.getName.startsWith("."))
         .foreach(fsq.delete(_, true))
@@ -1033,10 +1069,11 @@ object Streams {
   /** One paged window as its drain sees it: the live `(source_item_id,
     * file_name, modified, size)` slice and the dead-ids slice, each
     * with the row count paging took — the drain never runs a job to
-    * learn whether a slice is empty — and which of the `parked` ids
-    * the window listed, live or dead. */
+    * learn whether a slice is empty — which of the `parked` ids the
+    * window listed, live or dead, and which of those it tombstoned. */
   final case class WindowSlices(live: DataFrame, nLive: Long,
-      dead: DataFrame, nDead: Long, parkedListed: Set[String])
+      dead: DataFrame, nDead: Long, parkedListed: Set[String],
+      parkedDead: Set[String])
 
   /** Does a listed item belong in the live slice? Tombstones go to the
     * dead slice; folders (null mime) go nowhere. */
@@ -1130,19 +1167,20 @@ object Streams {
     fsW.delete(new org.apache.hadoop.fs.Path(stagingWindowDir), true)
     var nLive = 0L
     var nDead = 0L
-    val listed = Set.newBuilder[String]
+    val listed, listedDead = Set.newBuilder[String]
     val link = provider.syncPages(fromToken) { page =>
       val live = page.filter(isLive)
       if (live.nonEmpty) {
-        LocalParquet.write(spark, stagingWindowDir, live)
-        LocalParquet.write(spark, liveDir, live.map(it => LiveRow(it.id,
-          it.name, it.modified, Option(it.size).map(_.toLong))))
+        LocalParquet.write(spark, stagingWindowDir, live.iterator)
+        LocalParquet.write(spark, liveDir, live.iterator.map(it =>
+          LiveRow(it.id, it.name, it.modified, Option(it.size).map(_.toLong))))
       }
       val dead = page.filter(_.deleted).map(it => DeadRow(it.id))
-      if (dead.nonEmpty) LocalParquet.write(spark, deadDir, dead)
-      if (parked.nonEmpty)
-        listed ++= page.collect { case it if parked(it.id) &&
-          (it.deleted || isLive(it)) => it.id }
+      if (dead.nonEmpty) LocalParquet.write(spark, deadDir, dead.iterator)
+      if (parked.nonEmpty) page.filter(it => parked(it.id)).foreach { it =>
+        if (it.deleted || isLive(it)) listed += it.id
+        if (it.deleted) listedDead += it.id
+      }
       nLive += live.size
       nDead += dead.size
     }
@@ -1153,10 +1191,24 @@ object Streams {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     val deadRel = slice(nDead, deadDir, DeadSliceSchema)
     drain(WindowSlices(slice(nLive, liveDir, LiveSliceSchema), nLive,
-      deadRel, nDead, listed.result()))
+      deadRel, nDead, listed.result(), listedDead.result()))
     bronzeTable.foreach(deleteTombstones(spark, _, deadRel, nDead))
     checkpoint.save(link)
     (nLive, nDead)
+  }
+
+  /** One line per quarantine-mode window: what the window did to the
+    * parked set. A WARN only when it parked something new; otherwise
+    * INFO. */
+  private def logQuarantine(prior: Seq[QuarantinedItem],
+      parked: Seq[QuarantinedItem], retried: Int, recovered: Int,
+      tombstoned: Int): Unit = {
+    val before = prior.map(_.source_item_id).toSet
+    val fresh = parked.count(q => !before(q.source_item_id))
+    val line = s"quarantine window: retried=$retried " +
+      s"recovered=$recovered newly_parked=$fresh " +
+      s"cleared_by_tombstone=$tombstoned parked=${parked.size}"
+    if (fresh > 0) log.warn(line) else log.info(line)
   }
 
   /** The reference's whole sync loop in one call
@@ -1179,25 +1231,35 @@ object Streams {
     *    captured per item ([[drainItemsIsolated]]), parked in the
     *    quarantine relation at `dir`, and the WINDOW COMMITS; every
     *    later window retries the whole parked set (shrinking it on
-    *    success, or when the item is tombstoned upstream) alongside
-    *    its own items. The parked set is read before paging, and
-    *    paging notes which parked ids the window lists
-    *    ([[WindowSlices]]`.parkedListed`), so only the quarantine
-    *    itself, O(failures), is ever driver-resident and reconciling
-    *    it against the window costs no scan; only this window's own
-    *    failures are checked against its dead slice. The quarantine is
-    *    replaced atomically ([[writeQuarantine]]) and before the
-    *    checkpoint, so crash-replays rewrite it idempotently.
+    *    success, or when the item is tombstoned upstream). The parked
+    *    set is read on the driver before paging
+    *    ([[readQuarantine]], no Spark job), and paging notes which
+    *    parked ids the window lists ([[WindowSlices]]`.parkedListed`),
+    *    so only the quarantine itself, O(failures), is ever
+    *    driver-resident and reconciling it against the window costs
+    *    no scan. The parked items the window did not list are retried
+    *    ON THE DRIVER, one at a time, by the same per-item step the
+    *    executors run ([[ItemFetch]]); the recovered rows stream into
+    *    the window-scoped `<staging>_window/retried` slice (reset with
+    *    the window, so a replay rebuilds it) and land in ONE merge
+    *    with the window's live fetch — a window still makes at most
+    *    one commit. Only this window's own live failures are checked
+    *    against its dead slice. The quarantine is replaced atomically
+    *    ([[writeQuarantine]]) and before the checkpoint, so
+    *    crash-replays rewrite it idempotently, and each window logs
+    *    one line of what it did to the parked set.
     *
     * `filesZone`: enables the large-blob router — items whose listed
     * size reaches `largeBlobBytes` stream to `<filesZone>/<id>`
-    * instead of a content column ([[drainCore]] scaladoc), and a
+    * instead of a content column ([[ItemFetch]] scaladoc), and a
     * TOMBSTONED id's zone file is deleted alongside its bronze rows,
     * executor-side over the dead relation and before the checkpoint,
     * so a crash replays the cleanup. Work the window's slice counts
-    * prove empty is skipped: no drain without live or retryable
+    * prove empty is skipped: no merge without live or recovered
     * items, no reconciliation scan of an empty slice, no quarantine
-    * rewrite of an unchanged parked set. Returns (live rows staged,
+    * rewrite of an unchanged parked set. A window with nothing live,
+    * nothing tombstoned and a parked set that neither recovers nor
+    * changes runs no Spark job. Returns (live rows staged,
     * tombstones observed). */
   def syncToBronzePaged(spark: SparkSession,
       provider: graft.pipeline.DeltaListingProvider,
@@ -1229,30 +1291,59 @@ object Streams {
             }
           case Some(qdir) =>
             // retry everything parked that this window neither
-            // tombstoned nor re-listed (its fresher entry supersedes)
+            // tombstoned nor re-listed (its fresher entry supersedes),
+            // one item at a time on the driver, streaming what comes
+            // back into the window's retried slice
             val retry = prior.filterNot(q => w.parkedListed(q.source_item_id))
-            val failed =
-              if (retry.isEmpty && w.nLive == 0) Seq.empty[QuarantinedItem]
-              else {
-                val retryDf = spark.createDataset(retry).drop("error")
-                drainItemsIsolated(spark, transport, driveBaseUrl,
-                  if (w.nLive == 0) retryDf else w.live.unionByName(retryDf),
-                  table, policy, chunkBytes, modified, filesZone,
-                  largeBlobBytes).failed
+            val fetch = ItemFetch(transport, driveBaseUrl, policy,
+              chunkBytes, filesZone.orNull, largeBlobBytes, isolate = true)
+            lazy val conf = spark.sessionState.newHadoopConf()
+            val retryFailed = Seq.newBuilder[QuarantinedItem]
+            var nRecovered = 0
+            val rows = retry.iterator.flatMap { q =>
+              fetch(conf, q.source_item_id, q.file_name,
+                Option(q.modified).getOrElse(modified),
+                Option(q.size).map(_.toLong)) match {
+                case Right(row) => nRecovered += 1; Some(row)
+                case Left(f) => retryFailed += f; None
               }
-            if (failed.nonEmpty)
-              log.warn(s"drain quarantined ${failed.size} item(s) " +
-                "(window committed; retried next window)")
-            // which of this window's failures (O(failures)) its dead
-            // slice also lists: one filtered scan, the slice staying a
-            // relation
+            }.buffered
+            val recovered =
+              if (!rows.hasNext) None
+              else {
+                val dir = s"${stagingDir.stripSuffix("/")}_window/retried"
+                val file = graft.ingest.LocalParquet.write(spark, dir, rows)
+                // a file scan reads every column nullable; the typed
+                // pass restores the fetch's own schema (non-null
+                // `length`), so a batch's footers do not depend on
+                // which side fetched its rows
+                Some(spark.read.schema(RetriedSchema).parquet(file.toString)
+                  .as[FetchedRow].map(r => r).toDF())
+              }
+            // ONE merge lands the live fetch and the recovered rows
+            val liveFailed =
+              if (w.nLive > 0)
+                drainCore(spark, fetch, w.live, table, modified,
+                  recovered).failed
+              else {
+                recovered.foreach(r => graft.ingest.BronzeMerge
+                  .mergeIngestDf(spark, landedShape(r, fetch), table))
+                Seq.empty[QuarantinedItem]
+              }
+            // which of this window's live failures (O(failures)) its
+            // dead slice also lists: one filtered scan, the slice
+            // staying a relation; retried items were never listed
             val dead =
-              if (w.nDead == 0 || failed.isEmpty) Set.empty[String]
+              if (w.nDead == 0 || liveFailed.isEmpty) Set.empty[String]
               else w.dead.select(col(IdCol))
-                .filter(col(IdCol).isin(failed.map(_.source_item_id): _*))
+                .filter(col(IdCol).isin(liveFailed.map(_.source_item_id): _*))
                 .as[String].collect().toSet
-            writeQuarantine(spark, qdir,
-              failed.filterNot(q => dead(q.source_item_id)), prior)
+            val parked = (retryFailed.result() ++
+              liveFailed.filterNot(q => dead(q.source_item_id)))
+              .sortBy(_.source_item_id)
+            writeQuarantine(spark, qdir, parked, prior)
+            logQuarantine(prior, parked, retried = retry.size, nRecovered,
+              tombstoned = w.parkedDead.size + dead.size)
         }
         if (w.nDead > 0) filesZone.foreach { zone =>
           val confBc = spark.sparkContext.broadcast(

@@ -13,8 +13,10 @@ import scala.jdk.CollectionConverters._
 
 /** The driver-side parquet path against Spark's own: a file
   * [[LocalParquet.write]] lays down carries the same parquet schema,
-  * Spark row metadata and rows as a Spark write of the same Seq, and
-  * [[LocalParquet.schema]] equals Spark's schema-merging inference. */
+  * Spark row metadata and rows as a Spark write of the same Seq,
+  * [[LocalParquet.read]] decodes a file as `spark.read...as[T]` does,
+  * and [[LocalParquet.schema]] equals Spark's schema-merging
+  * inference. */
 class LocalParquetSpec extends SparkSpec {
 
   private def tmp(tag: String): String =
@@ -37,7 +39,7 @@ class LocalParquetSpec extends SparkSpec {
   private def roundTrip[T: Encoder](rows: Seq[T]): Unit = {
     val ours = tmp("ours")
     val theirs = tmp("spark")
-    val file = LocalParquet.write(spark, ours, rows)
+    val file = LocalParquet.write(spark, ours, rows.iterator)
     assert(file.getName.matches("part-00000-[0-9a-f-]{36}-c000\\..+\\.parquet"),
       file.getName)
     spark.createDataset(rows).coalesce(1).write.mode("overwrite")
@@ -79,14 +81,82 @@ class LocalParquetSpec extends SparkSpec {
   test("write: a fixed name is replaced whole, no temp file is left") {
     val dir = tmp("fixed")
     implicit val enc: Encoder[DeadRow] = Encoders.product[DeadRow]
-    LocalParquet.write(spark, dir, Seq(DeadRow("a"), DeadRow("b")), "set.parquet")
-    LocalParquet.write(spark, dir, Seq(DeadRow("c")), "set.parquet")
+    LocalParquet.write(spark, dir, Iterator(DeadRow("a"), DeadRow("b")),
+      "set.parquet")
+    LocalParquet.write(spark, dir, Iterator(DeadRow("c")), "set.parquet")
     assert(spark.read.parquet(dir).collect().map(_.getString(0)).toSeq ==
       Seq("c"))
     assert(Files.list(java.nio.file.Paths.get(dir)).iterator().asScala
       .map(_.getFileName.toString).toSeq.sorted ==
       Seq(".set.parquet.crc", "set.parquet"))
   }
+
+  test("write: no rows still lay down one file carrying the schema, as " +
+      "a Spark write of an empty Dataset does") {
+    implicit val enc: Encoder[QuarantinedItem] =
+      Encoders.product[QuarantinedItem]
+    val ours = tmp("empty")
+    val theirs = tmp("empty-spark")
+    val file = LocalParquet.write(spark, ours, Iterator.empty)
+    spark.createDataset(Seq.empty[QuarantinedItem]).write.mode("overwrite")
+      .parquet(theirs)
+    assert(footer(ours).getSchema == footer(theirs).getSchema)
+    assert(spark.read.parquet(ours).schema == spark.read.parquet(theirs).schema)
+    assert(spark.read.parquet(ours).count() == 0)
+    assert(LocalParquet.read(spark, file.toString).isEmpty)
+  }
+
+  /** Parked items covering what the quarantine holds: null size, stamp
+    * and name, empty strings, and distinct stamps down to the
+    * microsecond on both sides of the epoch. */
+  private val parked = Seq(
+    QuarantinedItem("q1", "a.txt",
+      Timestamp.valueOf("2024-03-01 12:34:56.789123"),
+      java.lang.Long.valueOf(5L), "HttpError: 500"),
+    QuarantinedItem("q2", "b.txt", new Timestamp(0L), null, ""),
+    QuarantinedItem("q3", "", Timestamp.valueOf("1969-12-31 23:59:59.999999"),
+      java.lang.Long.valueOf(0L), null),
+    QuarantinedItem("q4", null, null, java.lang.Long.valueOf(-1L), "x"),
+    QuarantinedItem("q5", "e.txt", Timestamp.valueOf("1900-01-01 00:00:00.5"),
+      java.lang.Long.valueOf(Long.MaxValue), "IOException: reset"))
+
+  /** Every visible part file directly under `dir`, in path order. */
+  private def parts(dir: String): Seq[String] =
+    Files.list(java.nio.file.Paths.get(dir)).iterator().asScala
+      .map(_.toString).filter { f =>
+        val n = new Path(f).getName
+        !n.startsWith(".") && !n.startsWith("_")
+      }.toSeq.sorted
+
+  for (tsType <- Seq("INT96", "TIMESTAMP_MICROS"))
+    test(s"read: quarantined items decode as spark.read decodes them, " +
+        s"from a driver write and a 2-part Spark write ($tsType)") {
+      implicit val enc: Encoder[QuarantinedItem] =
+        Encoders.product[QuarantinedItem]
+      def viaSpark(f: String) =
+        spark.read.schema(enc.schema).parquet(f).as[QuarantinedItem]
+          .collect().toSeq
+      val key = "spark.sql.parquet.outputTimestampType"
+      val prev = spark.conf.get(key)
+      spark.conf.set(key, tsType)
+      try {
+        val ours = LocalParquet.write(spark, tmp("read"), parked.iterator)
+          .toString
+        assert(LocalParquet.read[QuarantinedItem](spark, ours) ==
+          viaSpark(ours))
+        assert(LocalParquet.read[QuarantinedItem](spark, ours) == parked)
+        val theirs = tmp("read-spark")
+        spark.createDataset(parked).repartition(2,
+          org.apache.spark.sql.functions.col("source_item_id"))
+          .write.mode("overwrite").parquet(theirs)
+        val files = parts(theirs)
+        assert(files.size == 2, files.mkString(","))
+        files.foreach(f =>
+          assert(LocalParquet.read[QuarantinedItem](spark, f) == viaSpark(f)))
+        assert(files.flatMap(LocalParquet.read[QuarantinedItem](spark, _))
+          .sortBy(_.source_item_id) == parked)
+      } finally spark.conf.set(key, prev)
+    }
 
   test("schema: equals Spark's inference on one batch and on an additive " +
       "id-less + id-carrying mix, in either order") {

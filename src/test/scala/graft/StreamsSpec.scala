@@ -1873,13 +1873,77 @@ class StreamsSpec extends SparkSpec {
       .map(_.source_item_id) == Seq("i2"))
 
     // window 3 is EMPTY upstream, but the retry loop still drains the
-    // parked set: the outage has ended, i2 lands, quarantine empties
+    // parked set: the outage has ended, i2 lands in one new manifest
+    // version, quarantine empties
     FetchOutage.broken = false
+    val version = BronzeMerge.currentCommit(spark, table)._1
     Streams.syncToBronzePaged(spark, prov, ck, staging, transport, base,
       table, policy = policy, quarantineDir = Some(qdir))
     assert(ck.load().contains(delta3))
     assert(ids() == Seq("i1", "i2", "i3"))
+    assert(BronzeMerge.currentCommit(spark, table)._1 == version + 1)
     assert(Streams.readQuarantine(spark, qdir).isEmpty)
+  }
+
+  test("drain quarantine: a window with live items AND a recovering " +
+      "parked item lands both in ONE commit and empties the quarantine") {
+    import graft.ingest.BronzeMerge
+    import graft.pipeline.{DeltaCheckpoint, DeltaListingProvider}
+    val base = "https://graph.example.test/drives/d10"
+    val delta1 = s"$base/root/delta?token=QB1"
+    def item(id: String, name: String, size: Long) =
+      s"""{"id":"$id","name":"$name","size":$size,""" +
+        """"file":{"mimeType":"text/plain"},""" +
+        """"parentReference":{"path":"/drives/d10/root:/in"}}"""
+    val script = Map(
+      s"$base/root/delta" ->
+        s"""{"value":[${item("i1", "a.txt", 3)},${item("i2", "b.txt", 5)}],
+           |"@odata.deltaLink":"$delta1"}""".stripMargin.replace("\n", ""),
+      delta1 ->
+        s"""{"value":[${item("i3", "c.txt", 4)},${item("i4", "d.txt", 2)}],
+           |"@odata.deltaLink":"$base/root/delta?token=QB2"}"""
+          .stripMargin.replace("\n", ""))
+    val content = Map(
+      s"$base/items/i1/content" -> "aaa",
+      s"$base/items/i2/content" -> "bbbbb",
+      s"$base/items/i3/content" -> "cccc",
+      s"$base/items/i4/content" -> "dd")
+    val transport = new OutageScriptTransport(script, content,
+      s"$base/items/i2/content")
+    val prov = new DeltaListingProvider(base, transport, sleeper = _ => ())
+    val work = Files.createTempDirectory("graft-quarantine-mix").toString
+    val ck = new DeltaCheckpoint(s"$work/delta-ckpt")
+    val table = s"$work/bronze"
+    val qdir = s"$work/quarantine"
+    def window() = Streams.syncToBronzePaged(spark, prov, ck,
+      s"$work/staging", transport, base, table,
+      policy = graft.pipeline.HttpListing.RetryPolicy(maxRetries = 1,
+        baseDelayMs = 0), quarantineDir = Some(qdir))
+    FetchOutage.broken = true
+    try window() finally FetchOutage.broken = false
+    assert(Streams.readQuarantine(spark, qdir).map(_.source_item_id) ==
+      Seq("i2"))
+    val version = BronzeMerge.currentCommit(spark, table)._1
+    assert(window() == ((2L, 0L)))
+    assert(BronzeMerge.currentCommit(spark, table)._1 == version + 1,
+      "the live fetch and the recovered item must share one commit")
+    assert(Streams.readQuarantine(spark, qdir).isEmpty)
+    assert(!Files.exists(java.nio.file.Paths.get(qdir)))
+    val rows = BronzeMerge.snapshot(spark, table)
+      .select("source_item_id", "file_name", "length").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2))).sorted.toSeq
+    assert(rows == Seq(("i1", "a.txt", 3L), ("i2", "b.txt", 5L),
+      ("i3", "c.txt", 4L), ("i4", "d.txt", 2L)))
+    // the recovered rows keep the fetch path's footer schema
+    def rowSchemas(batch: String): Set[String] =
+      new java.io.File(s"$table/$batch").listFiles().toSet
+        .filter(_.getName.endsWith(".parquet")).map { f =>
+          org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+            new org.apache.hadoop.conf.Configuration(),
+            new org.apache.hadoop.fs.Path(f.toString)).getFileMetaData
+            .getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata")
+        }
+    assert(rowSchemas("batch-00000002") == rowSchemas("batch-00000001"))
   }
 
   /** Spark jobs `body` runs, counted by a listener between two marker
@@ -2002,8 +2066,8 @@ class StreamsSpec extends SparkSpec {
       .collect().map(_.getString(0)).toSeq == Seq("i3"))
     assert(Streams.readQuarantine(spark, qdir).isEmpty)
     info(s"idle window: $idle jobs, tombstone window: $tomb jobs")
-    assert(idle <= 4, s"idle window ran $idle jobs")
-    assert(tomb <= 8, s"tombstone window ran $tomb jobs")
+    assert(idle == 0, s"idle window ran $idle jobs")
+    assert(tomb <= 7, s"tombstone window ran $tomb jobs")
   }
 
   test("job budget: staging a 2-page window with a no-op drain runs no " +
@@ -2309,6 +2373,54 @@ class StreamsSpec extends SparkSpec {
     assert(BronzeMerge.snapshot(spark, table)
       .filter(col("source_item_id") === "i2").count() == 0)
     assert(!zf.exists, "the tombstone must remove the zone file")
+  }
+
+  test("large-blob router on the driver: a parked large blob that " +
+      "recovers in an idle window streams to the Files zone and lands " +
+      "its path-reference row") {
+    import graft.ingest.BronzeMerge
+    import graft.pipeline.{DeltaCheckpoint, DeltaListingProvider}
+    val base = "https://graph.example.test/drives/d13"
+    val delta1 = s"$base/root/delta?token=LR1"
+    val blobSize = 50000
+    def item(id: String, name: String, size: Long) =
+      s"""{"id":"$id","name":"$name","size":$size,""" +
+        """"file":{"mimeType":"application/octet-stream"},""" +
+        """"parentReference":{"path":"/drives/d13/root:/in"}}"""
+    val transport = new OutageRangeBlobTransport(Map(
+      s"$base/root/delta" ->
+        s"""{"value":[${item("i1", "small.txt", 3)},
+           |${item("i2", "big.bin", blobSize)}],
+           |"@odata.deltaLink":"$delta1"}""".stripMargin.replace("\n", ""),
+      delta1 -> s"""{"value":[],"@odata.deltaLink":"$base/root/delta?token=LR2"}""",
+      s"$base/items/i1/content" -> "aaa"),
+      s"$base/items/i2/content", blobSize)
+    val prov = new DeltaListingProvider(base, transport, sleeper = _ => ())
+    val work = Files.createTempDirectory("graft-bigblob-retry").toString
+    val ck = new DeltaCheckpoint(s"$work/delta-ckpt")
+    val table = s"$work/bronze"
+    val zone = s"$work/files"
+    val qdir = s"$work/quarantine"
+    def window() = Streams.syncToBronzePaged(spark, prov, ck,
+      s"$work/staging", transport, base, table,
+      policy = graft.pipeline.HttpListing.RetryPolicy(maxRetries = 1,
+        baseDelayMs = 0), chunkBytes = 16384, quarantineDir = Some(qdir),
+      filesZone = Some(zone), largeBlobBytes = 10000)
+    FetchOutage.broken = true
+    try window() finally FetchOutage.broken = false
+    assert(Streams.readQuarantine(spark, qdir).map(_.source_item_id) ==
+      Seq("i2"))
+    val version = BronzeMerge.currentCommit(spark, table)._1
+    assert(window() == ((0L, 0L)))
+    assert(BronzeMerge.currentCommit(spark, table)._1 == version + 1)
+    assert(Streams.readQuarantine(spark, qdir).isEmpty)
+    val big = BronzeMerge.snapshot(spark, table)
+      .filter(org.apache.spark.sql.functions.col("source_item_id") === "i2")
+      .select("length", "content", "content_path").collect()
+    assert(big.length == 1 && big(0).getLong(0) == blobSize.toLong &&
+      big(0).isNullAt(1) && big(0).getString(2).endsWith("/i2"))
+    val zf = new java.io.File(s"$zone/i2")
+    assert(zf.isFile && zf.length() == blobSize.toLong)
   }
 
   test("backfillIds migrates a legacy id-less bronze table: tombstones " +
@@ -2677,6 +2789,21 @@ private class RangeBlobTransport(script: Map[String, String],
       HttpResponse(206, null,
         Map("Content-Range" -> s"bytes $start-$end/$blobSize"), slice)
     }
+}
+
+/** [[RangeBlobTransport]] whose blob answers terminal 500s while
+  * [[FetchOutage.broken]] holds. */
+private class OutageRangeBlobTransport(script: Map[String, String],
+    blobUrl: String, blobSize: Int)
+    extends RangeBlobTransport(script, blobUrl, blobSize) {
+  import graft.pipeline.HttpListing.HttpResponse
+  override def get(url: String): HttpResponse =
+    if (url == blobUrl && FetchOutage.broken) HttpResponse(500, "down")
+    else super.get(url)
+  override def getRange(url: String, start: Long,
+      endIncl: Long): HttpResponse =
+    if (url == blobUrl && FetchOutage.broken) HttpResponse(500, "down")
+    else super.getRange(url, start, endIncl)
 }
 
 /** Scripted transport for the end-to-end sync test, top-level so

@@ -7,8 +7,10 @@ Reads <verifyOutDir>/oracle_sql.json, runs each SQL in DuckDB with the
 sfDir parquet tables registered as views, loads the Spark result parquet
 from <verifyOutDir>/<name>/, sorts columns by name + rows by all
 columns, and compares cell-exactly (floats bitwise after float64 cast).
+Each line whose query ran its oracle SQL ends with the SQL's DuckDB
+seconds, and the summary is followed by the 5 slowest oracle queries.
 """
-import sys, os, json, glob
+import sys, os, json, glob, time
 import duckdb
 import pandas as pd
 import numpy as np
@@ -33,6 +35,11 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 
+def took(s: float) -> str:
+    """The suffix naming a query's DuckDB oracle time."""
+    return f"  (oracle {s:.3f} s)"
+
+
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     con = duckdb.connect()
@@ -44,6 +51,7 @@ def main():
         oracles = json.load(f)
 
     n_pass = n_fail = 0
+    oracle_s = {}
     result_dirs = sorted(
         d for d in os.listdir(out_dir)
         if os.path.isdir(os.path.join(out_dir, d)))
@@ -60,17 +68,24 @@ def main():
                   f"({len(spark_df)} rows)")
             n_pass += ok; n_fail += (not ok)
             continue
+        t0 = time.perf_counter()
         try:
             duck_df = con.execute(oracles[name]).fetchdf()
         except Exception as e:
-            print(f"FAIL {name}: oracle SQL error: {e}"); n_fail += 1
+            oracle_s[name] = time.perf_counter() - t0
+            print(f"FAIL {name}: oracle SQL error: {e}{took(oracle_s[name])}")
+            n_fail += 1
             continue
+        oracle_s[name] = time.perf_counter() - t0
+        secs = took(oracle_s[name])
         a, b = normalize(spark_df), normalize(duck_df)
         if list(a.columns) != list(b.columns):
-            print(f"FAIL {name}: columns {list(a.columns)} vs {list(b.columns)}")
+            print(f"FAIL {name}: columns {list(a.columns)} vs "
+                  f"{list(b.columns)}{secs}")
             n_fail += 1; continue
         if len(a) != len(b):
-            print(f"FAIL {name}: rows {len(a)} vs {len(b)}"); n_fail += 1
+            print(f"FAIL {name}: rows {len(a)} vs {len(b)}{secs}")
+            n_fail += 1
             continue
         mismatch = None
         for c in a.columns:
@@ -91,7 +106,8 @@ def main():
                 break
         if mismatch:
             c, i, x, y = mismatch
-            print(f"FAIL {name}: col {c} row {i}: spark={x!r} duck={y!r}")
+            print(f"FAIL {name}: col {c} row {i}: spark={x!r} "
+                  f"duck={y!r}{secs}")
             n_fail += 1
         else:
             # dtype parity warning (driver may compare schemas strictly;
@@ -105,9 +121,13 @@ def main():
                         and not (x == "object" and y.startswith("datetime")):
                     warns.append(f"{c}:{x}!={y}")
             tag = f"  [dtype warn: {', '.join(warns)}]" if warns else ""
-            print(f"ok   {name}: {len(a)} rows hash-match{tag}")
+            print(f"ok   {name}: {len(a)} rows hash-match{tag}{secs}")
             n_pass += 1
     print(f"\n{n_pass} pass / {n_fail} fail")
+    if oracle_s:
+        print("slowest oracle SQL:")
+        for name, s in sorted(oracle_s.items(), key=lambda kv: -kv[1])[:5]:
+            print(f"  {s:8.3f} s  {name}")
     sys.exit(1 if n_fail else 0)
 
 

@@ -25,8 +25,9 @@ object Bench {
     // ERROR, not WARN: per-query WARNs (WindowExec's bounded-relation
     // "No Partition Defined" × ~10) land in the same stream the driver
     // tails and can crowd the single JSON record out of its ~2000-char
-    // window. The plans behind those warnings are audited (PlanAudit:
-    // bounded ≤256-row relations); the bench channel must stay clean.
+    // window. The plans behind those warnings are audited (Explain's
+    // per-query single-partition exchange count: bounded ≤256-row
+    // relations); the bench channel must stay clean.
     spark.sparkContext.setLogLevel("ERROR")
     // untimed warmup: JVM/codegen/catalog startup shouldn't bill the
     // first query; then two timed iterations in sorted order, report

@@ -8,6 +8,13 @@ import org.apache.spark.sql.SparkSession
   * Look for: PushedFilters on parquet scans, ReadSchema pruned to the
   * referenced columns, BroadcastHashJoin on dimension joins,
   * WholeStageCodegen spans covering the hot expressions.
+  *
+  * Each query's header counts the `Exchange SinglePartition`s of its
+  * executed plan (global windows, sorts and single-row aggregates all
+  * compile to one). Each must be over a BOUNDED relation (day spines,
+  * bucket spines, model tables, 1-row totals) — one over a
+  * corpus-sized relation is a scale bug. The audit over every query:
+  *   runMain graft.Explain <sfDir> | grep '^=====' | grep -v ': 0 single'
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -24,8 +31,14 @@ object Explain {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
-      println(s"\n========== $n ==========")
-      SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      try {
+        val df = SparkEntry.queries(n)(spark, sfDir)
+        val single = "Exchange SinglePartition".r
+          .findAllIn(df.queryExecution.executedPlan.toString).size
+        println(s"\n========== $n: $single single-partition exchange(s) " +
+          "==========")
+        df.explain("formatted")
+      } finally Scoped.release()
     }
     spark.stop()
   }

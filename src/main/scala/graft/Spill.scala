@@ -1,37 +1,49 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Reliable backing store for session-memoized relations: the value
-  * is written ONCE as parquet under a session-scoped spill directory
-  * and served as a plain file scan. This replaces the
-  * `localCheckpoint` backing the memos carried through round 13,
-  * whose trade was documented at every site: checkpoint blocks have
-  * no lineage to recompute from, so on a multi-executor cluster
-  * losing a holder (decommission, dynamic deallocation) failed every
-  * later consumer unrecoverably. A spill file has neither problem —
-  * it lives on storage, any executor reads it, and a FILE that does
-  * go missing (swept temp dir, lost local disk) is caught by
-  * [[SpillMemo]]'s liveness check and recomputed at the next access
+/** Reliable backing store for session-derived tables: each value is
+  * written ONCE under a session-scoped spill directory and served from
+  * storage. This replaces the `localCheckpoint` backing the memos
+  * carried through round 13, whose trade was documented at every site:
+  * checkpoint blocks have no lineage to recompute from, so on a
+  * multi-executor cluster losing a holder (decommission, dynamic
+  * deallocation) failed every later consumer unrecoverably. A spill
+  * has neither problem — it lives on storage, any executor reads it,
+  * and a spill that does go missing (swept temp dir, lost local disk)
+  * fails the liveness check and is recomputed at the next access
   * instead of failing the read.
   *
+  * Two shapes, both held in a [[SessionMemo]] with the same liveness
+  * check (the completion marker [[Done]]):
+  *  - a RELATION ([[relations]] / [[write]]): the value is written
+  *    eagerly as parquet and served as a persisted file scan;
+  *  - a TABLE ([[tables]] / [[table]]): the caller writes any format
+  *    or layout into a dir allocated here, and the memo holds its path.
+  *
   * Scale shape (100 TB / 1000 executors): point `graft.spill.dir` at
-  * shared durable storage and the memo table becomes an ordinary
-  * small parquet dataset — executor churn costs nothing, and the
-  * spilled model tables (dup labels, band keys, signatures) are the
-  * same O(model)-sized relations they were in memory, never corpus
-  * bytes. Locally the root defaults to a fresh JVM temp directory
-  * per session, reclaimed with the OS temp sweep.
+  * shared durable storage and every derived table becomes an ordinary
+  * dataset there — executor churn costs nothing, and the spilled model
+  * tables (dup labels, band keys, signatures) are the same
+  * O(model)-sized relations they were in memory, never corpus bytes.
+  * Locally the root defaults to a fresh JVM temp directory per
+  * session, reclaimed with the OS temp sweep.
   */
 object Spill {
   private val counter = new java.util.concurrent.atomic.AtomicLong()
   private val rootMemo = new SessionMemo[String, String]
 
+  /** Completion marker, written after a spill's write returns. The
+    * `_` prefix keeps it out of every Spark file index, so readers of
+    * any format never see it. */
+  private val Done = "_graft_done"
+
   /** Session spill root: a UNIQUE per-session subdirectory under
     * `graft.spill.dir` when configured (durable / shared storage on a
     * real cluster), else one JVM-temp directory per session. The
     * subdirectory is keyed by applicationId + a fresh UUID because the
-    * rel-counter below resets per JVM: a restarted driver (or a second
+    * counter below resets per JVM: a restarted driver (or a second
     * concurrent one) pointed at the same durable dir would otherwise
     * collide with the previous run's `rel-1…` paths and fail the first
     * memoized write on ErrorIfExists. */
@@ -46,6 +58,18 @@ object Spill {
       }
     }
 
+  /** Allocate a fresh `<tag>-<n>` dir under the session root, let
+    * `write` fill it, then mark it complete; returns the path. */
+  private[graft] def table(s: SparkSession, tag: String)
+      (write: String => Unit): String = {
+    val path = s"${root(s)}/$tag-${counter.incrementAndGet()}"
+    write(path)
+    val marker = new Path(path, Done)
+    marker.getFileSystem(s.sessionState.newHadoopConf())
+      .create(marker, true).close()
+    path
+  }
+
   /** Materialize `df` to a fresh spill path; returns (path, scan).
     * The returned scan is persist()ed as a BEST-EFFORT cache: unlike
     * the localCheckpoint it replaced, its lineage is the file scan,
@@ -55,48 +79,29 @@ object Spill {
     * trade. */
   private[graft] def write(df: DataFrame): (String, DataFrame) = {
     val s = df.sparkSession
-    val path = s"${root(s)}/rel-${counter.incrementAndGet()}"
-    df.write.parquet(path)
+    val path = table(s, "rel")(df.write.parquet(_))
     (path, s.read.parquet(path).persist())
   }
 
-  /** True iff the spill path still holds its data: the _SUCCESS
-    * marker when present, else at least one parquet part file —
-    * deployments that disable success markers
-    * (`mapreduce.fileoutputcommitter.marksuccessfuljobs=false`) must
-    * not recompute-and-respill on every access (a leak of one spill
-    * dir per read). A half-deleted dir (no marker, no parts) still
-    * reads as dead and recomputes. */
+  /** True iff the spill at `path` completed and its marker is still
+    * there. A swept or half-deleted dir reads dead and recomputes;
+    * deployments that disable `_SUCCESS` markers are unaffected. */
   private[graft] def alive(s: SparkSession, path: String): Boolean =
     try {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-      fs.exists(new org.apache.hadoop.fs.Path(path, "_SUCCESS")) || {
-        fs.exists(p) && fs.listStatus(p).exists { st =>
-          st.isFile && st.getPath.getName.endsWith(".parquet") &&
-            !st.getPath.getName.startsWith(".")
-        }
-      }
+      val marker = new Path(path, Done)
+      marker.getFileSystem(s.sessionState.newHadoopConf()).exists(marker)
     } catch { case _: Throwable => false }
-}
 
-/** [[SessionMemo]] whose DataFrame values are parquet-spilled via
-  * [[Spill]], with invalidate-and-recompute: each access validates
-  * the backing files and a vanished spill recomputes transparently.
-  * The compute is EAGER (materialized at spill time), preserving the
-  * lifetime contract the old eager localCheckpoints had — the memo
-  * outlives the computing query while its inputs (Scoped persists)
-  * do not. */
-private[graft] final class SpillMemo[K] {
-  private val inner = new SessionMemo[K, (String, DataFrame)]
+  /** A memo of [[table]] paths. */
+  private[graft] def tables[K]: SessionMemo[K, String] =
+    new SessionMemo[K, String](alive = alive)
 
-  def getOrCompute(s: SparkSession, key: K)
-      (compute: => DataFrame): DataFrame =
-    inner.getOrComputeValid(s, key) { v =>
-      val ok = Spill.alive(s, v._1)
-      // a dead spill's stale cache blocks would otherwise pin
-      // executor memory for the session — drop them with the entry
-      if (!ok) { try { v._2.unpersist(); () } catch { case _: Throwable => () } }
-      ok
-    }(Spill.write(compute))._2
+  /** A memo of [[write]] relations; a replaced relation's cache blocks
+    * are dropped with it instead of pinning executor memory for the
+    * session. Read the scan as `._2`. */
+  private[graft] def relations[K]: SessionMemo[K, (String, DataFrame)] =
+    new SessionMemo[K, (String, DataFrame)](
+      alive = (s, v) => alive(s, v._1),
+      drop = v =>
+        try { v._2.unpersist(); () } catch { case _: Throwable => () })
 }

@@ -13,45 +13,47 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  // Memoized per (session, dir, table, content fingerprint): file
-  // listing + parquet footer schema reads happen once per session
-  // instead of once per query — pure plan-construction reuse, no data
-  // is cached. The FINGERPRINT in the key makes an in-session rewrite
-  // of a fixture directory visible: a cached DataFrame's file index
-  // is snapshotted at construction, so without it a rewritten table
-  // would be read through a listing of deleted part files. One cheap
-  // listStatus per call buys that safety. Weakly keyed on the session
-  // (the cached DataFrames reference it) so a dropped session is
-  // collectable; VERSIONED on the fingerprint so a rewrite REPLACES
-  // the entry instead of accreting a new one per rewrite.
-  private val memo = new VersionedSessionMemo[(String, String), DataFrame]
+  // Memoized per (session, dir, table), versioned by the table's
+  // [[fingerprint]]: file listing + parquet footer schema reads happen
+  // once per session instead of once per query — pure plan-construction
+  // reuse, no data is cached. The version makes an in-session rewrite
+  // of a fixture directory visible: a cached DataFrame's file index is
+  // snapshotted at construction, so without it a rewritten table would
+  // be read through a listing of deleted part files. One cheap
+  // listStatus per call buys that safety.
+  private val memo = new SessionMemo[(String, String), DataFrame]
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val fp = dirFingerprint(spark, s"$dir/$name.parquet")
-    memo.getOrCompute(spark, (dir, name), fp)(
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    memo.getOrCompute(spark, (dir, name), fingerprint(spark, dir, name))(
       spark.read.parquet(s"$dir/$name.parquet"))
-  }
 
   private[graft] def memoEntryCount(spark: SparkSession): Int =
     memo.entryCount(spark)
 
-  /** Order-sensitive change fingerprint of a parquet table directory:
-    * a polynomial fold over (name, mtime, length) of the sorted file
-    * listing — unlike a plain XOR, same-millisecond writes and
-    * swapped file lengths cannot cancel out. 0 when the path is
-    * absent. Shared by the [[table]] memo key and the scale-routing
-    * probes (`Text`/`Similarity` `corpusRows`). */
-  private[graft] def dirFingerprint(spark: SparkSession,
-      path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val f = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!f.exists(p)) 0L
-    else f.listStatus(p).sortBy(_.getPath.getName)
-      .foldLeft(1125899906842597L) { (acc, st) =>
-        acc * 1000003L +
-          ((st.getPath.getName.hashCode.toLong * 31L +
-            st.getModificationTime) * 31L + st.getLen)
-      }
+  /** Order-sensitive change fingerprint of `dir`'s `tables`: a
+    * polynomial fold over (name, mtime, length) of each table's sorted
+    * file listing — unlike a plain XOR, same-millisecond writes and
+    * swapped file lengths cannot cancel out. One listStatus per table;
+    * an absent table folds as empty. The version of every memo whose
+    * value is derived from fixture tables ([[SessionMemo]]). */
+  private[graft] def fingerprint(spark: SparkSession, dir: String,
+      tables: String*): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    tables.foldLeft(1125899906842597L) { (acc, t) =>
+      val p = new org.apache.hadoop.fs.Path(s"$dir/$t.parquet")
+      val files =
+        try p.getFileSystem(conf).listStatus(p)
+        catch {
+          case _: java.io.FileNotFoundException =>
+            Array.empty[org.apache.hadoop.fs.FileStatus]
+        }
+      files.sortBy(_.getPath.getName)
+        .foldLeft(acc * 1000003L + t.hashCode) { (a, st) =>
+          a * 1000003L +
+            ((st.getPath.getName.hashCode.toLong * 31L +
+              st.getModificationTime) * 31L + st.getLen)
+        }
+    }
   }
 
   def region(s: SparkSession, d: String): DataFrame     = table(s, d, "region")

@@ -36,22 +36,20 @@ import org.apache.spark.sql.functions._
   */
 object Collapse {
   private val probeMemo =
-    new graft.VersionedSessionMemo[(String, String), java.lang.Boolean]
+    new graft.SessionMemo[(String, String), java.lang.Boolean]
 
   /** Whether `d`'s `table` holds two rows with equal `key`, memoized
-    * per (dir, table) and VERSIONED by [[Tables.dirFingerprint]] (the
-    * `Text.corpusRows` pattern): a table rewritten within one session
-    * re-probes. One grouped count over the key. */
+    * per (dir, table) and versioned by [[Tables.fingerprint]]: a table
+    * rewritten within one session re-probes. One grouped count over
+    * the key. */
   private def probe(s: SparkSession, d: String, table: String,
-      key: Column): Boolean = {
-    val fp = Tables.dirFingerprint(s, s"$d/$table.parquet")
-    probeMemo.getOrCompute(s, (d, table), fp) {
+      key: Column): Boolean =
+    probeMemo.getOrCompute(s, (d, table), Tables.fingerprint(s, d, table)) {
       !Tables.table(s, d, table)
         .groupBy(key.as("k")).agg(count(lit(1)).as("n"))
         .filter(col("n") > 1)
         .isEmpty
     }
-  }
 
   /** Does `d`'s `documents` hold two bit-identical texts? Grouped on
     * `xxhash64(text)`, which is exact in the direction that matters:
@@ -78,8 +76,7 @@ object Collapse {
   private[graft] def assumeDups(s: SparkSession, d: String,
       hasDups: Boolean): Unit =
     Seq("documents", "embeddings").foreach { t =>
-      probeMemo.put(s, (d, t),
-        Tables.dirFingerprint(s, s"$d/$t.parquet"), hasDups)
+      probeMemo.put(s, (d, t), Tables.fingerprint(s, d, t), hasDups)
     }
 
   /** One corpus's min-id representative mapping. `rows` holds every

@@ -1,6 +1,7 @@
 package graft.ops
 
-import graft.{QuerySpec, Tables}
+import graft.{QuerySpec, Spill, Tables}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -62,41 +63,41 @@ object Multimodal {
       b00: Int)
 
   /** One materialized `<doc_id>.bmp` tree per (session, sf dir). */
-  private val bmpDirMemo = new graft.SessionMemo[String, String]
+  private val bmpDirMemo = Spill.tables[String]
 
-  /** The `<doc_id>.bmp` file tree for this (session, sf dir),
-    * materialized once — the stand-in for the object-store prefix a
-    * media corpus arrives under (m08 lists it; m15 ingests it). */
+  /** The `<doc_id>.bmp` file tree for this (session, sf dir) and
+    * documents version, materialized once under the spill root — the
+    * stand-in for the object-store prefix a media corpus arrives under
+    * (m08 lists it; m15 ingests it). Executors write each file through
+    * the Hadoop FileSystem of the spill path, so a non-local
+    * `graft.spill.dir` receives them. */
   private def bmpFilesDir(s: SparkSession, d: String): String =
-    bmpDirMemo.getOrCompute(s, d) {
-      import s.implicits._
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-bmp-").toString
-      bmpFixture(s, d).as[MediaRow].foreachPartition {
-        (it: Iterator[MediaRow]) =>
-          it.foreach { r =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(out, s"${r.doc_id}.bmp"),
-              r.payload)
-          }
-      }
-      out
-    }
+    bmpDirMemo.getOrCompute(s, d, Tables.fingerprint(s, d, "documents"))(
+      Spill.table(s, "bmp") { out =>
+        import s.implicits._
+        val conf = new org.apache.spark.util.SerializableConfiguration(
+          s.sessionState.newHadoopConf())
+        bmpFixture(s, d).as[MediaRow].foreachPartition {
+          (it: Iterator[MediaRow]) =>
+            val fs = new Path(out).getFileSystem(conf.value)
+            it.foreach { r =>
+              val o = fs.create(new Path(out, s"${r.doc_id}.bmp"), true)
+              try o.write(r.payload) finally o.close()
+            }
+        }
+      })
 
   /** One merge-ingested bronze table over [[bmpFilesDir]] per
-    * (session, sf dir), with per-file `length` stats collected —
-    * m15's manifest-driven listing source. */
-  private val bronzeMediaMemo = new graft.SessionMemo[String, String]
+    * (session, sf dir) and documents version, with per-file `length`
+    * stats collected — m15's manifest-driven listing source. */
+  private val bronzeMediaMemo = Spill.tables[String]
 
   private def bronzeMediaTable(s: SparkSession, d: String): String =
-    bronzeMediaMemo.getOrCompute(s, d) {
-      val table = java.nio.file.Files
-        .createTempDirectory("graft-bronze-media-")
-        .resolve("bronze").toString
-      graft.ingest.BronzeMerge.mergeIngest(s, bmpFilesDir(s, d), table)
-      graft.ingest.BronzeMerge.collectStats(s, table, Seq("length"))
-      table
-    }
+    bronzeMediaMemo.getOrCompute(s, d, Tables.fingerprint(s, d, "documents"))(
+      Spill.table(s, "bronze-media") { table =>
+        graft.ingest.BronzeMerge.mergeIngest(s, bmpFilesDir(s, d), table)
+        graft.ingest.BronzeMerge.collectStats(s, table, Seq("length"))
+      })
 
   /** Batched real-BMP decode over (file_name, doc_id, listed length,
     * content) rows — shared by the directory-listing (m08),
@@ -495,23 +496,22 @@ object Multimodal {
     * `maxHam ≤ 3` makes banding LOSSLESS by pigeonhole, so that
     * threshold yields the exact brute-force relation). Shared by m09
     * (the pair report) and m10 (the clustering decision). */
-  private val ahashLabelsMemo = new graft.SpillMemo[String]
+  private val ahashLabelsMemo = Spill.relations[String]
 
   /** Session-memoized aHash dup-cluster labels `(doc_id, lbl)` at the
     * lossless Hamming ≤ 3 threshold: m10 (the grouping decision) and
     * m21 (the caption-reuse audit) consume the IDENTICAL label
     * relation, so they share one decode + band join + connected-
     * components run per (session, dir) — the [[graft.ops.Text]]
-    * `dupLabelsMemo` convention. Parquet-spilled ([[graft.SpillMemo]])
+    * `dupLabelsMemo` convention. Parquet-spilled ([[graft.Spill]])
     * — executor-loss-proof and invalidate-and-recompute on a swept
     * spill, eager at compute so the memo outlives its query-scoped
     * inputs. */
   private def ahashLabels(s: SparkSession, d: String): DataFrame =
-    ahashLabelsMemo.getOrCompute(s, d) {
-      Text.connectedComponents(
+    ahashLabelsMemo.getOrCompute(s, d, Tables.fingerprint(s, d, "documents"))(
+      Spill.write(Text.connectedComponents(
         ahashPairs(s, d, maxHam = 3).select(
-          col("doc_a").as("da"), col("doc_b").as("db")))
-    }
+          col("doc_a").as("da"), col("doc_b").as("db")))))._2
 
   private def ahashPairs(s: SparkSession, d: String, maxHam: Int): DataFrame = {
     import s.implicits._

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QuerySpec, Scoped, Tables}
+import graft.{QuerySpec, Scoped, Spill, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1278,12 +1278,7 @@ object Relational {
     QuerySpec(
       "q49_orc_source",
       (s, d) => {
-        val path = orcMemo.getOrCompute(s, d) {
-          val out = java.nio.file.Files
-            .createTempDirectory("graft-orc-").toString
-          Tables.lineitem(s, d).write.mode("overwrite").orc(out)
-          out
-        }
+        val path = lineitemCopy(s, d, "orc")(_.write.orc(_))
         s.read.orc(path)
           .filter(col("l_shipdate") <= ts("1997-06-30 00:00:00") &&
             col("l_quantity") >= 25)
@@ -1314,12 +1309,7 @@ object Relational {
       "q50_json_source",
       (s, d) => {
         val src = Tables.lineitem(s, d)
-        val path = jsonMemo.getOrCompute(s, d) {
-          val out = java.nio.file.Files
-            .createTempDirectory("graft-json-").toString
-          src.write.mode("overwrite").json(out)
-          out
-        }
+        val path = lineitemCopy(s, d, "json")(_.write.json(_))
         s.read.schema(src.schema).json(path)
           .filter(col("l_returnflag") === "R" &&
             col("l_discount") >= 0.05)
@@ -1352,12 +1342,8 @@ object Relational {
       "q51_csv_source",
       (s, d) => {
         val src = Tables.lineitem(s, d)
-        val path = csvMemo.getOrCompute(s, d) {
-          val out = java.nio.file.Files
-            .createTempDirectory("graft-csv-").toString
-          src.write.mode("overwrite").option("header", "true").csv(out)
-          out
-        }
+        val path = lineitemCopy(s, d, "csv")(
+          _.write.option("header", "true").csv(_))
         s.read.schema(src.schema).option("header", "true").csv(path)
           .filter(col("l_linestatus") === "F" && col("l_tax") >= 0.04)
           .groupBy(col("l_returnflag"))
@@ -2019,17 +2005,12 @@ object Relational {
     QuerySpec(
       "q61_dpp_prune",
       (s, d) => {
-        val path = dppMemo.getOrCompute(s, d) {
-          val out = java.nio.file.Files
-            .createTempDirectory("graft-dpp-").toString
-          Tables.lineitem(s, d)
+        val fact = s.read.parquet(lineitemCopy(s, d, "dpp") {
+          (li, out) => li
             .withColumn("l_ship_month",
               date_format(col("l_shipdate"), "yyyy-MM"))
-            .write.mode("overwrite")
-            .partitionBy("l_ship_month").parquet(out)
-          out
-        }
-        val fact = s.read.parquet(path)
+            .write.partitionBy("l_ship_month").parquet(out)
+        })
         val months = Tables.orders(s, d)
           .filter(col("o_orderpriority") === "1-URGENT" &&
             col("o_orderdate") >= ts("1995-01-01 00:00:00") &&
@@ -2095,10 +2076,14 @@ object Relational {
     sb.toString
   }
 
-  /** Session-memoized ORC / JSON / CSV copies of lineitem (q49–q51). */
-  private val orcMemo = new graft.SessionMemo[String, String]
-  private val jsonMemo = new graft.SessionMemo[String, String]
-  private val csvMemo = new graft.SessionMemo[String, String]
-  /** Month-partitioned lineitem copy for the DPP demonstration (q61). */
-  private val dppMemo = new graft.SessionMemo[String, String]
+  /** Session-memoized copies of lineitem: ORC, JSON and CSV (q49–q51)
+    * and month-partitioned parquet for the DPP demonstration (q61). */
+  private val copyMemo = Spill.tables[(String, String)]
+
+  /** `d`'s lineitem, written by `write` into a spill table once per
+    * session, `tag` and lineitem version; returns its path. */
+  private def lineitemCopy(s: SparkSession, d: String, tag: String)
+      (write: (DataFrame, String) => Unit): String =
+    copyMemo.getOrCompute(s, (d, tag), Tables.fingerprint(s, d, "lineitem"))(
+      Spill.table(s, tag)(write(Tables.lineitem(s, d), _)))
 }

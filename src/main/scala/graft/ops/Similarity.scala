@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QuerySpec, Scoped, SessionMemo, Tables}
+import graft.{QuerySpec, Scoped, SessionMemo, Spill, Tables}
 import graft.functions.VectorExprs.{vecDot, vecNorm}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -393,7 +393,8 @@ object Similarity {
   // and-dropped SparkSession takes its cached models with it instead
   // of pinning them for the life of the JVM. Model values are plain
   // Seqs (no session references), so nothing in the memo can
-  // resurrect a dead session.
+  // resurrect a dead session. Versioned by the `embeddings`
+  // fingerprint, like the coded table that encodes with the model.
   private val modelMemo =
     new SessionMemo[(String, Int, Int), (Seq[(Int, Seq[Double])], Seq[Double])]
 
@@ -408,6 +409,10 @@ object Similarity {
   def memoSessionCounts: (Int, Int) =
     (modelMemo.sessionCount, pqMemo.sessionCount)
 
+  /** The version of every memo derived from `d`'s embeddings. */
+  private def embVersion(s: SparkSession, d: String): Long =
+    Tables.fingerprint(s, d, "embeddings")
+
   /** Distributed Lloyd's k-means training — the actual coarse
     * quantizer the IVF search (s06) names as its scale path. Per
     * iteration: assignment is the per-row [[nearest]] fold (no
@@ -419,7 +424,7 @@ object Similarity {
     * must fall monotonically (OpsSpec asserts it). */
   def kMeansModel(s: SparkSession, d: String, k: Int = 8, iters: Int = 5)
       : (Seq[(Int, Seq[Double])], Seq[Double]) =
-    modelMemo.getOrCompute(s, (d, k, iters)) {
+    modelMemo.getOrCompute(s, (d, k, iters), embVersion(s, d)) {
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), vec(col("embedding")).as("v"))
         .persist()
@@ -565,7 +570,7 @@ object Similarity {
     * every codebook stays exactly k entries, cid = row index. */
   def pqModel(s: SparkSession, d: String, m: Int = 8, k: Int = 16,
       iters: Int = 4): Seq[Seq[(Int, Seq[Double])]] =
-    pqMemo.getOrCompute(s, (d, m, k, iters)) {
+    pqMemo.getOrCompute(s, (d, m, k, iters), embVersion(s, d)) {
       val sub = 64 / m
       val rows = Tables.embeddings(s, d)
         .select(col("vec_id"),
@@ -823,16 +828,12 @@ object Similarity {
     * per lookup. Both s12 (above the anchor scale) and s15 read it,
     * so the CC iteration runs once however many dedup queries a
     * session issues. */
-  private val dedupLabelMemo = new graft.SessionMemo[String, String]
+  private val dedupLabelMemo = Spill.tables[String]
   private[graft] def semanticDedupLabelsPath(s: SparkSession,
       d: String): String =
-    dedupLabelMemo.getOrCompute(s, d) {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-sdlabels-").toString
-      semanticDedupLabels(s, d)
-        .write.mode("overwrite").parquet(out)
-      out
-    }
+    dedupLabelMemo.getOrCompute(s, d, embVersion(s, d))(
+      Spill.table(s, "sdlabels")(
+        semanticDedupLabels(s, d).write.parquet(_)))
 
   /** Near-dup pairs at scale with exact-duplicate collapse: LSH +
     * cosine verify on distinct vectors only, member pairs expanded
@@ -1018,8 +1019,8 @@ object Similarity {
   // Written coded-corpus tables, memoized per session: the AT-REST
   // layout s11's scaladoc names (partitioned by coarse cell, carrying
   // 8-byte PQ codes) made real on disk, once per (dir, m, k, kCells).
-  // The memo holds only the temp PATH — the data lives in parquet.
-  private val codedMemo = new SessionMemo[(String, Int, Int, Int), String]
+  // The memo holds only the spill PATH — the data lives in parquet.
+  private val codedMemo = Spill.tables[(String, Int, Int, Int)]
 
   /** (vec_id, cid, codes) projection of an arbitrary corpus under the
     * FROZEN model trained on `modelDir` — coarse cell AND 8-byte PQ
@@ -1046,13 +1047,10 @@ object Similarity {
     * nprobe/kCells of it (partition pruning, not a filter scan). */
   def codedCorpusPath(s: SparkSession, d: String, m: Int = 8,
       k: Int = 16, kCells: Int = 8): String =
-    codedMemo.getOrCompute(s, (d, m, k, kCells)) {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-coded-").toString
-      encodeWith(s, d, Tables.embeddings(s, d), m, k, kCells)
-        .write.partitionBy("cid").mode("overwrite").parquet(out)
-      out
-    }
+    codedMemo.getOrCompute(s, (d, m, k, kCells), embVersion(s, d))(
+      Spill.table(s, "coded")(
+        encodeWith(s, d, Tables.embeddings(s, d), m, k, kCells)
+          .write.partitionBy("cid").parquet(_)))
 
   /** Incremental coded-table maintenance (the consumer-side freshness
     * story of the at-rest IVF×PQ layout): encode ONLY the delta under

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.{QuerySpec, Scoped, Tables}
+import graft.{QuerySpec, Scoped, Spill, Tables}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -239,19 +239,21 @@ object Text {
     * configuration; the memoized row-count probe is the testbed
     * heuristic that keeps one registered query honest at both scales. */
   private[graft] val ExactAnchorRows = 1000L
-  private val sizeMemo = new graft.VersionedSessionMemo[String, java.lang.Long]
-  /** Memoized corpus row count, keyed by dir and VERSIONED by its
-    * content fingerprint ([[Tables.dirFingerprint]]): a `documents`
-    * table REWRITTEN within one session re-probes instead of
-    * returning the stale count, and the superseded count is replaced,
-    * not kept beside the new one. The Tables memo carries the same
-    * fingerprint versioning, so the count AND the data reads behind
-    * t08/t12/t49 see the current files (parquet count() is footer
-    * metadata only). */
-  private def corpusRows(s: SparkSession, d: String): Long = {
-    val fp = Tables.dirFingerprint(s, s"$d/documents.parquet")
-    sizeMemo.getOrCompute(s, d, fp)(Tables.documents(s, d).count())
-  }
+  private val sizeMemo = new graft.SessionMemo[String, java.lang.Long]
+  /** Memoized corpus row count, keyed by dir and versioned by the
+    * `documents` fingerprint ([[docsVersion]]): a table REWRITTEN
+    * within one session re-probes instead of returning the stale
+    * count, and the superseded count is replaced, not kept beside the
+    * new one. Every memo in this file carries the same version, so
+    * the count AND the data reads behind t08/t12/t49 see the current
+    * files (parquet count() is footer metadata only). */
+  private def corpusRows(s: SparkSession, d: String): Long =
+    sizeMemo.getOrCompute(s, d, docsVersion(s, d))(
+      Tables.documents(s, d).count())
+
+  /** The version of every memo derived from `d`'s documents. */
+  private def docsVersion(s: SparkSession, d: String): Long =
+    Tables.fingerprint(s, d, "documents")
   private[graft] def exactAnchor(s: SparkSession, d: String): Boolean =
     corpusRows(s, d) <= ExactAnchorRows
 
@@ -343,7 +345,7 @@ object Text {
     * per round: (round, lhs, rhs, merged, weighted pair count). */
   private def trainBpe(s: SparkSession, d: String)
       : Seq[(Int, String, String, String, Long)] =
-    bpeMemo.getOrCompute(s, d) {
+    bpeMemo.getOrCompute(s, d, docsVersion(s, d)) {
       val words = Scoped.persist(Tables.documents(s, d)
         .select(explode(split(col("text"), " ")).as("w"))
         .filter(length(col("w")) > 0)
@@ -697,7 +699,7 @@ object Text {
     // the FINAL generation's blocks back the returned labels: they
     // must survive the caller's reads but not the query — release
     // them with the query scope. Callers that outlive a query
-    // (session memos) spill EAGERLY downstream (SpillMemo parquet),
+    // (session memos) spill EAGERLY downstream (Spill parquet),
     // so their lineage never reaches back into these blocks.
     Scoped.trackCheckpoint(labels)
   }
@@ -708,17 +710,15 @@ object Text {
     * LSH + connected-components computation per session instead of
     * each re-running the full pair pipeline (~2 s each at sf0.1).
     * Reuse is COMPUTE reuse, not merely plan reuse: the value is a
-    * parquet-spilled leaf scan ([[graft.SpillMemo]]). Spill held is
-    * O(labels) = O(docs that appear in a pair) per (dir, thr) for the
-    * session's lifetime — the same bounded-model trade as the coded
-    * ANN tables ([[graft.ops.Similarity]] `codedMemo`). Like every
-    * directory-keyed memo, the cache assumes the corpus at `d` is
-    * immutable within a session (the same caveat as `sizeMemo`). */
-  private val dupLabelsMemo = new graft.SpillMemo[(String, Double)]
+    * parquet-spilled leaf scan ([[graft.Spill.relations]]). Spill
+    * held is O(labels) = O(docs that appear in a pair) per (dir, thr)
+    * for the session's lifetime — the same bounded-model trade as the
+    * coded ANN tables ([[graft.ops.Similarity]] `codedMemo`). */
+  private val dupLabelsMemo = Spill.relations[(String, Double)]
 
   private[graft] def dupClusterLabels(s: SparkSession, d: String,
       thr: Double): DataFrame =
-    dupLabelsMemo.getOrCompute(s, (d, thr)) {
+    dupLabelsMemo.getOrCompute(s, (d, thr), docsVersion(s, d))(Spill.write {
       // Cluster at REPRESENTATIVE level, then propagate through the
       // dup mapping — identical labels to CC over the expanded member
       // pairs (OpsSpec pins the equivalence), at collapsed cost. Why
@@ -743,12 +743,12 @@ object Text {
         .select(col("rep"),
           coalesce(col("crossLbl"), col("rep")).as("lbl"))
       mapping.toMembers(eligible).select(col("doc_id"), col("lbl"))
-      // the SpillMemo materializes this EAGERLY at compute (parquet
-      // spill): the memo outlives the computing query while the CC
-      // labels it reads are query-scoped (released by the harness) —
-      // a lazy value first acted on in a LATER query would reach
-      // back into freed blocks.
-    }
+      // the spill materializes this EAGERLY at compute (parquet): the
+      // memo outlives the computing query while the CC labels it
+      // reads are query-scoped (released by the harness) — a lazy
+      // value first acted on in a LATER query would reach back into
+      // freed blocks.
+    })._2
 
   /** Near-dup pairs via MinHash+LSH with exact verification — same
     * output as [[exactJaccardPairs]] (candidate recall ~0.99992 at
@@ -761,7 +761,7 @@ object Text {
       selfJaccard(docsSh.select(col("doc_id").as("rep")), thr))
   }
 
-  private val pairsMemo = new graft.SpillMemo[(String, Double)]
+  private val pairsMemo = Spill.relations[(String, Double)]
 
   /** Session-memoized rep-level LSH band keys `(rep, band, bh)` over
     * the shingled duplicate representatives — the 72-perm MinHash
@@ -770,15 +770,14 @@ object Text {
     * a doc's band keys ARE its rep's, since identical text gives an
     * identical shingle set and signature). One sig pass per (session,
     * dir) instead of one per query. Parquet-spilled
-    * ([[graft.SpillMemo]]): eager at compute because the inputs are
+    * ([[graft.Spill.relations]]): eager at compute because the inputs are
     * query-scoped persists; consumers run a plain file scan, any
     * executor can read it, and a swept spill recomputes. Size is
     * O(shingled reps × 18 bands) — three longs per row. */
-  private val repBandKeysMemo = new graft.SpillMemo[String]
+  private val repBandKeysMemo = Spill.relations[String]
   private[graft] def repBandKeys(s: SparkSession, d: String): DataFrame =
-    repBandKeysMemo.getOrCompute(s, d) {
-      buildRepBandKeys(s, d)
-    }
+    repBandKeysMemo.getOrCompute(s, d, docsVersion(s, d))(
+      Spill.write(buildRepBandKeys(s, d)))._2
 
   /** The (un-memoized, un-checkpointed) construction behind
     * [[repBandKeys]] — ONE builder shared with the PlanSpec hook so
@@ -817,32 +816,29 @@ object Text {
     * longs, never O(corpus); t60 keeps even its AGREEMENT compute at
     * rep granularity and expands through the dup mapping. Same
     * spill-backed lifetime as [[repBandKeys]]. */
-  private val calibSigMemo = new graft.SpillMemo[String]
+  private val calibSigMemo = Spill.relations[String]
   private[graft] def calibRepSigs(s: SparkSession, d: String): DataFrame =
-    calibSigMemo.getOrCompute(s, d) {
+    calibSigMemo.getOrCompute(s, d, docsVersion(s, d))(Spill.write(
       Collapse.texts(s, d).reps
         .select(col("rep"),
           graft.functions.TextExprs.minHashSig(
             graft.functions.TextExprs.ngramPolyHashes(col("text"), 3),
-            calibA.toSeq, calibB.toSeq, HashP).as("sig"))
-    }
+            calibA.toSeq, calibB.toSeq, HashP).as("sig"))))._2
 
   /** Session-memoized doc-level near-dup pair relation (da, db,
     * jaccard ≥ thr), routed exact/LSH by the anchor — t08, t60
     * (calibration) and t61 (source matrix) share ONE pair computation
     * per (dir, thr) instead of each re-running shingling + candidate
     * generation + verify (~2.4 s each at sf0.1). The memoized frame
-    * is an EAGER parquet spill ([[graft.SpillMemo]] — materialized at
-    * compute, its inputs are query-scoped); consumers scan the spill
-    * — compute reuse, the [[dupLabelsMemo]] convention. Spill held is
-    * O(pairs) per (dir, thr) for the session; same corpus-immutable-
-    * within-a-session caveat as every directory-keyed memo. */
+    * is an EAGER parquet spill ([[graft.Spill.relations]] —
+    * materialized at compute, its inputs are query-scoped); consumers
+    * scan the spill — compute reuse, the [[dupLabelsMemo]] convention.
+    * Spill held is O(pairs) per (dir, thr) for the session. */
   private[graft] def jaccardPairs(s: SparkSession, d: String,
       thr: Double): DataFrame =
-    pairsMemo.getOrCompute(s, (d, thr)) {
+    pairsMemo.getOrCompute(s, (d, thr), docsVersion(s, d))(Spill.write(
       if (exactAnchor(s, d)) exactJaccardPairs(s, d, thr)
-      else lshJaccardPairs(s, d, thr)
-    }
+      else lshJaccardPairs(s, d, thr)))._2
 
   /** t63's hashed-bigram bucket rows (doc_id, source, b): word
     * bigrams via the portable polyHash mod B=1024, computed by the
@@ -904,7 +900,7 @@ object Text {
     * [[lrModel]]; the collect is B rows, bounded by construction. */
   def dsirLambdaArray(s: SparkSession, d: String,
       tgt: String = "src0"): Array[Double] =
-    dsirMemo.getOrCompute(s, (d, tgt)) {
+    dsirMemo.getOrCompute(s, (d, tgt), docsVersion(s, d)) {
       val rows = dsirBucketRows(s, d)
       val out = new Array[Double](1024)
       dsirLambda(s, rows, tgt).collect()
@@ -1102,7 +1098,7 @@ object Text {
         GROUP BY 1, 2)"""
 
   private[graft] def langProfiles(s: SparkSession, d: String): Seq[LangProfile] =
-    langProfMemo.getOrCompute(s, d) {
+    langProfMemo.getOrCompute(s, d, docsVersion(s, d)) {
       val tgs = graft.functions.TextExprs.charNGrams(col("text"), 3)
       val wProf = Window.partitionBy(col("lang"))
         .orderBy(desc("cnt"), col("tg"))
@@ -1340,7 +1336,7 @@ object Text {
     * pass: broadcast weights, one groupBy(doc), no model shuffle. */
   def lrModel(s: SparkSession, d: String, nF: Int = 512, iters: Int = 40,
       lr: Double = 0.8): (Seq[Double], Seq[Double], Double) =
-    lrMemo.getOrCompute(s, (d, nF, iters, lr)) {
+    lrMemo.getOrCompute(s, (d, nF, iters, lr), docsVersion(s, d)) {
       // EVERY reduction below is the order-independent tick-exact sum
       // (dsum128 / davg128) and the link is the RATIONAL sigmoid
       // σ(m) = 0.5 + 3m / (2·(1+|3m|)) — no exp/log anywhere, so the

@@ -2928,6 +2928,14 @@ class OpsSpec extends SparkSpec {
     val before = SparkEntry.queries("m10_ahash_groups")(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     Scoped.release()
+    // table-shaped spills too: q61's partitioned lineitem copy and
+    // m15's bronze media table (over the spilled .bmp tree)
+    val tableQueries = Seq("q61_dpp_prune", "m15_bronze_media")
+    def tableRows() = tableQueries.map { q =>
+      try SparkEntry.queries(q)(spark, sf0001).collect().toSeq
+      finally Scoped.release()
+    }
+    val tablesBefore = tableRows()
     val root = new java.io.File(Spill.root(spark))
     assert(root.isDirectory && root.listFiles().nonEmpty,
       "m10 must have spilled its memoized labels")
@@ -2948,6 +2956,8 @@ class OpsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     Scoped.release()
     assert(after == before, "recomputed labels are value-identical")
+    assert(tableRows() == tablesBefore,
+      "swept spill tables recompute to identical rows")
   }
 
   test("spill roots are session-unique under a shared durable dir, and " +

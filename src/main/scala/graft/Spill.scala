@@ -84,8 +84,8 @@ object Spill {
   }
 
   /** True iff the spill at `path` completed and its marker is still
-    * there. A swept or half-deleted dir reads dead and recomputes;
-    * deployments that disable `_SUCCESS` markers are unaffected. */
+    * there: a swept dir reads dead and recomputes, and deployments
+    * that disable `_SUCCESS` markers are unaffected. */
   private[graft] def alive(s: SparkSession, path: String): Boolean =
     try {
       val marker = new Path(path, Done)
@@ -96,9 +96,11 @@ object Spill {
   private[graft] def tables[K]: SessionMemo[K, String] =
     new SessionMemo[K, String](alive = alive)
 
-  /** A memo of [[write]] relations; a replaced relation's cache blocks
-    * are dropped with it instead of pinning executor memory for the
-    * session. Read the scan as `._2`. */
+  /** A memo of [[write]] relations, read as `._2`. The write is EAGER,
+    * at compute: the memo outlives the computing query while its inputs
+    * (Scoped persists) do not. A replaced relation's cache blocks are
+    * dropped with it instead of pinning executor memory for the
+    * session. */
   private[graft] def relations[K]: SessionMemo[K, (String, DataFrame)] =
     new SessionMemo[K, (String, DataFrame)](
       alive = (s, v) => alive(s, v._1),

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 object Bench {
   /** Materialize the FULL result — not `.count()`, under which Catalyst
     * deletes unreferenced projections/sorts and a per-row query bills a
@@ -10,18 +10,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts NANOS
-      // let AQE coalesce post-shuffle partitions even under a persist():
-      // iterative queries (t12) cache each generation, and without this
-      // every tiny label-table shuffle stays at the static partition
-      // count — pure task-scheduling overhead on a small relation
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local().getOrCreate()
     // ERROR, not WARN: per-query WARNs (WindowExec's bounded-relation
     // "No Partition Defined" × ~10) land in the same stream the driver
     // tails and can crowd the single JSON record out of its ~2000-char

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Embedding-side scale rehearsal (SCALE.md): the s-family has
@@ -35,10 +35,7 @@ object EmbScale {
 
   def main(args: Array[String]): Unit = {
     val d = sys.env.getOrElse("SPARK_GRAFT_EMB_DIR", "/tmp/embsf1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = Sessions.local()
       // the 500k corpus is ONE ~130 MB parquet file: at the default
       // 128 MB split it scans as 2 partitions and every pre-shuffle
       // stage (k-means assignment, LSH signatures, PQ encode) runs
@@ -56,8 +53,6 @@ object EmbScale {
       // task: hashing is the right mode at any k this harness runs.
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         "65536")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "24g")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import graft.ops.Similarity

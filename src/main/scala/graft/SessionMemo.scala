@@ -22,7 +22,7 @@ import org.apache.spark.sql.SparkSession
   */
 private[graft] final class SessionMemo[K, V](
     alive: (SparkSession, V) => Boolean = (_: SparkSession, _: V) => true,
-    drop: V => Unit = (_: V) => ()) {
+    drop: (SparkSession, V) => Unit = (_: SparkSession, _: V) => ()) {
   private val bySession =
     new java.util.WeakHashMap[SparkSession,
       java.util.concurrent.ConcurrentHashMap[K, (Long, V)]]()
@@ -44,7 +44,7 @@ private[graft] final class SessionMemo[K, V](
     memoFor(s).compute(key, (_, cur) =>
       if (cur != null && cur._1 == version && alive(s, cur._2)) cur
       else {
-        if (cur != null) drop(cur._2)
+        if (cur != null) drop(s, cur._2)
         (version, compute)
       })._2
 

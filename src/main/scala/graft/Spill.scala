@@ -92,18 +92,30 @@ object Spill {
       marker.getFileSystem(s.sessionState.newHadoopConf()).exists(marker)
     } catch { case _: Throwable => false }
 
-  /** A memo of [[table]] paths. */
+  /** Delete a replaced spill: the memo no longer serves it, and a
+    * fixture rewritten many times in one session would otherwise keep
+    * one dead copy per rewrite until the root goes. */
+  private def delete(s: SparkSession, path: String): Unit =
+    try {
+      val p = new Path(path)
+      p.getFileSystem(s.sessionState.newHadoopConf()).delete(p, true)
+      ()
+    } catch { case _: Throwable => () }
+
+  /** A memo of [[table]] paths; a replaced table's dir is deleted. */
   private[graft] def tables[K]: SessionMemo[K, String] =
-    new SessionMemo[K, String](alive = alive)
+    new SessionMemo[K, String](alive = alive, drop = delete)
 
   /** A memo of [[write]] relations, read as `._2`. The write is EAGER,
     * at compute: the memo outlives the computing query while its inputs
     * (Scoped persists) do not. A replaced relation's cache blocks are
     * dropped with it instead of pinning executor memory for the
-    * session. */
+    * session, and its dir is deleted. */
   private[graft] def relations[K]: SessionMemo[K, (String, DataFrame)] =
     new SessionMemo[K, (String, DataFrame)](
       alive = (s, v) => alive(s, v._1),
-      drop = v =>
-        try { v._2.unpersist(); () } catch { case _: Throwable => () })
+      drop = (s, v) => {
+        try v._2.unpersist() catch { case _: Throwable => () }
+        delete(s, v._1)
+      })
 }

@@ -27,9 +27,10 @@ import org.apache.spark.sql.types.StructType
   *    by the latest commit record, so a crashed half-written batch is
   *    invisible until its commit lands (the `_delta_log` idea, one
   *    text file per version).
-  *  - **Atomic commit with CAS**: version files are written to a temp
-  *    name and renamed; an existing target version means a concurrent
-  *    writer won — the loser fails loudly instead of corrupting.
+  *  - **Atomic commit with CAS**: version files are published with
+  *    [[AtomicFile.claim]]; an existing target version means a
+  *    concurrent writer won — the loser fails loudly instead of
+  *    corrupting.
   *
   * Scale notes (100 TB): the anti-join is executor-side against the
   * committed-keys parquet (O(files) metadata, never content); data
@@ -100,14 +101,9 @@ object BronzeMerge {
     val versions = f.listStatus(dir).map(_.getPath.getName)
       .filter(_.matches("v\\d{8}")).sorted
     if (versions.isEmpty) (0, Nil)
-    else {
-      val in = f.open(new Path(dir, versions.last))
-      val content =
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      (versions.last.drop(1).toInt,
-        content.linesIterator.filter(_.nonEmpty).toSeq)
-    }
+    else (versions.last.drop(1).toInt,
+      AtomicFile.read(f, new Path(dir, versions.last))
+        .linesIterator.filter(_.nonEmpty).toSeq)
   }
 
   /** Committed batch names at an arbitrary version — the time-travel
@@ -120,11 +116,7 @@ object BronzeMerge {
     val vf = new Path(manifestDir(table), f"v$version%08d")
     require(f.exists(vf),
       s"bronze version $version does not exist (vacuumed or never written)")
-    val in = f.open(vf)
-    val content =
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    content.linesIterator.filter(_.nonEmpty).toSeq
+    AtomicFile.read(f, vf).linesIterator.filter(_.nonEmpty).toSeq
   }
 
   /** Time-travel read: the table exactly as of `version`. */
@@ -705,7 +697,8 @@ object BronzeMerge {
     val newDir = mvDirName(to)
     merged.coalesce(1).write.mode(SaveMode.Overwrite)
       .parquet(s"$mvPath/$newDir")
-    flipPointer(spark, mvPath, newDir)
+    AtomicFile.replace(spark.sessionState.newHadoopConf(),
+      new Path(mvPath, "_version"), s"$newDir\n")
     gcRollup(spark, mvPath, keep = Set(newDir) ++ ptr.map(_._1))
     (from, to, delta.count())
   }
@@ -737,7 +730,8 @@ object BronzeMerge {
       }
     rollupOf(snapshot(spark, table)).coalesce(1)
       .write.mode(SaveMode.Overwrite).parquet(s"$mvPath/$newDir")
-    flipPointer(spark, mvPath, newDir)
+    AtomicFile.replace(spark.sessionState.newHadoopConf(),
+      new Path(mvPath, "_version"), s"$newDir\n")
     gcRollup(spark, mvPath, keep = Set(newDir) ++ ptr.map(_._1))
   }
 
@@ -760,11 +754,8 @@ object BronzeMerge {
     val f = fs(spark, mvPath)
     val verFile = new Path(mvPath, "_version")
     if (!f.exists(verFile)) None
-    else {
-      val in = f.open(verFile)
-      try Some(new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim)
-        .filter(_.nonEmpty)
+    else
+      Some(AtomicFile.read(f, verFile).trim).filter(_.nonEmpty)
         // migration shim: pointers written by the bare-integer format
         // ("5") belong to the pre-versioned-dir layout, whose parquet
         // lives under the literal `data` directory — resolve to THAT
@@ -774,24 +765,6 @@ object BronzeMerge {
         // before migrating the view into the versioned-dir layout
         .map(p => if (p.forall(_.isDigit)) ("data", p.toInt)
                   else (p, mvVersionOf(p)))
-      finally in.close()
-    }
-  }
-
-  /** Atomically repoint `_version` → `dirName` (temp file + rename
-    * with OVERWRITE via FileContext — atomic on HDFS and local FS). */
-  private def flipPointer(spark: SparkSession, mvPath: String,
-      dirName: String): Unit = {
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      new Path(mvPath).toUri, spark.sessionState.newHadoopConf())
-    val tmp = new Path(mvPath, s"._version-$dirName.tmp")
-    val out = fc.create(tmp,
-      java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE,
-        org.apache.hadoop.fs.CreateFlag.OVERWRITE),
-      org.apache.hadoop.fs.Options.CreateOpts.createParent())
-    try out.write(s"$dirName\n".getBytes("UTF-8")) finally out.close()
-    fc.rename(tmp, new Path(mvPath, "_version"),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
   /** Drop data_v* directories outside the keep set — run strictly
@@ -843,23 +816,16 @@ object BronzeMerge {
     spark.read.parquet(s"$mvPath/${ptr.get._1}")
   }
 
-  /** Write the version file via temp + atomic rename; an existing
+  /** Publish the version file with [[AtomicFile.claim]]; an existing
     * target means a concurrent writer committed first — fail loudly.
     * Package-visible so IngestSpec can drive the CAS conflict
     * deterministically. */
   private[graft] def commit(f: FileSystem, table: String, version: Int,
       batches: Seq[String]): Unit = {
     val dir = manifestDir(table)
-    f.mkdirs(dir)
-    val target = new Path(dir, f"v$version%08d")
-    val tmp = new Path(dir, f".tmp-v$version%08d")
-    val out = f.create(tmp, false)
-    try out.write((batches.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    if (f.exists(target) || !f.rename(tmp, target)) {
-      f.delete(tmp, true)
+    if (!AtomicFile.claim(f.getConf, new Path(dir, f"v$version%08d"),
+        batches.mkString("\n") + "\n"))
       throw new IllegalStateException(
         s"bronze commit conflict: version $version already exists at $dir")
-    }
   }
 }

@@ -67,7 +67,7 @@ object DeltaConformance {
     var sawMetaData = cpVs.nonEmpty
     for (v <- jsonVs) {
       val p = new Path(dir, f"$v%020d.json")
-      val content = DeltaLog.readFully(f, p)
+      val content = AtomicFile.read(f, p)
       val lines = content.linesIterator.filter(_.nonEmpty).toSeq
       if (lines.isEmpty) bad += s"version $v: empty commit file"
       for ((line, i) <- lines.zipWithIndex) {
@@ -127,7 +127,7 @@ object DeltaConformance {
     // --- _last_checkpoint ------------------------------------------
     val ptr = new Path(dir, "_last_checkpoint")
     if (f.exists(ptr)) {
-      parse(DeltaLog.readFully(f, ptr)) match {
+      parse(AtomicFile.read(f, ptr)) match {
         case None => bad += "_last_checkpoint: not valid JSON"
         case Some(node) =>
           if (!node.has("version")) bad += "_last_checkpoint: no version"

@@ -60,8 +60,8 @@ final case class DeltaLogConfig(checkpointInterval: Int = 10,
   * final version carries the cumulative diff — replay still lands on
   * exactly the current snapshot (Delta's own "log replay" contract).
   *
-  * Concurrency: version files are claimed with a no-overwrite rename
-  * (first writer wins, [[writeVersion]]), and after every attempt the
+  * Concurrency: version files are published with [[AtomicFile.claim]]
+  * (first writer wins), and after every attempt the
   * syncer REPLAYS THE FILE THE LOG ACTUALLY CONTAINS into its running
   * state rather than trusting the diff it computed. Two syncers —
   * even one racing a concurrent [[BronzeMerge.vacuum]], where the
@@ -187,17 +187,8 @@ object DeltaLog {
       table: String): Option[Long] = {
     val ptr = new Path(logDir(table), "_last_checkpoint")
     if (!f.exists(ptr)) None
-    else {
-      val content = readFully(f, ptr)
-      scala.util.Try(mapper.readTree(content).get("version").asLong())
-        .toOption
-    }
-  }
-
-  private[ingest] def readFully(f: FileSystem, p: Path): String = {
-    val in = f.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
+    else scala.util.Try(mapper.readTree(AtomicFile.read(f, ptr))
+      .get("version").asLong()).toOption
   }
 
   // checkpoint row layout per the Delta protocol: one action per row,
@@ -277,35 +268,17 @@ object DeltaLog {
     // listing when a pointer's tail is broken, so a regressed
     // pointer degrades a read to one extra listing, never strands
     // it. (A pointer whose parquet is missing is corrupt;
-    // overwriting it heals.) The swap is a writer-unique temp +
-    // atomic OVERWRITE rename (the BronzeMerge.flipPointer pattern):
-    // there is NO window where `_last_checkpoint` is absent or
-    // partial.
+    // overwriting it heals.) [[AtomicFile.replace]] leaves NO window
+    // where `_last_checkpoint` is absent or partial.
     val newerExists = rawCheckpointPointer(f, table)
       .exists(cur => cur > v && f.exists(checkpointFile(table, cur)))
     if (!newerExists) {
       val nActions = spark.read.parquet(target.toString).count()
-      atomicOverwrite(spark, logDir(table), "_last_checkpoint",
+      AtomicFile.replace(spark.sessionState.newHadoopConf(),
+        new Path(logDir(table), "_last_checkpoint"),
         s"""{"version":$v,"size":$nActions}\n""")
     }
     true
-  }
-
-  /** Publish `content` at `dir/name` via writer-unique temp + atomic
-    * OVERWRITE rename — readers always see a complete old or new
-    * file, never absence or a partial write. */
-  private def atomicOverwrite(spark: SparkSession, dir: Path,
-      name: String, content: String): Unit = {
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      dir.toUri, spark.sessionState.newHadoopConf())
-    val tmp = new Path(dir, s".$name-${java.util.UUID.randomUUID()}.tmp")
-    val out = fc.create(tmp,
-      java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE,
-        org.apache.hadoop.fs.CreateFlag.OVERWRITE),
-      org.apache.hadoop.fs.Options.CreateOpts.createParent())
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-    fc.rename(tmp, new Path(dir, name),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
   /** Drop JSON commits the current checkpoint makes redundant —
@@ -379,7 +352,7 @@ object DeltaLog {
     while (v <= to) {
       val p = logFile(table, v)
       require(f.exists(p), s"delta log version $v missing at ${logDir(table)}")
-      readFully(f, p).linesIterator.filter(_.nonEmpty).foreach { line =>
+      AtomicFile.read(f, p).linesIterator.filter(_.nonEmpty).foreach { line =>
         val node = mapper.readTree(line)
         if (node.has("add")) {
           val a = node.get("add")
@@ -577,7 +550,8 @@ object DeltaLog {
           added.foreach(a => lines += addJson(a))
           lines += commitInfoJson(v, "WRITE")
       }
-      val won = writeVersion(spark, f, table, v, lines.toSeq)
+      val won = AtomicFile.claim(spark.sessionState.newHadoopConf(),
+        logFile(table, v), lines.mkString("\n") + "\n")
       // adopt the version's ACTUAL content — ours if the rename won
       // (the published bytes are exactly `lines`; no re-read), a
       // concurrent syncer's otherwise. Trusting the locally computed
@@ -588,7 +562,7 @@ object DeltaLog {
       // every syncer's running state equal to the log itself.
       val published: Iterator[String] =
         if (won) lines.iterator
-        else readFully(f, logFile(table, v)).linesIterator
+        else AtomicFile.read(f, logFile(table, v)).linesIterator
       published.filter(_.nonEmpty)
         .foreach { line =>
           val node = mapper.readTree(line)
@@ -661,46 +635,5 @@ object DeltaLog {
     node.put("path", a.path)
     node.putObject("partitionValues")
     node.put("size", a.size)
-  }
-
-  /** Claim version `v` with a writer-unique temp + NO-OVERWRITE
-    * rename (FileContext's default rejects an existing destination,
-    * unlike FileSystem.rename on a local FS, which would replace the
-    * winner's bytes). First writer wins; a lost race is SUCCESS for
-    * the caller's progress but the caller must then adopt the
-    * winner's content (see [[sync]]) — the content two racers compute
-    * can legitimately differ when a vacuum ran between their state
-    * reads. Returns true iff this call's bytes became the version. */
-  private def writeVersion(spark: SparkSession, f: FileSystem,
-      table: String, v: Long, lines: Seq[String]): Boolean = {
-    val dir = logDir(table)
-    f.mkdirs(dir)
-    val target = logFile(table, v)
-    if (f.exists(target)) return false
-    val tmp = new Path(dir,
-      f".tmp-$v%020d-${java.util.UUID.randomUUID()}.json")
-    // create AND rename through the same FileContext: a FileSystem
-    // create on a ChecksumFileSystem (file://) would leave a `.crc`
-    // sidecar the FileContext rename does not move — one orphaned
-    // file per committed version, forever
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      dir.toUri, spark.sessionState.newHadoopConf())
-    val out = fc.create(tmp,
-      java.util.EnumSet.of(org.apache.hadoop.fs.CreateFlag.CREATE),
-      org.apache.hadoop.fs.Options.CreateOpts.createParent())
-    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    try {
-      fc.rename(tmp, target) // Options.Rename.NONE: existing target fails
-      true
-    } catch {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-           _: java.io.IOException if f.exists(target) =>
-        fc.delete(tmp, false) // lost race: winner's bytes stand
-        false
-      case e: Throwable => // genuine failure: never leak the temp
-        scala.util.Try(fc.delete(tmp, false))
-        throw e
-    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.hadoop.fs.{FileContext, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.format.converter.ParquetMetadataConverter
@@ -39,11 +39,10 @@ object LocalParquet {
     * already there). Rows are consumed one at a time, so a caller
     * that produces them lazily holds one row at once (plus the
     * writer's buffered row group); no rows still write a valid file
-    * that carries only the schema. The bytes go to a hidden
-    * `.`-prefixed temp name first and are renamed into place,
-    * overwriting: a reader sees no file or the whole file, never a
-    * partial one, and a fixed `name` is replaced without a gap.
-    * Returns the file's path. */
+    * that carries only the schema. The file is published with
+    * [[AtomicFile.replaceWith]]: a reader sees no file or the whole
+    * file, never a partial one, and a fixed `name` is replaced without
+    * a gap. Returns the file's path. */
   def write[T: Encoder](spark: SparkSession, dir: String, rows: Iterator[T],
       name: String = ""): Path = {
     val enc = encoderFor[T]
@@ -53,23 +52,16 @@ object LocalParquet {
       new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
     val ctx = new TaskAttemptContextImpl(job.getConfiguration,
       new TaskAttemptID("", 0, TaskType.MAP, 0, 0))
-    val uuid = java.util.UUID.randomUUID()
     val file = new Path(dir,
       if (name.nonEmpty) name
-      else s"part-00000-$uuid-c000${factory.getFileExtension(ctx)}")
-    val tmp = new Path(dir, s".${file.getName}-$uuid.tmp")
-    val fc = FileContext.getFileContext(tmp.toUri, job.getConfiguration)
-    try {
+      else s"part-00000-${java.util.UUID.randomUUID()}-c000" +
+        factory.getFileExtension(ctx))
+    AtomicFile.replaceWith(job.getConfiguration, file) { (_, tmp) =>
       val out = factory.newInstance(tmp.toString, schema, ctx)
       try {
         val toRow = enc.createSerializer()
         rows.foreach(r => out.write(toRow(r)))
       } finally out.close()
-      fc.rename(tmp, file, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    } catch {
-      case e: Throwable =>
-        scala.util.Try(fc.delete(tmp, false))
-        throw e
     }
     file
   }

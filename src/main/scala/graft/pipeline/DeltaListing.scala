@@ -139,27 +139,25 @@ final class DeltaListingProvider(
 }
 
 /** File-based deltaLink checkpoint — the discovery-side analogue of a
-  * streaming query's offset log: tiny (one URL), atomic via
-  * write-temp-then-rename, absent ⇒ initial sync. Lives NEXT TO the
-  * Structured Streaming checkpoint dir in a scheduled
+  * streaming query's offset log: tiny (one URL), published with
+  * [[graft.ingest.AtomicFile.replace]] through Hadoop (so `dir` may
+  * live on any Hadoop filesystem), absent ⇒ initial sync. Lives NEXT
+  * TO the Structured Streaming checkpoint dir in a scheduled
   * `Trigger.AvailableNow` run so both advance together; if the two
   * ever diverge (delta checkpoint ahead of an aborted sink commit)
   * the failure mode is re-fetching one change window — at-least-once,
   * the same contract as the bronze MERGE's idempotent re-run (C4). */
 final class DeltaCheckpoint(dir: String) {
-  private val file = java.nio.file.Paths.get(dir, "deltalink")
-  private val tmp = java.nio.file.Paths.get(dir, ".deltalink.tmp")
+  private val file = new org.apache.hadoop.fs.Path(dir, "deltalink")
+  private val conf = new org.apache.hadoop.conf.Configuration()
 
-  def load(): Option[String] =
-    if (java.nio.file.Files.exists(file))
-      Some(java.nio.file.Files.readString(file).trim).filter(_.nonEmpty)
+  def load(): Option[String] = {
+    val f = file.getFileSystem(conf)
+    if (f.exists(file))
+      Some(graft.ingest.AtomicFile.read(f, file).trim).filter(_.nonEmpty)
     else None
-
-  def save(deltaLink: String): Unit = {
-    java.nio.file.Files.createDirectories(file.getParent)
-    java.nio.file.Files.writeString(tmp, deltaLink)
-    java.nio.file.Files.move(tmp, file,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
+
+  def save(deltaLink: String): Unit =
+    graft.ingest.AtomicFile.replace(conf, file, deltaLink)
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.pipeline.{DeltaCheckpoint, DeltaListingProvider}
 import graft.pipeline.HttpListing.{HttpResponse, RetryPolicy, Transport}
-import org.apache.spark.sql.SparkSession
 
 /** Scale rehearsal for the sync-drain paths (SCALE.md r15): drives
   * [[Streams.syncToBronzePaged]] against a SYNTHETIC Graph endpoint
@@ -76,12 +75,7 @@ object DrainRehearsal {
   def main(args: Array[String]): Unit = {
     val n = if (args.length > 0) args(0).toInt else 100000
     val out = if (args.length > 1) Some(args(1)) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Sessions.local().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val base = "https://graph.example.test/drives/rehearsal"
     val policy = RetryPolicy(maxRetries = 1, baseDelayMs = 0)

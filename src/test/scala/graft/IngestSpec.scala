@@ -454,6 +454,28 @@ class IngestSpec extends SparkSpec {
       Seq("batch-00000001", "batch-00000002"))
   }
 
+  test("a commit temp left by a crashed writer does not block the next commit") {
+    import graft.ingest.BronzeMerge
+    import spark.implicits._
+    val table = Files.createTempDirectory("graft-crash-tmp")
+      .resolve("bronze").toString
+    def one(n: String) = Seq((n, n.length.toLong,
+      new java.sql.Timestamp(1700000000000L), Array[Byte](1)))
+      .toDF("file_name", "length", "modified", "content")
+    assert(BronzeMerge.mergeIngestDf(spark, one("a.txt"), table) == 1L)
+    // the temp a writer that died between create and rename left for
+    // version 2, complete with its crc sidecar
+    val f = new org.apache.hadoop.fs.Path(table)
+      .getFileSystem(spark.sessionState.newHadoopConf())
+    val out = f.create(
+      new org.apache.hadoop.fs.Path(s"$table/_manifest/.tmp-v00000002"), false)
+    try out.write("batch-00000002\n".getBytes("UTF-8")) finally out.close()
+    assert(BronzeMerge.mergeIngestDf(spark, one("b.txt"), table) == 1L)
+    assert(BronzeMerge.currentCommit(spark, table) ==
+      ((2, Seq("batch-00000001", "batch-00000002"))))
+    assert(BronzeMerge.snapshot(spark, table).count() == 2)
+  }
+
   test("bucketed bronze publication joins on file identity with zero exchanges") {
     import graft.ingest.BronzeMerge
     import spark.implicits._
@@ -1119,27 +1141,38 @@ class IngestSpec extends SparkSpec {
 
   test("delta log leaves no temp files or orphaned crc sidecars") {
     import graft.ingest.{BronzeMerge, DeltaLog}
+    import graft.pipeline.DeltaCheckpoint
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-dlog-tidy")
-      .resolve("bronze").toString
+    val root = Files.createTempDirectory("graft-dlog-tidy")
+    val table = root.resolve("bronze").toString
     def ts(i: Int) = new java.sql.Timestamp(1700000000000L + i * 1000L)
     def one(n: String) = Seq((n, n.length.toLong, ts(n.hashCode & 127),
       Array[Byte](1))).toDF("file_name", "length", "modified", "content")
-    (1 to 12).foreach(i =>
-      BronzeMerge.mergeIngestDf(spark, one(f"p$i%02d.txt"), table))
-    DeltaLog.writeCheckpoint(spark, table, 11L)
-    val names = Files.list(Paths.get(table, "_delta_log")).iterator()
-    val all = scala.jdk.CollectionConverters.IteratorHasAsScala(names)
-      .asScala.map(_.getFileName.toString).toSeq
-    val tmps = all.filter(n => n.contains(".tmp-") || n.startsWith(".cp-tmp"))
-    assert(tmps.isEmpty, s"leaked temp artifacts: $tmps")
-    // a ChecksumFileSystem create + FileContext rename would leave
-    // one orphaned `..tmp-*.json.crc` PER COMMITTED VERSION — a crc
-    // sidecar is orphaned when the file it checksums is gone
-    val orphanCrc = all.filter(_.endsWith(".crc")).filterNot { n =>
-      all.contains(n.stripPrefix(".").stripSuffix(".crc"))
+    val mv = root.resolve("mv").toString
+    (1 to 12).foreach { i =>
+      BronzeMerge.mergeIngestDf(spark, one(f"p$i%02d.txt"), table)
+      if (i > 10) BronzeMerge.refreshRollup(spark, table, mv)
     }
-    assert(orphanCrc.isEmpty, s"orphaned crc sidecars: $orphanCrc")
+    DeltaLog.writeCheckpoint(spark, table, 11L)
+    val ck = new DeltaCheckpoint(root.resolve("ck").toString)
+    ck.save("https://graph.example.test/delta?token=1")
+    ck.save("https://graph.example.test/delta?token=2")
+    assert(ck.load().contains("https://graph.example.test/delta?token=2"))
+    Seq(Paths.get(table, "_delta_log"), Paths.get(table, "_manifest"),
+        Paths.get(mv), root.resolve("ck")).foreach { dir =>
+      val names = Files.list(dir).iterator()
+      val all = scala.jdk.CollectionConverters.IteratorHasAsScala(names)
+        .asScala.map(_.getFileName.toString).toSeq
+      val tmps = all.filter(n => n.contains(".tmp") || n.startsWith(".cp-tmp"))
+      assert(tmps.isEmpty, s"leaked temp artifacts in $dir: $tmps")
+      // a ChecksumFileSystem create + FileContext rename would leave
+      // one orphaned `.<temp>.crc` PER PUBLISHED FILE — a crc sidecar
+      // is orphaned when the file it checksums is gone
+      val orphanCrc = all.filter(_.endsWith(".crc")).filterNot { n =>
+        all.contains(n.stripPrefix(".").stripSuffix(".crc"))
+      }
+      assert(orphanCrc.isEmpty, s"orphaned crc sidecars in $dir: $orphanCrc")
+    }
   }
 
   test("delta path codec: opaque and unencoded external paths fall back raw") {

@@ -29,7 +29,10 @@ class MemoSpec extends SparkSpec {
     // table over embeddings, t08 a spilled pair relation over
     // documents: after each rewrite all three must answer like a fresh
     // session on the new files, and the rewrites must replace memo
-    // entries instead of adding to them
+    // entries instead of adding to them and delete the spills they
+    // replace. A session of its own, so its spill root holds only the
+    // spills of these three queries.
+    val s = spark.newSession()
     val queries = Seq("q49_orc_source", "s15_semantic_dedup_lsh",
       "t08_jaccard_pairs")
     val dir = java.nio.file.Files
@@ -41,19 +44,24 @@ class MemoSpec extends SparkSpec {
           .write.mode("overwrite").parquet(s"$dir/$t.parquet")
       }
     write(0)
-    val first = queries.map(rows(spark, _, dir))
-    val entries = SessionMemo.entryCount(spark)
+    val first = queries.map(rows(s, _, dir))
+    val entries = SessionMemo.entryCount(s)
     (1 to 3).foreach { k =>
       write(k)
       val fresh = spark.newSession()
       queries.zip(first).foreach { case (q, old) =>
-        val now = rows(spark, q, dir)
+        val now = rows(s, q, dir)
         assert(now == rows(fresh, q, dir), s"$q served stale rows after " +
           s"rewrite $k")
         assert(k > 1 || now != old, s"$q: rewrite $k changed nothing")
       }
-      assert(SessionMemo.entryCount(spark) == entries,
+      assert(SessionMemo.entryCount(s) == entries,
         s"rewrite $k accreted memo entries")
+    }
+    val spills = new java.io.File(Spill.root(s)).list().toSeq
+    Seq("orc-", "rel-", "sdlabels-").foreach { tag =>
+      assert(spills.count(_.startsWith(tag)) == 1,
+        s"expected one live $tag* spill, got ${spills.sorted.mkString(", ")}")
     }
   }
 

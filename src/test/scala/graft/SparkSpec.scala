@@ -6,15 +6,10 @@ import org.scalatest.BeforeAndAfterAll
 
 /** Shared local session for all suites (forked test JVM). */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-tests")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events.ts NANOS
-    .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  // 4 cpus whatever SPARK_GRAFT_CPUS says: specs that count part files
+  // or partitions stay the same on every machine
+  lazy val spark: SparkSession =
+    Sessions.local(4).appName("graft-tests").getOrCreate()
 }
 
 abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {

@@ -9,12 +9,14 @@ import org.apache.hadoop.fs.Options.{CreateOpts, Rename}
   * files and `_last_checkpoint`, the deltaLink checkpoint, and the
   * driver-written parquet files. The bytes go to a writer-unique
   * hidden temp beside `target`, which is then renamed into place, so a
-  * reader sees the whole old file or the whole new one, never a
-  * partial write or a gap.
+  * reader never sees a partial write.
   *
   *  - [[claim]] renames with `Rename.NONE`: the first writer wins, and
   *    a lost race deletes its temp and returns false.
   *  - [[replace]] / [[replaceWith]] rename with `Rename.OVERWRITE`.
+  *    HDFS swaps the file in one step; Hadoop's local filesystem (and
+  *    any other that keeps the generic `FileContext` rename) deletes
+  *    the old file first, so a reader can briefly find none.
   *
   * Any failure deletes the temp, and because every temp name is unique
   * a temp left by a crashed process never blocks a later publish.

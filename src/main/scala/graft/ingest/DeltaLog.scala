@@ -268,8 +268,9 @@ object DeltaLog {
     // listing when a pointer's tail is broken, so a regressed
     // pointer degrades a read to one extra listing, never strands
     // it. (A pointer whose parquet is missing is corrupt;
-    // overwriting it heals.) [[AtomicFile.replace]] leaves NO window
-    // where `_last_checkpoint` is absent or partial.
+    // overwriting it heals.) [[AtomicFile.replace]] never exposes a
+    // partial pointer, and a reader that finds none falls back to
+    // listing.
     val newerExists = rawCheckpointPointer(f, table)
       .exists(cur => cur > v && f.exists(checkpointFile(table, cur)))
     if (!newerExists) {

@@ -40,9 +40,8 @@ object LocalParquet {
     * that produces them lazily holds one row at once (plus the
     * writer's buffered row group); no rows still write a valid file
     * that carries only the schema. The file is published with
-    * [[AtomicFile.replaceWith]]: a reader sees no file or the whole
-    * file, never a partial one, and a fixed `name` is replaced without
-    * a gap. Returns the file's path. */
+    * [[AtomicFile.replaceWith]]: a reader never sees a partial file.
+    * Returns the file's path. */
   def write[T: Encoder](spark: SparkSession, dir: String, rows: Iterator[T],
       name: String = ""): Path = {
     val enc = encoderFor[T]

@@ -149,15 +149,20 @@ final class DeltaListingProvider(
   * the same contract as the bronze MERGE's idempotent re-run (C4). */
 final class DeltaCheckpoint(dir: String) {
   private val file = new org.apache.hadoop.fs.Path(dir, "deltalink")
-  private val conf = new org.apache.hadoop.conf.Configuration()
 
   def load(): Option[String] = {
-    val f = file.getFileSystem(conf)
+    val f = file.getFileSystem(DeltaCheckpoint.conf)
     if (f.exists(file))
       Some(graft.ingest.AtomicFile.read(f, file).trim).filter(_.nonEmpty)
     else None
   }
 
   def save(deltaLink: String): Unit =
-    graft.ingest.AtomicFile.replace(conf, file, deltaLink)
+    graft.ingest.AtomicFile.replace(DeltaCheckpoint.conf, file, deltaLink)
+}
+
+object DeltaCheckpoint {
+  /** One default Hadoop configuration per JVM, so a new checkpoint
+    * instance does not parse the default resources again. */
+  private val conf = new org.apache.hadoop.conf.Configuration()
 }

@@ -7,7 +7,7 @@ import org.apache.hadoop.fs.Options.{CreateOpts, Rename}
 /** The one way a small metadata file is published: the bronze
   * manifest, the rollup's `_version` pointer, the Delta log's version
   * files and `_last_checkpoint`, the deltaLink checkpoint, and the
-  * driver-written parquet files. The bytes go to a writer-unique
+  * files of [[LocalParquet.write]]. The bytes go to a writer-unique
   * hidden temp beside `target`, which is then renamed into place, so a
   * reader never sees a partial write.
   *

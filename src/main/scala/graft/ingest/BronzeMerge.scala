@@ -399,6 +399,8 @@ object BronzeMerge {
 
   /** Reclaim batches no longer referenced by the LATEST commit and
     * drop older manifest versions — forfeits time travel for space.
+    * Publish temps a crashed commit left in `_manifest/` go too, once
+    * older than the latest version ([[AtomicFile.sweepTemps]]).
     * The `_delta_log/` mirror is deliberately left intact (as Delta's
     * own VACUUM does): old log versions reference now-deleted files,
     * so physical time travel below the current version is forfeited,
@@ -415,9 +417,11 @@ object BronzeMerge {
       f.delete(new Path(table, b), true)
       f.delete(new Path(s"$table/_keys", b), true)
     }
-    f.listStatus(manifestDir(table)).map(_.getPath.getName)
+    val manifests = f.listStatus(manifestDir(table)).toSeq
+    manifests.map(_.getPath.getName)
       .filter(v => v.matches("v\\d{8}") && v.drop(1).toInt < ver)
       .foreach(v => f.delete(new Path(manifestDir(table), v), false))
+    AtomicFile.sweepTemps(f, manifests, _ == f"v$ver%08d")
     dead.sorted
   }
 
@@ -767,9 +771,10 @@ object BronzeMerge {
                   else (p, mvVersionOf(p)))
   }
 
-  /** Drop data_v* directories outside the keep set — run strictly
-    * after the pointer flip, so failures here cost disk, not
-    * correctness. The keep set carries the live directory AND its
+  /** Drop data_v* directories outside the keep set, and publish temps
+    * older than the `_version` pointer ([[AtomicFile.sweepTemps]]) —
+    * run strictly after the pointer flip, so failures here cost disk,
+    * not correctness. The keep set carries the live directory AND its
     * predecessor: a reader that resolved `_version` just before the
     * flip may still be scanning the previous directory, so the
     * predecessor survives one refresh cycle as its grace window
@@ -793,11 +798,13 @@ object BronzeMerge {
     val f = fs(spark, mvPath)
     val dir = new Path(mvPath)
     if (!f.exists(dir)) return
-    f.listStatus(dir).map(_.getPath).foreach { p =>
+    val listed = f.listStatus(dir).toSeq
+    listed.map(_.getPath).foreach { p =>
       val n = p.getName
       if (n.startsWith("data_v") && !keep.contains(n))
         f.delete(p, true)
     }
+    AtomicFile.sweepTemps(f, listed, _ == "_version")
   }
 
   /** The view definition, shared by refresh and rebuild. */

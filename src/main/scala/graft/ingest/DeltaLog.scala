@@ -286,7 +286,9 @@ object DeltaLog {
     * Delta's log-retention cleanup. With the default
     * [[DeltaLogConfig.retainVersions]] = 0 everything at or below the
     * checkpoint goes; a positive value keeps that many newest
-    * sub-checkpoint commits as a time-travel window. Checkpoint
+    * sub-checkpoint commits as a time-travel window. Publish temps a
+    * crashed writer left go too, once older than the newest version or
+    * `_last_checkpoint` kept ([[AtomicFile.sweepTemps]]). Checkpoint
     * parquets BELOW the retention anchor are reclaimed too (as
     * Delta's own cleanup does): every retained replay target anchors
     * at the retention-anchor checkpoint or newer, so older
@@ -304,7 +306,8 @@ object DeltaLog {
           if (cfg.retainVersions == 0) cp
           else bestCheckpoint(f, table, cp - cfg.retainVersions)
             .getOrElse(-1L) // no anchor below the window: keep all
-        val doomed = f.listStatus(logDir(table)).map(_.getPath).toSeq
+        val listed = f.listStatus(logDir(table)).toSeq
+        val doomed = listed.map(_.getPath)
           .filter { p =>
             val n = p.getName
             (n.matches("\\d{20}\\.json") &&
@@ -312,6 +315,9 @@ object DeltaLog {
             (n.matches("\\d{20}\\.checkpoint\\.parquet") && horizon >= 0 &&
               n.stripSuffix(".checkpoint.parquet").toLong < horizon)
           }
+        val doomedNames = doomed.map(_.getName).toSet
+        AtomicFile.sweepTemps(f, listed, n => !doomedNames(n) &&
+          (n == "_last_checkpoint" || n.matches("\\d{20}\\..*")))
         doomed.sortBy(_.getName).map { p =>
           f.delete(p, false)
           // a checksummed fs keeps a `.name.crc` sidecar — reclaim it

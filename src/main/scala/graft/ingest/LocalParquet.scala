@@ -40,8 +40,11 @@ object LocalParquet {
     * that produces them lazily holds one row at once (plus the
     * writer's buffered row group); no rows still write a valid file
     * that carries only the schema. The file is published with
-    * [[AtomicFile.replaceWith]]: a reader never sees a partial file.
-    * Returns the file's path. */
+    * [[AtomicFile.replaceWith]]: a reader never sees a partial file,
+    * and on the local filesystem a fixed `name` is swapped in by one
+    * rename, so a reader finds the old file or the new one. The
+    * parquet bytes themselves still go through Hadoop, which writes
+    * the file's `.crc`. Returns the file's path. */
   def write[T: Encoder](spark: SparkSession, dir: String, rows: Iterator[T],
       name: String = ""): Path = {
     val enc = encoderFor[T]
@@ -55,7 +58,7 @@ object LocalParquet {
       if (name.nonEmpty) name
       else s"part-00000-${java.util.UUID.randomUUID()}-c000" +
         factory.getFileExtension(ctx))
-    AtomicFile.replaceWith(job.getConfiguration, file) { (_, tmp) =>
+    AtomicFile.replaceWith(job.getConfiguration, file) { tmp =>
       val out = factory.newInstance(tmp.toString, schema, ctx)
       try {
         val toRow = enc.createSerializer()

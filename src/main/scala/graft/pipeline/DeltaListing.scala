@@ -140,12 +140,14 @@ final class DeltaListingProvider(
 
 /** File-based deltaLink checkpoint — the discovery-side analogue of a
   * streaming query's offset log: tiny (one URL), published with
-  * [[graft.ingest.AtomicFile.replace]] through Hadoop (so `dir` may
-  * live on any Hadoop filesystem), absent ⇒ initial sync. Lives NEXT
-  * TO the Structured Streaming checkpoint dir in a scheduled
-  * `Trigger.AvailableNow` run so both advance together; if the two
-  * ever diverge (delta checkpoint ahead of an aborted sink commit)
-  * the failure mode is re-fetching one change window — at-least-once,
+  * [[graft.ingest.AtomicFile.replace]] (so `dir` may live on any
+  * Hadoop filesystem; on the local one a save is one rename over the
+  * previous file, so a crash keeps the old deltaLink or the new one),
+  * absent ⇒ initial sync. Lives NEXT TO the Structured Streaming
+  * checkpoint dir in a scheduled `Trigger.AvailableNow` run so both
+  * advance together; if the two ever diverge (delta checkpoint ahead
+  * of an aborted sink commit) the failure mode is re-fetching one
+  * change window — at-least-once,
   * the same contract as the bronze MERGE's idempotent re-run (C4). */
 final class DeltaCheckpoint(dir: String) {
   private val file = new org.apache.hadoop.fs.Path(dir, "deltalink")

@@ -474,6 +474,12 @@ class IngestSpec extends SparkSpec {
     assert(BronzeMerge.currentCommit(spark, table) ==
       ((2, Seq("batch-00000001", "batch-00000002"))))
     assert(BronzeMerge.snapshot(spark, table).count() == 2)
+    // the crashed temp is older than version 2, so vacuum reclaims it
+    // and its crc
+    import scala.jdk.CollectionConverters._
+    BronzeMerge.vacuum(spark, table)
+    assert(Files.list(Paths.get(table, "_manifest")).iterator().asScala
+      .map(_.getFileName.toString).toSeq == Seq("v00000002"))
   }
 
   test("bucketed bronze publication joins on file identity with zero exchanges") {

@@ -8,9 +8,9 @@ import org.apache.hadoop.fs.{CreateFlag, FileContext, FileStatus, FileSystem,
   Path}
 import org.apache.hadoop.fs.Options.{CreateOpts, Rename}
 
-/** The one way a small metadata file is published: the bronze
-  * manifest, the rollup's `_version` pointer, the Delta log's version
-  * files and `_last_checkpoint`, the deltaLink checkpoint, and the
+/** The one way a small metadata file is published: the bronze Delta
+  * log's version files (each one a commit) and `_last_checkpoint`, the
+  * rollup's `_version` pointer, the deltaLink checkpoint, and the
   * files of [[LocalParquet.write]]. The bytes go to a writer-unique
   * hidden temp beside `target` (`.<name>-<uuid>.tmp`), which then
   * takes the target's name, so a reader never sees a partial write.
@@ -75,12 +75,11 @@ object AtomicFile {
     finally in.close()
   }
 
-  /** True for the name of a publish temp: `.<name>-<uuid>.tmp`, or the
-    * fixed `.tmp-vNNNNNNNN` that bronze manifest commits used before. */
+  /** True for the name of a publish temp: `.<name>-<uuid>.tmp`. */
   def isTemp(name: String): Boolean = TempName.matches(name)
 
-  private val TempName = ("""\..+-\p{XDigit}{8}(-\p{XDigit}{4}){3}""" +
-    """-\p{XDigit}{12}\.tmp|\.tmp-v\d{8}""").r
+  private val TempName =
+    """\..+-\p{XDigit}{8}(-\p{XDigit}{4}){3}-\p{XDigit}{12}\.tmp""".r
 
   /** Delete the temps in `listed`, one listing of a dir, whose mtime is
     * strictly older than the newest file in it that `kept` names (the

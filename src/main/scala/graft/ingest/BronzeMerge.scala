@@ -6,12 +6,12 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-/** Delta-SEMANTICS bronze table over plain parquet + a versioned
-  * manifest, for environments without the Delta jars (this container
-  * has none). The reference names a Lakehouse Delta table as its
-  * bronze sink (`config.py:16`, README.md:129-138) but only ever
-  * blind-appends; this sink supplies the semantics that actually
-  * matter for its at-least-once re-runs (SURVEY C4):
+/** Delta bronze table over plain parquet and a Delta transaction log
+  * ([[DeltaLog]]) written without the Delta jars. The reference names
+  * a Lakehouse Delta table as its bronze sink (`config.py:16`,
+  * README.md:129-138) but only ever blind-appends; this sink supplies
+  * the semantics that actually matter for its at-least-once re-runs
+  * (SURVEY C4):
   *
   *  - **Idempotent MERGE on file identity**: a file is keyed by
   *    (file_name, length, modified) — plus `source_item_id` when the
@@ -23,26 +23,27 @@ import org.apache.spark.sql.types.StructType
   *    item's blob, while a byte-identical RE-CREATE under a fresh id
   *    is a new identity and lands — the delete-then-recreate churn
   *    the name+size key could not tell apart.
-  *  - **Snapshot isolation**: readers see only batch directories named
-  *    by the latest commit record, so a crashed half-written batch is
-  *    invisible until its commit lands (the `_delta_log` idea, one
-  *    text file per version).
-  *  - **Atomic commit with CAS**: version files are published with
-  *    [[AtomicFile.claim]]; an existing target version means a
-  *    concurrent writer won — the loser fails loudly instead of
-  *    corrupting.
+  *  - **Snapshot isolation**: readers see only the batch directories
+  *    the live `add` actions of the latest log version lie in (a batch
+  *    name is each path's first segment), so a crashed half-written
+  *    batch is invisible until its commit lands.
+  *  - **Atomic commit with CAS**: a commit is one [[AtomicFile.claim]]
+  *    of the next `_delta_log/` version file ([[DeltaLog.commit]]); an
+  *    existing target version means a concurrent writer won — the
+  *    loser fails loudly instead of corrupting.
   *
   * Scale notes (100 TB): the anti-join is executor-side against the
   * committed-keys parquet (O(files) metadata, never content); data
   * lands in fresh batch directories so no commit ever rewrites
-  * existing bytes; the manifest is O(batches) text. Swap-in path: with
-  * Delta jars on the classpath, `mergeIngest` becomes
+  * existing bytes; a commit logs O(changed files) JSON. Swap-in path:
+  * with Delta jars on the classpath, `mergeIngest` becomes
   * `DeltaTable.merge(...).whenNotMatched.insertAll()` and the layout
   * below disappears — callers only see [[mergeIngest]]/[[snapshot]].
   *
   * Layout: `<table>/batch-NNNNNNNN/` (data parquet),
   * `<table>/_keys/batch-NNNNNNNN/` (identity keys of that batch),
-  * `<table>/_manifest/vNNNNNNNN` (committed batch names, one/line).
+  * `<table>/_delta_log/` (the commits). Bronze version N is log
+  * version N−1 (Delta counts from 0); version 0 is the empty table.
   */
 object BronzeMerge {
 
@@ -73,14 +74,12 @@ object BronzeMerge {
   private def fs(spark: SparkSession, table: String): FileSystem =
     new Path(table).getFileSystem(spark.sessionState.newHadoopConf())
 
-  private def manifestDir(table: String) = new Path(table, "_manifest")
-
   /** First collision-free directory name for a commit attempt: the
     * deterministic `base` normally; a uniquified `-rXXXX` alternative
     * when a CRASHED attempt (data written, commit never reached — the
     * mid-batch-failure streaming case) or a concurrent writer left
     * the plain name occupied. The orphan stays invisible — readers
-    * resolve names only through committed manifests — and [[vacuum]]
+    * resolve names only through committed log versions — and [[vacuum]]
     * sweeps any `batch-*` directory the live commit doesn't name. */
   private def freshBatchName(f: FileSystem, table: String,
       base: String): String = {
@@ -93,30 +92,35 @@ object BronzeMerge {
     }
   }
 
+  /** Sorted batch names live at log version `v`, replayed on the
+    * driver ([[DeltaLog.state]]). */
+  private def batchesAt(spark: SparkSession, table: String,
+      v: Long): Seq[String] =
+    DeltaLog.state(spark, table, Some(v))._1
+      .map(a => DeltaLog.batchOf(a.path)).distinct.sorted
+
   /** Latest committed (version, batch names); (0, Nil) = empty table. */
   def currentCommit(spark: SparkSession, table: String): (Int, Seq[String]) = {
-    val f = fs(spark, table)
-    val dir = manifestDir(table)
-    if (!f.exists(dir)) return (0, Nil)
-    val versions = f.listStatus(dir).map(_.getPath.getName)
-      .filter(_.matches("v\\d{8}")).sorted
-    if (versions.isEmpty) (0, Nil)
-    else (versions.last.drop(1).toInt,
-      AtomicFile.read(f, new Path(dir, versions.last))
-        .linesIterator.filter(_.nonEmpty).toSeq)
+    val top = DeltaLog.latestLogVersion(spark, table)
+    if (top < 0) (0, Nil) else ((top + 1).toInt, batchesAt(spark, table, top))
   }
 
   /** Committed batch names at an arbitrary version — the time-travel
     * primitive (`VERSION AS OF` in Delta terms). Batches are
-    * immutable once committed, so any still-present version file
-    * reproduces that snapshot exactly. */
+    * immutable once committed, so a version whose log history and
+    * batch directories survive reproduces that snapshot exactly; one
+    * that [[vacuum]] or [[DeltaLog.cleanObsoleteLogs]] reclaimed
+    * fails loudly. */
   def commitAt(spark: SparkSession, table: String,
       version: Int): Seq[String] = {
     val f = fs(spark, table)
-    val vf = new Path(manifestDir(table), f"v$version%08d")
-    require(f.exists(vf),
-      s"bronze version $version does not exist (vacuumed or never written)")
-    AtomicFile.read(f, vf).linesIterator.filter(_.nonEmpty).toSeq
+    require(version >= 1 &&
+      version - 1L <= DeltaLog.latestLogVersion(spark, table),
+      s"bronze version $version does not exist")
+    val batches = batchesAt(spark, table, version - 1L)
+    require(batches.forall(b => f.exists(new Path(table, b))),
+      s"bronze version $version was vacuumed")
+    batches
   }
 
   /** Time-travel read: the table exactly as of `version`. */
@@ -127,10 +131,10 @@ object BronzeMerge {
   }
 
   /** Compaction — the small-file answer: rewrite the current snapshot
-    * into ONE new batch and commit a manifest naming only it. Old
+    * into ONE new batch and commit a version naming only it. Old
     * batches are untouched (old versions still time-travel); reclaim
     * them with [[vacuum]]. At 100 TB this runs per-partition-range on
-    * a schedule; the manifest CAS makes it safe next to live ingests
+    * a schedule; the commit CAS makes it safe next to live ingests
     * (a concurrent commit wins the rename and compaction fails loudly,
     * to be retried against the new version). Returns the new version.
     *
@@ -171,7 +175,6 @@ object BronzeMerge {
       .distinct()
       .write.mode(SaveMode.Overwrite).parquet(s"$table/_keys/$batchName")
     commit(f, table, ver + 1, Seq(batchName))
-    DeltaLog.sync(spark, table)
     ver + 1
   }
 
@@ -180,7 +183,7 @@ object BronzeMerge {
     * batch (a schema-merging scan, so a column some batches lack
     * reads null there) finds the batches holding matches; only those
     * are rewritten without them, the rest keep their name (and bytes)
-    * in the new manifest. Old versions still time-travel to the
+    * in the new version. Old versions still time-travel to the
     * pre-delete data until [[vacuum]] reclaims them — run vacuum to
     * make the erasure physical. Identity KEYS are retained on
     * purpose: a deleted file's key still blocks re-ingest, so
@@ -298,7 +301,6 @@ object BronzeMerge {
       if (newBatches == batches) (ver, 0L)
       else {
         commit(f, table, ver + 1, newBatches)
-        DeltaLog.sync(spark, table)
         (ver + 1, filled)
       }
     } finally { map.unpersist(); () }
@@ -347,7 +349,6 @@ object BronzeMerge {
       }
     }
     commit(f, table, ver + 1, newBatches)
-    DeltaLog.sync(spark, table)
     (ver + 1, perBatch.values.sum)
   }
 
@@ -381,11 +382,10 @@ object BronzeMerge {
         s"${missing.mkString(",")} (compaction/delete) — " +
         "the append-only change feed cannot represent that window")
     val added = after.filterNot(before.toSet)
-    // Empty windows exist (e.g. a span covering only a vacuum commit,
-    // which bumps the version without changing the batch set). The
-    // empty relation must still carry the PINNED schema: after a
-    // schema evolution, snapshot()'s current schema differs from the
-    // stream's pinned one and would hand the sink a mismatched batch.
+    // An empty window (no batch added) must still carry the PINNED
+    // schema: after a schema evolution, snapshot()'s current schema
+    // differs from the stream's pinned one and would hand the sink a
+    // mismatched batch.
     if (added.isEmpty) readSchema match {
       case Some(sc) => spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sc)
@@ -397,14 +397,12 @@ object BronzeMerge {
     }
   }
 
-  /** Reclaim batches no longer referenced by the LATEST commit and
-    * drop older manifest versions — forfeits time travel for space.
-    * Publish temps a crashed commit left in `_manifest/` go too, once
-    * older than the latest version ([[AtomicFile.sweepTemps]]).
-    * The `_delta_log/` mirror is deliberately left intact (as Delta's
-    * own VACUUM does): old log versions reference now-deleted files,
-    * so physical time travel below the current version is forfeited,
-    * while replay to HEAD still resolves exactly the live files.
+  /** Reclaim batches no longer referenced by the LATEST commit —
+    * forfeits time travel to the versions that named them
+    * ([[commitAt]] refuses those). The `_delta_log/` is left intact
+    * (as Delta's own VACUUM does): replay to HEAD still resolves
+    * exactly the live files. Publish temps a crashed commit left in it
+    * go, once older than the latest version ([[AtomicFile.sweepTemps]]).
     * Returns the deleted batch names. */
   def vacuum(spark: SparkSession, table: String): Seq[String] = {
     val f = fs(spark, table)
@@ -417,11 +415,12 @@ object BronzeMerge {
       f.delete(new Path(table, b), true)
       f.delete(new Path(s"$table/_keys", b), true)
     }
-    val manifests = f.listStatus(manifestDir(table)).toSeq
-    manifests.map(_.getPath.getName)
-      .filter(v => v.matches("v\\d{8}") && v.drop(1).toInt < ver)
-      .foreach(v => f.delete(new Path(manifestDir(table), v), false))
-    AtomicFile.sweepTemps(f, manifests, _ == f"v$ver%08d")
+    // the newest version is a JSON commit or, once cleanup reclaimed
+    // that, the checkpoint at the same version
+    val head = f"${ver - 1}%020d."
+    AtomicFile.sweepTemps(f,
+      f.listStatus(new Path(table, DeltaLog.LogDirName)).toSeq,
+      _.startsWith(head))
     dead.sorted
   }
 
@@ -479,7 +478,7 @@ object BronzeMerge {
     * build on (tests interleave a competing full commit
     * deterministically — IngestSpec's concurrent-writer test); the
     * second runs after data and keys have landed but BEFORE the
-    * manifest commit — the mid-batch-crash point (StreamsSpec's
+    * commit — the mid-batch-crash point (StreamsSpec's
     * kill/restart test). Production callers leave both defaults. */
   def mergeIngestDf(spark: SparkSession, src: DataFrame,
       table: String, onSnapshotRead: () => Unit = () => (),
@@ -531,10 +530,6 @@ object BronzeMerge {
       .write.mode(SaveMode.Overwrite).parquet(s"$table/_keys/$batchName")
     onBeforeCommit()
     commit(f, table, ver + 1, batches :+ batchName)
-    // mirror the commit into the external-interop _delta_log (see
-    // DeltaLog): sync is idempotent and self-healing, so a crash right
-    // here just leaves the log to be backfilled by the next commit
-    DeltaLog.sync(spark, table)
     appended
   }
 
@@ -823,16 +818,13 @@ object BronzeMerge {
     spark.read.parquet(s"$mvPath/${ptr.get._1}")
   }
 
-  /** Publish the version file with [[AtomicFile.claim]]; an existing
-    * target means a concurrent writer committed first — fail loudly.
-    * Package-visible so IngestSpec can drive the CAS conflict
-    * deterministically. */
+  /** Commit bronze `version` naming exactly `batches`, on top of
+    * version − 1 ([[DeltaLog.commit]]); an existing target means a
+    * concurrent writer committed first — fail loudly. Package-visible
+    * so IngestSpec can drive the CAS conflict deterministically. */
   private[graft] def commit(f: FileSystem, table: String, version: Int,
-      batches: Seq[String]): Unit = {
-    val dir = manifestDir(table)
-    if (!AtomicFile.claim(f.getConf, new Path(dir, f"v$version%08d"),
-        batches.mkString("\n") + "\n"))
-      throw new IllegalStateException(
-        s"bronze commit conflict: version $version already exists at $dir")
-  }
+      batches: Seq[String]): Unit =
+    if (!DeltaLog.commit(SparkSession.active, f, table, version - 1L, batches))
+      throw new IllegalStateException(s"bronze commit conflict: version " +
+        s"$version already exists at ${new Path(table, DeltaLog.LogDirName)}")
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * "statistics in the transaction log" idea (min/max per file per
   * column, prune files whose range cannot satisfy the predicate)
   * rebuilt on the same no-Delta-jars footing as
-  * [[BronzeMerge]]'s manifest. The reference's bronze sink
+  * [[BronzeMerge]]'s log. The reference's bronze sink
   * (`/root/reference/config.py:16`) names a Lakehouse Delta table,
   * whose engine does exactly this pruning on read; here it is explicit
   * and testable.

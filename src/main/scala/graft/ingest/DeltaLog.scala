@@ -9,88 +9,41 @@ import org.apache.spark.sql.types.{DataType, StructType}
 
 import scala.collection.mutable
 
-/** Tuning knobs for the `_delta_log/` mirror. Both trade replay /
-  * time-travel depth against log size, exactly as Delta's own
-  * `delta.checkpointInterval` / `delta.logRetentionDuration` do.
-  *
-  * @param checkpointInterval write a parquet checkpoint every this
-  *        many commits. Smaller = cheaper replay + faster sync
-  *        restart, more checkpoint churn; larger = longer JSON tails.
-  * @param retainVersions how many versions behind the current
-  *        checkpoint must stay TIME-TRAVELABLE after
-  *        [[DeltaLog.cleanObsoleteLogs]]. 0 (default) reclaims all
-  *        JSON at/below the checkpoint: HEAD reads are unaffected
-  *        (checkpoint + tail) but JSON-replay time travel below it is
-  *        forfeited — the standard log-retention trade. A positive
-  *        value anchors the cleanup at the newest checkpoint ≤
-  *        (checkpoint − retainVersions): everything from that anchor
-  *        up stays replayable (a retained JSON file is only useful if
-  *        the replay can still reach a checkpoint at or below the
-  *        target version).
-  */
-final case class DeltaLogConfig(checkpointInterval: Int = 10,
-    retainVersions: Int = 0) {
-  require(checkpointInterval > 0,
-    s"checkpointInterval must be positive, got $checkpointInterval")
-  require(retainVersions >= 0,
-    s"retainVersions must be >= 0, got $retainVersions")
-}
-
-/** Minimal Delta-Lake transaction log (`_delta_log/`) alongside
-  * [[BronzeMerge]]'s private manifest, so the reference's one named
-  * sink — a Lakehouse **Delta** table (`/root/reference/config.py:16`,
-  * `README.md:129-138`) — is readable by an EXTERNAL Delta client,
-  * not only by this library. Follows the public Delta transaction
-  * protocol (delta.io PROTOCOL.md): one `NNNNNNNNNNNNNNNNNNNN.json`
-  * per version, newline-delimited action objects —
-  * `protocol` (version 0), `metaData` (version 0 and on schema
-  * evolution), `add` / `remove` file actions with sizes and
+/** The `_delta_log/` of a [[BronzeMerge]] table: its one commit
+  * record. The reference names one sink, a Lakehouse **Delta** table
+  * (`config.py:16`, `README.md:129-138`), and the log is written to
+  * the public Delta transaction protocol (delta.io PROTOCOL.md), so
+  * an EXTERNAL Delta client reads the table too: one
+  * `NNNNNNNNNNNNNNNNNNNN.json` per version, newline-delimited action
+  * objects — `protocol` (version 0), `metaData` (version 0 and on
+  * schema evolution), `add` / `remove` file actions with sizes and
   * modification times, and a `commitInfo` provenance line. `path`
   * fields are percent-encoded relative paths per the protocol;
   * [[read]] decodes them before opening files.
   *
-  * Design: the manifest stays the COMMIT source of truth (its CAS
-  * rename is the atomicity point); the delta log is a deterministic
-  * MIRROR derived from it by [[sync]]. Sync is idempotent and
-  * self-healing: a crash between manifest commit and log write just
-  * leaves the log lagging, and the next sync backfills every missing
-  * version (diffing consecutive manifests batch-by-batch). If an old
-  * manifest was vacuumed before its log version could be written, the
-  * gap versions are filled with empty `commitInfo` commits and the
-  * final version carries the cumulative diff — replay still lands on
-  * exactly the current snapshot (Delta's own "log replay" contract).
+  * A commit ([[commit]]) is ONE [[AtomicFile.claim]] of the next
+  * version file: the first writer wins, a loser publishes nothing.
+  * The batch set of a version is the set of first path segments of
+  * its live `add`s; everything a bronze reader resolves comes from
+  * replaying the log ([[state]]).
   *
-  * Concurrency: version files are published with [[AtomicFile.claim]]
-  * (first writer wins), and after every attempt the
-  * syncer REPLAYS THE FILE THE LOG ACTUALLY CONTAINS into its running
-  * state rather than trusting the diff it computed. Two syncers —
-  * even one racing a concurrent [[BronzeMerge.vacuum]], where the
-  * laggard finds manifests gone and writes filler commits — therefore
-  * converge: every later version is computed against the winner's
-  * published state, never against a private in-memory view the log
-  * does not contain.
-  *
-  * Scale notes (100 TB): sync appends O(changed files) JSON per
-  * commit — the same cost Delta's own writers pay. Replay cost is
-  * bounded the way Delta itself bounds it: every
-  * [[DeltaLogConfig.checkpointInterval]] commits, sync writes a
-  * PARQUET CHECKPOINT (`NNN.checkpoint.parquet`, one row per action
-  * with the protocol / metaData / add struct columns the Delta
-  * protocol specifies) plus the `_last_checkpoint` pointer, and
-  * replay resolves checkpoint + JSON tail instead of the whole
-  * history. The checkpoint-bounded snapshot is computed
-  * DISTRIBUTIVELY ([[stateDf]]): the previous checkpoint is read as
-  * a DataFrame, the ≤interval JSON tail (O(changed files), the only
-  * driver-parsed part) is applied as a broadcast anti-join + union,
-  * and the next checkpoint is written straight from that plan — no
-  * driver-side materialization of the live-file set, which at 100 TB
-  * is millions of rows. JSON commits at or below a checkpoint become
+  * Scale notes (100 TB): a commit appends O(changed files) JSON — the
+  * same cost Delta's own writers pay. Replay cost is bounded the way
+  * Delta itself bounds it: every 10 commits a PARQUET CHECKPOINT
+  * (`NNN.checkpoint.parquet`, one row per action with the protocol /
+  * metaData / add struct columns the Delta protocol specifies) is
+  * written with the `_last_checkpoint` pointer, and replay resolves
+  * checkpoint + JSON tail instead of the whole history. The
+  * checkpoint itself is computed DISTRIBUTIVELY ([[stateDf]]): the
+  * previous checkpoint is read as a DataFrame, the ≤10-commit JSON
+  * tail is applied as a broadcast anti-join + union, and the next
+  * checkpoint is written straight from that plan. A commit resolves
+  * its base on the driver instead ([[state]]: the one checkpoint file
+  * read with [[LocalParquet.read]] plus the tail), which runs no
+  * Spark job. JSON commits at or below the checkpoint become
   * redundant for HEAD reads and can be reclaimed with
-  * [[cleanObsoleteLogs]] (forfeiting JSON-replay time travel below
-  * the checkpoint — Delta's own log-retention trade, see
-  * [[DeltaLogConfig.retainVersions]]). [[BronzeMerge]] callers still
-  * read through the manifest (O(1) version file) and never replay;
-  * the log is the interop surface.
+  * [[cleanObsoleteLogs]] (forfeiting time travel below it — Delta's
+  * own log-retention trade).
   */
 object DeltaLog {
 
@@ -99,6 +52,9 @@ object DeltaLog {
   /** One live data file in the replayed state. `path` is the raw
     * (percent-encoded) relative path exactly as logged. */
   final case class AddFile(path: String, size: Long, modificationTime: Long)
+
+  /** A parquet checkpoint is written every this many commits. */
+  private val CheckpointInterval = 10
 
   private def logDir(table: String) = new Path(table, LogDirName)
 
@@ -150,7 +106,7 @@ object DeltaLog {
       .filter(v => f.exists(checkpointFile(table, v)))
 
   /** True iff a replay anchored at checkpoint `cp` can reach `top`:
-    * every JSON tail version exists. ≤ checkpointInterval existence
+    * every JSON tail version exists. ≤ [[CheckpointInterval]] existence
     * probes on a healthy log (the tail is read right after anyway). */
   private def anchors(f: FileSystem, table: String, cp: Long,
       top: Long): Boolean =
@@ -193,7 +149,8 @@ object DeltaLog {
 
   // checkpoint row layout per the Delta protocol: one action per row,
   // nullable struct columns (txn omitted: this writer issues none;
-  // remove tombstones omitted: vacuum here is manifest-driven)
+  // remove tombstones omitted: vacuum deletes only files no live add
+  // names)
   private[graft] final case class CpFormat(provider: String,
       options: Map[String, String])
   private[graft] final case class CpMetaData(id: String, format: CpFormat,
@@ -214,10 +171,9 @@ object DeltaLog {
     * DISTRIBUTED snapshot plan ([[stateDf]]) — previous checkpoint
     * parquet + JSON-tail diff — so no driver-side collect of the
     * live-file set happens even with millions of files. Returns false
-    * (no-op) when the log at `v` carries no metaData yet — the
-    * vacuumed-gap backfill writes filler commits whose state is
-    * uncheckpointable, and a skipped optimization must never fail a
-    * commit that already landed. */
+    * (no-op) when the state at `v` can no longer be rebuilt (its
+    * history was reclaimed) or carries no metaData: a skipped
+    * optimization must never fail a commit that already landed. */
   def writeCheckpoint(spark: SparkSession, table: String,
       v: Long): Boolean = {
     import spark.implicits._
@@ -282,38 +238,28 @@ object DeltaLog {
     true
   }
 
-  /** Drop JSON commits the current checkpoint makes redundant —
-    * Delta's log-retention cleanup. With the default
-    * [[DeltaLogConfig.retainVersions]] = 0 everything at or below the
-    * checkpoint goes; a positive value keeps that many newest
-    * sub-checkpoint commits as a time-travel window. Publish temps a
-    * crashed writer left go too, once older than the newest version or
-    * `_last_checkpoint` kept ([[AtomicFile.sweepTemps]]). Checkpoint
-    * parquets BELOW the retention anchor are reclaimed too (as
-    * Delta's own cleanup does): every retained replay target anchors
-    * at the retention-anchor checkpoint or newer, so older
-    * checkpoints serve no read — without this, one parquet per
-    * [[DeltaLogConfig.checkpointInterval]] commits accumulates
-    * forever. HEAD reads are unaffected either way (checkpoint +
-    * tail). Returns the deleted file names. */
-  def cleanObsoleteLogs(spark: SparkSession, table: String,
-      cfg: DeltaLogConfig = DeltaLogConfig()): Seq[String] = {
+  /** Drop the JSON commits at or below the current checkpoint, which
+    * HEAD reads no longer need — Delta's log-retention cleanup, which
+    * forfeits time travel below the checkpoint. Older checkpoint
+    * parquets go too (as Delta's own cleanup does): every remaining
+    * replay target anchors at the current checkpoint, so without this
+    * one parquet per [[CheckpointInterval]] commits accumulates
+    * forever. Publish temps a crashed writer left go too, once older
+    * than the newest version or `_last_checkpoint` kept
+    * ([[AtomicFile.sweepTemps]]). Returns the deleted file names. */
+  def cleanObsoleteLogs(spark: SparkSession, table: String): Seq[String] = {
     val f = fs(spark, table)
     lastCheckpoint(f, table) match {
       case None => Seq.empty
       case Some(cp) =>
-        val horizon =
-          if (cfg.retainVersions == 0) cp
-          else bestCheckpoint(f, table, cp - cfg.retainVersions)
-            .getOrElse(-1L) // no anchor below the window: keep all
         val listed = f.listStatus(logDir(table)).toSeq
         val doomed = listed.map(_.getPath)
           .filter { p =>
             val n = p.getName
             (n.matches("\\d{20}\\.json") &&
-              n.stripSuffix(".json").toLong <= horizon) ||
-            (n.matches("\\d{20}\\.checkpoint\\.parquet") && horizon >= 0 &&
-              n.stripSuffix(".checkpoint.parquet").toLong < horizon)
+              n.stripSuffix(".json").toLong <= cp) ||
+            (n.matches("\\d{20}\\.checkpoint\\.parquet") &&
+              n.stripSuffix(".checkpoint.parquet").toLong < cp)
           }
         val doomedNames = doomed.map(_.getName).toSet
         AtomicFile.sweepTemps(f, listed, n => !doomedNames(n) &&
@@ -329,9 +275,9 @@ object DeltaLog {
     }
   }
 
-  /** Data files of a committed batch directory, as (relative path,
-    * size, mtime) — parquet parts only, never `_SUCCESS`/stats
-    * sidecars. Paths are percent-encoded for the log. */
+  /** Data files of a batch directory, as (relative path, size, mtime)
+    * — parquet parts only, never `_SUCCESS`/stats sidecars. Paths are
+    * percent-encoded for the log. */
   private def batchFiles(f: FileSystem, table: String,
       batch: String): Seq[AddFile] = {
     val dir = new Path(table, batch)
@@ -347,9 +293,8 @@ object DeltaLog {
     * running view. Returns, per touched path in first-touch order,
     * the FINAL outcome across the range — `Some(addFile)` if the last
     * action was an add, `None` if a remove — plus the last metaData
-    * schema seen (if any). This is the only driver-parsed piece of a
-    * checkpointed replay, and it is bounded: ≤ checkpointInterval
-    * commits of O(changed files) JSON each. */
+    * schema seen (if any). On a checkpointed log it is bounded:
+    * ≤ [[CheckpointInterval]] commits of O(changed files) JSON each. */
   private def tailActions(f: FileSystem, table: String, from: Long,
       to: Long): (mutable.LinkedHashMap[String, Option[AddFile]],
         Option[StructType]) = {
@@ -424,35 +369,45 @@ object DeltaLog {
     }
   }
 
+  // the columns of a checkpoint row a driver-side replay reads
+  private[ingest] final case class CpSchemaString(schemaString: String)
+  private[ingest] final case class CpLive(metaData: Option[CpSchemaString],
+      add: Option[AddFile])
+
   /** Replay the log through `version` (inclusive; None = latest):
     * (live files, table schema from the latest metaData), on the
-    * driver. Checkpointed histories resolve through the distributed
-    * [[stateDf]] plan and collect only the final list (what a path
-    * enumeration inherently needs); checkpoint-free histories replay
-    * the JSON directly. Full-history JSON replay happens only for
-    * time travel below the checkpoint (valid while those commits
-    * survive [[cleanObsoleteLogs]]). */
+    * driver and without a Spark job — the newest usable checkpoint is
+    * read with [[LocalParquet.read]] (only its metaData schema and add
+    * path/size/mtime columns), then the JSON tail is applied. The
+    * live-file list is what a path enumeration inherently needs; the
+    * distributed twin, [[stateDf]], feeds the checkpoint writer. Full
+    * JSON replay happens only without a checkpoint at or below
+    * `version` (valid while those commits survive
+    * [[cleanObsoleteLogs]]). */
   def state(spark: SparkSession, table: String,
       version: Option[Long] = None): (Seq[AddFile], Option[StructType]) = {
     import spark.implicits._
     val f = fs(spark, table)
     val top = version.getOrElse(latestLogVersion(spark, table))
     if (top < 0) return (Seq.empty, None)
-    bestCheckpoint(f, table, top) match {
-      case None =>
-        val (touched, schema) = tailActions(f, table, 0L, top)
-        (touched.valuesIterator.flatten.toSeq, schema)
-      case Some(_) =>
-        val (df, schema) = stateDf(spark, table, Some(top))
-        (df.as[AddFile].collect().toSeq, schema)
+    val (base, baseSchema, from) = bestCheckpoint(f, table, top) match {
+      case None => (Seq.empty[AddFile], None, 0L)
+      case Some(cp) =>
+        val rows = LocalParquet.read[CpLive](spark,
+          checkpointFile(table, cp).toString)
+        (rows.flatMap(_.add), rows.flatMap(_.metaData).lastOption
+          .map(m => DataType.fromJson(m.schemaString).asInstanceOf[StructType]),
+          cp + 1)
     }
+    val (touched, tailSchema) = tailActions(f, table, from, top)
+    (base.filterNot(a => touched.contains(a.path)) ++
+      touched.valuesIterator.flatten, tailSchema.orElse(baseSchema))
   }
 
   /** Read the table the way an external Delta client would: resolve
-    * the live file set and schema purely from the log — never from
-    * the manifest — and scan exactly those parquet files (decoding
-    * the protocol's percent-encoded paths). `version` time-travels
-    * (`VERSION AS OF`). */
+    * the live file set and the metaData schema from the log, and scan
+    * exactly those parquet files (decoding the protocol's
+    * percent-encoded paths). `version` time-travels (`VERSION AS OF`). */
   def read(spark: SparkSession, table: String,
       version: Option[Long] = None): DataFrame = {
     val (files, schemaOpt) = state(spark, table, version)
@@ -465,141 +420,70 @@ object DeltaLog {
       .parquet(files.map(a => s"$table/${decodePath(a.path)}"): _*)
   }
 
-  /** Bring `_delta_log/` up to the manifest's current version; returns
-    * the latest delta version after sync (-1 on an empty table).
-    * Manifest version N ↔ delta version N−1 (Delta counts from 0).
-    * Idempotent; safe to call after every commit, after crashes, and
-    * concurrently with other syncers or a vacuum (see the
-    * object-level concurrency note: each version's published content
-    * is adopted into the running state, win or lose). */
-  def sync(spark: SparkSession, table: String,
-      cfg: DeltaLogConfig = DeltaLogConfig()): Long = {
-    val f = fs(spark, table)
-    val (cur, curBatches) = BronzeMerge.currentCommit(spark, table)
-    if (cur == 0) return -1L
-    val target = cur - 1L
-    val logged = latestLogVersion(spark, table)
-    if (logged >= target) return logged
+  /** The batch directory a logged path lies in: its first segment. */
+  private[ingest] def batchOf(path: String): String =
+    decodePath(path).takeWhile(_ != '/')
 
-    // running state: what the log says is live just before the first
-    // version we are about to write (empty log → empty state)
-    val (liveFiles, loggedSchema) =
-      if (logged < 0) (Seq.empty[AddFile], None)
-      else state(spark, table, Some(logged))
-    val live = mutable.LinkedHashMap[String, AddFile]()
-    liveFiles.foreach(a => live(a.path) = a)
-    var schema: Option[StructType] = loggedSchema
-
-    def batchesOf(files: Iterable[AddFile]): Set[String] =
-      files.map(_.path.takeWhile(_ != '/')).toSet
-
-    var v = logged + 1
-    while (v <= target) {
-      val manifestVersion = (v + 1).toInt
-      // the batch list this delta version must land on; None when the
-      // intermediate manifest was vacuumed (filler commit, diff later)
-      val desired: Option[Seq[String]] =
-        if (manifestVersion == cur) Some(curBatches)
-        else scala.util.Try(
-          BronzeMerge.commitAt(spark, table, manifestVersion)).toOption
-      val lines = mutable.Buffer[String]()
-      if (v == 0)
-        lines += """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""
-      desired match {
-        case None =>
-          lines += commitInfoJson(v, "SKIPPED (manifest vacuumed)")
-        case Some(batches) =>
-          val have = batchesOf(live.values)
-          val want = batches.toSet
-          val removed = live.values.toSeq
-            .filterNot(a => want.contains(a.path.takeWhile(_ != '/')))
-          val addedBatches = batches.filterNot(have.contains)
-          val added = addedBatches.flatMap(b => batchFiles(f, table, b))
-          // schema: evolution here is ADDITIVE (bronze batches only
-          // ever introduce columns), so per-commit cost is the
-          // footers of the ADDED batches, read on the driver
-          // (LocalParquet.schema, no Spark job), merged onto the
-          // logged schema — never a rescan of every live batch
-          // (O(changed files), the streaming hot path's bound). Every
-          // batch's footers are read exactly once: the first commit
-          // that establishes metaData.
-          val newSchema = (schema, addedBatches) match {
-            case (s0, Nil) => s0
-            case (None, _) if batches.nonEmpty =>
-              Some(LocalParquet.schema(spark, batches.map(b => s"$table/$b")))
-            case (Some(prev), adds) =>
-              val addSch =
-                LocalParquet.schema(spark, adds.map(b => s"$table/$b"))
-              // the additive assumption must FAIL LOUDLY when broken:
-              // silently keeping the stale type would log a schema
-              // that conflicts with the new files' footers, so an
-              // external reader and the manifest-path schema-merging
-              // read would disagree
-              val conflicts = addSch.fields.flatMap { fd =>
-                prev.fields.find(_.name == fd.name)
-                  .filter(_.dataType != fd.dataType)
-                  .map(p => s"${fd.name}: ${p.dataType.simpleString} vs " +
-                    s"${fd.dataType.simpleString}")
-              }
-              require(conflicts.isEmpty,
-                s"non-additive schema change in batches " +
-                  s"${adds.mkString(",")} at $table — bronze schema " +
-                  s"evolution is additive-only: ${conflicts.mkString("; ")}")
-              val known = prev.fieldNames.toSet
-              Some(StructType(
-                prev.fields ++ addSch.fields.filterNot(fd =>
-                  known.contains(fd.name))))
-            case (s0, _) => s0
+  /** Publish version `v`, whose live batches are `batches`, on top of
+    * the state at `v - 1`: `remove` actions for the files of batches
+    * that left the set, `add` actions for the parquet parts of batches
+    * that joined it, and a `metaData` action when the added footers
+    * widen the schema. Footers are read on the driver
+    * ([[LocalParquet.schema]]), only those of the added batches.
+    * Bronze evolution is additive-only, so a column whose type changes
+    * fails loudly here, before anything is published. The version file
+    * is claimed with [[AtomicFile.claim]]; returns false, having
+    * published nothing, when a concurrent writer claimed `v` first.
+    * The winner of every [[CheckpointInterval]]-th version also
+    * writes a checkpoint. */
+  private[ingest] def commit(spark: SparkSession, f: FileSystem,
+      table: String, v: Long, batches: Seq[String]): Boolean = {
+    val (live, schema) =
+      if (v == 0) (Seq.empty[AddFile], None)
+      else state(spark, table, Some(v - 1))
+    val have = live.map(a => batchOf(a.path)).toSet
+    val want = batches.toSet
+    val adds = batches.distinct.filterNot(have)
+      .flatMap(b => batchFiles(f, table, b))
+    val added = adds.map(a => batchOf(a.path)).distinct
+    val newSchema =
+      if (added.isEmpty) schema
+      else Some {
+        val more = LocalParquet.schema(spark, added.map(b => s"$table/$b"))
+        schema.fold(more) { prev =>
+          val conflicts = more.fields.flatMap { fd =>
+            prev.find(_.name == fd.name).filter(_.dataType != fd.dataType)
+              .map(p => s"${fd.name}: ${p.dataType.simpleString} vs " +
+                s"${fd.dataType.simpleString}")
           }
-          if (newSchema.isDefined && newSchema.map(_.json) != schema.map(_.json))
-            lines += metaDataJson(table, newSchema.get)
-          removed.foreach(a => lines += removeJson(a))
-          added.foreach(a => lines += addJson(a))
-          lines += commitInfoJson(v, "WRITE")
-      }
-      val won = AtomicFile.claim(spark.sessionState.newHadoopConf(),
-        logFile(table, v), lines.mkString("\n") + "\n")
-      // adopt the version's ACTUAL content — ours if the rename won
-      // (the published bytes are exactly `lines`; no re-read), a
-      // concurrent syncer's otherwise. Trusting the locally computed
-      // diff on a LOST race is the vacuum race: a laggard that found
-      // manifests vacuumed writes filler + a cumulative diff, and a
-      // stale winner's later versions could omit removes for files
-      // the real log added. Replaying the published content keeps
-      // every syncer's running state equal to the log itself.
-      val published: Iterator[String] =
-        if (won) lines.iterator
-        else AtomicFile.read(f, logFile(table, v)).linesIterator
-      published.filter(_.nonEmpty)
-        .foreach { line =>
-          val node = mapper.readTree(line)
-          if (node.has("add")) {
-            val a = node.get("add")
-            val path = a.get("path").asText()
-            live(path) = AddFile(path, a.get("size").asLong(),
-              a.get("modificationTime").asLong())
-          } else if (node.has("remove")) {
-            live.remove(node.get("remove").get("path").asText())
-          } else if (node.has("metaData")) {
-            schema = Some(DataType.fromJson(
-              node.get("metaData").get("schemaString").asText())
-              .asInstanceOf[StructType])
-          }
+          require(conflicts.isEmpty,
+            s"non-additive schema change in batches " +
+              s"${added.mkString(",")} at $table — bronze schema " +
+              s"evolution is additive-only: ${conflicts.mkString("; ")}")
+          StructType(prev.fields ++
+            more.fields.filterNot(fd => prev.fieldNames.contains(fd.name)))
         }
-      // Delta's checkpoint cadence: bound replay (and this sync's own
-      // restart cost) to checkpoint + a ≤interval JSON tail
-      if ((v + 1) % cfg.checkpointInterval == 0)
-        writeCheckpoint(spark, table, v)
-      v += 1
-    }
-    target
+      }
+    val lines = mutable.Buffer[String]()
+    if (v == 0)
+      lines += """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""
+    if (newSchema.map(_.json) != schema.map(_.json))
+      lines += metaDataJson(table, newSchema.get)
+    live.filterNot(a => want(batchOf(a.path))).foreach(lines += removeJson(_))
+    adds.foreach(lines += addJson(_))
+    lines += commitInfoJson()
+    val won = AtomicFile.claim(f.getConf, logFile(table, v),
+      lines.mkString("\n") + "\n")
+    if (won && (v + 1) % CheckpointInterval == 0)
+      writeCheckpoint(spark, table, v)
+    won
   }
 
-  private def commitInfoJson(v: Long, op: String): String = {
+  private def commitInfoJson(): String = {
     val root = mapper.createObjectNode()
     val ci = root.putObject("commitInfo")
     ci.put("timestamp", System.currentTimeMillis())
-    ci.put("operation", op)
+    ci.put("operation", "WRITE")
     ci.put("engineInfo", "graft-bronze")
     mapper.writeValueAsString(root)
   }

@@ -6,8 +6,8 @@ import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSourceProvider}
 import org.apache.spark.sql.types.StructType
 
-/** Manifest version as a streaming offset. Delta-CDF semantics:
-  * offset N means "everything committed through manifest version N
+/** Bronze version as a streaming offset. Delta-CDF semantics:
+  * offset N means "everything committed through bronze version N
   * has been delivered". */
 final case class BronzeVersionOffset(version: Long) extends Offset {
   override def json: String = version.toString
@@ -17,7 +17,7 @@ final case class BronzeVersionOffset(version: Long) extends Offset {
   * source: `spark.readStream.format("bronze-cdf").option("table", t)`
   * turns [[BronzeMerge.readChanges]]'s manual version-range polling
   * into checkpointed micro-batches — each micro-batch is exactly the
-  * rows appended in a manifest version window, the last consumed
+  * rows appended in a bronze version window, the last consumed
   * version rides in the query's OFFSET LOG, and a restarted query
   * resumes from it (the same exactly-once composition as
   * `maintainCodedCorpus`: effectively-once batches from the
@@ -25,18 +25,19 @@ final case class BronzeVersionOffset(version: Long) extends Offset {
   * `Trigger.AvailableNow` drains to the current head and stops;
   * the default trigger tails the table continuously.
   *
-  * Offsets are MANIFEST VERSIONS (not timestamps): monotone, dense,
-  * and crash-unambiguous — a version is either committed (its CAS
-  * rename happened) or absent. `getBatch(from, to)` delegates to
+  * Offsets are BRONZE VERSIONS (not timestamps; bronze version N is
+  * `_delta_log/` version N−1): monotone, dense, and crash-unambiguous
+  * — a version is either committed (its version file was claimed) or
+  * absent. `getBatch(from, to)` delegates to
   * [[BronzeMerge.readChanges]], so the stream inherits its contract:
   * appended batches stream; a window that REWRITES batches
   * (compaction / copy-on-write delete) fails loudly rather than
   * silently re-delivering rewritten rows — Delta's own change-feed
   * behavior for non-append changes without CDC files.
   *
-  * Scale notes (100 TB): an offset range resolves to the batch
-  * DIRECTORIES the manifest diff names — O(changed batches) listing,
-  * no table scan, no state; the per-batch read is the ordinary
+  * Scale notes (100 TB): an offset range resolves, by two driver-side
+  * log replays, to the batch DIRECTORIES added between its ends — no
+  * table scan, no Spark job, no state; the per-batch read is the ordinary
   * pruned parquet scan of exactly the appended files. Schema is
   * pinned at stream start (streaming requires a fixed schema) and
   * passed down to the parquet scan; columns added by later bronze

@@ -25,24 +25,25 @@ import graft.ingest.BronzeMerge
   * (`sharepoint_to_bronze_delta.py:138-141`, `config.py:16`) with the
   * semantics the reference's at-least-once re-runs actually need
   * (SURVEY C4): every append routes through the idempotent MERGE on
-  * (file_name, length, modified), the manifest CAS, and the
-  * `_delta_log` mirror — a re-run of the same batch appends nothing,
-  * a concurrent writer loses loudly, and an external Delta reader
-  * sees the commit.
+  * (file_name, length, modified) and one CAS claim of the next
+  * `_delta_log/` version — a re-run of the same batch appends
+  * nothing, a concurrent writer loses loudly, and an external Delta
+  * reader sees the commit.
   *
   * Design notes:
   *  - The merge is a whole-DataFrame operation (anti-join against the
-  *    committed key set, one batch directory, ONE manifest commit), so
+  *    committed key set, one batch directory, ONE log commit), so
   *    the write is exposed through the DSv2 `V1Write` fallback — the
   *    `InsertableRelation` bridge Spark keeps for exactly this class
   *    of connector (transactional sinks whose commit is table-level,
   *    not per-task; OSS Delta shipped on the same bridge for years).
   *    A per-task `DataWriter` surface would force a second commit
-  *    protocol UNDER the manifest CAS and buy nothing: parquet task
-  *    writes + the manifest rename already give atomic visibility.
+  *    protocol UNDER the log CAS and buy nothing: parquet task
+  *    writes + the version-file claim already give atomic visibility.
   *  - `ACCEPT_ANY_SCHEMA`: the bronze store takes additive schema
-  *    evolution (mergeSchema reads; the `_delta_log` sync fails loudly
-  *    on conflicting types), so the table does its own validation —
+  *    evolution (mergeSchema reads; the commit fails loudly on
+  *    conflicting types before publishing), so the table does its own
+  *    validation —
   *    the identity key columns must be present (checked here, loudly),
   *    anything else is carried as data. Without this capability,
   *    Spark's by-name resolution would pin writers to the snapshot
@@ -55,8 +56,9 @@ import graft.ingest.BronzeMerge
   *    check instead of silently truncating history.
   *
   * Read path: batch reads stay on [[BronzeMerge.snapshot]] /
-  * [[BronzeMerge.snapshotLatest]] (plain parquet scans of committed
-  * batch dirs — already pushdown/pruning-friendly; a DSv2 read
+  * [[BronzeMerge.snapshotLatest]] (plain parquet scans of the batch
+  * dirs the log replay names — already pushdown/pruning-friendly; a
+  * DSv2 read
   * surface would reimplement the parquet source to add nothing), and
   * streaming reads on `format("bronze-cdf")`
   * ([[BronzeChangeFeedProvider]]).

@@ -672,7 +672,7 @@ object Streams {
     * the source replays everything, the merge appends nothing.
     *
     * Crash anatomy (why restart-from-checkpoint is exact): a crash
-    * BEFORE the manifest commit leaves an orphan uncommitted batch
+    * BEFORE the log commit leaves an orphan uncommitted batch
     * directory — invisible to readers, side-stepped by the retry's
     * collision-free batch naming, reclaimed by vacuum; a crash AFTER
     * the commit but before the checkpoint marks the micro-batch done
@@ -1398,7 +1398,7 @@ object Streams {
   /** The bronze change feed as a first-class streaming input —
     * `BronzeMerge.readChanges`'s manual version-range polling turned
     * into checkpointed micro-batches by
-    * [[graft.sources.BronzeChangeFeedSource]] (offsets = manifest
+    * [[graft.sources.BronzeChangeFeedSource]] (offsets = bronze
     * versions, recorded in the query's offset log, so a restarted
     * query resumes exactly where it stopped). Drive with
     * `Trigger.AvailableNow` for drain-and-stop catch-up or the

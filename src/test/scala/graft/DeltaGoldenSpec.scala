@@ -96,7 +96,7 @@ class DeltaGoldenSpec extends SparkSpec {
     // still conformant after retention cleanup truncates the history
     DeltaLog.cleanObsoleteLogs(spark, table)
     assert(DeltaConformance.validate(spark, table) == Seq.empty)
-    // and the external-style read still equals the manifest's truth
+    // and the external-style read still equals the bronze snapshot
     assert(DeltaLog.read(spark, table).count() ==
       BronzeMerge.snapshot(spark, table).count())
   }

@@ -174,7 +174,7 @@ class IngestSpec extends SparkSpec {
     // time travel: version 1 still shows only the first batch
     assert(names(BronzeMerge.snapshotAt(spark, table, 1)) == Seq("a.txt"))
 
-    // vacuum reclaims the superseded batches and old manifests
+    // vacuum reclaims the superseded batches
     val dead = BronzeMerge.vacuum(spark, table)
     assert(dead == Seq("batch-00000001", "batch-00000002"))
     assert(names(BronzeMerge.snapshot(spark, table)) ==
@@ -434,7 +434,7 @@ class IngestSpec extends SparkSpec {
     }
     info(s"loser failed with: ${loser.getClass.getSimpleName}")
     assert(winnerAppended == 1L)
-    // exactly one winner: the table is A's commit, manifest intact
+    // exactly one winner: the table is A's commit, log intact
     val (ver, live) = BronzeMerge.currentCommit(spark, table)
     assert(ver == 1 && live == Seq("batch-00000001"))
     assert(BronzeMerge.snapshot(spark, table).select("file_name")
@@ -444,7 +444,7 @@ class IngestSpec extends SparkSpec {
     assert(BronzeMerge.snapshot(spark, table).count() == 2)
 
     // the CAS itself: a second commit of the SAME version must lose,
-    // and the manifest must still read the winner's content
+    // and the log must still read the winner's content
     val f = new org.apache.hadoop.fs.Path(table)
       .getFileSystem(spark.sessionState.newHadoopConf())
     intercept[IllegalStateException] {
@@ -464,12 +464,12 @@ class IngestSpec extends SparkSpec {
       .toDF("file_name", "length", "modified", "content")
     assert(BronzeMerge.mergeIngestDf(spark, one("a.txt"), table) == 1L)
     // the temp a writer that died between create and rename left for
-    // version 2, complete with its crc sidecar
+    // bronze version 2 (log version 1), complete with its crc sidecar
     val f = new org.apache.hadoop.fs.Path(table)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val out = f.create(
-      new org.apache.hadoop.fs.Path(s"$table/_manifest/.tmp-v00000002"), false)
-    try out.write("batch-00000002\n".getBytes("UTF-8")) finally out.close()
+    val out = f.create(new org.apache.hadoop.fs.Path(s"$table/_delta_log/" +
+      s".00000000000000000001.json-${java.util.UUID.randomUUID()}.tmp"), false)
+    try out.write("{}\n".getBytes("UTF-8")) finally out.close()
     assert(BronzeMerge.mergeIngestDf(spark, one("b.txt"), table) == 1L)
     assert(BronzeMerge.currentCommit(spark, table) ==
       ((2, Seq("batch-00000001", "batch-00000002"))))
@@ -478,8 +478,9 @@ class IngestSpec extends SparkSpec {
     // and its crc
     import scala.jdk.CollectionConverters._
     BronzeMerge.vacuum(spark, table)
-    assert(Files.list(Paths.get(table, "_manifest")).iterator().asScala
-      .map(_.getFileName.toString).toSeq == Seq("v00000002"))
+    assert(Files.list(Paths.get(table, "_delta_log")).iterator().asScala
+      .map(_.getFileName.toString).toSeq.sorted ==
+      Seq("00000000000000000000.json", "00000000000000000001.json"))
   }
 
   test("bucketed bronze publication joins on file identity with zero exchanges") {
@@ -545,8 +546,8 @@ class IngestSpec extends SparkSpec {
     assert(v0.contains(""""schemaString""""))
     assert(v0.contains(""""add""""))
 
-    // the replay resolves live files + schema from the LOG alone and
-    // reads the same rows the manifest snapshot reads
+    // the external-style replay resolves live files + schema from the
+    // log's actions and reads the same rows the bronze snapshot reads
     assert(names(DeltaLog.read(spark, table)) ==
       names(BronzeMerge.snapshot(spark, table)))
     // every logged path exists on disk (an external client would open
@@ -559,7 +560,7 @@ class IngestSpec extends SparkSpec {
     files.foreach(a =>
       assert(Files.size(Paths.get(table, a.path)) == a.size))
 
-    // VERSION AS OF: delta version 0 ≡ manifest version 1
+    // VERSION AS OF: delta version 0 ≡ bronze version 1
     assert(names(DeltaLog.read(spark, table, Some(0L))) ==
       names(BronzeMerge.snapshotAt(spark, table, 1)))
 
@@ -605,63 +606,6 @@ class IngestSpec extends SparkSpec {
     assert(back == Map("a.txt" -> null, "b.txt" -> "graph"))
   }
 
-  test("delta log self-heals: a lagging or lost log is rebuilt from manifests") {
-    import graft.ingest.{BronzeMerge, DeltaLog}
-    import spark.implicits._
-    val table = Files.createTempDirectory("graft-dlog-heal")
-      .resolve("bronze").toString
-    def ts(i: Int) = new java.sql.Timestamp(1700000000000L + i * 1000L)
-    def batch(names: String*) = names.zipWithIndex.map { case (n, i) =>
-      (n, (i + 1).toLong, ts(i), Array[Byte](i.toByte)) }
-      .toDF("file_name", "length", "modified", "content")
-    def names(df: org.apache.spark.sql.DataFrame) =
-      df.select("file_name").collect().map(_.getString(0)).sorted.toSeq
-
-    BronzeMerge.mergeIngestDf(spark, batch("a.txt"), table)          // v1
-    BronzeMerge.mergeIngestDf(spark, batch("b.txt"), table)          // v2
-    BronzeMerge.mergeIngestDf(spark, batch("c.txt", "d.txt"), table) // v3
-
-    // simulate a crash that lost the whole log: full backfill from
-    // the manifests, byte-for-byte replayable
-    val logDir = Paths.get(table, "_delta_log")
-    Files.list(logDir).forEach(p => Files.delete(p))
-    Files.delete(logDir)
-    assert(DeltaLog.latestLogVersion(spark, table) == -1L)
-    assert(DeltaLog.sync(spark, table) == 2L)
-    assert(names(DeltaLog.read(spark, table)) ==
-      Seq("a.txt", "b.txt", "c.txt", "d.txt"))
-    assert(names(DeltaLog.read(spark, table, Some(1L))) ==
-      Seq("a.txt", "b.txt"))
-
-    // vacuumed-manifest collapse: lose the log AND the old manifests;
-    // sync fills the gap versions with empty commits and lands the
-    // cumulative diff on the final version — replay still equals HEAD
-    Files.list(logDir).forEach(p => Files.delete(p))
-    Files.delete(logDir)
-    BronzeMerge.vacuum(spark, table) // drops manifests v1, v2
-    assert(DeltaLog.sync(spark, table) == 2L)
-    assert(names(DeltaLog.read(spark, table)) ==
-      Seq("a.txt", "b.txt", "c.txt", "d.txt"))
-    val filler = Files.readString(logDir.resolve("00000000000000000000.json"))
-    assert(filler.contains(""""protocol"""")) // protocol still leads v0
-    // re-sync is a no-op (idempotent)
-    assert(DeltaLog.sync(spark, table) == 2L)
-
-    // vacuumed-gap backfill ACROSS a checkpoint boundary: with ≥11
-    // versions of filler, the cadence lands on an uncheckpointable
-    // state (no metaData yet) — the checkpoint must SKIP, never fail
-    // the backfill of commits that already landed
-    (4 to 13).foreach(i =>
-      BronzeMerge.mergeIngestDf(spark, batch(s"x$i.txt"), table))
-    Files.list(logDir).forEach(p => Files.delete(p))
-    Files.delete(logDir)
-    BronzeMerge.vacuum(spark, table)
-    assert(DeltaLog.sync(spark, table) == 12L) // no throw at v9
-    assert(!Files.exists(
-      logDir.resolve("00000000000000000009.checkpoint.parquet")))
-    assert(DeltaLog.read(spark, table).count() == 14)
-  }
-
   test("delta log checkpoints: replay = checkpoint + tail, survives log cleanup") {
     import graft.ingest.{BronzeMerge, DeltaLog}
     import spark.implicits._
@@ -693,7 +637,7 @@ class IngestSpec extends SparkSpec {
     assert(nAdds == 10, s"expected 10 live files at v9, got $nAdds")
     assert(cp.filter(col("add.dataChange") === true).count() == 0)
 
-    // replay equals the manifest snapshot (checkpoint + 2-commit tail)
+    // replay equals the bronze snapshot (checkpoint + 2-commit tail)
     assert(names(DeltaLog.read(spark, table)) ==
       names(BronzeMerge.snapshot(spark, table)))
 
@@ -722,29 +666,33 @@ class IngestSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     // seeded, hence deterministic — a randomized interleaving of
-    // merge/delete/compact with the replay invariant checked after
-    // EVERY commit; the sequence is long enough to cross the
-    // checkpoint cadence, so mid-sequence replays exercise
-    // checkpoint + tail, not just JSON
+    // merge/delete/compact with both readers checked after EVERY
+    // commit against the file names this test itself expects live;
+    // the sequence is long enough to cross the checkpoint cadence, so
+    // mid-sequence replays exercise checkpoint + tail, not just JSON
     val rnd = new scala.util.Random(20260814L)
     val table = Files.createTempDirectory("graft-dlog-prop")
       .resolve("bronze").toString
     def ts(i: Int) = new java.sql.Timestamp(1700000000000L + i * 1000L)
     var next = 0
+    val expected = scala.collection.mutable.SortedSet[String]()
     def newBatch(n: Int) = {
       val rows = (0 until n).map { _ =>
         next += 1
+        expected += s"f$next.txt"
         (s"f$next.txt", next.toLong, ts(next),
           Array[Byte]((next % 127).toByte))
       }
       rows.toDF("file_name", "length", "modified", "content")
     }
+    def names(df: org.apache.spark.sql.DataFrame) =
+      df.select("file_name").collect().map(_.getString(0)).sorted.toSeq
     def check(): Unit = {
-      val snap = BronzeMerge.snapshot(spark, table)
-        .select("file_name").collect().map(_.getString(0)).sorted.toSeq
-      val log = DeltaLog.read(spark, table)
-        .select("file_name").collect().map(_.getString(0)).sorted.toSeq
-      assert(log == snap, s"replay diverged: log=$log snap=$snap")
+      val want = expected.toSeq
+      val snap = names(BronzeMerge.snapshot(spark, table))
+      assert(snap == want, s"snapshot diverged: $snap, expected $want")
+      val log = names(DeltaLog.read(spark, table))
+      assert(log == want, s"replay diverged: $log, expected $want")
     }
     BronzeMerge.mergeIngestDf(spark, newBatch(3), table)
     check()
@@ -754,14 +702,14 @@ class IngestSpec extends SparkSpec {
           BronzeMerge.mergeIngestDf(spark,
             newBatch(1 + rnd.nextInt(3)), table)
         case 1 =>
-          BronzeMerge.deleteWhere(spark, table,
-            col("length") === (1 + rnd.nextInt(next)).toLong)
+          // lengths equal the row's number: at most the one file f<k>
+          val k = 1 + rnd.nextInt(next)
+          BronzeMerge.deleteWhere(spark, table, col("length") === k.toLong)
+          expected -= s"f$k.txt"
         case 2 => BronzeMerge.compact(spark, table)
       }
       check()
     }
-    assert(DeltaLog.latestLogVersion(spark, table) ==
-      BronzeMerge.currentCommit(spark, table)._1 - 1L)
   }
 
   test("csv ingest appends typed rows to the sink table") {
@@ -967,49 +915,9 @@ class IngestSpec extends SparkSpec {
         s"distributed/driver state diverged at version $v")
       assert(distSchema.map(_.json) == driverSchema.map(_.json))
     }
-    // the distributed plan's answer matches the manifest's truth
+    // the distributed plan's answer matches the bronze snapshot
     assert(DeltaLog.read(spark, table).count() ==
       BronzeMerge.snapshot(spark, table).count())
-  }
-
-  test("delta log config: non-default checkpoint cadence and retention") {
-    import graft.ingest.{BronzeMerge, DeltaLog, DeltaLogConfig}
-    import spark.implicits._
-    val table = Files.createTempDirectory("graft-dlog-cfg")
-      .resolve("bronze").toString
-    def ts(i: Int) = new java.sql.Timestamp(1700000000000L + i * 1000L)
-    def one(n: String) = Seq((n, n.length.toLong, ts(n.hashCode & 127),
-      Array[Byte](1))).toDF("file_name", "length", "modified", "content")
-    // build manifests WITHOUT the auto-sync's default cadence seeing
-    // them first: write batches through the normal path, then strip
-    // the auto-written log and re-sync at cadence 3
-    (1 to 7).foreach(i =>
-      BronzeMerge.mergeIngestDf(spark, one(f"c$i%02d.txt"), table))
-    val logDir = Paths.get(table, "_delta_log")
-    Files.list(logDir).forEach(p => Files.delete(p))
-    Files.delete(logDir)
-
-    val cfg = DeltaLogConfig(checkpointInterval = 3, retainVersions = 2)
-    assert(DeltaLog.sync(spark, table, cfg) == 6L)
-    // cadence 3 → checkpoints at delta versions 2 and 5
-    assert(Files.exists(logDir.resolve(
-      "00000000000000000002.checkpoint.parquet")))
-    assert(Files.exists(logDir.resolve(
-      "00000000000000000005.checkpoint.parquet")))
-    assert(Files.readString(logDir.resolve("_last_checkpoint"))
-      .contains("\"version\":5"))
-    // retention 2: versions 3..6 must stay time-travelable, so the
-    // cleanup anchors at checkpoint 2 (newest ≤ 5−2) and reclaims
-    // only the JSON below it
-    val cleaned = DeltaLog.cleanObsoleteLogs(spark, table, cfg)
-    assert(cleaned == Seq(
-      "00000000000000000000.json", "00000000000000000001.json",
-      "00000000000000000002.json"))
-    assert(Files.exists(logDir.resolve("00000000000000000003.json")))
-    // the retained window replays from the anchor checkpoint
-    assert(DeltaLog.read(spark, table, Some(3L)).count() == 4)
-    assert(DeltaLog.read(spark, table, Some(4L)).count() == 5)
-    assert(DeltaLog.read(spark, table).count() == 7)
   }
 
   test("delta log: _last_checkpoint never regresses to an older version") {
@@ -1061,7 +969,8 @@ class IngestSpec extends SparkSpec {
       table)
     // same column name, conflicting type: logging the stale
     // schemaString would hand an external reader a schema that
-    // contradicts the new files' footers — sync must refuse
+    // contradicts the new files' footers — the commit must refuse
+    val before = BronzeMerge.currentCommit(spark, table)
     val e = intercept[IllegalArgumentException] {
       BronzeMerge.mergeIngestDf(spark,
         Seq(("b.txt", 2L, ts(2), Array[Byte](2), 42L))
@@ -1070,43 +979,69 @@ class IngestSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("additive-only") &&
       e.getMessage.contains("tag"))
+    // refused before anything committed: same version, no b.txt, and
+    // the table still takes a valid batch
+    assert(BronzeMerge.currentCommit(spark, table) == before)
+    assert(BronzeMerge.snapshot(spark, table).select("file_name")
+      .collect().map(_.getString(0)).toSeq == Seq("a.txt"))
+    assert(BronzeMerge.mergeIngestDf(spark,
+      Seq(("c.txt", 3L, ts(3), Array[Byte](3), "tag-c"))
+        .toDF("file_name", "length", "modified", "content", "tag"),
+      table) == 1L)
+    assert(BronzeMerge.currentCommit(spark, table)._1 == before._1 + 1)
   }
 
-  test("delta log sync adopts a concurrent winner's version content") {
-    import graft.ingest.{BronzeMerge, DeltaLog}
+  test("a batch emptied by deletes keeps blocking redelivery, before and " +
+      "after a checkpoint") {
+    import graft.ingest.BronzeMerge
     import spark.implicits._
-    val table = Files.createTempDirectory("graft-dlog-race")
+    val table = Files.createTempDirectory("graft-emptied")
+      .resolve("bronze").toString
+    val ts0 = new java.sql.Timestamp(1700000000000L)
+    def rows(ids: (String, String)*) = ids.map { case (id, n) =>
+      (id, n, n.length.toLong, ts0, n.getBytes("UTF-8")) }
+      .toDF(BronzeMerge.IdCol, "file_name", "length", "modified", "content")
+    val doomed = rows("i1" -> "a.txt", "i2" -> "bb.txt")
+    BronzeMerge.mergeIngestDf(spark, doomed, table)                  // v1
+    BronzeMerge.mergeIngestDf(spark, rows("i3" -> "c.txt"), table)  // v2
+    // every row of batch 1 goes: its rewrite holds no row, yet the
+    // batch set (read off the live adds) must still name it, or its
+    // keys would stop blocking
+    val dead = Seq("i1", "i2").toDF(BronzeMerge.IdCol)
+    assert(BronzeMerge.deleteMatchingKeys(spark, table, dead,
+      Seq(BronzeMerge.IdCol)) == ((3, 2L)))
+    val (_, live) = BronzeMerge.currentCommit(spark, table)
+    assert(live.size == 2 && live.exists(_.contains("cow")), live)
+    assert(BronzeMerge.mergeIngestDf(spark, doomed, table) == 0L)
+    // v4..v10: log version 9 is checkpointed, so the batch set now
+    // comes from the checkpoint parquet
+    (4 to 10).foreach(i =>
+      BronzeMerge.mergeIngestDf(spark, rows(s"n$i" -> s"n$i.txt"), table))
+    assert(Files.exists(Paths.get(table, "_delta_log",
+      "00000000000000000009.checkpoint.parquet")))
+    assert(live.forall(BronzeMerge.currentCommit(spark, table)._2.contains))
+    assert(BronzeMerge.mergeIngestDf(spark, doomed, table) == 0L)
+    assert(BronzeMerge.snapshot(spark, table).count() == 8)
+  }
+
+  test("once a checkpoint exists, resolving the commit runs no Spark job") {
+    import graft.ingest.BronzeMerge
+    import spark.implicits._
+    val table = Files.createTempDirectory("graft-dlog-jobs")
       .resolve("bronze").toString
     def ts(i: Int) = new java.sql.Timestamp(1700000000000L + i * 1000L)
-    def one(n: String) = Seq((n, n.length.toLong, ts(n.hashCode & 127),
-      Array[Byte](1))).toDF("file_name", "length", "modified", "content")
-    BronzeMerge.mergeIngestDf(spark, one("a.txt"), table) // m1 → delta v0
-    // two more manifest commits whose log versions do NOT exist yet:
-    // strip the auto-sync's v1/v2 to re-create the lagging state
-    BronzeMerge.mergeIngestDf(spark, one("b.txt"), table) // m2 → v1
-    BronzeMerge.mergeIngestDf(spark, one("c.txt"), table) // m3 → v2
-    val logDir = Paths.get(table, "_delta_log")
-    Files.delete(logDir.resolve("00000000000000000001.json"))
-    Files.delete(logDir.resolve("00000000000000000002.json"))
-    // the NIO surgery above bypasses Hadoop's ChecksumFileSystem —
-    // drop the stale sidecars so the replay sees the new bytes
-    Files.deleteIfExists(logDir.resolve(".00000000000000000001.json.crc"))
-    Files.deleteIfExists(logDir.resolve(".00000000000000000002.json.crc"))
-    // a CONCURRENT winner (e.g. one that found m2 vacuumed) already
-    // claimed v1 with filler content — not the add-b.txt diff this
-    // syncer would compute
-    Files.writeString(logDir.resolve("00000000000000000001.json"),
-      """{"commitInfo":{"timestamp":0,"operation":"SKIPPED (manifest vacuumed)","engineInfo":"other-writer"}}""" + "\n")
-    // sync must lose the v1 race, ADOPT the winner's (empty) diff —
-    // not its own in-memory one — and emit b.txt's add at v2, or the
-    // external view would silently lose that file forever
-    assert(DeltaLog.sync(spark, table) == 2L)
-    val v2 = Files.readString(logDir.resolve("00000000000000000002.json"))
-    assert(v2.contains("batch-00000002/") && v2.contains("batch-00000003/"),
-      s"v2 must carry the cumulative diff the winner's filler skipped: $v2")
-    assert(DeltaLog.read(spark, table)
-      .select("file_name").collect().map(_.getString(0)).sorted.toSeq ==
-      Seq("a.txt", "b.txt", "c.txt"))
+    def merge(i: Int): Unit = BronzeMerge.mergeIngestDf(spark,
+      Seq((f"j$i%02d.txt", i.toLong, ts(i), Array[Byte](1)))
+        .toDF("file_name", "length", "modified", "content"), table)
+    merge(1)
+    val second = jobsIn(merge(2))
+    (3 to 12).foreach(merge)
+    assert(Files.exists(Paths.get(table, "_delta_log",
+      "00000000000000000009.checkpoint.parquet")))
+    assert(jobsIn(BronzeMerge.currentCommit(spark, table)) == 0)
+    val thirteenth = jobsIn(merge(13))
+    info(s"2nd merge: $second jobs, 13th merge: $thirteenth jobs")
+    assert(thirteenth <= second)
   }
 
   test("delta log: a regressed checkpoint pointer self-heals via listing") {
@@ -1164,8 +1099,8 @@ class IngestSpec extends SparkSpec {
     ck.save("https://graph.example.test/delta?token=1")
     ck.save("https://graph.example.test/delta?token=2")
     assert(ck.load().contains("https://graph.example.test/delta?token=2"))
-    Seq(Paths.get(table, "_delta_log"), Paths.get(table, "_manifest"),
-        Paths.get(mv), root.resolve("ck")).foreach { dir =>
+    Seq(Paths.get(table, "_delta_log"), Paths.get(mv),
+        root.resolve("ck")).foreach { dir =>
       val names = Files.list(dir).iterator()
       val all = scala.jdk.CollectionConverters.IteratorHasAsScala(names)
         .asScala.map(_.getFileName.toString).toSeq

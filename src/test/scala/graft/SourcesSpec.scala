@@ -194,8 +194,8 @@ class SourcesSpec extends SparkSpec {
       .select("file_name").as[String](org.apache.spark.sql.Encoders.STRING)
       .collect().sorted.toSeq == Seq("a.txt", "b.txt", "c.txt"))
 
-    // the _delta_log mirror advanced with the public-API commits
-    // (delta versions are 0-based: manifest vN ↔ log version N-1)
+    // the _delta_log advanced with the public-API commits
+    // (delta versions are 0-based: bronze vN ↔ log version N-1)
     assert(DeltaLog.latestLogVersion(spark, table) ==
       BronzeMerge.currentCommit(spark, table)._1.toLong - 1)
 

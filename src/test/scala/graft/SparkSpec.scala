@@ -31,6 +31,42 @@ abstract class SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** Spark jobs `body` runs, counted by a listener between two marker
+    * jobs: listener events arrive asynchronously but in order, so once
+    * the closing marker is seen every job of `body` has been too. */
+  def jobsIn(body: => Unit): Int = {
+    val key = "graft.test.marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        seen.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty(key))).getOrElse(""))
+        ()
+      }
+    }
+    val sc = spark.sparkContext
+    def marker(tag: String): Unit = {
+      sc.setLocalProperty(key, tag)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(key, null)
+      ()
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("start")
+      body
+      marker("end")
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!seen.contains("end") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains("end"), "listener never saw the closing marker")
+      import scala.jdk.CollectionConverters._
+      seen.asScala.toSeq.dropWhile(_ != "start").drop(1)
+        .takeWhile(_ != "end").size
+    } finally sc.removeSparkListener(listener)
+  }
+
   override def beforeAll(): Unit = {
     spark.sparkContext.setLogLevel("WARN")
     super.beforeAll()

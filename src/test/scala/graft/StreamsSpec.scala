@@ -575,7 +575,7 @@ class StreamsSpec extends SparkSpec {
       Files.createTempDirectory("graft-kill-ctl-cp").toString)
     assert(BronzeMerge.currentCommit(spark, ctl)._1 == 1)
 
-    // CRASH POINT 1: data + keys landed, manifest commit never reached
+    // CRASH POINT 1: data + keys landed, log commit never reached
     val t1 = Files.createTempDirectory("graft-kill-t1")
       .resolve("bronze").toString
     val cp1 = Files.createTempDirectory("graft-kill-cp1").toString
@@ -594,18 +594,18 @@ class StreamsSpec extends SparkSpec {
     assert(BronzeMerge.snapshot(spark, t1).count() == 0)
     // restart from the SAME checkpoint: the unfinished micro-batch
     // replays, sidesteps the orphan, and lands exactly once —
-    // manifest version and rows equal the uninterrupted run
+    // bronze version and rows equal the uninterrupted run
     Streams.streamMergeIngest(spark, src.toString, t1, cp1)
     assert(BronzeMerge.currentCommit(spark, t1)._1 ==
       BronzeMerge.currentCommit(spark, ctl)._1)
     assert(contents(t1) == contents(ctl))
-    // the delta-log mirror replays to the same rows (no orphan leaked)
+    // the external-style log read sees the same rows (no orphan leaked)
     assert(DeltaLog.read(spark, t1).count() == 3)
     // vacuum reclaims the orphan attempt
     assert(BronzeMerge.vacuum(spark, t1) == Seq("batch-00000001"))
     assert(contents(t1) == contents(ctl))
 
-    // CRASH POINT 2: manifest committed, checkpoint never marked done
+    // CRASH POINT 2: version committed, checkpoint never marked done
     val t2 = Files.createTempDirectory("graft-kill-t2")
       .resolve("bronze").toString
     val cp2 = Files.createTempDirectory("graft-kill-cp2").toString
@@ -1097,7 +1097,7 @@ class StreamsSpec extends SparkSpec {
 
     // restart with the SAME checkpoint after more commits: only the
     // new version window streams — the offset log, not the caller,
-    // remembers the last consumed manifest version
+    // remembers the last consumed bronze version
     BronzeMerge.mergeIngestDf(spark, one("c.txt"), table)
     BronzeMerge.mergeIngestDf(spark, one("d.txt"), table)
     drain()
@@ -1344,7 +1344,7 @@ class StreamsSpec extends SparkSpec {
     assert(r2 == ((0L, 1L)) && windowSlice(staging, "dead") == Seq("i2"))
     assert(liveNames() == Seq("a.txt"))
 
-    // the _delta_log mirror replays to the post-delete state and the
+    // the _delta_log replays to the post-delete state and the
     // deleting commit carries an explicit remove action
     assert(DeltaLog.read(spark, table).select("file_name")
       .collect().map(_.getString(0)).toSeq == Seq("a.txt"))
@@ -1873,7 +1873,7 @@ class StreamsSpec extends SparkSpec {
       .map(_.source_item_id) == Seq("i2"))
 
     // window 3 is EMPTY upstream, but the retry loop still drains the
-    // parked set: the outage has ended, i2 lands in one new manifest
+    // parked set: the outage has ended, i2 lands in one new bronze
     // version, quarantine empties
     FetchOutage.broken = false
     val version = BronzeMerge.currentCommit(spark, table)._1
@@ -1944,42 +1944,6 @@ class StreamsSpec extends SparkSpec {
             .getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata")
         }
     assert(rowSchemas("batch-00000002") == rowSchemas("batch-00000001"))
-  }
-
-  /** Spark jobs `body` runs, counted by a listener between two marker
-    * jobs: listener events arrive asynchronously but in order, so once
-    * the closing marker is seen every job of `body` has been too. */
-  private def jobsIn(body: => Unit): Int = {
-    val key = "graft.test.marker"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        seen.add(Option(e.properties).flatMap(p =>
-          Option(p.getProperty(key))).getOrElse(""))
-        ()
-      }
-    }
-    val sc = spark.sparkContext
-    def marker(tag: String): Unit = {
-      sc.setLocalProperty(key, tag)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setLocalProperty(key, null)
-      ()
-    }
-    sc.addSparkListener(listener)
-    try {
-      marker("start")
-      body
-      marker("end")
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!seen.contains("end") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains("end"), "listener never saw the closing marker")
-      import scala.jdk.CollectionConverters._
-      seen.asScala.toSeq.dropWhile(_ != "start").drop(1)
-        .takeWhile(_ != "end").size
-    } finally sc.removeSparkListener(listener)
   }
 
   /** A paged drive for the quarantine and job-budget specs: windows 1-3

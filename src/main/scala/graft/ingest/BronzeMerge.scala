@@ -92,18 +92,13 @@ object BronzeMerge {
     }
   }
 
-  /** Sorted batch names live at log version `v`, replayed on the
-    * driver ([[DeltaLog.state]]). */
-  private def batchesAt(spark: SparkSession, table: String,
-      v: Long): Seq[String] =
-    DeltaLog.state(spark, table, Some(v))._1
-      .map(a => DeltaLog.batchOf(a.path)).distinct.sorted
-
   /** Latest committed (version, batch names); (0, Nil) = empty table. */
-  def currentCommit(spark: SparkSession, table: String): (Int, Seq[String]) = {
-    val top = DeltaLog.latestLogVersion(spark, table)
-    if (top < 0) (0, Nil) else ((top + 1).toInt, batchesAt(spark, table, top))
-  }
+  def currentCommit(spark: SparkSession, table: String): (Int, Seq[String]) =
+    view(DeltaLog.state(spark, table))
+
+  /** (bronze version, batch names) of a replayed log state. */
+  private def view(st: DeltaLog.State): (Int, Seq[String]) =
+    ((st.version + 1).toInt, st.batches)
 
   /** Committed batch names at an arbitrary version — the time-travel
     * primitive (`VERSION AS OF` in Delta terms). Batches are
@@ -117,7 +112,7 @@ object BronzeMerge {
     require(version >= 1 &&
       version - 1L <= DeltaLog.latestLogVersion(spark, table),
       s"bronze version $version does not exist")
-    val batches = batchesAt(spark, table, version - 1L)
+    val batches = DeltaLog.state(spark, table, Some(version - 1L)).batches
     require(batches.forall(b => f.exists(new Path(table, b))),
       s"bronze version $version was vacuumed")
     batches
@@ -147,7 +142,8 @@ object BronzeMerge {
   def compact(spark: SparkSession, table: String,
       clusterBy: Seq[String] = Nil, nFiles: Int = 1): Int = {
     val f = fs(spark, table)
-    val (ver, batches) = currentCommit(spark, table)
+    val base = DeltaLog.state(spark, table)
+    val (ver, batches) = view(base)
     require(batches.nonEmpty, "nothing to compact")
     val batchName = freshBatchName(f, table, f"batch-${ver + 1}%08d")
     // every batch's footers merged: a table that gained
@@ -174,7 +170,7 @@ object BronzeMerge {
     committedKeys(spark, table, batches)
       .distinct()
       .write.mode(SaveMode.Overwrite).parquet(s"$table/_keys/$batchName")
-    commit(f, table, ver + 1, Seq(batchName))
+    commit(f, table, base, Seq(batchName))
     ver + 1
   }
 
@@ -189,7 +185,7 @@ object BronzeMerge {
     * purpose: a deleted file's key still blocks re-ingest, so
     * at-least-once upstream redelivery cannot resurrect deleted rows.
     * Returns (new version, rows deleted); no-op (current version, 0)
-    * when nothing matches. */
+    * when nothing matches, and (0, 0) on a table never created. */
   def deleteWhere(spark: SparkSession, table: String,
       pred: org.apache.spark.sql.Column): (Int, Long) = {
     // a predicate may reference columns a PRE-EVOLUTION batch never
@@ -268,7 +264,8 @@ object BronzeMerge {
   def backfillIds(spark: SparkSession, table: String, mapping: DataFrame,
       joinCols: Seq[String] = Seq("file_name", "length")): (Int, Long) = {
     val f = fs(spark, table)
-    val (ver, batches) = currentCommit(spark, table)
+    val base = DeltaLog.state(spark, table)
+    val (ver, batches) = view(base)
     require(batches.nonEmpty, "empty bronze table")
     val map = mapping.select((IdCol +: joinCols).map(col): _*)
       .distinct().persist()
@@ -300,7 +297,7 @@ object BronzeMerge {
       }
       if (newBatches == batches) (ver, 0L)
       else {
-        commit(f, table, ver + 1, newBatches)
+        commit(f, table, base, newBatches)
         (ver + 1, filled)
       }
     } finally { map.unpersist(); () }
@@ -324,8 +321,9 @@ object BronzeMerge {
       matches: Seq[String] => DataFrame,
       survivors: DataFrame => DataFrame): (Int, Long) = {
     val f = fs(spark, table)
-    val (ver, batches) = currentCommit(spark, table)
-    require(batches.nonEmpty, "empty bronze table")
+    val base = DeltaLog.state(spark, table)
+    val (ver, batches) = view(base)
+    if (batches.isEmpty) return (ver, 0L)
     val perBatch = matches(batches.map(b => s"$table/$b"))
       .groupBy(col(FileCol)).count().collect()
       .map(r => new Path(new java.net.URI(r.getString(0))).getParent.getName
@@ -348,7 +346,7 @@ object BronzeMerge {
         rewritten
       }
     }
-    commit(f, table, ver + 1, newBatches)
+    commit(f, table, base, newBatches)
     (ver + 1, perBatch.values.sum)
   }
 
@@ -484,7 +482,8 @@ object BronzeMerge {
       table: String, onSnapshotRead: () => Unit = () => (),
       onBeforeCommit: () => Unit = () => ()): Long = {
     val f = fs(spark, table)
-    val (ver, batches) = currentCommit(spark, table)
+    val base = DeltaLog.state(spark, table)
+    val (ver, batches) = view(base)
     onSnapshotRead()
     val hasId = src.columns.contains(IdCol)
     val fresh =
@@ -529,7 +528,7 @@ object BronzeMerge {
       .select(keyCols.map(col): _*)
       .write.mode(SaveMode.Overwrite).parquet(s"$table/_keys/$batchName")
     onBeforeCommit()
-    commit(f, table, ver + 1, batches :+ batchName)
+    commit(f, table, base, batches :+ batchName)
     appended
   }
 
@@ -818,13 +817,16 @@ object BronzeMerge {
     spark.read.parquet(s"$mvPath/${ptr.get._1}")
   }
 
-  /** Commit bronze `version` naming exactly `batches`, on top of
-    * version − 1 ([[DeltaLog.commit]]); an existing target means a
-    * concurrent writer committed first — fail loudly. Package-visible
-    * so IngestSpec can drive the CAS conflict deterministically. */
-  private[graft] def commit(f: FileSystem, table: String, version: Int,
-      batches: Seq[String]): Unit =
-    if (!DeltaLog.commit(SparkSession.active, f, table, version - 1L, batches))
+  /** Commit the bronze version after `base`, the log state the caller
+    * read, naming exactly `batches` ([[DeltaLog.commit]], which builds
+    * on `base` without replaying the log again); an existing target
+    * means a concurrent writer committed first — fail loudly.
+    * Package-visible so IngestSpec can drive the CAS conflict
+    * deterministically. */
+  private[graft] def commit(f: FileSystem, table: String,
+      base: DeltaLog.State, batches: Seq[String]): Unit =
+    if (!DeltaLog.commit(SparkSession.active, f, table, base, batches))
       throw new IllegalStateException(s"bronze commit conflict: version " +
-        s"$version already exists at ${new Path(table, DeltaLog.LogDirName)}")
+        s"${base.version + 2} already exists at " +
+        s"${new Path(table, DeltaLog.LogDirName)}")
 }

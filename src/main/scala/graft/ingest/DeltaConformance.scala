@@ -150,7 +150,7 @@ object DeltaConformance {
 
     // --- the replayed HEAD must resolve to real bytes ---------------
     if (checkData && bad.isEmpty) {
-      val (files, schema) = DeltaLog.state(spark, table)
+      val DeltaLog.State(_, files, schema) = DeltaLog.state(spark, table)
       if (schema.isEmpty && files.nonEmpty)
         bad += "live files but no schema from metaData"
       for (a <- files) {

@@ -4,7 +4,6 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 import scala.collection.mutable
@@ -25,7 +24,8 @@ import scala.collection.mutable
   * version file: the first writer wins, a loser publishes nothing.
   * The batch set of a version is the set of first path segments of
   * its live `add`s; everything a bronze reader resolves comes from
-  * replaying the log ([[state]]).
+  * replaying the log ([[state]]), once per operation: a writer
+  * commits on top of the [[State]] it read.
   *
   * Scale notes (100 TB): a commit appends O(changed files) JSON — the
   * same cost Delta's own writers pay. Replay cost is bounded the way
@@ -33,14 +33,13 @@ import scala.collection.mutable
   * (`NNN.checkpoint.parquet`, one row per action with the protocol /
   * metaData / add struct columns the Delta protocol specifies) is
   * written with the `_last_checkpoint` pointer, and replay resolves
-  * checkpoint + JSON tail instead of the whole history. The
-  * checkpoint itself is computed DISTRIBUTIVELY ([[stateDf]]): the
-  * previous checkpoint is read as a DataFrame, the ≤10-commit JSON
-  * tail is applied as a broadcast anti-join + union, and the next
-  * checkpoint is written straight from that plan. A commit resolves
-  * its base on the driver instead ([[state]]: the one checkpoint file
-  * read with [[LocalParquet.read]] plus the tail), which runs no
-  * Spark job. JSON commits at or below the checkpoint become
+  * checkpoint + JSON tail instead of the whole history. Both run on
+  * the driver without a Spark job: [[state]] reads the one checkpoint
+  * file with [[LocalParquet.read]] plus the tail, and the commit that
+  * lands a 10th version writes the next checkpoint with
+  * [[LocalParquet.write]] from the state it just built. The driver
+  * holds the live-file list either way — a commit needs it to know
+  * which files leave. JSON commits at or below the checkpoint become
   * redundant for HEAD reads and can be reclaimed with
   * [[cleanObsoleteLogs]] (forfeiting time travel below it — Delta's
   * own log-retention trade).
@@ -52,6 +51,14 @@ object DeltaLog {
   /** One live data file in the replayed state. `path` is the raw
     * (percent-encoded) relative path exactly as logged. */
   final case class AddFile(path: String, size: Long, modificationTime: Long)
+
+  /** The replayed log at `version` (-1: no log yet): its live files
+    * and the table schema from the latest metaData. */
+  final case class State(version: Long, files: Seq[AddFile],
+      schema: Option[StructType]) {
+    /** Sorted names of the live batch directories. */
+    def batches: Seq[String] = files.map(a => batchOf(a.path)).distinct.sorted
+  }
 
   /** A parquet checkpoint is written every this many commits. */
   private val CheckpointInterval = 10
@@ -167,53 +174,48 @@ object DeltaLog {
   /** Write the parquet checkpoint of the log state at `v` plus the
     * `_last_checkpoint` pointer. Idempotent; the checkpoint is ONE
     * parquet file named per the protocol so an external reader finds
-    * it from the pointer alone. The action rows are produced by the
-    * DISTRIBUTED snapshot plan ([[stateDf]]) — previous checkpoint
-    * parquet + JSON-tail diff — so no driver-side collect of the
-    * live-file set happens even with millions of files. Returns false
-    * (no-op) when the state at `v` can no longer be rebuilt (its
-    * history was reclaimed) or carries no metaData: a skipped
-    * optimization must never fail a commit that already landed. */
+    * it from the pointer alone. The state is replayed on the driver
+    * ([[state]]); a commit skips that replay and hands the state it
+    * built to the same writer. Returns false (no-op) when the state at
+    * `v` can no longer be rebuilt (its history was reclaimed) or
+    * carries no metaData: a skipped optimization must never fail a
+    * commit that already landed. */
   def writeCheckpoint(spark: SparkSession, table: String,
       v: Long): Boolean = {
-    import spark.implicits._
     val f = fs(spark, table)
+    // a retry for a version whose history cleanup already reclaimed
+    // (no anchoring checkpoint, no full JSON replay) cannot rebuild
+    // the snapshot — refuse gracefully instead of failing the replay
+    // mid-read
+    val reachable = bestCheckpoint(f, table, v).isDefined ||
+      anchors(f, table, -1L, v)
+    reachable && checkpoint(spark, f, table, state(spark, table, Some(v)))
+  }
+
+  /** Write `st` as the checkpoint at `st.version` unless one is there,
+    * then advance `_last_checkpoint` to it. The rows are what a Spark
+    * write of the same `CpRow` Dataset lays down ([[LocalParquet.write]],
+    * published under the fixed name), so the pointer's `size` is the
+    * row count without reading the file back — a checkpoint already
+    * there was written the same way from the same state. False when
+    * `st` carries no metaData. */
+  private def checkpoint(spark: SparkSession, f: FileSystem, table: String,
+      st: State): Boolean = {
+    import spark.implicits._
+    val schema = st.schema.getOrElse(return false)
+    val v = st.version
     val target = checkpointFile(table, v)
     if (!f.exists(target)) {
-      // a retry for a version whose history cleanup already reclaimed
-      // (no anchoring checkpoint, no full JSON replay) cannot rebuild
-      // the snapshot — refuse gracefully instead of failing the
-      // replay mid-read
-      val reachable = bestCheckpoint(f, table, v).isDefined ||
-        anchors(f, table, -1L, v)
-      if (!reachable) return false
-      val (filesDf, schemaOpt) = stateDf(spark, table, Some(v))
-      val schema = schemaOpt.getOrElse(return false)
-      val head = Seq(
+      val head = Iterator(
         CpRow(Some(CpProtocol(1, 2)), None, None),
-        CpRow(None, Some(CpMetaData(
-          java.util.UUID.nameUUIDFromBytes(table.getBytes("UTF-8")).toString,
+        CpRow(None, Some(CpMetaData(tableId(table),
           CpFormat("parquet", Map.empty), schema.json, Seq.empty,
-          Map.empty, System.currentTimeMillis())), None)).toDS()
-      val adds = filesDf.as[AddFile].map(a => CpRow(None, None,
+          Map.empty, System.currentTimeMillis())), None))
+      val adds = st.files.iterator.map(a => CpRow(None, None,
         Some(CpAdd(a.path, Map.empty, a.size, a.modificationTime,
           dataChange = false))))
-      // spark writes a directory; the protocol wants ONE
-      // exactly-named file — stage (writer-unique dir), then move
-      // the single part file into place
-      val tmpDir = new Path(logDir(table),
-        f".cp-tmp-$v%020d-${java.util.UUID.randomUUID()}")
-      head.union(adds).coalesce(1).write
-        .mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(tmpDir.toString)
-      val part = f.listStatus(tmpDir).map(_.getPath)
-        .find(_.getName.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException(
-          s"checkpoint staging produced no parquet part under $tmpDir"))
-      if (!f.rename(part, target) && !f.exists(target))
-        throw new IllegalStateException(
-          s"checkpoint rename failed: $target")
-      f.delete(tmpDir, true)
+      LocalParquet.write(spark, logDir(table).toString, head ++ adds,
+        target.getName)
     }
     // pointer last: a crash before this line leaves a valid orphan
     // checkpoint that the next writeCheckpoint call re-points. The
@@ -229,12 +231,10 @@ object DeltaLog {
     // listing.
     val newerExists = rawCheckpointPointer(f, table)
       .exists(cur => cur > v && f.exists(checkpointFile(table, cur)))
-    if (!newerExists) {
-      val nActions = spark.read.parquet(target.toString).count()
-      AtomicFile.replace(spark.sessionState.newHadoopConf(),
+    if (!newerExists)
+      AtomicFile.replace(f.getConf,
         new Path(logDir(table), "_last_checkpoint"),
-        s"""{"version":$v,"size":$nActions}\n""")
-    }
+        s"""{"version":$v,"size":${st.files.size + 2}}\n""")
     true
   }
 
@@ -324,72 +324,24 @@ object DeltaLog {
     (touched, schema)
   }
 
-  /** DISTRIBUTED snapshot of the log through `version` (inclusive;
-    * None = latest): a DataFrame of live files
-    * `(path, size, modificationTime)` plus the table schema from the
-    * latest metaData. With a usable checkpoint the live set is
-    * resolved as a plan — checkpoint parquet scan, broadcast
-    * anti-join against the (small) set of tail-touched paths, union
-    * of tail adds — and never materializes on the driver; only the
-    * JSON tail (≤ interval commits) is driver-parsed. Without a
-    * checkpoint the whole JSON history is the tail. */
-  def stateDf(spark: SparkSession, table: String,
-      version: Option[Long] = None): (DataFrame, Option[StructType]) = {
-    import spark.implicits._
-    val f = fs(spark, table)
-    val top = version.getOrElse(latestLogVersion(spark, table))
-    bestCheckpoint(f, table, top) match {
-      case None =>
-        val (touched, schema) = tailActions(f, table, 0L, top)
-        val live = touched.valuesIterator.flatten.toSeq
-        (spark.createDataset(live).toDF(), schema)
-      case Some(cp) =>
-        val cpDf = spark.read.parquet(checkpointFile(table, cp).toString)
-        val (touched, tailSchema) = tailActions(f, table, cp + 1, top)
-        val schema = tailSchema.orElse {
-          // ≤1 metaData row in a conformant checkpoint — bounded read
-          cpDf.filter(col("metaData").isNotNull)
-            .select(col("metaData.schemaString")).head(1).headOption
-            .map(r => DataType.fromJson(r.getString(0))
-              .asInstanceOf[StructType])
-        }
-        val cpAdds = cpDf.filter(col("add").isNotNull).select(
-          col("add.path").as("path"), col("add.size").as("size"),
-          col("add.modificationTime").as("modificationTime"))
-        val survivors =
-          if (touched.isEmpty) cpAdds
-          else cpAdds.join(
-            broadcast(touched.keysIterator.toSeq.toDF("path")),
-            Seq("path"), "left_anti")
-        val tailAdds = touched.valuesIterator.flatten.toSeq
-        val result =
-          if (tailAdds.isEmpty) survivors
-          else survivors.unionByName(spark.createDataset(tailAdds).toDF())
-        (result, schema)
-    }
-  }
-
   // the columns of a checkpoint row a driver-side replay reads
   private[ingest] final case class CpSchemaString(schemaString: String)
   private[ingest] final case class CpLive(metaData: Option[CpSchemaString],
       add: Option[AddFile])
 
-  /** Replay the log through `version` (inclusive; None = latest):
-    * (live files, table schema from the latest metaData), on the
-    * driver and without a Spark job — the newest usable checkpoint is
-    * read with [[LocalParquet.read]] (only its metaData schema and add
-    * path/size/mtime columns), then the JSON tail is applied. The
-    * live-file list is what a path enumeration inherently needs; the
-    * distributed twin, [[stateDf]], feeds the checkpoint writer. Full
+  /** Replay the log through `version` (inclusive; None = latest), on
+    * the driver and without a Spark job: the newest usable checkpoint
+    * is read with [[LocalParquet.read]] (only its metaData schema and
+    * add path/size/mtime columns), then the JSON tail is applied. Full
     * JSON replay happens only without a checkpoint at or below
     * `version` (valid while those commits survive
     * [[cleanObsoleteLogs]]). */
   def state(spark: SparkSession, table: String,
-      version: Option[Long] = None): (Seq[AddFile], Option[StructType]) = {
+      version: Option[Long] = None): State = {
     import spark.implicits._
     val f = fs(spark, table)
     val top = version.getOrElse(latestLogVersion(spark, table))
-    if (top < 0) return (Seq.empty, None)
+    if (top < 0) return State(-1L, Seq.empty, None)
     val (base, baseSchema, from) = bestCheckpoint(f, table, top) match {
       case None => (Seq.empty[AddFile], None, 0L)
       case Some(cp) =>
@@ -400,7 +352,7 @@ object DeltaLog {
           cp + 1)
     }
     val (touched, tailSchema) = tailActions(f, table, from, top)
-    (base.filterNot(a => touched.contains(a.path)) ++
+    State(top, base.filterNot(a => touched.contains(a.path)) ++
       touched.valuesIterator.flatten, tailSchema.orElse(baseSchema))
   }
 
@@ -410,7 +362,7 @@ object DeltaLog {
     * percent-encoded paths). `version` time-travels (`VERSION AS OF`). */
   def read(spark: SparkSession, table: String,
       version: Option[Long] = None): DataFrame = {
-    val (files, schemaOpt) = state(spark, table, version)
+    val State(_, files, schemaOpt) = state(spark, table, version)
     val schema = schemaOpt.getOrElse(throw new IllegalStateException(
       s"no metaData action in the delta log at $table"))
     if (files.isEmpty)
@@ -424,24 +376,24 @@ object DeltaLog {
   private[ingest] def batchOf(path: String): String =
     decodePath(path).takeWhile(_ != '/')
 
-  /** Publish version `v`, whose live batches are `batches`, on top of
-    * the state at `v - 1`: `remove` actions for the files of batches
-    * that left the set, `add` actions for the parquet parts of batches
-    * that joined it, and a `metaData` action when the added footers
-    * widen the schema. Footers are read on the driver
-    * ([[LocalParquet.schema]]), only those of the added batches.
-    * Bronze evolution is additive-only, so a column whose type changes
-    * fails loudly here, before anything is published. The version file
-    * is claimed with [[AtomicFile.claim]]; returns false, having
-    * published nothing, when a concurrent writer claimed `v` first.
-    * The winner of every [[CheckpointInterval]]-th version also
-    * writes a checkpoint. */
+  /** Publish version `base.version + 1`, whose live batches are
+    * `batches`, on top of `base`, the state the caller read: `remove`
+    * actions for the files of batches that left the set, `add` actions
+    * for the parquet parts of batches that joined it, and a `metaData`
+    * action when the added footers widen the schema. Footers are read
+    * on the driver ([[LocalParquet.schema]]), only those of the added
+    * batches. Bronze evolution is additive-only, so a column whose
+    * type changes fails loudly here, before anything is published.
+    * The version file is claimed with [[AtomicFile.claim]]; returns
+    * false, having published nothing, when a concurrent writer claimed
+    * that version first (a base it overtook loses the same way). The
+    * winner of every [[CheckpointInterval]]-th version also writes a
+    * checkpoint, from `base` minus the removes plus the adds. */
   private[ingest] def commit(spark: SparkSession, f: FileSystem,
-      table: String, v: Long, batches: Seq[String]): Boolean = {
-    val (live, schema) =
-      if (v == 0) (Seq.empty[AddFile], None)
-      else state(spark, table, Some(v - 1))
-    val have = live.map(a => batchOf(a.path)).toSet
+      table: String, base: State, batches: Seq[String]): Boolean = {
+    val v = base.version + 1
+    val State(_, live, schema) = base
+    val have = base.batches.toSet
     val want = batches.toSet
     val adds = batches.distinct.filterNot(have)
       .flatMap(b => batchFiles(f, table, b))
@@ -464,18 +416,19 @@ object DeltaLog {
             more.fields.filterNot(fd => prev.fieldNames.contains(fd.name)))
         }
       }
+    val (kept, removed) = live.partition(a => want(batchOf(a.path)))
     val lines = mutable.Buffer[String]()
     if (v == 0)
       lines += """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""
     if (newSchema.map(_.json) != schema.map(_.json))
       lines += metaDataJson(table, newSchema.get)
-    live.filterNot(a => want(batchOf(a.path))).foreach(lines += removeJson(_))
+    removed.foreach(lines += removeJson(_))
     adds.foreach(lines += addJson(_))
     lines += commitInfoJson()
     val won = AtomicFile.claim(f.getConf, logFile(table, v),
       lines.mkString("\n") + "\n")
     if (won && (v + 1) % CheckpointInterval == 0)
-      writeCheckpoint(spark, table, v)
+      checkpoint(spark, f, table, State(v, kept ++ adds, newSchema))
     won
   }
 
@@ -488,12 +441,14 @@ object DeltaLog {
     mapper.writeValueAsString(root)
   }
 
+  /** Deterministic table id: rewriting the log yields the same id. */
+  private def tableId(table: String): String =
+    java.util.UUID.nameUUIDFromBytes(table.getBytes("UTF-8")).toString
+
   private def metaDataJson(table: String, schema: StructType): String = {
     val root = mapper.createObjectNode()
     val md = root.putObject("metaData")
-    // deterministic table id: rewriting the log yields the same id
-    md.put("id", java.util.UUID
-      .nameUUIDFromBytes(table.getBytes("UTF-8")).toString)
+    md.put("id", tableId(table))
     val fmt = md.putObject("format")
     fmt.put("provider", "parquet")
     fmt.putObject("options")

@@ -725,28 +725,29 @@ object Streams {
 
   /** Delete the rows of one window's `nDead` tombstoned ids (`dead`,
     * one [[graft.ingest.BronzeMerge.IdCol]] column) from `table` by
-    * anti-join. Only a committed table can hold rows to remove; an
-    * empty or not-yet-created bronze makes every tombstone a no-op. A
+    * anti-join. An empty or not-yet-created bronze makes every
+    * tombstone a no-op (the delete returns version 0 on the latter). A
     * delete that matched nothing against a LEGACY table (every batch
     * predates source_item_id) is a structural no-op, so source
     * deletions would silently stop propagating and bronze would
     * diverge forever: that case warns LOUDLY, naming the one-shot
     * migration (BronzeMerge.backfillIds, mapping from the staged
     * catalog) after which deletes flow again. The id check runs only
-    * after a zero-match delete — a delete that matched proves the
-    * table carries ids. */
+    * after a zero-match delete on a committed table — a delete that
+    * matched proves the table carries ids. */
   private def deleteTombstones(spark: SparkSession, table: String,
       dead: DataFrame, nDead: Long): Unit =
-    if (nDead > 0 &&
-        graft.ingest.BronzeMerge.currentCommit(spark, table)._2.nonEmpty &&
-        graft.ingest.BronzeMerge.deleteMatchingKeys(spark, table, dead,
-          Seq(graft.ingest.BronzeMerge.IdCol))._2 == 0 &&
-        !graft.ingest.BronzeMerge.carriesIds(spark, table))
-      log.warn(s"tombstone window ($nDead ids) against id-less " +
-        s"bronze table $table: every batch predates " +
-        "source_item_id, so id-keyed deletes CANNOT match — " +
-        "bronze will diverge from the source until " +
-        "BronzeMerge.backfillIds migrates the table")
+    if (nDead > 0) {
+      val (ver, deleted) = graft.ingest.BronzeMerge.deleteMatchingKeys(
+        spark, table, dead, Seq(graft.ingest.BronzeMerge.IdCol))
+      if (ver > 0 && deleted == 0 &&
+          !graft.ingest.BronzeMerge.carriesIds(spark, table))
+        log.warn(s"tombstone window ($nDead ids) against id-less " +
+          s"bronze table $table: every batch predates " +
+          "source_item_id, so id-keyed deletes CANNOT match — " +
+          "bronze will diverge from the source until " +
+          "BronzeMerge.backfillIds migrates the table")
+    }
 
   private val log =
     org.slf4j.LoggerFactory.getLogger("graft.streaming.Streams")

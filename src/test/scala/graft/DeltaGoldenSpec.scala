@@ -35,7 +35,7 @@ class DeltaGoldenSpec extends SparkSpec {
     val t = goldenTable
     // HEAD = checkpoint(1) + v2 tail; the live set must decode
     // sub%20dir/part%20b.parquet to a real file with a space
-    val (files, schema) = DeltaLog.state(spark, t)
+    val DeltaLog.State(_, files, schema) = DeltaLog.state(spark, t)
     assert(schema.isDefined)
     assert(files.map(_.path).sorted == Seq(
       "part-c.parquet", "part-d.parquet", "sub%20dir/part%20b.parquet"))
@@ -53,21 +53,8 @@ class DeltaGoldenSpec extends SparkSpec {
     // field order must read by name, and the size-less JSON remove
     // must have dropped part-a
     assert(ids(DeltaLog.read(spark, t, Some(1L))) == Seq(3L, 4L))
-    val (filesV1, _) = DeltaLog.state(spark, t, Some(1L))
-    assert(filesV1.map(_.path).sorted ==
+    assert(DeltaLog.state(spark, t, Some(1L)).files.map(_.path).sorted ==
       Seq("part-c.parquet", "sub%20dir/part%20b.parquet"))
-  }
-
-  test("golden log: distributed snapshot agrees with the driver replay") {
-    import spark.implicits._
-    val t = goldenTable
-    for (v <- Seq(None, Some(1L), Some(2L))) {
-      val (driver, dSchema) = DeltaLog.state(spark, t, v)
-      val (df, sSchema) = DeltaLog.stateDf(spark, t, v)
-      assert(df.as[DeltaLog.AddFile].collect().sortBy(_.path).toSeq ==
-        driver.sortBy(_.path))
-      assert(dSchema.map(_.json) == sSchema.map(_.json))
-    }
   }
 
   test("golden log passes the protocol conformance validator") {
@@ -82,9 +69,11 @@ class DeltaGoldenSpec extends SparkSpec {
     def ts(i: Int) = new java.sql.Timestamp(1700000000000L + i * 1000L)
     def one(n: String) = Seq((n, n.length.toLong, ts(n.hashCode & 127),
       Array[Byte](1))).toDF("file_name", "length", "modified", "content")
-    // cross the checkpoint cadence and exercise every action kind the
-    // writer emits: adds, copy-on-write removes, compaction rewrites,
-    // schema evolution metaData, then log cleanup
+    // cross the checkpoint cadence twice and exercise every action
+    // kind the writer emits: adds, copy-on-write removes, compaction
+    // rewrites, schema evolution metaData, then log cleanup. The
+    // checkpoint at log version 19 is built on the one at 9, after
+    // every one of those actions.
     (1 to 11).foreach(i =>
       BronzeMerge.mergeIngestDf(spark, one(f"g$i%02d.txt"), table))
     BronzeMerge.deleteWhere(spark, table, col("length") === 7L)
@@ -92,6 +81,11 @@ class DeltaGoldenSpec extends SparkSpec {
     BronzeMerge.mergeIngestDf(spark,
       Seq(("wide.txt", 8L, ts(99), Array[Byte](1), "extra-col"))
         .toDF("file_name", "length", "modified", "content", "note"), table)
+    (12 to 18).foreach(i =>
+      BronzeMerge.mergeIngestDf(spark, one(f"g$i%02d.txt"), table))
+    assert(DeltaLog.latestLogVersion(spark, table) == 20L)
+    assert(Files.exists(Paths.get(table, "_delta_log",
+      "00000000000000000019.checkpoint.parquet")))
     assert(DeltaConformance.validate(spark, table) == Seq.empty)
     // still conformant after retention cleanup truncates the history
     DeltaLog.cleanObsoleteLogs(spark, table)

@@ -439,16 +439,18 @@ class IngestSpec extends SparkSpec {
     assert(ver == 1 && live == Seq("batch-00000001"))
     assert(BronzeMerge.snapshot(spark, table).select("file_name")
       .collect().map(_.getString(0)).toSeq == Seq("a.txt"))
+    // the state at version 1, read before B's retry overtakes it
+    val stale = graft.ingest.DeltaLog.state(spark, table)
     // B retries against the NEW version and lands cleanly
     assert(BronzeMerge.mergeIngestDf(spark, src(dirB), table) == 1L)
     assert(BronzeMerge.snapshot(spark, table).count() == 2)
 
-    // the CAS itself: a second commit of the SAME version must lose,
-    // and the log must still read the winner's content
+    // the CAS itself: a commit on the overtaken base targets the SAME
+    // version as B's and must lose; the log still reads B's content
     val f = new org.apache.hadoop.fs.Path(table)
       .getFileSystem(spark.sessionState.newHadoopConf())
     intercept[IllegalStateException] {
-      BronzeMerge.commit(f, table, 2, Seq("batch-bogus"))
+      BronzeMerge.commit(f, table, stale, Seq("batch-bogus"))
     }
     assert(BronzeMerge.currentCommit(spark, table)._2 ==
       Seq("batch-00000001", "batch-00000002"))
@@ -552,7 +554,7 @@ class IngestSpec extends SparkSpec {
       names(BronzeMerge.snapshot(spark, table)))
     // every logged path exists on disk (an external client would open
     // exactly these files)
-    val (files, schema) = DeltaLog.state(spark, table)
+    val DeltaLog.State(_, files, schema) = DeltaLog.state(spark, table)
     assert(schema.isDefined && files.nonEmpty)
     files.foreach(a => assert(Files.exists(Paths.get(table, a.path)),
       s"logged file missing: ${a.path}"))
@@ -576,7 +578,7 @@ class IngestSpec extends SparkSpec {
     // the pre-compaction version still time-travels through the log
     BronzeMerge.compact(spark, table) // v4
     assert(names(DeltaLog.read(spark, table)) == Seq("a.txt", "c.txt"))
-    assert(DeltaLog.state(spark, table)._1
+    assert(DeltaLog.state(spark, table).files
       .forall(_.path.startsWith("batch-00000004/")))
     assert(names(DeltaLog.read(spark, table, Some(1L))) ==
       Seq("a.txt", "b.txt", "c.txt"))
@@ -881,11 +883,11 @@ class IngestSpec extends SparkSpec {
     assert(Files.exists(mvP.resolve("data"))) // legacy dir untouched (not GC'd)
   }
 
-  test("delta log: distributed snapshot equals driver replay, incl. many files") {
+  test("delta log: driver replay equals the parts on disk, incl. many files") {
     import graft.ingest.{BronzeMerge, DeltaLog}
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val table = Files.createTempDirectory("graft-dlog-dist")
+    val table = Files.createTempDirectory("graft-dlog-parts")
       .resolve("bronze").toString
     def ts(i: Int) = new java.sql.Timestamp(1700000000000L + i * 1000L)
     // a many-files batch (multi-partition write → many parquet parts)
@@ -903,19 +905,44 @@ class IngestSpec extends SparkSpec {
         table)
     }
     BronzeMerge.deleteWhere(spark, table, col("length") <= 2500L)
-    assert(Files.exists(Paths.get(table, "_delta_log",
-      "00000000000000000009.checkpoint.parquet")))
+    val cp9 = Paths.get(table, "_delta_log",
+      "00000000000000000009.checkpoint.parquet")
+    assert(Files.exists(cp9))
 
-    // both paths agree at HEAD and at the checkpoint boundary itself
-    for (v <- Seq(None, Some(9L), Some(11L))) {
-      val (driverFiles, driverSchema) = DeltaLog.state(spark, table, v)
-      val (df, distSchema) = DeltaLog.stateDf(spark, table, v)
-      val dist = df.as[DeltaLog.AddFile].collect().toSeq
-      assert(dist.sortBy(_.path) == driverFiles.sortBy(_.path),
-        s"distributed/driver state diverged at version $v")
-      assert(distSchema.map(_.json) == driverSchema.map(_.json))
+    // the parquet parts on disk under a set of batch dirs, as logged
+    def onDisk(batches: Seq[String]): Seq[DeltaLog.AddFile] =
+      batches.flatMap { b =>
+        val names = Files.list(Paths.get(table, b)).iterator()
+        scala.jdk.CollectionConverters.IteratorHasAsScala(names).asScala
+          .filter(_.getFileName.toString.endsWith(".parquet"))
+          .filterNot(_.getFileName.toString.startsWith("."))
+          .map(p => DeltaLog.AddFile(s"$b/${p.getFileName}", Files.size(p),
+            Files.getLastModifiedTime(p).toMillis))
+      }.sortBy(_.path)
+    def batch(i: Int) = f"batch-$i%08d"
+    // HEAD (log version 11: the delete rewrote the wide batch), the
+    // checkpoint boundary itself, and the version after it
+    val expected = Seq(
+      None -> ("batch-00000012-cow0" +: (2 to 11).map(batch)),
+      Some(9L) -> (1 to 10).map(batch),
+      Some(11L) -> ("batch-00000012-cow0" +: (2 to 11).map(batch)))
+    for ((v, batches) <- expected) {
+      val st = DeltaLog.state(spark, table, v)
+      assert(st.files.sortBy(_.path) == onDisk(batches),
+        s"replayed state diverged from the parts on disk at version $v")
+      assert(st.schema.map(_.fieldNames.toSeq) ==
+        Some(Seq("file_name", "length", "modified", "content")))
     }
-    // the distributed plan's answer matches the bronze snapshot
+    assert(onDisk(Seq(batch(1))).size > 1, "the wide batch wrote one part")
+    // an external client reads the driver-written checkpoint with
+    // Spark's own parquet reader and finds the same add set
+    val viaSpark = spark.read.parquet(cp9.toString)
+      .filter(col("add").isNotNull)
+      .select(col("add.path").as("path"), col("add.size").as("size"),
+        col("add.modificationTime").as("modificationTime"))
+      .as[DeltaLog.AddFile].collect().toSeq
+    assert(viaSpark.sortBy(_.path) ==
+      DeltaLog.state(spark, table, Some(9L)).files.sortBy(_.path))
     assert(DeltaLog.read(spark, table).count() ==
       BronzeMerge.snapshot(spark, table).count())
   }
@@ -1035,13 +1062,41 @@ class IngestSpec extends SparkSpec {
         .toDF("file_name", "length", "modified", "content"), table)
     merge(1)
     val second = jobsIn(merge(2))
-    (3 to 12).foreach(merge)
+    (3 to 8).foreach(merge)
+    // merge 10 lands log version 9 and writes the first checkpoint,
+    // merge 20 the second, built on the first
+    val ninth = jobsIn(merge(9))
+    val tenth = jobsIn(merge(10))
+    (11 to 12).foreach(merge)
     assert(Files.exists(Paths.get(table, "_delta_log",
       "00000000000000000009.checkpoint.parquet")))
     assert(jobsIn(BronzeMerge.currentCommit(spark, table)) == 0)
     val thirteenth = jobsIn(merge(13))
-    info(s"2nd merge: $second jobs, 13th merge: $thirteenth jobs")
+    (14 to 18).foreach(merge)
+    val nineteenth = jobsIn(merge(19))
+    val twentieth = jobsIn(merge(20))
+    assert(Files.exists(Paths.get(table, "_delta_log",
+      "00000000000000000019.checkpoint.parquet")))
+    info(s"merge jobs: 2nd $second, 9th $ninth, 10th $tenth, " +
+      s"13th $thirteenth, 19th $nineteenth, 20th $twentieth")
     assert(thirteenth <= second)
+    assert(tenth <= ninth)
+    assert(twentieth <= nineteenth)
+  }
+
+  test("a delete on a table never created is a no-op and creates no log") {
+    import graft.ingest.BronzeMerge
+    import spark.implicits._
+    import org.apache.spark.sql.functions.col
+    val table = Files.createTempDirectory("graft-dlog-none")
+      .resolve("bronze").toString
+    val dead = Seq("i1").toDF(BronzeMerge.IdCol)
+    assert(BronzeMerge.deleteMatchingKeys(spark, table, dead,
+      Seq(BronzeMerge.IdCol)) == ((0, 0L)))
+    assert(BronzeMerge.deleteWhere(spark, table,
+      col("file_name") === "a.txt") == ((0, 0L)))
+    assert(!Files.exists(Paths.get(table, "_delta_log")))
+    assert(BronzeMerge.currentCommit(spark, table) == ((0, Nil)))
   }
 
   test("delta log: a regressed checkpoint pointer self-heals via listing") {
@@ -1077,7 +1132,7 @@ class IngestSpec extends SparkSpec {
     Files.deleteIfExists(logDir.resolve("._last_checkpoint.crc"))
     assert(DeltaLog.read(spark, table).count() == 12,
       "regressed pointer stranded the HEAD read")
-    assert(DeltaLog.state(spark, table)._1.size == 12)
+    assert(DeltaLog.state(spark, table).files.size == 12)
   }
 
   test("delta log leaves no temp files or orphaned crc sidecars") {

@@ -78,6 +78,17 @@ class LocalParquetSpec extends SparkSpec {
     roundTrip(Seq(DeadRow("d1"), DeadRow(null)))(Encoders.product[DeadRow])
   }
 
+  test("write: Delta checkpoint rows (nested options, maps, arrays) match " +
+      "a Spark write") {
+    import DeltaLog.{CpAdd, CpFormat, CpMetaData, CpProtocol, CpRow}
+    roundTrip(Seq(
+      CpRow(Some(CpProtocol(1, 2)), None, None),
+      CpRow(None, Some(CpMetaData("id", CpFormat("parquet", Map.empty),
+        "{}", Seq.empty, Map("k" -> "v"), 7L)), None),
+      CpRow(None, None, Some(CpAdd("batch-00000001/p.parquet",
+        Map.empty, 3L, 9L, dataChange = false)))))(Encoders.product[CpRow])
+  }
+
   test("write: a fixed name is replaced whole, no temp file is left") {
     val dir = tmp("fixed")
     implicit val enc: Encoder[DeadRow] = Encoders.product[DeadRow]
